@@ -19,7 +19,10 @@ tables registered as views — this is the trusted producer surface
 from __future__ import annotations
 
 import re
+from functools import cached_property
 
+from py4j.java_gateway import is_instance_of
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,6 +77,7 @@ _INSERT_OVERWRITE_RE = re.compile(
     re.I | re.S,
 )
 _CTE_START_RE = re.compile(r"\s*WITH\b", re.I)
+_QUERY_START_RE = re.compile(r"\s*(\(|(SELECT|WITH|VALUES|TABLE)\b)", re.I)
 # a subquery anywhere in a DML predicate/assignment — the cue to make
 # warehouse tables resolvable in the executing session's catalog
 _SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.I)
@@ -86,7 +90,7 @@ _DESCRIBE_EXT_RE = re.compile(
 _SHOW_CREATE_RE = re.compile(r"\s*SHOW\s+CREATE\s+TABLE\s+([\w.]+)\s*;?\s*$", re.I)
 # EXPLAIN [EXTENDED|FORMATTED|SIMPLE] <query> — plan text, no execution
 _EXPLAIN_RE = re.compile(
-    r"\s*EXPLAIN\s+(EXTENDED\s+|FORMATTED\s+|SIMPLE\s+)?(.*)$", re.I | re.S
+    r"\s*EXPLAIN\b\s*(?:(EXTENDED|FORMATTED|SIMPLE|CODEGEN|COST)\b\s*)?(.*)$", re.I | re.S
 )
 _ANALYZE_RE = re.compile(
     r"\s*ANALYZE\s+TABLE\s+([\w.]+)\s+COMPUTE\s+STATISTICS"
@@ -619,64 +623,257 @@ def rewrite_distinct_on(query: str) -> tuple[str, bool]:
     )
 
 
-def _blank_sql_noise(text: str) -> str:
-    """Length-preserving blanking of single-quoted literals (contents →
-    spaces, outer quotes kept, '' escapes blanked) AND SQL comments —
-    ``--`` to end-of-line and bracketed ``/* */`` including Spark's
-    nesting — in ONE left-to-right scan, so a quote inside a comment
-    (``-- don't``) can't corrupt string state and a ``--`` inside a
-    literal can't start a phantom comment (ADVICE r13: comment text
-    containing parens / FETCH / EXCLUDE / quantifier keywords was
-    visible to the positional scans). Newlines inside comments are
-    kept so line-oriented probes stay aligned; double-quoted strings
-    and backtick identifiers pass through unblanked (pre-existing
-    probe behavior) but shield any comment markers inside them."""
-    out = list(text)
+def _sql_noise_spans(text: str) -> list[tuple[str, int, int]]:
+    """The one comment- and string-aware lexer every SQL probe and
+    rewrite shares: ``(kind, start, end)`` for each single-quoted
+    literal's CONTENTS (``"str"``), each comment (``"comment"`` —
+    ``--`` to end-of-line, bracketed ``/* */`` with Spark's nesting) and
+    each optimizer hint (``"hint"`` — ``/*+ … */``), found in ONE
+    left-to-right scan, so a quote inside a comment (``-- don't``)
+    cannot corrupt string state and a ``--`` inside a literal cannot
+    start a phantom comment. Doubled quotes and backslash escapes stay
+    inside their token, as in Spark's lexer. Double-quoted strings and
+    backtick identifiers are skipped (not reported) but shield any
+    comment markers inside them."""
+    spans: list[tuple[str, int, int]] = []
     i, n = 0, len(text)
     while i < n:
         ch = text[i]
-        if ch == "'":
+        if ch in ("'", '"', "`"):
             j = i + 1
             while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        out[j] = out[j + 1] = " "
-                        j += 2
-                        continue
+                if text[j] == "\\" and ch != "`":
+                    j += 2
+                elif text[j] != ch:
+                    j += 1
+                elif j + 1 < n and text[j + 1] == ch:
+                    j += 2  # doubled quote: an escape, the token continues
+                else:
                     break
-                if text[j] != "\n":
-                    out[j] = " "
-                j += 1
+            if ch == "'":
+                spans.append(("str", i + 1, min(j, n)))
             i = j + 1
-        elif ch in ('"', "`"):
-            j = i + 1
-            while j < n and text[j] != ch:
-                j += 1
-            i = j + 1
-        elif ch == "-" and i + 1 < n and text[i + 1] == "-":
-            while i < n and text[i] != "\n":
-                out[i] = " "
-                i += 1
-        elif ch == "/" and i + 1 < n and text[i + 1] == "*":
-            depth = 0
-            while i < n:
-                if text[i] == "/" and i + 1 < n and text[i + 1] == "*":
+        elif text.startswith("--", i):
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+            spans.append(("comment", i, j))
+            i = j
+        elif text.startswith("/*", i):
+            depth, j = 0, i
+            while j < n:
+                if text.startswith("/*", j):
                     depth += 1
-                    out[i] = out[i + 1] = " "
-                    i += 2
-                elif text[i] == "*" and i + 1 < n and text[i + 1] == "/":
+                    j += 2
+                elif text.startswith("*/", j):
                     depth -= 1
-                    out[i] = out[i + 1] = " "
-                    i += 2
+                    j += 2
                     if depth == 0:
                         break
                 else:
-                    if text[i] != "\n":
-                        out[i] = " "
-                    i += 1
+                    j += 1
+            spans.append(("hint" if text.startswith("/*+", i) else "comment", i, j))
+            i = j
         else:
             i += 1
+    return spans
+
+
+def _blank_sql_strings(text: str) -> str:
+    """Length-preserving blanking of single-quoted literal contents
+    (outer quotes kept), comments and hints (_sql_noise_spans): match
+    indices computed on the blanked text stay valid against the raw
+    statement — required by probes that slice the original query at a
+    match position (rewrite_distinct_on, rewrite_fetch_first, the
+    quantifier scan). Newlines are kept so line-oriented probes stay
+    aligned."""
+    out = list(text)
+    for _kind, start, end in _sql_noise_spans(text):
+        for k in range(start, end):
+            if out[k] != "\n":
+                out[k] = " "
     return "".join(out)
+
+
+def strip_sql_comments(text: str) -> str:
+    """``text`` with every comment replaced by one space — literals,
+    quoted identifiers and optimizer hints kept verbatim. Both SQL
+    surfaces dispatch on this form, so a comment can neither move a
+    statement past a fence nor split a keyword (``INSERT/**/INTO``)."""
+    out, pos = [], 0
+    for kind, start, end in _sql_noise_spans(text):
+        if kind == "comment":
+            out.append(text[pos:start])
+            out.append(" ")
+            pos = end
+    out.append(text[pos:])
+    return "".join(out)
+
+
+# Parsed node classes that execute on spark.sql() yet are not Catalyst
+# Commands: INSERT (a multi-insert puts several under a Union), INSERT
+# OVERWRITE DIRECTORY, CALL and EXECUTE IMMEDIATE (an unresolved leaf
+# that runs its string argument unchecked; Spark 4.0 names it
+# ExecuteImmediateQuery).
+_EAGER_NODES = frozenset(
+    {
+        "InsertIntoStatement",
+        "InsertIntoDir",
+        "Call",
+        "UnresolvedExecuteImmediate",
+        "ExecuteImmediateQuery",
+    }
+)
+_COMMAND_CLASS = "org.apache.spark.sql.catalyst.plans.logical.Command"
+# JVM class name -> simple name when the class is a non-read node, else
+# None: each class is checked against Command once per process.
+_NON_READ_CLASSES: dict[str, str | None] = {}
+# Nodes one relation walk visits before it gives up (fail closed).
+_MAX_WALK_NODES = 10_000
+
+
+def _non_read_class(gateway, node, name: str, simple: str) -> str | None:
+    if name not in _NON_READ_CLASSES:
+        eager = simple in _EAGER_NODES or is_instance_of(gateway, node, _COMMAND_CLASS)
+        _NON_READ_CLASSES[name] = simple if eager else None
+    return _NON_READ_CLASSES[name]
+
+
+def _ident(node) -> str | None:
+    """Dotted name of an unresolved relation/identifier/namespace node
+    (None for nodes that carry no name)."""
+    for probe in ("multipartIdentifier", "nameParts"):
+        try:
+            seq = getattr(node, probe)()
+        except Exception:
+            continue
+        return ".".join(str(seq.apply(i)) for i in range(seq.size()))
+    return None
+
+
+class ParsedStatement:
+    """One statement as Spark's own parser sees it: the root plan class
+    (CTE wrappers unwrapped) and its node, plus — from ONE py4j walk
+    over the whole tree, on first use — every relation identifier, the
+    CTE names the statement defines, and the first node anywhere in the
+    tree that executes rather than reads. No textual spelling (comments,
+    case, quoting) can change any of these."""
+
+    def __init__(self, plan, gateway):
+        self.plan = plan
+        node, root = plan, plan.getClass().getSimpleName()
+        while root == "UnresolvedWith":  # WITH … <statement>
+            node = node.child()
+            root = node.getClass().getSimpleName()
+        self.node, self.root, self._gateway = node, root, gateway
+
+    def nested(self, plan) -> ParsedStatement:
+        """A sub-plan of this parse (EXPLAIN's statement, a view's
+        query) as a statement of its own — no second parse."""
+        return ParsedStatement(plan, self._gateway)
+
+    def target(self, accessor: str) -> str | None:
+        """Name of the identifier node behind ``accessor`` (the write
+        or DDL target); None for the current namespace."""
+        node = getattr(self.node, accessor)()
+        cls = node.getClass().getSimpleName()
+        while cls == "SubqueryAlias":  # DELETE/UPDATE/MERGE target alias
+            node = node.child()
+            cls = node.getClass().getSimpleName()
+        if cls.rstrip("$") == "CurrentNamespace":
+            return None
+        ident = _ident(node)
+        if ident is None:  # e.g. IDENTIFIER(…)
+            raise ValueError(f"{self.root} needs a plain identifier target")
+        return ident
+
+    @property
+    def is_query(self) -> bool:
+        """A read: no node anywhere in the tree is a Catalyst Command
+        or an eager statement (_EAGER_NODES)."""
+        return self.non_read is None
+
+    @property
+    def non_read(self) -> str | None:
+        """Class of the first executing node in the tree (the root's own
+        class when the root is a statement), or None for a read."""
+        return self._walk[2]
+
+    @property
+    def relations(self) -> tuple[list[tuple[str, ...]], set[str]] | None:
+        """``(idents, cte_names)``: every relation identifier in the
+        plan — subqueries and CTE bodies included — and the CTE names
+        the statement defines. None when the walk cannot name every
+        relation (an ``IDENTIFIER(…)`` clause, a runaway tree): callers
+        deny."""
+        idents, cte_names, _, named = self._walk
+        return (idents, cte_names) if named else None
+
+    @cached_property
+    def _walk(self) -> tuple[list[tuple[str, ...]], set[str], str | None, bool]:
+        idents: list[tuple[str, ...]] = []
+        cte_names: set[str] = set()
+        non_read, named = None, True
+        stack, visited = [self.plan], 0
+        while stack:
+            visited += 1
+            if visited > _MAX_WALK_NODES:
+                return idents, cte_names, non_read, False
+            node = stack.pop()
+            try:
+                name = node.getClass().getName()
+            except Exception:
+                continue
+            cls = name.rsplit(".", 1)[-1]
+            cls = cls.rsplit("$", 1)[-1] or cls
+            non_read = non_read or _non_read_class(self._gateway, node, name, cls)
+            if cls == "PlanWithUnresolvedIdentifier":
+                named = False  # IDENTIFIER(…) names its relation only at analysis
+            if cls.startswith("Unresolved"):
+                # UnresolvedRelation / UnresolvedTable / UnresolvedTableOrView
+                # all carry multipartIdentifier(); other Unresolved* nodes
+                # don't and are skipped by the probe.
+                try:
+                    seq = node.multipartIdentifier()
+                    idents.append(tuple(seq.apply(i) for i in range(seq.size())))
+                except Exception:
+                    pass
+            if cls == "UnresolvedWith":
+                # CTE definitions introduce local names that are not
+                # warehouse tables; references to them are legitimate.
+                # The definition BODIES are not in children() (Catalyst
+                # keeps cteRelations as innerChildren), so push them
+                # explicitly — a relation read inside a CTE body is a
+                # source like any other.
+                try:
+                    rels = node.cteRelations()
+                    for i in range(rels.size()):
+                        cte_names.add(str(rels.apply(i)._1()).lower())
+                        stack.append(rels.apply(i)._2())
+                except Exception:
+                    pass
+            # children() on every TreeNode; expressions() on plan nodes
+            # (join conds, SET clauses — where subqueries hide);
+            # plan() on subquery expressions.
+            for probe in ("children", "expressions"):
+                try:
+                    seq = getattr(node, probe)()
+                    stack.extend(seq.apply(i) for i in range(seq.size()))
+                except Exception:
+                    pass
+            try:
+                stack.append(node.plan())
+            except Exception:
+                pass
+        return idents, cte_names, non_read, named
+
+
+def parse_statement(spark: SparkSession, text: str) -> ParsedStatement:
+    """The one call into Spark's SQL parser for a statement text —
+    shared by the consumer dispatch and this frontend's fences. Raises
+    Spark's ParseException for text it cannot parse (engine-only
+    grammar and SQL sugar, which callers handle)."""
+    plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
+    return ParsedStatement(plan, spark.sparkContext._gateway)
 
 
 def _strip_sql_strings(text: str) -> str:
@@ -684,7 +881,7 @@ def _strip_sql_strings(text: str) -> str:
     comments so keyword probes can't false-positive on either. Not
     length-preserving (literals collapse to ``''``) — positional
     probes use _blank_sql_strings instead."""
-    return re.sub(r"'[^']*'", "''", _blank_sql_noise(text))
+    return re.sub(r"'[^']*'", "''", _blank_sql_strings(text))
 
 
 def _balanced_end(text: str, open_idx: int) -> int:
@@ -1148,15 +1345,6 @@ def rewrite_text_sugar(query: str) -> tuple[str, bool]:
     return out, out != query
 
 
-def _blank_sql_strings(text: str) -> str:
-    """Like _strip_sql_strings but LENGTH-PRESERVING (literal contents
-    and comments become spaces): match indices computed on the blanked
-    text stay valid against the raw statement — required by probes
-    that slice the original query at a match position
-    (rewrite_distinct_on, rewrite_fetch_first, the quantifier scan)."""
-    return _blank_sql_noise(text)
-
-
 _SQL_KEYWORDS = {
     "FROM", "JOIN", "WHERE", "ON", "AND", "OR", "SELECT", "USING", "AS",
     "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "UNION", "ALL", "BY",
@@ -1418,6 +1606,19 @@ def spj_candidate_tables(query: str, tables, layout_of) -> set:
     return out
 
 
+def _is_query_text(spark: SparkSession, text: str) -> bool:
+    """``text`` starts like a query and — when Spark can parse it —
+    parses to a read plan: a CTE prefix can hide DML (`WITH … INSERT
+    INTO t SELECT …`), which spark.sql() executes eagerly. Text Spark
+    cannot parse is SQL sugar that _query rewrites before parsing."""
+    if not _QUERY_START_RE.match(text):
+        return False
+    try:
+        return parse_statement(spark, text).is_query
+    except ParseException:
+        return True
+
+
 class SqlFrontend:
     """Dispatches SQL statements onto a Warehouse."""
 
@@ -1448,6 +1649,10 @@ class SqlFrontend:
         self.spark.conf.set("spark.sql.runSQLOnFiles", "false")
 
     def execute(self, query: str) -> DataFrame | None:
+        # the dispatch ladder below matches statement shapes from the
+        # first keyword on; a leading comment must not push a statement
+        # past its shape (and onto Spark's own catalog)
+        query = strip_sql_comments(query).strip()
         m = _EXPLAIN_RE.match(query)
         if m:
             return self._explain((m.group(1) or "simple").strip().lower(), m.group(2))
@@ -1495,16 +1700,9 @@ class SqlFrontend:
             # the body to spark.sql, which EXECUTES DDL/DML eagerly —
             # a `CREATE VIEW v AS INSERT INTO t …` body would run its
             # side effect at validation and then again on every read.
-            # Reject non-query shapes (textual allowlist + Spark's own
-            # parsed-plan write classifier for CTE-smuggled DML) before
-            # anything touches an executor (ADVICE r12).
-            from sample_emr_on_eks_fgac_iceberg_spark.policy import (
-                parsed_write_class,
-            )
-
-            if not re.match(
-                r"\s*(\(|(SELECT|WITH|VALUES|TABLE)\b)", body, re.I
-            ) or parsed_write_class(self.spark, body) is not None:
+            # Reject non-query shapes before anything touches an
+            # executor (ADVICE r12).
+            if not _is_query_text(self.spark, body):
                 raise ValueError(
                     f"View body must be a query (SELECT/WITH/VALUES/"
                     f"TABLE), got: {body[:60]!r}"
@@ -1609,12 +1807,11 @@ class SqlFrontend:
         # a clear error instead of reaching the eagerly-executing read
         # fallthrough.
         if _CTE_START_RE.match(query):
-            from sample_emr_on_eks_fgac_iceberg_spark.policy import (
-                parsed_write_class,
-            )
-
-            wcls = parsed_write_class(self.spark, query)
-            if wcls == "InsertIntoStatement":
+            try:
+                stmt = parse_statement(self.spark, query)
+            except ParseException:
+                stmt = None  # sugar: the read path rewrites it
+            if stmt is not None and stmt.root == "InsertIntoStatement":
                 split = _split_cte_insert(query)
                 if split is not None:
                     target, cols, read_part = split
@@ -1623,9 +1820,9 @@ class SqlFrontend:
                         src = self._align_to_column_list(target, cols, src)
                     self.warehouse.insert_into(target, src)
                     return None
-            if wcls is not None:
+            if stmt is not None and not stmt.is_query:
                 raise ValueError(
-                    f"CTE-prefixed {wcls} is not supported; only "
+                    f"CTE-prefixed {stmt.root} is not supported; only "
                     "WITH … INSERT INTO t SELECT … is"
                 )
         m = _DROP_RE.match(query)
@@ -1974,15 +2171,12 @@ class SqlFrontend:
         can hide DML (`WITH … INSERT INTO t SELECT …`, which Spark's
         sql() executes EAGERLY), so beyond the textual allowlist the
         statement's parsed plan class is checked with the same shared
-        helper the consumer write guard uses
-        (policy.py::parsed_write_class)."""
+        parse the consumer surface dispatches on
+        (parse_statement)."""
         from sample_emr_on_eks_fgac_iceberg_spark.plans import explain_str
-        from sample_emr_on_eks_fgac_iceberg_spark.policy import parsed_write_class
 
         rest = rest.strip().rstrip(";")
-        if not re.match(r"\s*(\(|(SELECT|WITH|VALUES|TABLE)\b)", rest, re.I):
-            raise ValueError("EXPLAIN supports queries (SELECT/WITH/VALUES) only")
-        if parsed_write_class(self.spark, rest) is not None:
+        if not _is_query_text(self.spark, rest):
             raise ValueError("EXPLAIN supports queries (SELECT/WITH/VALUES) only")
         return self.spark.createDataFrame(
             [(explain_str(self._query(rest), mode),)], "plan string"

@@ -195,6 +195,8 @@ def test_no_file_relation_in_delegated_plan(engine):
         # the shadowing name requires the grant — fail closed
         "WITH secrets AS (SELECT id, ssn FROM secrets) "
         "INSERT INTO scratch SELECT * FROM secrets",
+        # the identifier clause names its relation only at analysis
+        "INSERT INTO scratch SELECT * FROM IDENTIFIER('secrets')",
     ],
 )
 def test_write_spellings_that_dodge_shape_regexes_denied(engine, stmt):
@@ -254,6 +256,8 @@ def test_spj_mirror_tables_not_readable_by_consumers(spark, tmp_path):
             sess.sql(f"SELECT * FROM {m}")
         with pytest.raises(AccessDeniedException):
             sess.sql(f"SELECT count(*) FROM (SELECT * FROM {m})")
+        with pytest.raises(AccessDeniedException):
+            sess.sql(f"SELECT * FROM IDENTIFIER('{m}')")
     # granted reads still work, and unknown names stay NOT_FOUND
     assert sess.sql("SELECT * FROM lookup").count() == 1
     with pytest.raises(Exception) as ei:

@@ -174,12 +174,13 @@ def test_masked_scan_equals_manual_mask(engine, states, masked):
 
 # ------------------------------------------------ write-source authorizer
 # The plan-based write authorizer (policy.py::_authorize_write_sources,
-# the py4j walk in _parsed_relation_idents) is the security keystone of
-# the delegated-DML path. Property: for ARBITRARY generated statements
-# mixing CTEs, IN/scalar subqueries in WHERE/SET/ON, nested CTE chains
-# and quoted identifiers, a statement referencing any ungranted base
-# relation raises AccessDeniedException and writes nothing, while a
-# statement whose relations are all granted executes.
+# the py4j walk in ParsedStatement.relations) is the security keystone
+# of the delegated-DML path. Property: for ARBITRARY generated
+# statements mixing CTEs, IN/scalar subqueries in WHERE/SET/ON, nested
+# CTE chains and quoted identifiers — in any spelling of comments,
+# whitespace and keyword case — a statement referencing any ungranted
+# base relation raises AccessDeniedException and writes nothing, while
+# a statement whose relations are all granted executes.
 
 GRANTED_SRCS = ["w_src_a", "w_src_b"]
 UNGRANTED = "w_secret"
@@ -207,6 +208,26 @@ def write_engine(spark, tmp_path_factory):
 
 def _rel(name: str, quoted: bool) -> str:
     return f"`{name}`" if quoted else name
+
+
+# Spellings that must never change a decision: the gaps between tokens
+# become runs of whitespace or comments, and keywords change case.
+_GAPS = [" ", "  ", "\n", "\t ", " /* c */ ", "/**/", " -- c\n"]
+_CASES = [str.upper, str.lower, str.title]
+
+
+def respell(stmt: str, draw) -> str:
+    """``stmt`` (single-spaced, no string literals) with every gap —
+    the leading one included — and every keyword's case drawn by the
+    hypothesis ``draw``."""
+    out = [draw(st.sampled_from(["", *_GAPS]))]
+    for i, tok in enumerate(stmt.split(" ")):
+        if i:
+            out.append(draw(st.sampled_from(_GAPS)))
+        if tok.isalpha() and tok.isupper():
+            tok = draw(st.sampled_from(_CASES))(tok)
+        out.append(tok)
+    return "".join(out)
 
 
 @st.composite
@@ -258,7 +279,7 @@ def write_statements(draw):
             "INSERT INTO w_mine SELECT k, v FROM c"
         )
         used = {r1}
-    return stmt, UNGRANTED in used
+    return respell(stmt, draw), UNGRANTED in used
 
 
 @given(case=write_statements())
@@ -290,3 +311,39 @@ def test_write_sources_authorized_iff_all_granted(write_engine, case):
     assert [
         tuple(r) for r in write_engine.warehouse.read_table(UNGRANTED).collect()
     ] == secret_before
+
+
+SPELLING_MATRIX_STATEMENTS = [
+    "INSERT INTO w_mine SELECT k, v FROM w_src_a WHERE k IN (SELECT k FROM w_src_b)",
+    "ALTER TABLE w_src_a ADD COLUMNS (x INT)",
+    "DROP TABLE w_src_a",
+    "CREATE TABLE w_copy AS SELECT * FROM w_src_a",
+]
+
+
+@pytest.mark.parametrize("stmt", SPELLING_MATRIX_STATEMENTS)
+def test_spelling_matrix_keeps_the_decision(write_engine, stmt):
+    """Default-tier slice of the respelled authorizer property: a
+    leading block or line comment, tabs and newlines, and lower-case
+    keywords each reach the same decision as the canonical text."""
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import (
+        AccessDeniedException as ADE,
+    )
+
+    sess = write_engine.session_for("wprop")
+
+    def decision(text: str) -> str:
+        try:
+            sess.sql(text)
+        except ADE:
+            return "denied"
+        return "executed"
+
+    mutated = [
+        "/* c */ " + stmt,
+        "-- c\n" + stmt,
+        stmt.replace(" ", "\n\t", 3),
+        " ".join(t.lower() if t.isalpha() and t.isupper() else t for t in stmt.split(" ")),
+    ]
+    want = decision(stmt)
+    assert [decision(m) for m in mutated] == [want] * len(mutated)

@@ -388,3 +388,24 @@ def test_producer_explain_cte_dml_rejected_without_executing(engine):
     assert before == after
     plan = engine.sql("EXPLAIN (SELECT 1 AS one)").collect()
     assert len(plan) == 1
+
+
+def test_view_resecured_once_per_sugared_read(engine, monkeypatch):
+    """A read that needs a sugar rewrite (QUALIFY) re-secures each view
+    it references once, not once per rewrite pass."""
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import SecureSession
+
+    body = "SELECT claim_id, amount FROM claims"
+    sess = engine.session_for(TEAM1)
+    sess.sql(f"CREATE VIEW once_v AS {body}")
+    seen = []
+    real = SecureSession.sql
+    monkeypatch.setattr(
+        SecureSession, "sql", lambda self, q: seen.append(q) or real(self, q)
+    )
+    rows = sess.sql(
+        "SELECT claim_id FROM once_v "
+        "QUALIFY row_number() OVER (ORDER BY amount DESC) <= 2"
+    ).collect()
+    assert len(rows) == 2
+    assert seen.count(body) == 1

@@ -30,8 +30,10 @@ def test_psi_inplan_gate_matches_literal_shape(spark, sf_dir):
         inp = QUERIES["orders_value_psi_yearly"](spark, sf_dir).collect()
     finally:
         spark.conf.unset("spark_graft.inplan_order_stats")
-    assert sorted(r.asDict().items() for r in lit) == sorted(
-        r.asDict().items() for r in inp
+    # dict_items only compare by inclusion (a partial order); sort the
+    # rows as tuples of (column, value) pairs, a total order
+    assert sorted(tuple(sorted(r.asDict().items())) for r in lit) == sorted(
+        tuple(sorted(r.asDict().items())) for r in inp
     )
 
 

@@ -422,3 +422,14 @@ def test_create_sql_function_and_use(spark, tmp_path):
     with pytest.raises(ValueError, match="Unknown function"):
         fe.execute("DROP FUNCTION net")
     fe.execute("DROP FUNCTION IF EXISTS net")
+
+
+def test_comment_prefixed_ddl_lands_in_the_warehouse(engine, spark):
+    """The dispatch ladder sees the comment-stripped statement: a
+    leading comment must not route CREATE TABLE past its shape onto
+    Spark's own catalog as a MANAGED table."""
+    engine.sql("-- c\nCREATE TABLE commented_ddl_t (y INT)")
+    assert "commented_ddl_t" in engine.warehouse.list_tables()
+    assert "commented_ddl_t" not in {t.name for t in spark.catalog.listTables()}
+    engine.sql("/* c */ INSERT INTO commented_ddl_t VALUES (7) -- trailing")
+    assert [tuple(r) for r in engine.sql("SELECT * FROM commented_ddl_t").collect()] == [(7,)]
