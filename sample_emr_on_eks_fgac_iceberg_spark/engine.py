@@ -69,6 +69,7 @@ class FgacEngine:
             # write permissions have no cell-level variant)
             dml_executor=self.sql,
             data_version=self.warehouse.state_token,
+            scan_version=self.warehouse.scan_version,
             metadata_loader=lambda s, name, kind: getattr(
                 Warehouse(s, self.warehouse.root), f"{kind}_df"
             )(name),

@@ -1293,8 +1293,11 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the evidence a dedup rollout needs before trusting the estimate
     as a dedup verdict (how biased is m/K in the operating range, and
     how fat are the tails). Everything is integer ppm (one integer div
-    per ratio), so the report is bit-equal cross-engine; the means are
-    single divisions of exact sums.
+    per ratio) and the means are single divisions of exact sums, so the
+    report is bit-equal cross-engine up to hash collisions: the exact
+    intersection joins shingles on their xxhash64, not the string, so
+    two distinct shingles of the corpus that share a 64-bit hash would
+    move one pair's intersection by one (the oracle compares strings).
 
     Plan shape at 100 TB: identical candidate generation to
     dedup_minhash_det (banded LSH join — never all-pairs); the match

@@ -415,6 +415,7 @@ class SecureSession:
         principal: str,
         table_loader,
         known_tables,
+        scan_version,
         dml_executor=None,
         data_version=None,
         metadata_loader=None,
@@ -462,6 +463,13 @@ class SecureSession:
         # registered view, so views must re-resolve after commits too,
         # not only after policy mutations.
         self._data_version = data_version or (lambda: None)
+        # name -> (base table, metadata version) (e.g.
+        # Warehouse.scan_version): the raw scan of a current-snapshot
+        # read is reused while its base table's version holds, so
+        # resource links share one scan and a commit to one table does
+        # not re-plan the others. The policy filter is applied per call.
+        self._scan_version = scan_version
+        self._scans: dict[str, tuple] = {}
         # (name, kind) -> DataFrame for t.snapshots / t.history under
         # the DESCRIBE permission (LF: table metadata is DESCRIBE-
         # scoped). t.files / t.partitions stay producer-only — they
@@ -505,8 +513,23 @@ class SecureSession:
         self._seen_version: tuple | None = None
         self._refresh_views()
 
+    def _raw_scan(self, table: str, **time_travel) -> DataFrame:
+        if time_travel:
+            return self._table_loader(self._spark, table, **time_travel)
+        # version first: a commit racing the load only forces a re-plan
+        base, version = self._scan_version(table)
+        hit = self._scans.get(base)
+        if hit is None or hit[0] != version:
+            hit = (version, self._table_loader(self._spark, table))
+            self._scans[base] = hit
+        # fresh attribute ids per frame, as a fresh load would have:
+        # two frames of one table (or of a table and its link) must
+        # self-join through the DataFrame API without ambiguity
+        df = hit[1]
+        return df.toDF(*df.columns)
+
     def _secured(self, table: str, **time_travel) -> DataFrame:
-        raw = self._table_loader(self._spark, table, **time_travel)
+        raw = self._raw_scan(table, **time_travel)
         return self._policy.secured_frame(self.principal, table, raw)
 
     @staticmethod
@@ -1349,7 +1372,7 @@ class SecureSession:
     def describe(self, name: str) -> list[tuple[str, str]]:
         self._policy.authorize(self.principal, name, DESCRIBE)
         grant = self._policy.grant_for(self.principal, name)
-        df = self._table_loader(self._spark, name)
+        df = self._raw_scan(name)
         if grant.filter_name is not None:
             try:
                 f = self._policy.get_filter(grant.filter_name)

@@ -27,6 +27,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Warehouse scans hand the reader the exact data files the manifest log
+# names. Above this many paths Spark would start a distributed job to
+# list them again; the manifest already is the file listing, so the
+# paths are only stat'ed on the driver. Set before getOrCreate, so the
+# engine's session and every newSession() (SecureSession, the
+# frontend's scratch sessions) start from it. This assumes a local or
+# HDFS-like filesystem, where a stat is cheap: on object storage one
+# sequential metadata call per file would cost more, for tables of many
+# files, than Spark's parallel listing did.
+PARTITION_DISCOVERY_THRESHOLD = 1_000_000
 
 
 def _find_iceberg_jar() -> str | None:
@@ -78,6 +88,10 @@ def build_session(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(PARTITION_DISCOVERY_THRESHOLD),
+        )
         # InferFiltersFromGenerate turns explode(expensive_expr) into
         # pushed-down filters `size(expensive_expr) > 0 AND
         # isnotnull(expensive_expr)` by *substituting the whole

@@ -63,6 +63,11 @@ _TRANSFORM_RE = re.compile(
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
+# Iceberg's positional delete file: the spec's reserved fields
+# file_path (2147483546) and pos (2147483545), in that order.
+_POSITION_DELETE_SCHEMA = T.StructType(
+    [T.StructField("file_path", T.StringType()), T.StructField("pos", T.LongType())]
+)
 
 
 @dataclass(frozen=True)
@@ -269,6 +274,20 @@ class Warehouse:
                 st = os.stat(os.path.join(self._meta_dir, f))
                 out.append((f, st.st_mtime_ns, st.st_size))
         return tuple(out)
+
+    def scan_version(self, name: str) -> tuple[str, str]:
+        """(base table, metadata version) of ``name``'s current scan; a
+        resource link resolves to its target. The version is a digest of
+        the base table's metadata file, which every commit, ALTER and
+        spec change rewrites, so a frame planned at one version stays
+        valid until the version changes."""
+        import hashlib
+
+        meta = self._read_meta(name)
+        while meta.link_to is not None:
+            meta = self._read_meta(meta.link_to)
+        with open(self._meta_path(meta.name), "rb") as f:
+            return meta.name, hashlib.blake2b(f.read(), digest_size=16).hexdigest()
 
     def list_tables(self) -> list[str]:
         return sorted(
@@ -1599,6 +1618,13 @@ class Warehouse:
             (pos if k == "positional" else eq)[f] = seq
         return eq, pos
 
+    def _read_position_deletes(self, ddir: str, files) -> DataFrame:
+        """Positional delete files under ``ddir``, read with their fixed
+        spec schema — no inference job."""
+        return self.spark.read.schema(_POSITION_DELETE_SCHEMA).parquet(
+            *(os.path.join(ddir, f) for f in files)
+        )
+
     def _apply_position_deletes(
         self, meta: TableMeta, df: DataFrame, del_map: dict[str, int]
     ) -> DataFrame:
@@ -1615,7 +1641,7 @@ class Warehouse:
         for f, s in del_map.items():
             by_seq.setdefault(s, []).append(f)
         for seq, files in sorted(by_seq.items()):
-            raw = self.spark.read.parquet(*(os.path.join(ddir, f) for f in files))
+            raw = self._read_position_deletes(ddir, files)
             parts.append(
                 raw.select(
                     self._rel_expr(F.col("file_path")).alias("__d_rel"),
@@ -2238,9 +2264,15 @@ class Warehouse:
         ref: str | None = None,
         filters: list[tuple] | None = None,
     ) -> DataFrame:
-        """S1: cataloged scan. Partition columns come back from the
-        directory layout (basePath keeps them in the schema); declared
-        types are re-asserted so DATE/DECIMAL survive the round-trip.
+        """S1: cataloged scan, planned from metadata alone like an
+        Iceberg scan: the file list comes from the manifest log and the
+        reader schema from the table's declared schema and partition
+        spec (partition values come from the directory layout, cast to
+        their declared or transform type). Planning launches no Spark
+        job — no listing, no schema inference; the returned frame reads
+        the files only when an action runs. The one exception is a
+        table that was ALTERed: its reader schema is the union of the
+        data files' footers (``_merged_group_schema``).
 
         ``snapshot_id`` reads the table as of that snapshot (the union
         of every manifest up to and including it — appends are
@@ -2675,7 +2707,13 @@ class Warehouse:
         other column), then the projected groups union by name.
         ``seq_of`` additionally groups by commit sequence and tags rows
         with a ``__seq`` column (only needed when equality deletes are
-        live — the sequence guard is per data file)."""
+        live — the sequence guard is per data file).
+
+        Every group is read with an explicit schema taken from metadata
+        (``_group_schema``) and the manifest's file list, so planning
+        the read launches no Spark job: no schema inference, and no
+        distributed listing (``session.PARTITION_DISCOVERY_THRESHOLD``).
+        Only an evolved table still reads footers, once per file."""
         if not files:
             return None
         data = self.data_dir(meta.name)
@@ -2695,22 +2733,11 @@ class Warehouse:
             extra = extra + ("__pos_file", "__pos")
         parts = []
         for key, group_files in groups.items():
-            reader = self.spark.read.option("basePath", data)
-            if meta.properties.get("schema_evolved") == "true":
-                # only after an ALTER: pre-evolution files have a
-                # different physical schema, so the union of footers is
-                # needed; the extra footer pass is the manifest-planning
-                # cost Iceberg pays in metadata instead. The union is
-                # computed HERE with numeric type-widening (int→long,
-                # float→double, decimal precision growth) because
-                # Spark's own mergeSchema refuses those merges, while
-                # its parquet readers accept an explicitly-widened
-                # schema over narrow files (Spark 4 widening promotion)
-                # — the property ALTER COLUMN TYPE relies on.
-                reader = reader.schema(
-                    self._merged_group_schema(data, group_files, meta, key[0])
-                )
-            raw = reader.parquet(*(os.path.join(data, f) for f in group_files))
+            raw = (
+                self.spark.read.option("basePath", data)
+                .schema(self._group_schema(data, group_files, meta, key[0]))
+                .parquet(*(os.path.join(data, f) for f in group_files))
+            )
             if with_file:
                 raw = raw.withColumn("__file_path", F.col("_metadata.file_path"))
             if seq_of is not None:
@@ -2745,17 +2772,58 @@ class Warehouse:
                 return a if a.precision >= b.precision else b
         return None
 
+    @staticmethod
+    def _partition_fields(meta: TableMeta, spec: tuple) -> list[T.StructField]:
+        """Reader-schema fields for the directory columns of ``spec``.
+        An explicit reader schema suppresses partition-type inference,
+        so each dir column gets its declared type (identity) or the type
+        its transform produces — Spark casts the directory strings to
+        it."""
+        declared = {f.name: f.dataType for f in meta.schema.fields}
+        out = []
+        for pf in parse_partition_spec(list(spec)):
+            if pf.kind == "identity":
+                dtype = declared.get(pf.source, T.StringType())
+            elif pf.kind == "year" or pf.kind == "bucket":
+                dtype = T.IntegerType()
+            elif pf.kind == "truncate":
+                src = declared.get(pf.source, T.StringType())
+                dtype = src if src.simpleString() in _INT_TYPES else T.StringType()
+            else:  # month/day/hour → date_format strings
+                dtype = T.StringType()
+            out.append(T.StructField(pf.name, dtype, True))
+        return out
+
+    def _group_schema(
+        self, data: str, files: list[str], meta: TableMeta, spec: tuple
+    ) -> T.StructType:
+        """Reader schema of one spec group. Every write path casts to
+        the declared schema, so until an ALTER the files hold exactly
+        the declared columns minus the spec's directory columns. After
+        one (``schema_evolved``), pre-evolution files have a different
+        physical schema, so the union of footers is needed
+        (``_merged_group_schema``)."""
+        if meta.properties.get("schema_evolved") == "true":
+            return self._merged_group_schema(data, files, meta, spec)
+        dirs = self._partition_fields(meta, spec)
+        names = {f.name for f in dirs}
+        return T.StructType(
+            [f for f in meta.schema.fields if f.name not in names] + dirs
+        )
+
     def _merged_group_schema(
         self, data: str, files: list[str], meta: TableMeta, spec: tuple
     ) -> T.StructType:
         """Union of the group's file footers with numeric widening —
         one footer read per file, the manifest-planning cost an evolved
         table pays (Iceberg keeps the same information in metadata).
-        Partition-directory columns (excluded from footers by
-        partitionBy) are appended explicitly: an explicit reader schema
-        suppresses partition-type inference, so each dir column gets
-        its declared type (identity) or the type its transform
-        produces — Spark casts the directory strings to it."""
+        The union is computed here because Spark's own mergeSchema
+        refuses int→long, float→double and decimal precision growth,
+        while its parquet readers accept an explicitly widened schema
+        over narrow files (Spark 4 widening promotion) — the property
+        ALTER COLUMN TYPE relies on. Partition-directory columns
+        (excluded from footers by partitionBy) are appended from
+        ``_partition_fields``."""
         # Parquet part files are immutable once committed (uuid part
         # names; rewrites add new files), so footers cache per path —
         # without this every scan of an evolved table re-reads every
@@ -2785,21 +2853,10 @@ class Warehouse:
                 merged[fld.name] = T.StructField(
                     fld.name, wide, cur.nullable or fld.nullable
                 )
-        declared = {f.name: f.dataType for f in meta.schema.fields}
-        for pf in parse_partition_spec(list(spec)):
-            if pf.name in merged:
-                continue
-            if pf.kind == "identity":
-                dtype = declared.get(pf.source, T.StringType())
-            elif pf.kind == "year" or pf.kind == "bucket":
-                dtype = T.IntegerType()
-            elif pf.kind == "truncate":
-                src = declared.get(pf.source, T.StringType())
-                dtype = src if src.simpleString() in _INT_TYPES else T.StringType()
-            else:  # month/day/hour → date_format strings
-                dtype = T.StringType()
-            merged[pf.name] = T.StructField(pf.name, dtype, True)
-            order.append(pf.name)
+        for fld in self._partition_fields(meta, spec):
+            if fld.name not in merged:
+                merged[fld.name] = fld
+                order.append(fld.name)
         return T.StructType([merged[n] for n in order])
 
     def _scan_live(
@@ -3367,13 +3424,10 @@ class Warehouse:
             return self.spark.createDataFrame(
                 [], "file_path string, pos bigint, delete_file_path string"
             )
-        ddir = self.delete_dir(meta.name)
-        raw = self.spark.read.parquet(
-            *(os.path.join(ddir, f) for f in sorted(pos))
-        )
+        raw = self._read_position_deletes(self.delete_dir(meta.name), sorted(pos))
         return raw.select(
             "file_path",
-            F.col("pos").cast("bigint").alias("pos"),
+            "pos",
             F.col("_metadata.file_path").alias("delete_file_path"),
         )
 
@@ -3655,9 +3709,7 @@ class Warehouse:
                         restrict_files=restrict,
                     )
                     if pre is not None:
-                        dels = self.spark.read.parquet(
-                            *(os.path.join(ddir, f) for f in pos_files)
-                        ).select(
+                        dels = self._read_position_deletes(ddir, pos_files).select(
                             self._rel_expr(F.col("file_path")).alias("__d_rel"),
                             F.col("pos").alias("__d_pos"),
                         )
@@ -4190,9 +4242,7 @@ class Warehouse:
                         "added_delete_files": 0,
                         "remaining_rows": 0}
             ddir = self.delete_dir(name)
-            raw = self.spark.read.parquet(
-                *(os.path.join(ddir, f) for f in pos_map)
-            )
+            raw = self._read_position_deletes(ddir, pos_map)
             live_df = self.spark.createDataFrame(
                 [(f,) for f in sorted(live)], "__live_rel string"
             )

@@ -549,7 +549,6 @@ _CARTESIAN_OK = {
 }
 
 
-@pytest.mark.slow
 def test_no_data_sized_global_window_anywhere(spark, sf_dir):
     """Global regression gate (VERDICT r6 task 3): no registered
     query's plan may contain a data-sized single-partition window —

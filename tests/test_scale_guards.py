@@ -3,7 +3,6 @@ frame onto the driver. VERDICT r01 flagged `toPandas()` in
 similarity_pairs_threshold / dedup_embedding_cosine as a 100 TB
 driver-OOM; these static checks keep the pattern from coming back."""
 
-import pytest
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "sample_emr_on_eks_fgac_iceberg_spark"
@@ -114,7 +113,6 @@ def _uf_components(n, edges):
     return {i: min(members) for r, members in comp.items() for i in members}
 
 
-@pytest.mark.slow
 def test_connected_components_matches_union_find_random_graphs(spark):
     """Property: on random graphs, the distributed hash-to-min labels
     must equal a reference union-find's min-label components. Seeded
