@@ -20,9 +20,10 @@ catalog); this pure-parquet implementation keeps identical logical
 semantics — schema-on-write, identity partition pruning, snapshot-ish
 append versioning — with zero extra dependencies.
 
-Scale notes: writes fan out per-partition (Spark's dynamic partition
-write), reads prune partitions via directory layout + parquet footer
-stats; nothing here collects to the driver.
+Scale notes: writes cluster rows by partition value before Spark's
+dynamic partition write (``Warehouse._write_data``), reads prune
+partitions via directory layout + parquet footer stats; nothing here
+collects to the driver.
 """
 
 from __future__ import annotations
@@ -128,6 +129,37 @@ def _transform_column(f: PartitionField, dtype: str) -> F.Column:
     raise ValueError(f.kind)
 
 
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _type_sql(dtype: T.DataType) -> str:
+    """``simpleString`` with struct field names quoted, so any declared
+    type parses back inside a SQL CAST."""
+    if isinstance(dtype, T.StructType):
+        return "struct<" + ", ".join(
+            f"{_quote(f.name)}: {_type_sql(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in dtype.fields
+        ) + ">"
+    if isinstance(dtype, T.ArrayType):
+        return f"array<{_type_sql(dtype.elementType)}>"
+    if isinstance(dtype, T.MapType):
+        return f"map<{_type_sql(dtype.keyType)}, {_type_sql(dtype.valueType)}>"
+    return dtype.simpleString()
+
+
+def cast_projection(fields: list[T.StructField], present=None) -> list[str]:
+    """``selectExpr`` list casting each field to its declared type (a
+    typed NULL for a field not in ``present``): one py4j call where
+    ``F.col(n).cast(t).alias(n)`` costs ~50 per column; same plan."""
+    return [
+        f"CAST({_quote(f.name) if present is None or f.name in present else 'NULL'}"
+        f" AS {_type_sql(f.dataType)}) AS {_quote(f.name)}"
+        for f in fields
+    ]
+
+
 class TableNotFoundError(Exception):
     pass
 
@@ -187,7 +219,14 @@ class TableMeta:
 
 class Warehouse:
     """A directory of identity-partitioned parquet tables with schema-on-
-    write enforcement and append snapshots."""
+    write enforcement and append snapshots.
+
+    Write distribution: every data-file write goes through
+    ``_write_data``. On a partitioned table it clusters rows by
+    partition value (Iceberg's ``hash`` distribution), so a commit adds
+    about one file per partition value it touches, each sorted by the
+    table's WRITE ORDERED BY. Compaction keeps its planned file count;
+    unpartitioned writes keep the input's partitioning."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -1148,15 +1187,6 @@ class Warehouse:
         missing = [f.name for f in schema.fields if f.name not in df.columns]
         if missing:
             raise SchemaMismatchError(f"Insert into '{name}' missing columns {missing}")
-        # enforce declared types (schema-on-write), preserve column order
-        aligned = df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
-        order = self._write_order(meta)
-        if order:
-            # task-local sort (no shuffle): tightens parquet min/max
-            # stats so scans on the order columns skip row groups
-            aligned = aligned.sortWithinPartitions(*order)
         # lock spans fence-check → write → commit so the added-file
         # diff can't absorb a concurrent writer's files and the replay
         # fence can't be passed twice
@@ -1165,12 +1195,7 @@ class Warehouse:
                 fence = self.last_committed_batch(name, txn[0])
                 if fence is not None and int(txn[1]) <= fence:
                     return False
-            before = self._data_files(name)
-            aligned, part_cols = self._prepare_partitions(meta, aligned)
-            writer = aligned.write.mode("append")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(self.data_dir(name))
+            added = self._write_data(meta, df)
             if wap_id is not None:
                 # a wap-tagged write is staged by definition (Iceberg:
                 # spark.wap.id set → the commit stages)
@@ -1178,7 +1203,7 @@ class Warehouse:
             self._commit_snapshot(
                 meta,
                 "append",
-                self._data_files(name) - before,
+                added,
                 txn=txn,
                 staged=staged,
                 wap_id=wap_id,
@@ -1223,15 +1248,9 @@ class Warehouse:
             raise SchemaMismatchError(
                 f"Insert overwrite '{name}' missing columns {missing}"
             )
-        aligned = df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
-        order = self._write_order(meta)
-        if order:
-            aligned = aligned.sortWithinPartitions(*order)
-
         spec = parse_partition_spec(meta.partition_by)
         if dynamic and spec:
+            aligned = df.selectExpr(*cast_projection(schema.fields))
             types = {f.name: f.dataType.simpleString() for f in schema.fields}
             tcols = [
                 (
@@ -1256,7 +1275,7 @@ class Warehouse:
                     eq = tc.eqNullSafe(F.lit(r[pf.name]))
                     clause = eq if clause is None else (clause & eq)
                 pred = clause if pred is None else (pred | clause)
-            scan = self._scan_with_filepath(meta)
+            scan = self._scan_live(meta, with_file=True)
             kept = None
             affected: set[str] = set()
             if scan is not None and pred is not None:
@@ -1282,15 +1301,8 @@ class Warehouse:
             # must have its files in `removed`, or a "replace everything"
             # overwrite silently keeps the concurrent batch's rows
             meta = self._read_meta(name)
-            live_before = self._live_files(meta)
-            files_before = self._data_files(name)
-            aligned, part_cols = self._prepare_partitions(meta, aligned)
-            writer = aligned.write.mode("append")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(self.data_dir(name))
-            added = self._data_files(name) - files_before
-            removed = set(live_before)
+            removed = set(self._live_files(meta))
+            added = self._write_data(meta, df)
             self._commit_snapshot(
                 meta,
                 "overwrite",
@@ -1332,9 +1344,6 @@ class Warehouse:
         meta = self._read_meta(name)
         return self._read_meta(meta.link_to) if meta.link_to is not None else meta
 
-    def _scan_with_filepath(self, meta: TableMeta) -> DataFrame | None:
-        return self._scan_live(meta, with_file=True)
-
     def _rel_file(self, meta: TableMeta, uri: str) -> str:
         path = uri[len("file:"):] if uri.startswith("file:") else uri
         return os.path.relpath(path, os.path.abspath(self.data_dir(meta.name)))
@@ -1362,9 +1371,12 @@ class Warehouse:
         removed_deletes: set[str] | None = None,
         txn: tuple[str, int] | None = None,
         empty_guard=None,
+        order: list | None = None,
+        distribute: bool = True,
     ) -> set[str]:
         """Append the rewritten rows as new data files and commit a
         snapshot that removes the old files from the live set.
+        ``order`` and ``distribute`` pass through to ``_write_data``.
 
         ``empty_guard``: an ``Observation`` counting the written rows
         (metric 'n'). When the statement removes nothing and the guard
@@ -1372,20 +1384,8 @@ class Warehouse:
         nothing — the write's 0-row debris is unlinked and NO snapshot
         commits, preserving the statement's historical no-op semantics
         without a separate pre-count job."""
-        aligned = rewritten.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in meta.schema.fields]
-        )
-        order = self._write_order(meta)
-        if order:
-            aligned = aligned.sortWithinPartitions(*order)
         with self._table_lock(meta.name):
-            before = self._data_files(meta.name)
-            aligned, part_cols = self._prepare_partitions(meta, aligned)
-            writer = aligned.write.mode("append")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(self.data_dir(meta.name))
-            added = self._data_files(meta.name) - before
+            added = self._write_data(meta, rewritten, order, distribute)
             if (
                 empty_guard is not None
                 and not removed
@@ -1412,7 +1412,7 @@ class Warehouse:
             cond = F.lit(True)
         if meta.properties.get("write.delete.mode") == "merge-on-read":
             return self._delete_merge_on_read(meta, cond)
-        scan = self._scan_with_filepath(meta)
+        scan = self._scan_live(meta, with_file=True)
         if scan is None:
             return {"deleted_rows": 0, "rewritten_files": 0}
         n, affected, uris = self._matched_stats(meta, scan.filter(cond))
@@ -1676,7 +1676,7 @@ class Warehouse:
             cond = F.lit(True)
         if meta.properties.get("write.update.mode") == "merge-on-read":
             return self._update_merge_on_read(meta, assignments, cond)
-        scan = self._scan_with_filepath(meta)
+        scan = self._scan_live(meta, with_file=True)
         if scan is None:
             return {"updated_rows": 0, "rewritten_files": 0}
         n, affected, uris = self._matched_stats(meta, scan.filter(cond))
@@ -1723,11 +1723,9 @@ class Warehouse:
             return {"updated_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
         updated = matched.select(
             *[
-                (
-                    F.expr(assignments[f.name]).cast(f.dataType).alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name).cast(f.dataType).alias(f.name)
-                )
+                F.expr(assignments[f.name]).alias(f.name)
+                if f.name in assignments
+                else F.col(f.name)
                 for f in meta.schema.fields
             ]
         )
@@ -1735,9 +1733,6 @@ class Warehouse:
             F.col("__pos_file").alias("file_path"),
             F.col("__pos").cast("bigint").alias("pos"),
         )
-        order = self._write_order(meta)
-        if order:
-            updated = updated.sortWithinPartitions(*order)
         ddir = self.delete_dir(meta.name)
         os.makedirs(ddir, exist_ok=True)
         with self._table_lock(meta.name):
@@ -1746,16 +1741,10 @@ class Warehouse:
                 "file_path", "pos"
             ).write.mode("append").parquet(ddir)
             added_deletes = self._delete_files_on_disk(meta.name) - before_d
-            before = self._data_files(meta.name)
-            updated, part_cols = self._prepare_partitions(meta, updated)
-            writer = updated.write.mode("append")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(self.data_dir(meta.name))
             self._commit_snapshot(
                 meta,
                 "update",
-                added=self._data_files(meta.name) - before,
+                added=self._write_data(meta, updated),
                 added_deletes=added_deletes,
                 delete_kinds={f: "positional" for f in added_deletes},
                 delete_refs={f: refs for f in added_deletes},
@@ -1955,11 +1944,13 @@ class Warehouse:
         (exactly-once CDC apply): a batch at or below the source's
         committed watermark returns ``{"skipped": True}``.
 
-        Plan shape (copy-on-write): ONE left join evaluates every
-        clause gate, enforces the one-source-row-per-target-row
-        cardinality rule, counts per-action rows, and discovers the
-        affected files — only files where some clause fired are
-        rewritten. The source is plan-barriered so it evaluates once.
+        Plan shape (copy-on-write): ONE join evaluates every clause
+        gate, enforces the one-source-row-per-target-row cardinality
+        rule, counts per-action rows, and discovers the affected files
+        — only files where some clause fired are rewritten. Without
+        by-source clauses it is an inner join grouped by each target
+        row's (file, row ordinal); with them, a left join over the
+        whole target. The source is plan-barriered so it evaluates once.
         With ``write.merge.mode=merge-on-read`` rows firing a clause
         become ONE positional delete file plus appended replacements —
         only firing rows pay, no data file is rewritten."""
@@ -1983,7 +1974,9 @@ class Warehouse:
             )
         source = source.localCheckpoint(eager=False)
         src = source.withColumn("__matched", F.lit(True)).alias(source_alias)
-        scan = self._scan_with_filepath(meta)
+        scan = self._scan_live(
+            meta, with_file=True, with_pos=bool(m_cls) and not s_cls
+        )
         stats = {
             "updated_rows": 0,
             "deleted_rows": 0,
@@ -2010,15 +2003,24 @@ class Warehouse:
         affected: set[str] = set()
         uris: list[str] = []
         if scan is not None and (m_cls or s_cls):
-            # freeze row ids so the cardinality check counts real rows
-            tgt = scan.withColumn(
-                "__uid", F.monotonically_increasing_id()
-            ).localCheckpoint(eager=False)
-            t = tgt.alias(ta)
-            joined = t.join(src, F.expr(on), "left").withColumn(
-                "__clause", clause_over_joined()
-            )
-            per_row = joined.groupBy("__uid").agg(
+            if s_cls:
+                # by-source clauses fire on target rows with no match,
+                # so every target row goes through a left join; freeze
+                # row ids so the cardinality check counts real rows
+                t = scan.withColumn(
+                    "__uid", F.monotonically_increasing_id()
+                ).localCheckpoint(eager=False).alias(ta)
+                joined, row_id = t.join(src, F.expr(on), "left"), ["__uid"]
+            else:
+                # only a matched row can fire a clause: join the matched
+                # rows alone, keyed by the (file, row ordinal) identity
+                # the merge-on-read path uses — no barrier over the target
+                t = scan.alias(ta)
+                joined = t.join(src, F.expr(on), "inner")
+                row_id = [F.col(f"{ta}.__file_path"), F.col(f"{ta}.__pos")]
+            per_row = joined.withColumn("__clause", clause_over_joined()).groupBy(
+                *row_id
+            ).agg(
                 F.sum(hit.cast("int")).alias("n"),
                 F.first("__file_path").alias("f"),
                 F.min("__clause").alias("c"),
@@ -2203,9 +2205,6 @@ class Warehouse:
         if appended is None and dels is None:
             return stats
 
-        order = self._write_order(meta)
-        if order and appended is not None:
-            appended = appended.sortWithinPartitions(*order)
         ddir = self.delete_dir(meta.name)
         os.makedirs(ddir, exist_ok=True)
         with self._table_lock(meta.name):
@@ -2224,15 +2223,7 @@ class Warehouse:
                     "append"
                 ).parquet(ddir)
                 added_deletes = self._delete_files_on_disk(meta.name) - before_d
-            added: set[str] = set()
-            if appended is not None:
-                before = self._data_files(meta.name)
-                appended, part_cols = self._prepare_partitions(meta, appended)
-                writer = appended.write.mode("append")
-                if part_cols:
-                    writer = writer.partitionBy(*part_cols)
-                writer.parquet(self.data_dir(meta.name))
-                added = self._data_files(meta.name) - before
+            added = set() if appended is None else self._write_data(meta, appended)
             if obs is not None:
                 stats["inserted_rows"] = int(obs.get.get("n", 0))
             if dels is None and new_rows is None and stats["inserted_rows"] == 0:
@@ -2389,15 +2380,7 @@ class Warehouse:
         # partition discovery appends engine-managed transform columns
         # (ts_day, k_bucket, …) and may re-type identity values from
         # directory strings — re-project to the declared logical schema
-        present = set(sdf.columns)
-        return sdf.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in present
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in meta.schema.fields
-            ]
-        )
+        return sdf.selectExpr(*cast_projection(meta.schema.fields, set(sdf.columns)))
 
     # ---------------------------------------- storage-partitioned join
     # The reference's exact runtime pairing (Spark 3.3+ with the Iceberg
@@ -2516,21 +2499,41 @@ class Warehouse:
                 out[f] = spec
         return out
 
-    def _prepare_partitions(
-        self, meta: TableMeta, df: DataFrame
-    ) -> tuple[DataFrame, list[str]]:
-        """Write path: materialize derived partition columns (hidden
-        partitioning) and return the directory-column list. Identity
-        entries pass through; transform entries add an engine-managed
-        column named after the transform (ts_day, k_bucket, …) that
-        lands in the directory layout and never in the data files'
-        logical schema."""
-        fields = parse_partition_spec(meta.partition_by)
+    def _write_data(
+        self,
+        meta: TableMeta,
+        df: DataFrame,
+        order: list | None = None,
+        distribute: bool = True,
+    ) -> set[str]:
+        """The one data-file write path (caller holds the table lock):
+        cast ``df`` to the declared schema, append it, and return the
+        relative paths of the added files. Transform partition entries
+        add an engine-managed directory column (ts_day, k_bucket, …).
+        Partitioned rows are clustered by the directory columns
+        (REBALANCE: AQE coalesces small partitions and splits skewed
+        ones; ``distribute=False`` keeps the caller's distribution), then
+        sorted by them and ``order`` (default: WRITE ORDERED BY) — the
+        ordering Spark's planned write needs, so it adds no second sort
+        that would scramble ``order``."""
+        order = self._write_order(meta) if order is None else order
+        df = df.selectExpr(*cast_projection(meta.schema.fields))
         types = {f.name: f.dataType.simpleString() for f in meta.schema.fields}
-        for pf in fields:
+        part_cols = []
+        for pf in parse_partition_spec(meta.partition_by):
             if pf.kind != "identity":
                 df = df.withColumn(pf.name, _transform_column(pf, types[pf.source]))
-        return df, [pf.name for pf in fields]
+            part_cols.append(pf.name)
+        if part_cols and distribute:
+            df = df.hint("rebalance", *part_cols)
+        if part_cols or order:
+            df = df.sortWithinPartitions(*part_cols, *order)
+        before = self._data_files(meta.name)
+        writer = df.write.mode("append")
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(self.data_dir(meta.name))
+        return self._data_files(meta.name) - before
 
     # ------------------------------------------------- scan planning
     def _partition_values(self, rel_path: str) -> dict[str, str]:
@@ -2941,15 +2944,9 @@ class Warehouse:
                 df = df.withColumn(new, F.coalesce(F.col(new), F.col(old))).drop(old)
             elif old in df.columns:
                 df = df.withColumnRenamed(old, new)
-        present = set(df.columns)
-        return df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in present
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in meta.schema.fields
-            ],
-            *[F.col(c) for c in extra],
+        return df.selectExpr(
+            *cast_projection(meta.schema.fields, set(df.columns)),
+            *map(_quote, extra),
         )
 
     def schema_of(self, name: str) -> T.StructType:
@@ -3433,8 +3430,9 @@ class Warehouse:
 
     def alter_write_order(self, name: str, order_by: list[str]) -> None:
         """Iceberg's WRITE ORDERED BY: every subsequent write (append,
-        DML rewrite, compaction) sorts rows by these columns within
-        each output task, so parquet min/max stats become selective and
+        DML rewrite, bin-pack compaction; z-order compaction sorts by
+        its z-key instead) sorts rows by these columns within each
+        output file, so parquet min/max stats become selective and
         scans with predicates on the order columns skip row groups.
         Metadata-only; no existing file is rewritten (compaction
         migrates old files lazily)."""
@@ -4403,13 +4401,12 @@ class Warehouse:
             missing = [c for c in zorder_by if c not in df.columns]
             if missing:
                 raise ValueError(f"zorder_by columns not in schema: {missing}")
-            zcol = self._zorder_column(df, list(zorder_by))
-            packed = (
-                df.withColumn("__z", zcol)
-                .repartitionByRange(int(n_out), "__z")
-                .sortWithinPartitions("__z")
-            )
+            # the z-key replaces the table's write order as the sort
+            # within each output file (after the directory columns)
+            order = [self._zorder_column(df, list(zorder_by))]
+            packed = df.repartitionByRange(int(n_out), order[0])
         else:
+            order = None
             cluster = [
                 F.col(pf.source) for pf in parse_partition_spec(meta.partition_by)
             ]
@@ -4419,7 +4416,8 @@ class Warehouse:
                 else df.repartition(int(n_out))
             )
         added = self._rewrite_files(
-            meta, packed, "replace", live, removed_deletes=set(live_dels)
+            meta, packed, "replace", live, removed_deletes=set(live_dels),
+            order=order, distribute=False,
         )
         return {
             "rewritten_files": len(live),

@@ -261,3 +261,79 @@ def test_cow_merge_insert_count_via_observe_single_pass(wh, spark):
     assert stats["inserted_rows"] == 0
     assert len(wh.snapshots("acct")) == snaps, "no-op merge committed a snapshot"
     assert wh._data_files("acct") == before_files, "no-op merge left debris"
+
+
+def _spy_scans(wh, monkeypatch):
+    """Record the ``with_pos`` flag of every scan the merge plans."""
+    calls = []
+    real = wh._scan_live
+
+    def spy(meta, *args, **kwargs):
+        calls.append(kwargs.get("with_pos", False))
+        return real(meta, *args, **kwargs)
+
+    monkeypatch.setattr(wh, "_scan_live", spy)
+    return calls
+
+
+def test_cow_matched_only_merge_joins_by_row_identity(wh, spark, monkeypatch):
+    """Without a by-source clause the copy-on-write MERGE joins only the
+    matched rows, keyed by (file, row ordinal); stats and affected
+    files are the same as the whole-target left join's."""
+    wh.create_table("p", "k int, city string, amt int", partition_by=["city"])
+    wh.insert_values("p", [(1, "x", 10), (2, "x", 20), (3, "y", 30), (4, "z", 40)])
+    src = spark.createDataFrame(
+        [(2, "x", 25, "U"), (3, "y", 0, "D"), (5, "z", 50, "I")],
+        "k int, city string, amt int, op string",
+    )
+    calls = _spy_scans(wh, monkeypatch)
+    stats = wh.merge_into(
+        "p", src, "t.k = s.k",
+        matched_clauses=[
+            {"action": "delete", "condition": "s.op = 'D'"},
+            {"action": "update", "set": {"amt": "s.amt"}, "condition": None},
+        ],
+        not_matched_clauses=[
+            {"condition": None, "values": {"k": "s.k", "city": "s.city", "amt": "s.amt"}}
+        ],
+        not_matched_insert=None,
+    )
+    assert calls == [True]
+    assert stats == {
+        "updated_rows": 1, "deleted_rows": 1, "inserted_rows": 1,
+        "rewritten_files": 2,  # city=x and city=y; city=z only gains a file
+    }
+    assert _rows(wh.read_table("p")) == [
+        (1, "x", 10), (2, "x", 25), (4, "z", 40), (5, "z", 50)
+    ]
+
+
+def test_cow_matched_only_merge_duplicate_source_key_raises(wh, spark, monkeypatch):
+    _table(wh)
+    dup = spark.createDataFrame(
+        [(2, "x", 1, "U"), (2, "y", 2, "U")], "k int, v string, amt int, op string"
+    )
+    calls = _spy_scans(wh, monkeypatch)
+    with pytest.raises(MergeCardinalityError, match="matched 2 source rows"):
+        wh.merge_into(
+            "acct", dup, "t.k = s.k",
+            matched_update={"v": "s.v"}, not_matched_insert=None,
+        )
+    assert calls == [True]
+    assert len(wh.snapshots("acct")) == 1
+
+
+def test_cow_by_source_merge_keeps_the_left_join(wh, spark, monkeypatch):
+    _table(wh)
+    calls = _spy_scans(wh, monkeypatch)
+    stats = wh.merge_into(
+        "acct",
+        spark.createDataFrame([(1, "a2", 11)], "k int, v string, amt int"),
+        "t.k = s.k",
+        matched_update={"v": "s.v"},
+        not_matched_insert=None,
+        not_matched_by_source=[{"action": "delete", "condition": "t.amt >= 30"}],
+    )
+    assert calls == [False]
+    assert (stats["updated_rows"], stats["deleted_rows"]) == (1, 2)
+    assert _rows(wh.read_table("acct")) == [(1, "a2", 10), (2, "b", 20)]

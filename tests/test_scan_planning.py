@@ -55,7 +55,9 @@ def _model(n):
             CITIES[i % 3],
             dt.date(2024, 1, 1 + i % 28),
             Decimal(i) / 100,
-            dt.datetime(2024, 1, 1, i % 24, 0, 0),
+            # 40 days: the partitioned table clusters its writes by
+            # partition value, so it needs >32 values for >32 files
+            dt.datetime(2024, 1, 1, i % 24, 0, 0) + dt.timedelta(days=i % 40),
         )
         for i in range(n)
     ]
