@@ -6,10 +6,11 @@ experimentation platform runs when normality can't be assumed).
 
 All three follow the engine's determinism rules (registry.py): every
 statistic is exact integer arithmetic — rank/ECDF machinery reduces to
-distinct-value counts plus ONE distributed prefix sum, computed with
-the partition_rank_offsets K-scalar idiom (skew.py) rather than a
-single-partition global window, so the plans scale to 10⁸+ distinct
-values. DuckDB mirrors the prefix sums with ordinary window cumsums.
+distinct-value counts plus ONE distributed prefix sum
+(skew.global_prefix: range partitions, local windows and K in-plan
+partition offsets) rather than a single-partition global window, so
+the plans scale to 10⁸+ distinct values. DuckDB mirrors the prefix
+sums with ordinary window cumsums.
 """
 
 from __future__ import annotations
@@ -20,7 +21,8 @@ from pyspark.sql.window import Window
 
 from sample_emr_on_eks_fgac_iceberg_spark.operators.registry import register
 from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-    partition_rank_offsets,
+    exact_order_statistics,
+    global_prefix,
 )
 from sample_emr_on_eks_fgac_iceberg_spark.sources.tables import (
     load_table,
@@ -28,53 +30,6 @@ from sample_emr_on_eks_fgac_iceberg_spark.sources.tables import (
 )
 
 _DEC = "decimal(38,0)"
-
-
-def _prefix_sum(counts: DataFrame, val_col: str, sum_col: str,
-                inclusive: bool, dim_col: str | None = None) -> DataFrame:
-    """Distributed prefix sum of ``sum_col`` over the total order
-    ``val_col`` (distinct values): range repartition → LOCAL window
-    cumsum per partition → add the per-partition offsets
-    (partition_rank_offsets — K driver scalars, no single-partition
-    window). ``inclusive`` picks ≤ vs < semantics. Adds ``__cum``.
-
-    ``dim_col`` stacks SEVERAL independent prefix sums through one
-    layout (optimization r14): each distinct ``dim_col`` value is its
-    own ranking universe — the range partitioning leads with the dim
-    tag, the local window and the offsets fold both key on (pid, dim)
-    — so a two-axis query pays ONE range-sample job + exchange +
-    barrier instead of one per axis."""
-    spark = counts.sparkSession
-    dims = [dim_col] if dim_col else []
-    r = counts.repartitionByRange(
-        spark.sparkContext.defaultParallelism, *dims, val_col
-    ).withColumn("pid", F.spark_partition_id())
-    hi = Window.currentRow if inclusive else -1
-    lw = (
-        Window.partitionBy("pid", *dims)
-        .orderBy(val_col)
-        .rowsBetween(Window.unboundedPreceding, hi)
-    )
-    r = materialize_once(
-        r.withColumn(
-            "__local",
-            F.coalesce(F.sum(sum_col).over(lw), F.lit(0).cast(_DEC)),
-        )
-    )
-    partials = r.groupBy("pid", *dims).agg(F.sum(sum_col).alias("n_p"))
-    off = partition_rank_offsets(
-        partials.withColumn("n_p", F.col("n_p").cast(_DEC)),
-        extra_keys=dims,
-    )
-    return r.join(F.broadcast(off), ["pid", *dims]).withColumn(
-        "__cum", (F.col("__offset") + F.col("__local")).cast(_DEC)
-    )
-
-
-# public alias: the same distributed prefix sum, reusable by other
-# operator modules (orders_daily_backlog rides it for the signed
-# cumulative; the plan gate rejects unpartitioned windows)
-distributed_prefix_sum = _prefix_sum
 
 
 def _float_prefix_offsets(
@@ -160,8 +115,8 @@ def mannwhitney_u_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape at 100 TB: the fact table collapses to one hash agg on
     DISTINCT VALUE (ca, cb per cents value); the rank machinery is one
     range repartition of that value table + per-partition local cumsum
-    + K broadcast offsets (partition_rank_offsets — the gini/ABC
-    idiom, no single-partition window); the statistic is a 1-row agg.
+    + K broadcast offsets (skew.global_prefix — the gini/ABC idiom,
+    no single-partition window); the statistic is a 1-row agg.
     Accumulation rides DECIMAL(38,0)/HUGEINT (U ≤ na·nb overflows
     int64 at ~10¹⁰ rows per arm); the final cast to BIGINT is
     presentation."""
@@ -179,12 +134,12 @@ def mannwhitney_u_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("isa").cast(_DEC).alias("ca"),
         F.sum(F.lit(1) - F.col("isa")).cast(_DEC).alias("cb"),
     )
-    p = _prefix_sum(c, "v", "cb", inclusive=False)
+    p = global_prefix(c, ["v"], {"cumb": F.col("cb")}, inclusive=False)
     t = F.col("ca") + F.col("cb")
     return p.agg(
         F.sum("ca").cast("bigint").alias("n_urgent"),
         F.sum("cb").cast("bigint").alias("n_low"),
-        F.sum(F.col("ca") * (F.lit(2).cast(_DEC) * F.col("__cum") + F.col("cb")))
+        F.sum(F.col("ca") * (F.lit(2).cast(_DEC) * F.col("cumb") + F.col("cb")))
         .cast("bigint")
         .alias("u2_urgent"),
         F.sum(t * t * t - t).cast("bigint").alias("tie_term"),
@@ -234,8 +189,9 @@ def ks_two_sample_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at 100 TB: identical skeleton to mannwhitney —
     distinct-value hash agg → ONE distributed inclusive prefix sum
-    (range repartition + K broadcast offsets) → 1-row max. The group
-    totals ride a broadcast 1-row cross join, not driver scalars."""
+    (range repartition + K broadcast offsets) → 1-row max. Both arms'
+    cumsums share ONE range layout, and the group totals come from the
+    same K-row fold as the offsets, not driver scalars."""
     g = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY"))
@@ -246,49 +202,12 @@ def ks_two_sample_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("isa"),
         )
     )
-    c = materialize_once(
-        g.groupBy("v").agg(
-            F.sum("isa").cast(_DEC).alias("ca"),
-            F.sum(F.lit(1) - F.col("isa")).cast(_DEC).alias("cb"),
-        )
+    c = g.groupBy("v").agg(
+        F.sum("isa").cast(_DEC).alias("ca"),
+        F.sum(F.lit(1) - F.col("isa")).cast(_DEC).alias("cb"),
     )
-    # BOTH arms' inclusive prefix sums in ONE range layout (one
-    # shuffle, one local-window pass computing two cumsums, one
-    # offsets broadcast per arm) — a per-arm _prefix_sum call would
-    # range-shuffle the value table twice for no reason
-    spark_ = c.sparkSession
-    r = c.repartitionByRange(
-        spark_.sparkContext.defaultParallelism, "v"
-    ).withColumn("pid", F.spark_partition_id())
-    lw = (
-        Window.partitionBy("pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    r = materialize_once(
-        r.withColumn("la", F.sum("ca").over(lw)).withColumn(
-            "lb", F.sum("cb").over(lw)
-        )
-    )
-    partials = r.groupBy("pid").agg(
-        F.sum("ca").alias("pa"), F.sum("cb").alias("pb")
-    )
-    offa = partition_rank_offsets(
-        partials.select("pid", F.col("pa").alias("n_p"))
-    ).withColumnRenamed("__offset", "__offa")
-    offb = partition_rank_offsets(
-        partials.select("pid", F.col("pb").alias("n_p"))
-    ).withColumnRenamed("__offset", "__offb")
-    p = (
-        r.join(F.broadcast(offa), "pid")
-        .join(F.broadcast(offb), "pid")
-        .withColumn("cuma", (F.col("__offa") + F.col("la")).cast(_DEC))
-        .withColumn("cumb", (F.col("__offb") + F.col("lb")).cast(_DEC))
-    )
-    tot = c.agg(
-        F.sum("ca").cast(_DEC).alias("na"), F.sum("cb").cast(_DEC).alias("nb")
-    )
-    j = p.crossJoin(F.broadcast(tot))
+    j = global_prefix(c, ["v"], {"cuma": F.col("ca"), "cumb": F.col("cb")})
+    j = j.withColumnsRenamed({"cuma_total": "na", "cumb_total": "nb"})
     diff = F.abs(F.col("cuma") * F.col("nb") - F.col("cumb") * F.col("na"))
     return j.groupBy("na", "nb").agg(
         F.max(diff).alias("d_num")
@@ -535,12 +454,14 @@ def customers_spearman_balance_spend(
     cnt = stacked.groupBy("dim", "val").agg(
         F.count(F.lit(1)).cast(_DEC).alias("t")
     )
-    p = _prefix_sum(cnt, "val", "t", inclusive=False, dim_col="dim")
+    p = global_prefix(
+        cnt, ["val"], {"cum": F.col("t")}, by=["dim"], inclusive=False
+    )
     ranks = p.select(
         "dim",
         "val",
         (
-            F.lit(2).cast(_DEC) * F.col("__cum")
+            F.lit(2).cast(_DEC) * F.col("cum")
             + F.col("t")
             + F.lit(1).cast(_DEC)
         ).alias("rr"),
@@ -637,9 +558,9 @@ def kruskal_wallis_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.groupBy("v", "grp").agg(F.count(F.lit(1)).cast(_DEC).alias("c"))
     )
     tv = cv.groupBy("v").agg(F.sum("c").alias("t"))
-    pv = _prefix_sum(tv, "v", "t", inclusive=False)
+    pv = global_prefix(tv, ["v"], {"cb": F.col("t")}, inclusive=False)
     rg = (
-        cv.join(pv.select("v", "t", F.col("__cum").alias("cb")), "v")
+        cv.join(pv.select("v", "t", "cb"), "v")
         .groupBy("grp")
         .agg(
             F.sum(
@@ -677,10 +598,9 @@ def _churn_at_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     later ones right-CENSORED), collapsed to one row per lifetime day
     with (d = events, cens = censored, m = total) and the at-risk
     count n_risk = n − Σ_{s<t} m_s computed via the distributed
-    prefix idiom (ONE range repartition, pid-local exclusive window,
-    K broadcast/driver offsets — never an unpartitioned window). The
-    returned frame keeps pid/lm/__offset/n so each estimator can run
-    its own inclusive cumulative on the same partitioning.
+    prefix (skew.global_prefix — never an unpartitioned window). The
+    returned frame keeps the helper's pid so each estimator can run its
+    own float cumulative on the same partitioning.
 
     Plan shape at 100 TB: one custkey hash agg collapses the fact
     table; everything after is keyed on LIFETIME DAYS — calendar-
@@ -710,28 +630,9 @@ def _churn_at_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("m"),
         )
     )
-    spark_ = lt.sparkSession
-    r = lt.repartitionByRange(
-        spark_.sparkContext.defaultParallelism, "lifetime"
-    ).withColumn("pid", F.spark_partition_id())
-    lwx = (
-        Window.partitionBy("pid")
-        .orderBy("lifetime")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    r = materialize_once(
-        r.withColumn("lm", F.coalesce(F.sum("m").over(lwx), F.lit(0)))
-    )
-    partials = r.groupBy("pid").agg(F.sum("m").alias("n_p"))
-    off = partition_rank_offsets(partials)
-    tot = partials.agg(F.sum("n_p").alias("n"))
-    return (
-        r.join(F.broadcast(off), "pid")
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "n_risk",
-            (F.col("n") - (F.col("__offset") + F.col("lm"))).cast("bigint"),
-        )
+    r = global_prefix(lt, ["lifetime"], {"lm": F.col("m")}, inclusive=False)
+    return r.withColumn(
+        "n_risk", (F.col("lm_total") - F.col("lm")).cast("bigint")
     )
 
 
@@ -797,7 +698,7 @@ def customer_churn_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded (≤ corpus span, a few thousand rows forever) — and every
     cumulative (at-risk exclusive Σ, ordered ln-sum, consumed flag)
     runs as the DISTRIBUTED prefix idiom: one range repartition,
-    pid-local windows, K driver/broadcast offsets — never an
+    pid-local windows, K in-plan broadcast offsets — never an
     unpartitioned window. The offset association can differ from a
     strict sequential float sum by an ulp; ppm rounding absorbs it
     (same rule as the statistic itself)."""
@@ -874,28 +775,16 @@ def orders_trimmed_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean's outlier sensitivity is why a metrics pipeline ships both.
 
     Plan shape at 100 TB: the gini/deciles rank idiom — range
-    repartition on (cents, orderkey), LOCAL row numbers + K broadcast
-    offsets give exact global ranks with no single-partition window;
-    the trim is a filter against two broadcast scalars and the mean is
-    one exact integer sum + one division."""
+    repartition on (cents, orderkey), LOCAL running counts + K
+    broadcast offsets give exact global ranks with no single-partition
+    window (skew.global_prefix, which also brings n); the trim is a
+    filter and the mean is one exact integer sum + one division."""
     o = load_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
         "o_orderkey",
     )
-    spark_ = o.sparkSession
-    r = o.repartitionByRange(
-        spark_.sparkContext.defaultParallelism, "c", "o_orderkey"
-    ).withColumn("pid", F.spark_partition_id())
-    lw = Window.partitionBy("pid").orderBy("c", "o_orderkey")
-    ranked = materialize_once(r.withColumn("j", F.row_number().over(lw)))
-    partials = ranked.groupBy("pid").agg(F.count(F.lit(1)).alias("n_p"))
-    off = partition_rank_offsets(partials)
-    tot = partials.agg(F.sum("n_p").cast("bigint").alias("n"))
-    g = (
-        ranked.join(F.broadcast(off), "pid")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("rn", F.col("__offset") + F.col("j"))
-    )
+    g = global_prefix(o, ["c", "o_orderkey"], {"rn": F.lit(1)})
+    g = g.withColumnRenamed("rn_total", "n")
     kept = g.filter(
         (F.col("rn") > F.expr("n div 20"))
         & (F.col("rn") <= F.col("n") - F.expr("n div 20"))
@@ -951,7 +840,7 @@ def customers_balance_spend_copula_grid(
     Plan shape at 100 TB: the spend rollup is one keyed agg + join;
     BOTH axes' global ranks ride ONE stacked pipeline (optimization
     r14): the (custkey, x) and (custkey, y) rows union long-form under
-    a dim tag, one dim-led range repartition + local row_number per
+    a dim tag, one dim-led range repartition + local running count per
     (pid, dim) + per-dim offsets fold ranks both axes — half the
     range-sample jobs, exchanges and barriers of the previous per-axis
     spelling, identical ranks (the dim tag leads the range order) —
@@ -979,33 +868,21 @@ def customers_balance_spend_copula_grid(
             .alias("y"),
         )
     )
-    spark_ = xy.sparkSession
-
     stacked = xy.select(
         "c_custkey", F.lit(0).alias("dim"), F.col("x").alias("val")
     ).unionByName(
         xy.select("c_custkey", F.lit(1).alias("dim"), F.col("y").alias("val"))
     )
-    r = stacked.repartitionByRange(
-        spark_.sparkContext.defaultParallelism, "dim", "val", "c_custkey"
-    ).withColumn("pid", F.spark_partition_id())
-    lw = Window.partitionBy("pid", "dim").orderBy("val", "c_custkey")
-    ranked = materialize_once(r.withColumn("j", F.row_number().over(lw)))
-    partials = ranked.groupBy("pid", "dim").agg(
-        F.count(F.lit(1)).alias("n_p")
+    rank_long = global_prefix(
+        stacked, ["val", "c_custkey"], {"rank": F.lit(1)}, by=["dim"]
     )
-    off = partition_rank_offsets(partials, extra_keys=["dim"])
-    rank_long = ranked.join(F.broadcast(off), ["pid", "dim"]).select(
-        "c_custkey", "dim", (F.col("__offset") + F.col("j")).alias("rank")
-    )
-    tot = xy.agg(F.count(F.lit(1)).cast(_DEC).alias("n"))
     b = (
         rank_long.groupBy("c_custkey")
         .agg(
             F.max(F.when(F.col("dim") == 0, F.col("rank"))).alias("rnx"),
             F.max(F.when(F.col("dim") == 1, F.col("rank"))).alias("rny"),
+            F.max("rank_total").alias("n"),
         )
-        .crossJoin(F.broadcast(tot))
         .select(
             F.expr("CAST(((rnx - 1) * 10) div n AS BIGINT)").alias(
                 "x_decile"
@@ -1188,18 +1065,9 @@ def orders_value_psi_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_order_statistics machinery (range repartition + per-
     partition counts → K driver scalars → ONE filter); binning is a
     broadcast 9-way CASE over the fact scan; everything after is a
-    (year, bin) hash agg — ≤10 rows per year forever.
-
-    ``spark_graft.inplan_order_stats=true`` (optimization r15, VERDICT
-    r14 item 7) swaps the three driver collects (base-year scalar +
-    the two order-statistics collects) for the fully in-plan
-    order_statistic_values_frame: the cutpoints ride a broadcast 1-row
-    array and the bin derives from an array fold. Identical results
-    (pinned by test); the literal path stays the default — see the
-    OPTIMIZATION_r15.md A/B (the in-plan shape pays one extra
-    broadcast round-trip at bench SF and only removes ~3 constant-size
-    driver barriers, which matters on high-latency clusters, not on
-    local[N])."""
+    (year, bin) hash agg — ≤10 rows per year forever. (A fully
+    in-plan variant — cutpoints as a broadcast 1-row array — measured
+    slower at sf0.1 and sf1, OPTIMIZATION_r15.md, and was removed.)"""
     v = materialize_once(
         load_table(spark, sf_dir, "orders").select(
             F.year("o_orderdate").cast("bigint").alias("yr"),
@@ -1207,67 +1075,24 @@ def orders_value_psi_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
         )
     )
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        exact_order_statistics,
-        order_statistic_values_frame,
+    base_yr = v.agg(F.min("yr")).collect()[0][0]  # scale-ok: one scalar, the base period id
+    base = v.filter(F.col("yr") == base_yr)
+    stats = exact_order_statistics(
+        base.select("v", "o_orderkey"), ["v", "o_orderkey"],
+        [(k, 10) for k in range(1, 10)],
     )
-
-    inplan = (
-        spark.conf.get("spark_graft.inplan_order_stats", "false").lower()
-        == "true"
+    cuts = sorted(row["v"] for _, _, row in stats)
+    bin_col = F.lit(0)
+    for b in cuts:
+        bin_col = bin_col + F.when(F.lit(b) < F.col("v"), 1).otherwise(0)
+    cnts = materialize_once(
+        v.select("yr", bin_col.alias("bin"))
+        .groupBy("yr", "bin")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    if inplan:
-        minyr = v.agg(F.min("yr").alias("yr0"))
-        base = v.crossJoin(F.broadcast(minyr)).filter(
-            F.col("yr") == F.col("yr0")
-        )
-        cuts_frame = order_statistic_values_frame(
-            base.select("v", "o_orderkey"),
-            ["v", "o_orderkey"],
-            "v",
-            [(k, 10) for k in range(1, 10)],
-        )
-        # 9 codegen element_at comparisons, not a higher-order-function
-        # fold (interpreted per row — the r4 lsh lesson); an index past
-        # the array (empty base) yields NULL → counts 0, matching the
-        # driver variant's empty-cuts behavior
-        bin_col = F.lit(0)
-        for i in range(1, 10):
-            bin_col = bin_col + F.when(
-                F.element_at(F.col("vals"), i) < F.col("v"), 1
-            ).otherwise(0)
-        binned = v.crossJoin(F.broadcast(cuts_frame)).select(
-            "yr", bin_col.alias("bin")
-        )
-        cnts = materialize_once(
-            binned.groupBy("yr", "bin").agg(
-                F.count(F.lit(1)).cast("bigint").alias("cnt")
-            )
-        )
-        b0 = (
-            cnts.crossJoin(F.broadcast(minyr))
-            .filter(F.col("yr") == F.col("yr0"))
-            .select("bin", F.col("cnt").alias("bcnt"))
-        )
-    else:
-        base_yr = v.agg(F.min("yr")).collect()[0][0]  # scale-ok: one scalar, the base period id
-        base = v.filter(F.col("yr") == base_yr)
-        stats = exact_order_statistics(
-            base.select("v", "o_orderkey"), ["v", "o_orderkey"],
-            [(k, 10) for k in range(1, 10)],
-        )
-        cuts = sorted(row["v"] for _, _, row in stats)
-        bin_col = F.lit(0)
-        for b in cuts:
-            bin_col = bin_col + F.when(F.lit(b) < F.col("v"), 1).otherwise(0)
-        cnts = materialize_once(
-            v.select("yr", bin_col.alias("bin"))
-            .groupBy("yr", "bin")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        )
-        b0 = cnts.filter(F.col("yr") == base_yr).select(
-            "bin", F.col("cnt").alias("bcnt")
-        )
+    b0 = cnts.filter(F.col("yr") == base_yr).select(
+        "bin", F.col("cnt").alias("bcnt")
+    )
     yt = cnts.groupBy("yr").agg(F.sum("cnt").alias("n_yr"))
     # base-period total rides a broadcast 1-row frame off the already-
     # materialized bin counts — the previous base.count() re-scanned
@@ -1376,14 +1201,14 @@ def wilcoxon_signed_rank_halves(
         F.sum(F.lit(1) - F.col("isp")).cast(_DEC).alias("cn"),
     )
     c = c.withColumn("t", F.col("cp") + F.col("cn"))
-    p = _prefix_sum(c, "ad", "t", inclusive=False)
+    p = global_prefix(c, ["ad"], {"cum": F.col("t")}, inclusive=False)
     totals = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.sum(F.when(F.col("diff") == 0, 1).otherwise(0))
         .cast("bigint")
         .alias("n_zero"),
     )
-    rank2 = F.lit(2).cast(_DEC) * F.col("__cum") + F.col("t") + F.lit(1)
+    rank2 = F.lit(2).cast(_DEC) * F.col("cum") + F.col("t") + F.lit(1)
     stats = p.agg(
         F.coalesce(F.sum(F.col("cp") * rank2), F.lit(0).cast(_DEC))
         .cast("bigint")
@@ -1825,8 +1650,8 @@ def customer_churn_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape at 100 TB: identical to KM — one custkey hash agg, then
     everything keyed on calendar-bounded LIFETIME DAYS; the at-risk
     exclusive Σ and the hazard inclusive Σ both ride the distributed
-    prefix idiom (range repartition + pid-local windows + K
-    driver/broadcast offsets; never an unpartitioned window)."""
+    prefix idiom (range repartition + pid-local windows + K in-plan
+    broadcast offsets; never an unpartitioned window)."""
     o2 = _churn_at_risk(spark, sf_dir)
     # hazard spelled CAST(d)/CAST(n_risk) — identical op order to the
     # oracle's window term
@@ -1916,9 +1741,9 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic (exact_order_statistics — range repartition + K
     per-partition counts, never a global sort); run counting needs
     only ADJACENT-day sign pairs, so days get exact positional
-    indexes via the distributed rank idiom (range repartition + local
-    row_number + partition_rank_offsets) and ONE self-join on
-    idx = idx+1 counts sign changes — no single-partition window
+    indexes via the distributed rank idiom (skew.global_prefix) and
+    ONE self-join on idx = idx+1 counts sign changes — no
+    single-partition window
     anywhere. The z fold is a 1-row aggregate of exact integers;
     ppm rounding absorbs the shared-double ulp."""
     daily = materialize_once(
@@ -1930,28 +1755,22 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d")
         .agg(F.sum("c").alias("c"))
     )
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        exact_order_statistics,
-    )
-
-    [(_, _, med_row)] = exact_order_statistics(daily, ["c", "d"], [(1, 2)])
+    stats = exact_order_statistics(daily, ["c", "d"], [(1, 2)])
+    if not stats:
+        # no days: the oracle's aggregates over empty sets are all NULL
+        return spark.createDataFrame(
+            [(None, None, None, None)],
+            "n_above bigint, n_below bigint, n_runs bigint, z_ppm bigint",
+        )
+    [(_, _, med_row)] = stats
     mc = int(med_row["c"])
     kept = daily.filter(F.col("c") != mc).select(
         "d",
         F.when(F.col("c") > mc, 1).otherwise(0).alias("s"),
     )
-    r = kept.repartitionByRange(
-        spark.sparkContext.defaultParallelism, "d"
-    ).withColumn("pid", F.spark_partition_id())
-    lw = Window.partitionBy("pid").orderBy("d")
-    r = materialize_once(r.withColumn("lrn", F.row_number().over(lw)))
-    off = partition_rank_offsets(
-        r.groupBy("pid").agg(F.count(F.lit(1)).cast(_DEC).alias("n_p"))
+    idx = materialize_once(
+        global_prefix(kept, ["d"], {"i": F.lit(1)}).select("i", "s")
     )
-    idx = r.join(F.broadcast(off), "pid").select(
-        (F.col("__offset").cast("bigint") + F.col("lrn")).alias("i"), "s"
-    )
-    idx = materialize_once(idx)
     prev = idx.select((F.col("i") + 1).alias("i"), F.col("s").alias("sp"))
     changes = (
         idx.join(prev, "i")

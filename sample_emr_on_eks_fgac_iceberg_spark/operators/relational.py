@@ -26,8 +26,12 @@ from pyspark.sql.window import Window
 
 from sample_emr_on_eks_fgac_iceberg_spark.operators.registry import register
 from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
+    exact_order_statistics,
+    global_prefix,
     ntile_assign,
     ntile_cutpoints_multi,
+    partition_prefix_min,
+    weighted_order_statistic,
 )
 from sample_emr_on_eks_fgac_iceberg_spark.sources.tables import (
     fan_out,
@@ -2840,41 +2844,21 @@ def customers_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape at 100 TB — the global rank NEVER funnels the data into
     one partition: the per-customer aggregate range-repartitions on
     (cents, custkey) (a strict total order: custkey breaks ties), each
-    range partition computes LOCAL row numbers and the local partials
-    (count, Σx, Σ j·x); the global Σ i·xᵢ then folds the K per-partition
-    rows with their cumulative offsets — Σᵢ i·xᵢ = Σₚ (oₚ·Sₚ + Tₚ).
-    The offsets are K driver-held scalars broadcast back
-    (skew.partition_rank_offsets, the ntile_cutpoints pattern) — no
+    range partition computes LOCAL ranks, and the K per-partition rank
+    offsets — folded in-plan and broadcast back (skew.global_prefix) —
+    make them exact global ranks i; Σ i·xᵢ is then one 1-row agg. No
     single-partition window anywhere in the plan."""
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        partition_rank_offsets,
-    )
-
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     rev = o.groupBy("o_custkey").agg(
         F.sum(
             F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
         ).alias("cents")
     )
-    r = rev.repartitionByRange(
-        spark.sparkContext.defaultParallelism, "cents", "o_custkey"
-    ).withColumn("pid", F.spark_partition_id())
-    lw = Window.partitionBy("pid").orderBy("cents", "o_custkey")
-    ranked = r.withColumn("j", F.row_number().over(lw))
-    partials = materialize_once(
-        ranked.groupBy("pid").agg(
-            F.count(F.lit(1)).alias("n_p"),
-            F.sum("cents").alias("s_p"),
-            F.sum(F.col("j").cast("decimal(38,0)") * F.col("cents")).alias("t_p"),
-        )
-    )
-    off = partials.join(
-        F.broadcast(partition_rank_offsets(partials)), "pid"
-    ).withColumn("o_p", F.col("__offset").cast("decimal(38,0)"))
-    s = off.agg(
-        F.sum("n_p").cast("bigint").alias("n"),
-        F.sum("s_p").alias("sx"),
-        F.sum(F.col("o_p") * F.col("s_p") + F.col("t_p")).alias("six"),
+    ranked = global_prefix(rev, ["cents", "o_custkey"], {"i": F.lit(1)})
+    s = ranked.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("cents").alias("sx"),
+        F.sum(F.col("i").cast("decimal(38,0)") * F.col("cents")).alias("six"),
     )
     n = F.col("n").cast("decimal(38,0)")
     return s.select(
@@ -3021,14 +3005,11 @@ def orders_skyline_dominators(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape at 100 TB — the suffix-min over prices is NEVER a global
     window: per-price (cents, min_date) is one hash agg; that
     price-distinct frame range-partitions descending, each partition
-    computes a LOCAL running min, and partition_prefix_min folds K
-    per-partition min scalars driver-side (the partition_rank_offsets
-    pattern) so global suffix-min = least(local, prior-partition min).
-    The surviving price set is skyline-sized — its join back to orders
-    broadcasts."""
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        partition_prefix_min,
-    )
+    computes a LOCAL running min, and partition_prefix_min folds the K
+    per-partition mins in-plan (the global_prefix offsets pattern, with
+    MIN for SUM) so global suffix-min = least(local, prior-partition
+    min). The surviving price set is skyline-sized — its join back to
+    orders broadcasts."""
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -3103,13 +3084,10 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape at 100 TB — same distributed-global-rank machinery as
     customers_gini_revenue: per-part cents is one hash agg; the frame
     range-partitions on (cents DESC, partkey), each partition computes
-    a LOCAL running sum, and partition_rank_offsets folds K
-    per-partition revenue sums driver-side into cumulative offsets —
-    global cum = offset[pid] + local. No single-partition window; the
-    3-row class rollup is a partial agg."""
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        partition_rank_offsets,
-    )
+    a LOCAL running sum, and skew.global_prefix folds the K
+    per-partition revenue sums in-plan into cumulative offsets and the
+    total — global cum = offset[pid] + local. No single-partition
+    window; the 3-row class rollup is a partial agg."""
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
@@ -3118,31 +3096,16 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("c"),
     )
     rev = li.groupBy("l_partkey").agg(F.sum("c").alias("cents"))
-    r = rev.repartitionByRange(
-        spark.sparkContext.defaultParallelism,
-        F.col("cents").desc(),
-        F.col("l_partkey"),
-    ).withColumn("pid", F.spark_partition_id())
-    lw = (
-        Window.partitionBy("pid")
-        .orderBy(F.col("cents").desc(), F.col("l_partkey"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    loc = materialize_once(r.withColumn("lcum", F.sum("cents").over(lw)))
-    partials = loc.groupBy("pid").agg(F.sum("cents").alias("s_p"))
-    off = partition_rank_offsets(partials, "pid", "s_p")
-    tot = partials.agg(F.sum("s_p").alias("total"))
-    cum = F.col("__offset").cast("decimal(38,0)") + F.col("lcum")
+    j = global_prefix(
+        rev, [F.col("cents").desc(), "l_partkey"], {"cum": F.col("cents")}
+    ).withColumnRenamed("cum_total", "total")
+    cum = F.col("cum")
     cls = (
         F.when(cum * 100 <= F.col("total") * 80, "A")
         .when(cum * 100 <= F.col("total") * 95, "B")
         .otherwise("C")
     )
-    j = (
-        loc.join(F.broadcast(off), "pid")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("abc_class", cls)
-    )
+    j = j.withColumn("abc_class", cls)
     return j.groupBy("abc_class").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_parts"),
         F.sum("cents").cast("bigint").alias("revenue_cents"),
@@ -3252,55 +3215,12 @@ def lineitem_weighted_median_price(
     window formulation mirrors: the first row, in (cents, orderkey,
     linenumber) order, whose running weight reaches ceil(W/2)).
 
-    Two shapes behind ``spark_graft.wmedian.inplan`` (optimization r15,
-    resolving the r14 −21% regression with a measured A/B at sf0.1 AND
-    a synthesized sf1 — VERDICT r14 item 1):
-
-    - default (conf unset/false): the r13 DRIVER fold —
-      skew.weighted_order_statistic, two K-scalar collects (annotated
-      scale-ok: K = partition count) locating the crossing partition.
-      Measured fastest at the bench SF (1.85 s vs 2.05 r14 in-plan vs
-      2.39 in-plan+pre-agg, interleaved min-of-5 on one JVM).
-    - ``true``: fully IN-PLAN, zero driver actions — the quantile runs
-      over the CENTS-AGGREGATED frame (the output exposes only the
-      crossing cents, and the first cents whose aggregated running
-      weight reaches the target IS the crossing row's cents under any
-      tie-break, so one map-side-partial hash agg shrinks the range
-      exchange to ≤|price domain| rows with no orderkey/linenumber
-      riding it — guide §2.3), then weighted_order_statistic_frame's
-      single K-row offsets+total fold. Measured fastest at sf1 where
-      the cents dedup factor is ×10 (2.83 s vs 3.34 driver vs 3.85
-      r14) — the shape for deployments where the price domain is far
-      smaller than the fact table, i.e. every real one at 100 TB.
-
-    Both return identical values (A/B'd equal at both SFs)."""
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        weighted_order_statistic,
-        weighted_order_statistic_frame,
-    )
-
-    inplan = (
-        spark.conf.get("spark_graft.wmedian.inplan", "false").lower()
-        == "true"
-    )
-    if inplan:
-        li = (
-            load_table(spark, sf_dir, "lineitem")
-            .select(
-                F.round(F.col("l_extendedprice") * 100)
-                .cast("bigint")
-                .alias("cents"),
-                F.col("l_quantity").cast("bigint").alias("w"),
-            )
-            .groupBy("cents")
-            .agg(F.sum("w").alias("w"))
-        )
-        return weighted_order_statistic_frame(
-            li, ["cents"], "w", 1, 2
-        ).select(
-            F.col("__total_w").cast("bigint").alias("total_weight"),
-            F.col("cents").cast("bigint").alias("median_price_cents"),
-        )
+    Plan: skew.weighted_order_statistic, the driver fold — one collect
+    of K per-partition weight sums (K = partition count) locates the
+    crossing partition, one bounded filter+limit fetches the crossing
+    row. It measured fastest at sf0.1 (OPTIMIZATION_r15.md); an
+    in-plan shape over the cents-aggregated frame won only at sf1 and
+    was removed."""
     li = load_table(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
         F.col("l_quantity").cast("bigint").alias("w"),
@@ -3882,15 +3802,19 @@ def supplier_acctbal_mad_outliers(
     Plan shape at 100 TB: two order-statistic passes (each one range
     repartition of a narrow (cents, key) frame + K scalars) and one
     1-row rollup with the two medians broadcast as literals."""
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        exact_order_statistics,
-    )
-
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         F.round(F.col("s_acctbal") * 100).cast("bigint").alias("c"),
     )
-    [(_, _, row)] = exact_order_statistics(s, ["c", "s_suppkey"], [(1, 2)])
+    stats = exact_order_statistics(s, ["c", "s_suppkey"], [(1, 2)])
+    if not stats:
+        # no suppliers: counts are 0 and the medians NULL, as in the oracle
+        return spark.createDataFrame(
+            [(0, None, None, 0)],
+            "n_suppliers bigint, median_cents bigint, mad_cents bigint, "
+            "n_outliers bigint",
+        )
+    [(_, _, row)] = stats
     med = int(row["c"])
     d = s.select(
         "s_suppkey", F.abs(F.col("c") - F.lit(med)).alias("dev")
@@ -4098,13 +4022,9 @@ def customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at 100 TB: the global rank never funnels into one
     partition — per-customer cents range-repartitions on (cents,
-    custkey), LOCAL row numbers + K broadcast offsets give exact
-    global ranks (partition_rank_offsets, the gini idiom), the total n
-    rides a broadcast 1-row cross join, and the decile rollup is a
-    10-group agg."""
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        partition_rank_offsets,
-    )
+    custkey), LOCAL running counts + K broadcast offsets give exact
+    global ranks and the total n (skew.global_prefix, the gini idiom),
+    and the decile rollup is a 10-group agg."""
 
     rev = (
         load_table(spark, sf_dir, "orders")
@@ -4115,19 +4035,9 @@ def customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cents")
         )
     )
-    r = rev.repartitionByRange(
-        spark.sparkContext.defaultParallelism, "cents", "o_custkey"
-    ).withColumn("pid", F.spark_partition_id())
-    lw = Window.partitionBy("pid").orderBy("cents", "o_custkey")
-    ranked = materialize_once(r.withColumn("j", F.row_number().over(lw)))
-    partials = ranked.groupBy("pid").agg(F.count(F.lit(1)).alias("n_p"))
-    off = partition_rank_offsets(partials)
-    tot = partials.agg(F.sum("n_p").cast("bigint").alias("n"))
-    g = (
-        ranked.join(F.broadcast(off), "pid")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("rn", F.col("__offset") + F.col("j"))
-    )
+    g = global_prefix(
+        rev, ["cents", "o_custkey"], {"rn": F.lit(1)}
+    ).withColumnRenamed("rn_total", "n")
     return g.groupBy(
         F.expr("CAST(((rn - 1) * 10) div n AS BIGINT)").alias("decile")
     ).agg(

@@ -10,9 +10,9 @@ place, which is the better posture when the skew is known (power-law
 user_ids, a null-heavy foreign key, one giant tenant). For skewed
 joins where the small side fits in memory, `F.broadcast` already *is*
 the fix — no shuffle of the big side at all — so the utilities here
-cover the remaining cases: aggregation over a skewed key, and exact
-global order statistics (NTILE cut-points) without a single-partition
-sort.
+cover the remaining cases: aggregation over a skewed key, exact
+global running sums and ranks (`global_prefix`) and exact global order
+statistics (NTILE cut-points) without a single-partition sort.
 
 At 100 TB the salt count is sized so hot-key-rows / N fits one
 executor's aggregate hash map (e.g. a 10⁹-row key with N=1024 → ~10⁶
@@ -26,6 +26,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from sample_emr_on_eks_fgac_iceberg_spark.sources.tables import materialize_once
 
 # (phase-1 aggregate over input rows, phase-2 combiner over partials)
 AggSpec = tuple[Column, Callable[[str], Column]]
@@ -104,18 +106,14 @@ def ntile_cutpoints_multi(
     recency/frequency/monetary dimensions unioned long-form). Returns
     {dim: [buckets-1 boundary rows]}.
 
-    Plan: ONE ``repartitionByRange`` keyed (dim, *order) + per-
-    partition sort — a single sample job + exchange no matter how many
-    dimensions — then ``monotonically_increasing_id`` gives (partition
-    id, local index). One grouped count per (dim, partition) — the
-    only driver-held state, n_parts × n_dims scalars — locates every
-    dimension's boundary positions; dims can share a partition, so a
-    dim's rows inside partition p start at the sum of that partition's
-    earlier-sorting dims' counts. One filter fetches all boundaries.
-    Compare: three separate single-dim passes cost 3× (sample job +
-    exchange + 2 actions); stacked, the same answer is 3 narrow rows
-    per input row through ONE pipeline — at 1000 executors that is the
-    difference between 9 barriers and 3.
+    Plan: `_rows_at_positions` — ONE ``repartitionByRange`` keyed
+    (dim, *order) no matter how many dimensions, per-(dim, partition)
+    counts to the driver (n_parts × n_dims scalars), one filter
+    fetching every dimension's boundary rows. Compare: three separate
+    single-dim passes cost 3× (sample job + exchange + 2 actions);
+    stacked, the same answer is 3 narrow rows per input row through
+    ONE pipeline — at 1000 executors that is the difference between 9
+    barriers and 3.
 
     Per-dim ``order_cols`` must be a total order (unique tie-break,
     no nulls); ties straddling a range boundary would otherwise make
@@ -123,64 +121,86 @@ def ntile_cutpoints_multi(
     """
     if buckets < 2:
         raise ValueError("buckets must be >= 2")
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    keys = [dim_col, *order_cols]
+
+    def ends(total: int) -> list[int]:
+        q, r = divmod(total, buckets)
+        return [k * q + min(k, r) for k in range(1, buckets)]
+
+    found = _rows_at_positions(df, order_cols, ends, dim_col, n_parts)
+    return {
+        d: [rows[pos] for pos in ends(total)]
+        for d, (total, rows) in found.items()
+    }
+
+
+def _rows_at_positions(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    positions: Callable[[int], Sequence[int]],
+    dim_col: str | None = None,
+    n_parts: int | None = None,
+) -> dict:
+    """The driver-located order-statistic fetch shared by
+    `ntile_cutpoints_multi` and `exact_order_statistics`: the rows at
+    1-based global ``positions(total)`` of each ranking universe (one
+    per distinct ``dim_col`` value, or the whole frame), as
+    {dim: (total, {position: row})} with dim 0 when ``dim_col`` is None.
+    Empty input returns {}.
+
+    ONE ``repartitionByRange`` keyed (dim, *order) + per-partition sort,
+    then ``monotonically_increasing_id`` gives (partition id, local
+    index), frozen by a checkpoint so the two actions below see the
+    same assignment. One grouped count per (dim, partition) — the only
+    driver-held state — locates every position; dims can share a
+    partition, so a dim's rows inside partition p start after that
+    partition's earlier-sorting dims. ONE filter fetches all targets."""
+    n_parts = n_parts or df.sparkSession.sparkContext.defaultParallelism
+    keys = [*([dim_col] if dim_col else []), *order_cols]
     ranked = (
         df.select(*keys)
         .repartitionByRange(n_parts, *keys)
         .sortWithinPartitions(*keys)
         .withColumn("__mid", F.monotonically_increasing_id())
-        # freeze the nondeterministic ids so the counts action and the
-        # boundary fetch below see the same assignment
         .localCheckpoint(eager=False)
     )
     pid = F.shiftrightunsigned("__mid", _MID_LOCAL_BITS)
     local = F.col("__mid").bitwiseAND(F.lit(_MID_LOCAL_MASK))
+    dim = F.col(dim_col) if dim_col else F.lit(0)
     # sizes[dim][pid] — n_parts × n_dims scalars, nothing more
-    sizes: dict[str, dict[int, int]] = {}
+    sizes: dict = {}
     for row in (
-        ranked.groupBy(F.col(dim_col).alias("__d"), pid.alias("__pid"))
+        ranked.groupBy(dim.alias("__d"), pid.alias("__pid"))
         .count()
-        .collect()  # scale-ok: buckets-1 boundary rows
+        .collect()  # scale-ok: one count scalar per (dim, partition)
     ):
         sizes.setdefault(row["__d"], {})[row["__pid"]] = row["count"]
-    targets: dict[tuple[int, int], tuple[str, int]] = {}
-    ends_by_dim: dict[str, list[int]] = {}
+    targets: dict[tuple[int, int], tuple] = {}
     for d, by_pid in sizes.items():
-        total = sum(by_pid.values())
-        q, r = divmod(total, buckets)
-        ends = [k * q + min(k, r) for k in range(1, buckets)]
-        ends_by_dim[d] = ends
-        # global offset of dim d at partition p, plus d's local base
-        # inside p (rows of earlier-sorting dims sharing the partition)
+        # global offset of dim d at partition p
         offsets, acc = {}, 0
         for p in sorted(by_pid):
             offsets[p] = acc
             acc += by_pid[p]
-        for pos in set(ends):  # >= 1 whenever total >= 1
+        for pos in set(positions(acc)):  # >= 1 whenever acc >= 1
             for p in sorted(by_pid):
                 if pos <= offsets[p] + by_pid[p]:
                     base = sum(
                         sizes[d2].get(p, 0) for d2 in sizes if d2 < d
                     )
-                    j = base + (pos - offsets[p] - 1)
-                    targets[(p, j)] = (d, pos)
+                    targets[(p, base + pos - offsets[p] - 1)] = (d, pos)
                     break
+    found = {d: (sum(by_pid.values()), {}) for d, by_pid in sizes.items()}
     if not targets:
-        return {d: [] for d in sizes}
+        return found
     cond = F.lit(False)
     for p, j in targets:
         cond = cond | ((pid == F.lit(p)) & (local == F.lit(j)))
-    by_dim_pos: dict[str, dict[int, Row]] = {}
     for row in ranked.where(cond).collect():  # scale-ok: K target order-statistic rows
-        p = row["__mid"] >> _MID_LOCAL_BITS
-        j = row["__mid"] & _MID_LOCAL_MASK
-        d, pos = targets[(p, j)]
-        by_dim_pos.setdefault(d, {})[pos] = row
-    return {
-        d: [by_dim_pos[d][pos] for pos in ends_by_dim[d]] for d in sizes
-    }
+        d, pos = targets[
+            (row["__mid"] >> _MID_LOCAL_BITS, row["__mid"] & _MID_LOCAL_MASK)
+        ]
+        found[d][1][pos] = row
+    return found
 
 
 def ntile_assign(
@@ -207,68 +227,105 @@ def ntile_assign(
     return score
 
 
-def partition_rank_offsets(
-    partials: "DataFrame",
-    pid_col: str = "pid",
-    count_col: str = "n_p",
-    extra_keys: Sequence[str] = (),
-) -> "DataFrame":
-    """Cumulative row offsets per range partition — the K-row state
-    (one row per partition, the ntile_cutpoints pattern) that turns
-    per-partition LOCAL row numbers into exact global ranks:
-    global_rank = offset[pid] + local_rank. Returns a broadcastable
-    (pid, __offset) frame; callers join it back instead of running a
-    single-partition cumulative window (the shape the global-window
-    plan gate rejects).
+def global_prefix(
+    df: DataFrame,
+    order: Sequence[str | Column],
+    sums: dict[str, Column],
+    *,
+    by: Sequence[str] = (),
+    inclusive: bool = True,
+    n_parts: int | None = None,
+) -> DataFrame:
+    """Exact GLOBAL running sums over ``order`` without a
+    single-partition window — the one distributed-prefix primitive every
+    exact-rank query rides (a rank is the running sum of ``F.lit(1)``).
 
-    Computed IN-PLAN (optimization r14): the exclusive prefix sum over
-    the ≤K-row partials is a pid<pid theta self-join + hash agg —
-    K²/2 integer comparisons where K is the PARTITION count (cluster
-    width, never data size), so it stays metadata-cheap at any scale
-    while removing the collect()+createDataFrame driver round-trip the
-    previous spelling paid per use (one full job + a py4j local-relation
-    ship, ~0.3-0.6 s per query at bench SF; at cluster scale, one fewer
-    synchronous driver barrier per rank pipeline). Callers must derive
-    ``partials`` and the frame they join the offsets back into from the
-    SAME materialized (checkpointed) pid-stamped frame —
-    ``spark_partition_id`` is only stable across the two consumers
-    because the barrier pins it (the v2 no-barrier variant was measured
-    corrupting ranks).
+    Returns ``df``'s rows plus ``pid`` and, for each ``name → expr`` of
+    ``sums``, ``name`` (the running sum of ``expr`` through this row —
+    ``inclusive`` — or through the row before it) and ``name_total``
+    (the sum over the row's whole universe). Each distinct ``by`` value
+    is its own ranking universe sharing ONE range layout, so a
+    multi-axis query stacks its axes long-form under a dim tag and pays
+    a single range shuffle + barrier instead of one per axis.
 
-    ``__offset`` inherits ``count_col``'s type when that type is a
-    decimal (the fold stays exact): a bigint offset would overflow when
-    callers fold decimal(38,0) magnitudes — e.g. revenue-cents sums —
-    instead of row counts (ADVICE r11). An empty ``partials`` yields an
-    empty offsets frame (the previous sentinel (0, 0) row was only ever
-    inner-joined against an equally empty frame — same results).
+    Plan: ``repartitionByRange(*by, *order)``, ``spark_partition_id()``
+    stamped as ``pid``, one window per (pid, *by) for the LOCAL running
+    sums (and a ``lead`` marking each partition's last row), then ONE
+    checkpoint barrier. The last rows carry the per-partition partials;
+    they collect into one aggregate row per universe that also holds the
+    universe totals, and exploding it gives each partition's offset as
+    the sum of the partials before it (K = partitions per universe —
+    cluster width, never data size), broadcast back onto the rows:
+    global = offset[pid] + local. The barrier is what makes this exact:
+    ``spark_partition_id`` is only stable across the partials and the
+    rows they join back into because both read the one checkpointed
+    frame (a no-barrier variant was measured corrupting ranks), which is
+    why no caller stamps a pid itself.
 
-    ``extra_keys`` partitions the fold into independent ranking
-    universes sharing ONE range layout (optimization r14): partials
-    carrying a dimension tag fold per (key, pid<pid) — the stacked
-    idiom of ``ntile_cutpoints_multi``, used by the two-axis rank
-    queries (Spearman, copula grid) so both axes pay a single range
-    shuffle + barrier instead of one each."""
-    ct = dict(partials.dtypes)[count_col]
-    off_type = ct if ct.startswith("decimal") else "bigint"
-    keys = list(extra_keys)
-    a = partials.select(F.col(pid_col).alias("__a_pid"), *keys)
-    b = partials.select(
-        F.col(pid_col).alias("__b_pid"),
-        F.col(count_col).alias("__b_n"),
-        *[F.col(k).alias(f"__b_{k}") for k in keys],
-    )
-    cond = F.col("__b_pid") < F.col("__a_pid")
-    for k in keys:
-        cond = cond & (F.col(f"__b_{k}") == F.col(k))
-    return (
-        a.join(b, cond, "left")
-        .groupBy("__a_pid", *keys)
-        .agg(
-            F.coalesce(F.sum("__b_n"), F.lit(0).cast(off_type))
-            .cast(off_type)
-            .alias("__offset")
+    ``order`` (names or sort Columns, e.g. ``F.col("n").desc()``) must
+    order each universe totally, unless the caller reads only sums that
+    do not depend on the order among tied rows. Sums keep Spark's
+    ``sum`` type: bigint for integers, decimal for decimals, so
+    ``decimal(38,0)`` magnitudes past 2⁶³ fold exactly; a null
+    ``expr`` adds 0. Empty input yields an empty frame."""
+    n_parts = n_parts or df.sparkSession.sparkContext.defaultParallelism
+    by = list(by)
+    lw = Window.partitionBy("pid", *by).orderBy(*order)
+    upto = lw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    local = materialize_once(
+        df.repartitionByRange(n_parts, *by, *order)
+        .withColumn("pid", F.spark_partition_id())
+        .select(
+            "*",
+            *[
+                F.coalesce(F.sum(e).over(upto), F.lit(0)).alias(f"__upto_{n}")
+                for n, e in sums.items()
+            ],
+            F.lead(F.lit(1)).over(lw).isNull().alias("__last"),
         )
-        .select(F.col("__a_pid").alias(pid_col), *keys, "__offset")
+    )
+    types = {n: dict(local.dtypes)[f"__upto_{n}"] for n in sums}
+    # one row per universe: its partitions' partials (the last rows'
+    # running sums) in pid order, and the totals
+    universes = (
+        local.filter("__last")
+        .groupBy(*by)
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct("pid", *[F.col(f"__upto_{n}").alias(n) for n in sums])
+                )
+            ).alias("__parts"),
+            *[F.sum(f"__upto_{n}").alias(f"{n}_total") for n in sums],
+        )
+    )
+    before = F.slice("__parts", 1, F.col("__i"))
+
+    def offset(n: str) -> Column:
+        add = lambda acc, p: (acc + p[n]).cast(types[n])  # noqa: E731
+        zero = F.lit(0).cast(types[n])
+        return F.aggregate(before, zero, add).alias(f"__offset_{n}")
+
+    fold = universes.select(
+        "*", F.posexplode("__parts").alias("__i", "__part")
+    ).select(
+        *by,
+        F.col("__part.pid").alias("pid"),
+        *[offset(n) for n in sums],
+        *[f"{n}_total" for n in sums],
+    )
+
+    def running(n: str) -> Column:
+        through = F.col(f"__offset_{n}") + F.col(f"__upto_{n}")
+        if not inclusive:
+            through = through - F.coalesce(sums[n], F.lit(0))
+        return through.cast(types[n]).alias(n)
+
+    return local.join(F.broadcast(fold), ["pid", *by]).select(
+        *df.columns,
+        "pid",
+        *[running(n) for n in sums],
+        *[f"{n}_total" for n in sums],
     )
 
 
@@ -276,7 +333,7 @@ def partition_prefix_min(
     partials: "DataFrame", pid_col: str = "pid", val_col: str = "v"
 ) -> "DataFrame":
     """Per-partition prefix MINIMUM — the running-min analog of
-    ``partition_rank_offsets`` (one row per range partition): returns
+    `global_prefix`'s offsets fold (one row per range partition): returns
     a broadcastable (pid, __prior_min) frame where ``__prior_min`` is
     the minimum of ``val_col`` over all LOWER pids (null for the first
     partition). With a range partitioning whose order matches the
@@ -284,14 +341,12 @@ def partition_prefix_min(
     running min into the exact global one — the skyline/dominance fold
     — without any single-partition window.
 
-    Computed IN-PLAN like partition_rank_offsets (optimization r14): a
-    pid<pid theta self-join + MIN agg over the ≤K-row partials
-    (K = partition count, cluster width not data size), replacing the
-    per-use collect()+createDataFrame driver round-trip; NULL
-    ``val_col`` rows drop out of MIN exactly as the driver loop
-    skipped them, and the first partition's empty match set yields the
-    same NULL ``__prior_min``. Same barrier contract: both consumers
-    of the pid must read the one checkpointed pid-stamped frame."""
+    Computed IN-PLAN: a pid<pid theta self-join + MIN agg over the
+    ≤K-row partials (K = partition count, cluster width not data size);
+    NULL ``val_col`` rows drop out of MIN, and the first partition's
+    empty match set yields a NULL ``__prior_min``. Same barrier contract
+    as `global_prefix`: both consumers of the pid must read the one
+    checkpointed pid-stamped frame."""
     vt = dict(partials.dtypes)[val_col]
     a = partials.select(F.col(pid_col).alias("__a_pid"))
     b = partials.select(
@@ -317,217 +372,24 @@ def exact_order_statistics(
     ceil(num·n / den) (floored at 1) — the discrete-quantile position
     rule, computed in integers so any oracle can mirror it bit-for-bit.
 
-    Returns [(quantile, position, row)] in the given quantile order.
-    Same machinery as ``ntile_cutpoints``: one repartitionByRange +
-    per-partition sort, per-partition counts to the driver (n_parts
-    scalars), then ONE filter fetches all target rows. ``order_cols``
-    must be a strict total order (unique tie-break, no nulls)."""
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    ranked = (
-        df.select(*order_cols)
-        .repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
-    )
-    pid = F.shiftrightunsigned("__mid", _MID_LOCAL_BITS)
-    local = F.col("__mid").bitwiseAND(F.lit(_MID_LOCAL_MASK))
-    by_pid = {
-        r["__pid"]: r["count"]
-        for r in ranked.groupBy(pid.alias("__pid")).count().collect()  # scale-ok: one count scalar per partition
-    }
-    n = sum(by_pid.values())
-    if n == 0:
+    Returns [(quantile, position, row)] in the given quantile order,
+    or [] on empty input. Same machinery as ``ntile_cutpoints``
+    (`_rows_at_positions`): one repartitionByRange + per-partition
+    sort, per-partition counts to the driver (n_parts scalars), then
+    ONE filter fetches all target rows. ``order_cols`` must be a strict
+    total order (unique tie-break, no nulls)."""
+
+    def positions(n: int) -> list[int]:
+        # ceil(num*n/den), floored at 1
+        return [max(1, -(-(num * n) // den)) for num, den in quantiles]
+
+    found = _rows_at_positions(df, order_cols, positions, n_parts=n_parts)
+    if not found:
         return []
-    offsets, acc = {}, 0
-    for p in sorted(by_pid):
-        offsets[p] = acc
-        acc += by_pid[p]
-    targets: dict[tuple[int, int], tuple[tuple[int, int], int]] = {}
-    wanted: list[tuple[tuple[int, int], int]] = []
-    for num, den in quantiles:
-        pos = max(1, -(-(num * n) // den))  # ceil(num*n/den), >= 1
-        wanted.append(((num, den), pos))
-        for p in sorted(by_pid):
-            if pos <= offsets[p] + by_pid[p]:
-                targets[(p, pos - offsets[p] - 1)] = ((num, den), pos)
-                break
-    cond = F.lit(False)
-    for p, j in targets:
-        cond = cond | ((pid == F.lit(p)) & (local == F.lit(j)))
-    by_pos: dict[int, Row] = {}
-    for row in ranked.where(cond).collect():  # scale-ok: K target order-statistic rows
-        p = row["__mid"] >> _MID_LOCAL_BITS
-        j = row["__mid"] & _MID_LOCAL_MASK
-        _, pos = targets[(p, j)]
-        by_pos[pos] = row
-    return [(q, pos, by_pos[pos]) for q, pos in wanted]
-
-
-def order_statistic_values_frame(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    value_col: str,
-    quantiles: Sequence[tuple[int, int]],
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Fully IN-PLAN sibling of ``exact_order_statistics`` for
-    consumers that only need the quantile rows' VALUES (optimization
-    r15, VERDICT r14 item 7): returns a 1-row frame with ``vals`` — an
-    ascending-sorted array holding ``value_col`` of the row at global
-    position ceil(num·n/den) (floored at 1) for EACH quantile, one
-    array element per quantile (two quantiles landing on the same row
-    contribute two equal elements, exactly like the driver variant's
-    per-quantile rows). ZERO driver actions: global ranks come from a
-    per-partition row_number plus the K-row offsets+total fold, the
-    target positions ride a broadcast of the ≤|quantiles|-row position
-    frame, and the hits collapse into one array_sort(collect_list).
-    Empty input yields one row with an EMPTY array (callers' bin
-    folds see zero cutpoints, matching the driver variant's empty
-    list)."""
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    ranked = (
-        df.select(*order_cols)
-        .repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("__pid").orderBy(*order_cols)
-    )
-    partials = ranked.groupBy(F.col("__pid").alias("pid")).agg(
-        F.count(F.lit(1)).alias("n_p")
-    )
-    b = partials.select(
-        F.col("pid").alias("__b_pid"), F.col("n_p").alias("__b_n")
-    )
-    offtot = (
-        partials.select(F.col("pid").alias("__pid"))
-        .crossJoin(b)
-        .groupBy("__pid")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("__b_pid") < F.col("__pid"), F.col("__b_n")
-                    )
-                ),
-                F.lit(0),
-            ).alias("__offset"),
-            F.sum("__b_n").alias("__n"),
-        )
-    )
-    # one row per quantile: (k-index, target position) — derived from
-    # the in-plan total so two quantiles may share a position
-    qarr = F.array(
-        *[
-            F.struct(F.lit(i).alias("qi"), F.lit(num).alias("num"), F.lit(den).alias("den"))
-            for i, (num, den) in enumerate(quantiles)
-        ]
-    )
-    positions = (
-        offtot.groupBy()
-        .agg(F.max("__n").alias("__n"))
-        .select(F.col("__n"), F.explode(qarr).alias("q"))
-        .select(
-            F.greatest(
-                F.lit(1),
-                F.expr("(q.num * __n + q.den - 1) div q.den"),
-            ).alias("__pos"),
-            F.col("q.qi").alias("__qi"),
-        )
-    )
-    hits = (
-        ranked.withColumn("__rn", rn)
-        .join(F.broadcast(offtot), "__pid")
-        .withColumn("__rk", F.col("__offset") + F.col("__rn"))
-        .join(F.broadcast(positions), F.col("__rk") == F.col("__pos"))
-    )
-    return hits.agg(
-        F.array_sort(F.collect_list(F.col(value_col))).alias("vals")
-    )
-
-
-def weighted_order_statistic_frame(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    weight_col: str,
-    num: int,
-    den: int,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Fully IN-PLAN `weighted_order_statistic` (optimization r14,
-    reshaped r15): returns a ≤1-row DataFrame (``__total_w`` + the
-    crossing row's order columns) with ZERO driver actions. The r14
-    spelling paid TWO broadcast subtrees over the per-partition weight
-    partials (a K-row offsets theta join PLUS a separate 1-row total
-    crossJoin) and measured −21% vs the driver fold at sf0.1 (VERDICT
-    r14); this one folds the exclusive prefix AND the grand total in a
-    SINGLE K×K self-join aggregate (K = partition count — cluster
-    width, never data size), so the quantile probe is one broadcast
-    hash join over the cumulative frame and the crossing row comes
-    from a TakeOrderedAndProject (never a global sort). Empty input
-    yields an empty frame (the (0, None) sentinel of the driver
-    variant). Exactness: identical lower-weighted-quantile rule —
-    first row in the strict total order whose running weight reaches
-    ceil(num·W/den), floored at 1."""
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    ranked = (
-        df.select(*order_cols, weight_col)
-        .repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    lw = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = ranked.withColumn("__cumw", F.sum(weight_col).over(lw))
-    partials = ranked.groupBy(F.col("__pid").alias("pid")).agg(
-        F.sum(weight_col).alias("n_p")
-    )
-    # exclusive prefix + grand total in ONE K×K fold: every pid pairs
-    # with every pid (K ≤ partition count rows, metadata-cheap), the
-    # prefix sums the strictly-lower pids, the total sums them all —
-    # the r14 shape recomputed `partials` once per consumer instead
-    b = partials.select(
-        F.col("pid").alias("__b_pid"), F.col("n_p").alias("__b_n")
-    )
-    offtot = (
-        partials.select(F.col("pid").alias("__pid"))
-        .crossJoin(b)
-        .groupBy("__pid")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("__b_pid") < F.col("__pid"), F.col("__b_n")
-                    )
-                ),
-                F.lit(0),
-            ).alias("__offset"),
-            F.sum("__b_n").alias("__total_w"),
-        )
-        .filter(F.col("__total_w") > 0)
-    )
-    # ceil(num·W/den) for positive operands, in-plan integer math
-    target = F.expr(f"({num} * __total_w + {den} - 1) div {den}")
-    return (
-        cum.join(F.broadcast(offtot), "__pid")
-        .filter(
-            (F.col("__offset") + F.col("__cumw"))
-            >= F.greatest(F.lit(1), target)
-        )
-        .orderBy(*order_cols)
-        .limit(1)
-        .select("__total_w", *order_cols)
-    )
+    [(n, rows)] = found.values()
+    return [
+        (tuple(q), pos, rows[pos]) for q, pos in zip(quantiles, positions(n))
+    ]
 
 
 def weighted_order_statistic(

@@ -546,7 +546,7 @@ def sessions_overlap_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     query rows at equal timestamps via the typ key, so boundary-equal
     sessions count exactly as the predicate demands."""
     from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        partition_rank_offsets,
+        global_prefix,
     )
 
     e = load_table(spark, sf_dir, "events")
@@ -598,31 +598,9 @@ def sessions_overlap_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("isv"),
     )
     stacked = va.unionByName(qa).unionByName(vb).unionByName(qb)
-    n_parts = spark.sparkContext.defaultParallelism
-    ranked = materialize_once(
-        stacked.repartitionByRange(n_parts, "dim", "t", "typ")
-        .sortWithinPartitions("dim", "t", "typ")
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    lw = (
-        Window.partitionBy("__pid", "dim")
-        .orderBy("t", "typ")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = ranked.withColumn("c", F.sum("isv").over(lw))
-    partials = ranked.groupBy(F.col("__pid").alias("pid"), "dim").agg(
-        F.sum("isv").alias("n_p")
-    )
-    off = partition_rank_offsets(
-        partials, extra_keys=["dim"]
-    ).withColumnRenamed("pid", "__pid")
-    qrows = (
-        cum.filter(F.col("qu").isNotNull())
-        .join(F.broadcast(off), ["__pid", "dim"])
-        .select(
-            "dim", "qu", "qs", (F.col("c") + F.col("__offset")).alias("cnt")
-        )
-    )
+    qrows = global_prefix(
+        stacked, ["t", "typ"], {"cnt": F.col("isv")}, by=["dim"]
+    ).filter(F.col("qu").isNotNull())
     counts = qrows.groupBy("qu", "qs").agg(
         F.sum(F.when(F.col("dim") == "A", F.col("cnt"))).alias("c_le"),
         F.sum(F.when(F.col("dim") == "B", F.col("cnt"))).alias("c_lt"),
@@ -1666,14 +1644,14 @@ def orders_daily_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("delta"),
         )
     )
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.nonparam import (
-        distributed_prefix_sum,
+    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
+        global_prefix,
     )
 
-    p = distributed_prefix_sum(grid, "day", "delta", inclusive=True)
+    p = global_prefix(grid, ["day"], {"backlog": F.col("delta")})
     return p.select(
         "day",
         "n_opened",
         "n_closed",
-        F.col("__cum").cast("bigint").alias("backlog"),
+        F.col("backlog").cast("bigint").alias("backlog"),
     )

@@ -1497,18 +1497,18 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     of frequency against rank (natural text sits near −1; OCR noise,
     boilerplate floods, and tokenizer damage bend it). The rank is a
     DISTRIBUTED global rank: the wordcount range-partitions on
-    (n DESC, word), each partition computes LOCAL row numbers, and
-    `partition_rank_offsets` folds K per-partition counts driver-side —
+    (n DESC, word), each partition computes LOCAL ranks, and
+    `skew.global_prefix` folds the K per-partition counts in-plan —
     global rank = offset[pid] + local. No single-partition window over
     the vocabulary, ever. The OLS moments are double sums whose ppm
     rounding absorbs cross-engine accumulation-order ulps.
 
     Plan shape at 100 TB: one wordcount hash agg (shuffle volume =
     per-partition distinct words), one range repartition of the
-    vocabulary-sized count table, a per-partition window, K driver
-    scalars, and a 1-row moment rollup."""
+    vocabulary-sized count table, a per-partition window, a K-row
+    broadcast offsets fold, and a 1-row moment rollup."""
     from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        partition_rank_offsets,
+        global_prefix,
     )
 
     d = fan_out(load_table(spark, sf_dir, "documents"), spark, "doc_id")
@@ -1518,18 +1518,10 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    r = counts.repartitionByRange(
-        spark.sparkContext.defaultParallelism,
-        F.col("n").desc(),
-        F.col("word"),
-    ).withColumn("pid", F.spark_partition_id())
-    lw = Window.partitionBy("pid").orderBy(F.col("n").desc(), F.col("word"))
-    local = materialize_once(r.withColumn("lr", F.row_number().over(lw)))
-    partials = local.groupBy("pid").agg(F.count(F.lit(1)).alias("n_p"))
-    ranked = local.join(
-        F.broadcast(partition_rank_offsets(partials)), "pid"
+    ranked = global_prefix(
+        counts, [F.col("n").desc(), "word"], {"rk": F.lit(1)}
     ).select(
-        (F.col("__offset") + F.col("lr")).cast("double").alias("rk"),
+        F.col("rk").cast("double").alias("rk"),
         F.col("n").cast("double").alias("cnt"),
     )
     pts = ranked.select(

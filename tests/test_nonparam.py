@@ -1,6 +1,6 @@
 """Brute-force verification of the distributed nonparametric stats
-(operators/nonparam.py): the partition_rank_offsets prefix-sum
-machinery must reproduce naive all-pairs / full-sort answers exactly."""
+(operators/nonparam.py): the skew.global_prefix prefix-sum machinery
+must reproduce naive all-pairs / full-sort answers exactly."""
 
 import duckdb
 import numpy as np
@@ -104,15 +104,30 @@ def test_ols_trend_matches_numpy(spark, duck):
         )
 
 
-def test_prefix_sum_window_is_pid_partitioned(spark):
-    """The prefix-sum helper's window partitions by pid — K partitions,
-    never a data-sized single-partition window (the registry-wide
-    sweep in test_plans.py also covers this; here pinned to the
-    helper so a refactor fails fast)."""
-    from sample_emr_on_eks_fgac_iceberg_spark.plans import global_windows
+def test_prefix_sum_window_is_pid_partitioned(spark, monkeypatch):
+    """skew.global_prefix's running-sum window partitions by pid — K
+    partitions, never a data-sized single-partition window (the
+    registry-wide sweep in test_plans.py also covers this). The window
+    runs before the helper's checkpoint, so it is checked on the frame
+    the helper checkpoints: the returned plan starts at the barrier."""
+    from pyspark.sql import functions as F
 
-    df = QUERIES["mannwhitney_u_priority"](spark, SF)
-    assert not [d for d, bounded in global_windows(df) if not bounded]
+    from sample_emr_on_eks_fgac_iceberg_spark.operators import skew
+    from sample_emr_on_eks_fgac_iceberg_spark.plans import (
+        explain_str,
+        global_windows,
+    )
+
+    checkpointed = []
+    real = skew.materialize_once
+    monkeypatch.setattr(
+        skew, "materialize_once", lambda df: checkpointed.append(df) or real(df)
+    )
+    df = spark.range(100).select((F.col("id") % 7).alias("v"), "id")
+    skew.global_prefix(df, ["v", "id"], {"r": F.lit(1)}, inclusive=False)
+    [barrier_input] = checkpointed
+    assert not global_windows(barrier_input)
+    assert "windowspecdefinition(pid#" in explain_str(barrier_input, "simple")
 
 
 def test_theilsen_matches_brute_median_of_slopes(spark, duck):

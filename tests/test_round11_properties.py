@@ -42,49 +42,6 @@ def test_weighted_order_statistic_matches_bruteforce(spark):
         )
 
 
-def test_weighted_order_statistic_frame_matches_bruteforce(spark):
-    # the in-plan sibling (reshaped r15: offsets + total in one K×K
-    # fold) must agree with the same brute-force walk as the driver
-    # variant, including the empty-input empty-frame contract
-    from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        weighted_order_statistic_frame,
-    )
-
-    rng = random.Random(15)
-    for trial in range(6):
-        n = rng.randint(1, 120)
-        rows = [
-            (rng.randint(-50, 50), i, rng.randint(1, 9)) for i in range(n)
-        ]
-        num, den = rng.choice([(1, 2), (1, 4), (9, 10), (1, 1)])
-        df = spark.createDataFrame(rows, "x long, id long, w long")
-        got = weighted_order_statistic_frame(
-            df, ["x", "id"], "w", num, den, n_parts=5
-        ).collect()
-        srt = sorted(rows, key=lambda r: (r[0], r[1]))
-        w_total = sum(r[2] for r in srt)
-        target = max(1, -(-(num * w_total) // den))
-        acc = 0
-        expect = None
-        for r in srt:
-            acc += r[2]
-            if acc >= target:
-                expect = r
-                break
-        assert len(got) == 1, trial
-        assert got[0]["__total_w"] == w_total, trial
-        assert (got[0]["x"], got[0]["id"]) == (expect[0], expect[1]), (
-            trial, num, den, got, expect
-        )
-    empty = spark.createDataFrame([], "x long, id long, w long")
-    assert (
-        weighted_order_statistic_frame(
-            empty, ["x", "id"], "w", 1, 2, n_parts=5
-        ).count()
-        == 0
-    )
-
-
 def test_partition_prefix_min_matches_bruteforce(spark):
     rng = random.Random(23)
     for trial in range(5):

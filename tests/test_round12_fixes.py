@@ -1,5 +1,5 @@
 """Round-12 fixes — the r11 VERDICT queue items and every ADVICE note:
-size-derived kNN plane defaults, decimal-safe rank offsets, quote-aware
+size-derived kNN plane defaults, decimal-safe prefix sums, quote-aware
 rewrite-predicate parsing, fail-loud persistent CREATE FUNCTION, and
 empty-corpus parity for the vocabulary coverage curve."""
 
@@ -56,38 +56,42 @@ def test_knn_graph_oracle_green_with_derived_default(spark, sf_dir):
 
 
 # ------------------------------------- rank offsets type (ADVICE r11)
-def test_partition_rank_offsets_bigint_counts_stay_bigint(spark):
+def test_global_prefix_bigint_sums_stay_bigint(spark):
+    from pyspark.sql import functions as F
+
     from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        partition_rank_offsets,
+        global_prefix,
     )
 
-    partials = spark.createDataFrame(
-        [(0, 3), (1, 5), (2, 2)], "pid int, n_p bigint"
+    df = spark.createDataFrame(
+        [(k, v) for k, v in enumerate([3, 5, 2, 4, 1, 6])], "k long, v bigint"
     )
-    off = partition_rank_offsets(partials)
-    assert dict(off.dtypes)["__offset"] == "bigint"
-    assert {(r["pid"], r["__offset"]) for r in off.collect()} == {
-        (0, 0), (1, 3), (2, 8),
+    out = global_prefix(df, ["k"], {"s": F.col("v")}, inclusive=False, n_parts=3)
+    assert dict(out.dtypes)["s"] == "bigint"
+    assert {(r["k"], r["s"]) for r in out.collect()} == {
+        (0, 0), (1, 3), (2, 8), (3, 10), (4, 14), (5, 15),
     }
 
 
-def test_partition_rank_offsets_decimal_counts_never_overflow(spark):
+def test_global_prefix_decimal_sums_never_overflow(spark):
     """decimal(38,0) magnitudes (revenue cents at extreme scale) fold
-    into a decimal offset — the bigint accumulator would overflow
-    createDataFrame past 2^63 (ADVICE r11)."""
+    into decimal offsets — a bigint accumulator would overflow past
+    2^63 (ADVICE r11)."""
+    from pyspark.sql import functions as F
+
     from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
-        partition_rank_offsets,
+        global_prefix,
     )
 
     big = 2**70  # far past int64
-    partials = spark.createDataFrame(
+    df = spark.createDataFrame(
         [(0, Decimal(big)), (1, Decimal(big)), (2, Decimal(7))],
-        "pid int, s_p decimal(38,0)",
+        "k long, s decimal(38,0)",
     )
-    off = partition_rank_offsets(partials, "pid", "s_p")
-    assert dict(off.dtypes)["__offset"] == "decimal(38,0)"
-    got = {(r["pid"], int(r["__offset"])) for r in off.collect()}
-    assert got == {(0, 0), (1, big), (2, 2 * big)}
+    out = global_prefix(df, ["k"], {"c": F.col("s")}, inclusive=False, n_parts=3)
+    assert dict(out.dtypes)["c"] == "decimal(38,0)"
+    got = {(r["k"], int(r["c"]), int(r["c_total"])) for r in out.collect()}
+    assert got == {(0, 0, 2 * big + 7), (1, big, 2 * big + 7), (2, 2 * big, 2 * big + 7)}
 
 
 # ------------------------------- quote-aware AND split (ADVICE r11)

@@ -1,6 +1,6 @@
-"""Round-15 optimization-phase pins: the weighted-median conf gate's
-two shapes agree, the laspeyres overflow fence fails LOUDLY instead of
-wrapping, and the r14-advice empty-input contracts return 0 (not NULL).
+"""Round-15 optimization-phase pins: the laspeyres overflow fence fails
+LOUDLY instead of wrapping, and the empty-input contracts match the
+oracle (0, not NULL, for counts; NULL for order statistics of nothing).
 """
 
 from __future__ import annotations
@@ -9,32 +9,6 @@ import pandas as pd
 import pytest
 
 from sample_emr_on_eks_fgac_iceberg_spark.operators import QUERIES
-
-
-def test_wmedian_inplan_gate_matches_driver_shape(spark, sf_dir):
-    drv = QUERIES["lineitem_weighted_median_price"](spark, sf_dir).collect()
-    spark.conf.set("spark_graft.wmedian.inplan", "true")
-    try:
-        inp = QUERIES["lineitem_weighted_median_price"](
-            spark, sf_dir
-        ).collect()
-    finally:
-        spark.conf.unset("spark_graft.wmedian.inplan")
-    assert [r.asDict() for r in drv] == [r.asDict() for r in inp]
-
-
-def test_psi_inplan_gate_matches_literal_shape(spark, sf_dir):
-    lit = QUERIES["orders_value_psi_yearly"](spark, sf_dir).collect()
-    spark.conf.set("spark_graft.inplan_order_stats", "true")
-    try:
-        inp = QUERIES["orders_value_psi_yearly"](spark, sf_dir).collect()
-    finally:
-        spark.conf.unset("spark_graft.inplan_order_stats")
-    # dict_items only compare by inclusion (a partial order); sort the
-    # rows as tuples of (column, value) pairs, a total order
-    assert sorted(tuple(sorted(r.asDict().items())) for r in lit) == sorted(
-        tuple(sorted(r.asDict().items())) for r in inp
-    )
 
 
 def _write_lineitem(tmp_path, rows):
@@ -97,3 +71,30 @@ def test_funnel_empty_documents_zero_not_null(spark, tmp_path):
     for r in rows:
         assert r["n_docs"] == 0, r
         assert r["n_tokens"] == 0, r
+
+
+@pytest.mark.parametrize(
+    "name, table, want",
+    [
+        ("supplier_acctbal_mad_outliers", "supplier", [(0, None, None, 0)]),
+        ("runs_test_daily_revenue", "orders", [(None, None, None, None)]),
+    ],
+)
+def test_median_queries_on_empty_table_match_oracle(
+    spark, sf_dir, tmp_path, name, table, want
+):
+    # an empty copy of the table, same parquet schema
+    import duckdb
+
+    from sample_emr_on_eks_fgac_iceberg_spark.operators import ORACLE
+
+    con = duckdb.connect()
+    path = tmp_path / f"{table}.parquet"
+    con.sql(
+        f"COPY (SELECT * FROM '{sf_dir}/{table}.parquet' LIMIT 0) "
+        f"TO '{path}' (FORMAT parquet)"
+    )
+    con.sql(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
+    assert [tuple(r) for r in con.sql(ORACLE[name]).fetchall()] == want
+    got = QUERIES[name](spark, str(tmp_path)).collect()
+    assert [tuple(r) for r in got] == want

@@ -1,15 +1,22 @@
 """Hotspot-avoidance utilities: salted two-phase aggregation
 (correctness vs the direct groupBy on a deliberately skewed key, and
 the structural property that phase 1 spreads the hot key over many
-salt buckets) and distributed NTILE cut-points (bucket-for-bucket
+salt buckets), distributed NTILE cut-points (bucket-for-bucket
 equivalence with Spark's own single-partition NTILE window across
-sizes, including n < buckets and n not divisible by buckets)."""
+sizes, including n < buckets and n not divisible by buckets), exact
+order statistics against a sorted Python list, and the global prefix
+primitive against Python running sums."""
+
+import random
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
+    exact_order_statistics,
+    global_prefix,
     ntile_assign,
     ntile_cutpoints,
     two_phase_salted_agg,
@@ -137,3 +144,97 @@ def test_ntile_cutpoints_multi_matches_window_per_dim(spark, sizes):
             ).collect()
         }
         assert got == want, f"dim {d} (n={n})"
+
+
+def test_exact_order_statistics_match_sorted_list(spark):
+    # (1, 2) and (2, 4) always share a row; (1, 1000) floors at
+    # position 1; n = 1 puts every quantile on the same row; n_parts > n
+    # leaves range partitions empty
+    quantiles = [(1, 2), (2, 4), (1, 10), (9, 10), (1, 1), (1, 1000)]
+    rng = random.Random(7)
+    for n, n_parts in [(1, 4), (3, 8), (40, 8), (200, 3)]:
+        rows = [(rng.randint(-9, 9), k) for k in range(n)]
+        df = spark.createDataFrame(rows, "x long, k long")
+        got = exact_order_statistics(df, ["x", "k"], quantiles, n_parts=n_parts)
+        srt = sorted(rows)
+        assert len(got) == len(quantiles)
+        for (q, pos, row), (num, den) in zip(got, quantiles):
+            want = max(1, -(-(num * n) // den))
+            assert (q, pos) == ((num, den), want), (n, q)
+            assert (row["x"], row["k"]) == srt[want - 1], (n, q)
+    empty = spark.createDataFrame([], "x long, k long")
+    assert exact_order_statistics(empty, ["x", "k"], quantiles) == []
+
+
+def _running_sums(rows, inclusive):
+    """{(dim, k): ((rank, Σv, Σw) through the row, universe totals)}
+    over rows (dim, x, k, v, w) ordered by x DESC, k within each dim."""
+    out = {}
+    for dim in {r[0] for r in rows}:
+        ordered = sorted(
+            (r for r in rows if r[0] == dim), key=lambda r: (-r[1], r[2])
+        )
+        totals = (
+            len(ordered),
+            sum(r[3] for r in ordered),
+            sum(r[4] for r in ordered),
+        )
+        acc = (0, 0, 0)
+        for r in ordered:
+            step = tuple(a + b for a, b in zip(acc, (1, r[3], r[4])))
+            out[(dim, r[2])] = (step if inclusive else acc, totals)
+            acc = step
+    return out
+
+
+@pytest.mark.parametrize("n_parts", [1, 7])
+@pytest.mark.parametrize("inclusive", [True, False])
+def test_global_prefix_matches_python_running_sums(spark, n_parts, inclusive):
+    rng = random.Random(n_parts * 2 + inclusive)
+    big = 2**70  # decimal(38,0) sums far past int64
+    # "a" spreads over the range partitions; "b" has two rows, so with
+    # several partitions it is absent from most of them
+    rows = [
+        (
+            dim,
+            rng.randint(-3, 3),
+            k,
+            rng.randint(-50, 50),
+            Decimal(rng.randint(0, 3) * big + rng.randint(-9, 9)),
+        )
+        for dim, n in (("a", 60), ("b", 2))
+        for k in range(n)
+    ]
+    df = spark.createDataFrame(
+        rows, "dim string, x long, k long, v long, w decimal(38,0)"
+    )
+    out = global_prefix(
+        df,
+        [F.col("x").desc(), "k"],
+        {"r": F.lit(1), "sv": F.col("v"), "sw": F.col("w")},
+        by=["dim"],
+        inclusive=inclusive,
+        n_parts=n_parts,
+    )
+    types = dict(out.dtypes)
+    assert {types[c] for c in ("r", "sv", "r_total", "sv_total")} == {"bigint"}
+    assert {types["sw"], types["sw_total"]} == {"decimal(38,0)"}
+    got = {(r["dim"], r["k"]): r for r in out.collect()}
+    want = _running_sums(rows, inclusive)
+    assert set(got) == set(want)
+    for key, (through, totals) in want.items():
+        g = got[key]
+        assert (g["r"], g["sv"], g["sw"]) == through, key
+        assert (g["r_total"], g["sv_total"], g["sw_total"]) == totals, key
+    if n_parts > 1:
+        pids = {d: {g["pid"] for (dd, _), g in got.items() if dd == d} for d in "ab"}
+        assert len(pids["a"]) > 1  # offsets fold across partitions
+        assert len(pids["b"]) < n_parts
+
+
+def test_global_prefix_empty_input(spark):
+    empty = spark.createDataFrame([], "dim string, k long, w decimal(38,0)")
+    for by in ([], ["dim"]):
+        out = global_prefix(empty, ["k"], {"sw": F.col("w")}, by=by)
+        assert out.columns == ["dim", "k", "w", "pid", "sw", "sw_total"]
+        assert out.collect() == []
