@@ -32,17 +32,18 @@ class FgacEngine:
         self.views: dict[str, dict] = {}
         self._sql_frontend = None
 
-    def sql(self, query: str):
+    def sql(self, query: str, stmt=None):
         """Producer-side SQL: CREATE TABLE … PARTITIONED BY / INSERT
         INTO … VALUES / DROP TABLE / DESCRIBE mapped onto the
         Warehouse, reads over unmediated views — the reference's Athena
         entry point (producer_iceberg_datalake_setup.sh:115-159).
-        Consumers use ``session_for(principal).sql`` instead."""
+        Consumers use ``session_for(principal).sql`` instead, which
+        passes a delegated write's parse as ``stmt``."""
         if self._sql_frontend is None:
             from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import SqlFrontend
 
             self._sql_frontend = SqlFrontend(self.spark, self.warehouse, self.policy)
-        return self._sql_frontend.execute(query)
+        return self._sql_frontend.execute(query, stmt)
 
     def _load_for_session(
         self, session_spark: SparkSession, name: str, **time_travel

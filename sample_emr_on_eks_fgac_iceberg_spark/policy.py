@@ -38,13 +38,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
-    _CREATE_VIEW_RE,
-    _EXPLAIN_RE,
-    _OPTIMIZE_RE,
-    _SHOW_GRANTS_RE,
+    ENGINE_GRAMMAR,
     ParsedStatement,
     _blank_sql_strings,
     _sub_outside_strings,
+    desugar,
+    has_sugar,
+    match_engine_grammar,
     parse_statement,
     rewrite_asof_joins,
     rewrite_distinct_on,
@@ -403,10 +403,6 @@ class SecureSession:
         "ReplaceTableAsSelect": CREATE_TABLE,
         "Call": "CALL",
     }
-    # SQL sugar the Spark parser lacks or misreads.
-    _SUGAR_RE = re.compile(
-        r"\b(?:EXCLUDE|FETCH|ASOF|QUALIFY)\b|\b(?:ALL|ANY|SOME)\s*\(|DISTINCT\s+ON\s*\(", re.I
-    )
 
     def __init__(
         self,
@@ -649,7 +645,7 @@ class SecureSession:
         """CREATE VIEW whose body Spark cannot parse: a body that needs
         no sugar rewrite is not a query at all (`AS INSERT INTO …`)."""
         body = m.group(3).rstrip().rstrip(";")
-        if not self._SUGAR_RE.search(_blank_sql_strings(body)):
+        if not has_sugar(body):
             raise ValueError(f"View body must be a query, got: {body[:60]!r}")
         return self._store_view(bool(m.group(1)), m.group(2), body, None)
 
@@ -913,58 +909,32 @@ class SecureSession:
         and anything else takes the secured read path, which denies —
         with an audit entry — a plan that executes anywhere in its tree.
         What a principal may run is decided on the plan, never on how
-        the statement is spelled. Text Spark cannot parse is engine-only
-        grammar (``_ENGINE_STATEMENTS``) or SQL sugar, rewritten and then
-        parsed (_desugar)."""
+        the statement is spelled. Text Spark cannot parse is engine
+        grammar (sql_frontend.ENGINE_GRAMMAR, shared with the producer
+        surface) or SQL sugar, rewritten and then parsed (desugar). A
+        delegated write hands its parse to the trusted frontend."""
         self._refresh_views()
         text = strip_sql_comments(query).strip()
         try:
-            stmt, error = parse_statement(self._spark, text), None
-        except ParseException as exc:
-            stmt, error = None, exc
-        read_text, drops = text, (False, False)
-        if stmt is None:
-            for pattern, handler in self._ENGINE_STATEMENTS:
-                m = pattern.match(text)
-                if m:
-                    return handler(self, text, m)
-            if not self._SUGAR_RE.search(_blank_sql_strings(text)):
-                raise error
-            desugared = self._desugar(text)
-            if desugared is None:  # ASOF JOIN: only the read path can rewrite it
-                return self._read(text, None)
-            read_text, stmt, drops = desugared
+            stmt = parse_statement(self._spark, text)
+        except ParseException as error:
+            hit = match_engine_grammar(text)
+            if hit is not None:
+                kind, m = hit
+                handler = self._ENGINE_STATEMENTS.get(kind)
+                if handler is None:  # grants and the producer's view audit
+                    self._deny("<statement>", kind.strip("_").upper())
+                return handler(self, text, m)
+            stmt = desugar(self._spark, text, self._STATEMENTS)
+            if stmt is None:
+                if not has_sugar(text):
+                    raise error
+                return self._read(text, None)  # ASOF JOIN: only the read path can rewrite it
         entry = self._STATEMENTS.get(stmt.root)
         if entry is None:
-            return self._read(read_text, stmt, drops)
+            return self._read(stmt.text, stmt, stmt.drops)
         handler, accessor = entry
         return handler(self, text, stmt, accessor and stmt.target(accessor))
-
-    def _desugar(self, text: str):
-        """``(rewritten, its parse, drop flags)`` of a statement whose
-        SQL sugar Spark cannot parse, rewritten without policy frames
-        (EXCLUDE, FETCH, ALL/ANY/SOME, QUALIFY, DISTINCT ON). A read
-        query is rewritten whole; a write (``INSERT INTO t …``, ``CREATE
-        TABLE t AS …``) from its first top-level SELECT or WITH on, and
-        its handler still gets the original text. None when no rewrite
-        parses — ASOF JOIN needs the read path's policy-frame resolver."""
-        blanked = _blank_sql_strings(text)
-        heads = [
-            m.start()
-            for m in re.finditer(r"\b(?:SELECT|WITH)\b", blanked, re.I)
-            if blanked.count("(", 0, m.start()) == blanked.count(")", 0, m.start())
-        ]
-        for start in [0] + [h for h in heads if h][:1]:
-            try:
-                body, _ = rewrite_text_sugar(text[start:])
-                body, drop_qualify = rewrite_qualify(body)
-                body, drop_don = rewrite_distinct_on(body)
-                stmt = parse_statement(self._spark, text[:start] + body)
-            except (ParseException, ValueError):
-                continue
-            if start == 0 or stmt.root in self._STATEMENTS:
-                return text[:start] + body, stmt, (drop_qualify, drop_don)
-        return None
 
     def _deny(self, resource: str, action: str = SELECT):
         self._policy.audit_log.append((self.principal, resource, action, "denied"))
@@ -984,7 +954,7 @@ class SecureSession:
         inner = stmt.nested(stmt.node.logicalPlan())
         if not inner.is_query:
             raise ValueError("EXPLAIN supports read queries only on the consumer surface")
-        return self._explain_read(text, _EXPLAIN_RE.match(text), inner)
+        return self._explain_read(text, ENGINE_GRAMMAR["_explain_text"].match(text), inner)
 
     def _explain_read(self, text: str, m: re.Match, inner=None) -> DataFrame:
         from sample_emr_on_eks_fgac_iceberg_spark.plans import explain_str
@@ -1008,7 +978,7 @@ class SecureSession:
         if self._dml_executor is None:
             raise AccessDeniedException(self.principal, database_resource(db), CREATE_TABLE)
         existed = target in set(self._known_tables())
-        out = self._dml_executor(text)
+        out = self._dml_executor(text, stmt)
         # owner grant — only if the statement actually created the
         # table (IF NOT EXISTS on an existing table is a no-op and must
         # not mint grants for a bystander)
@@ -1028,7 +998,7 @@ class SecureSession:
     def _maintain(self, text: str, m: re.Match) -> DataFrame:
         """OPTIMIZE and the ALTER TABLE forms only this engine parses
         (WRITE ORDERED BY, branches and tags, partition fields)."""
-        optimize = m.re is _OPTIMIZE_RE
+        optimize = m.re is ENGINE_GRAMMAR["_optimize"]
         return self._delegate_write(text, m.group(1), (ALTER,), None, unfiltered=optimize)
 
     def _delegate_write(
@@ -1052,7 +1022,7 @@ class SecureSession:
         self._authorize_write_sources(text, target, stmt)
         if self._dml_executor is None:
             raise AccessDeniedException(self.principal, target, perms[0])
-        return self._dml_executor(text)
+        return self._dml_executor(text, stmt)
 
     # Catalog discovery under database-level DESCRIBE (the reference's
     # cross-account Database DESCRIBE, producer_iceberg_datalake_setup
@@ -1150,16 +1120,19 @@ class SecureSession:
             ("AnalyzeTable", "AnalyzeColumn"), (_delegated(ALTER, unfiltered=True), "child")
         ),
     }
-    # Engine-only grammar Spark's parser rejects, matched on the
-    # comment-stripped text: SHOW GRANTS, views over SQL sugar,
-    # maintenance DDL, and EXPLAIN of SQL sugar.
-    _ENGINE_STATEMENTS = (
-        (_SHOW_GRANTS_RE, _show_grants),
-        (_CREATE_VIEW_RE, _create_view_sugar),
-        (_OPTIMIZE_RE, _maintain),
-        (re.compile(r"\s*ALTER\s+TABLE\s+([\w.]+)", re.I), _maintain),
-        (_EXPLAIN_RE, _explain_read),
-    )
+    # Engine grammar (sql_frontend.ENGINE_GRAMMAR) → consumer handler:
+    # SHOW GRANTS, views and EXPLAIN over a query Spark cannot parse,
+    # and the maintenance DDL, delegated under ALTER. Grants and the
+    # producer's view audit have no consumer form and are denied.
+    _ENGINE_STATEMENTS = {
+        "_show_grants": _show_grants,
+        "_create_view_text": _create_view_sugar,
+        "_explain_text": _explain_read,
+        **dict.fromkeys(
+            ("_optimize", "_alter_partitioning", "_alter_write_order", "_create_ref", "_drop_ref"),
+            _maintain,
+        ),
+    }
 
     # ---------------------------------------------------------- reads
     def _asof_relation(self, name: str) -> DataFrame | None:
@@ -1194,7 +1167,7 @@ class SecureSession:
         """The secured read path. ``stmt`` is the parse of ``query``, or
         None when ``query`` carries SQL sugar Spark cannot parse;
         ``drops`` flags helper columns an earlier QUALIFY / DISTINCT ON
-        rewrite of ``query`` added (_desugar)."""
+        rewrite of ``query`` added (sql_frontend.desugar)."""
         text = query
         # Metadata tables under DESCRIBE: a principal who may DESCRIBE
         # the table may read its snapshot log / history (not files or
@@ -1289,7 +1262,7 @@ class SecureSession:
                     continue
                 secured.createOrReplaceTempView(self._view_alias(name))
         drop_qualify, drop_don = drops
-        if self._SUGAR_RE.search(_blank_sql_strings(query)):
+        if has_sugar(query):
             # SQL sugar the Spark parser lacks or misreads (EXCLUDE,
             # FETCH FIRST, quantified ALL/ANY/SOME, ASOF JOIN, QUALIFY,
             # DISTINCT ON — which parses as a call to a function `ON`)
@@ -1297,7 +1270,7 @@ class SecureSession:
             # producer frontend, and the result is parsed. The textual
             # rewrites introduce no new relations; ASOF substitutes a
             # view joined from frames its resolver vended through the
-            # policy path. Each rewrite is a no-op on text _desugar
+            # policy path. Each rewrite is a no-op on text desugar
             # already rewrote.
             query, _ = rewrite_text_sugar(query)
             query = rewrite_asof_joins(query, self._asof_relation)

@@ -1344,6 +1344,11 @@ class Warehouse:
         meta = self._read_meta(name)
         return self._read_meta(meta.link_to) if meta.link_to is not None else meta
 
+    @staticmethod
+    def _aliased(scan: DataFrame | None, alias: str | None) -> DataFrame | None:
+        """A DML scan under the statement's target alias (``t AS x``)."""
+        return scan.alias(alias) if scan is not None and alias else scan
+
     def _rel_file(self, meta: TableMeta, uri: str) -> str:
         path = uri[len("file:"):] if uri.startswith("file:") else uri
         return os.path.relpath(path, os.path.abspath(self.data_dir(meta.name)))
@@ -1401,18 +1406,20 @@ class Warehouse:
             )
         return added
 
-    def delete_from(self, name: str, condition=None) -> dict:
-        """DELETE FROM name [WHERE condition] — copy-on-write: files
-        containing no matching row are untouched; matched files are
-        rewritten without the matching rows. Rows where the predicate is
-        NULL are kept (SQL three-valued semantics)."""
+    def delete_from(self, name: str, condition=None, alias: str | None = None) -> dict:
+        """DELETE FROM name [AS alias] [WHERE condition] — copy-on-
+        write: files containing no matching row are untouched; matched
+        files are rewritten without the matching rows. Rows where the
+        predicate is NULL are kept (SQL three-valued semantics). The
+        condition sees the table's rows under ``alias`` (``x.k``, also
+        from a correlated subquery)."""
         meta = self._resolve_dml_target(name)
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if cond is None:
             cond = F.lit(True)
         if meta.properties.get("write.delete.mode") == "merge-on-read":
-            return self._delete_merge_on_read(meta, cond)
-        scan = self._scan_live(meta, with_file=True)
+            return self._delete_merge_on_read(meta, cond, alias)
+        scan = self._aliased(self._scan_live(meta, with_file=True), alias)
         if scan is None:
             return {"deleted_rows": 0, "rewritten_files": 0}
         n, affected, uris = self._matched_stats(meta, scan.filter(cond))
@@ -1427,7 +1434,7 @@ class Warehouse:
         self._rewrite_files(meta, kept, "delete", affected)
         return {"deleted_rows": n, "rewritten_files": len(affected)}
 
-    def _delete_merge_on_read(self, meta: TableMeta, cond) -> dict:
+    def _delete_merge_on_read(self, meta: TableMeta, cond, alias: str | None) -> dict:
         """DELETE under write.delete.mode=merge-on-read: write the
         matched rows' identifier-column tuples as an equality delete
         file and commit — no data file is rewritten. The scan already
@@ -1439,8 +1446,8 @@ class Warehouse:
         if not keys:
             # no row identity -> the spec's OTHER delete kind:
             # positional delete files
-            return self._delete_positional(meta, cond)
-        scan = self._scan_live(meta, with_file=True)
+            return self._delete_positional(meta, cond, alias)
+        scan = self._aliased(self._scan_live(meta, with_file=True), alias)
         if scan is None:
             return {"deleted_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
         hit = F.coalesce(cond, F.lit(False))
@@ -1496,7 +1503,7 @@ class Warehouse:
         the rel path does not)."""
         return F.substring_index(col, Warehouse._REL_AFTER_DATA, -1)
 
-    def _delete_positional(self, meta: TableMeta, cond) -> dict:
+    def _delete_positional(self, meta: TableMeta, cond, alias: str | None) -> dict:
         """DELETE under merge-on-read WITHOUT identifier fields: write
         the matched rows' (file_path, pos) tuples as a POSITIONAL
         delete file (Iceberg content=1; columns named per the spec's
@@ -1504,7 +1511,7 @@ class Warehouse:
         file rewritten, no row identity required. The scan already
         subtracts previously-committed deletes, so re-deleting the
         same rows is a no-op commit."""
-        scan = self._scan_live(meta, with_pos=True)
+        scan = self._aliased(self._scan_live(meta, with_pos=True), alias)
         if scan is None:
             return {"deleted_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
         hit = F.coalesce(cond, F.lit(False))
@@ -1658,10 +1665,13 @@ class Warehouse:
         )
         return df.join(F.broadcast(dels), cond, "left_anti")
 
-    def update_where(self, name: str, assignments: dict, condition=None) -> dict:
-        """UPDATE name SET col = expr[, …] [WHERE condition] — file-
-        granular copy-on-write by default; assignment expressions may
-        reference any column of the row. With
+    def update_where(
+        self, name: str, assignments: dict, condition=None, alias: str | None = None
+    ) -> dict:
+        """UPDATE name [AS alias] SET col = expr[, …] [WHERE condition]
+        — file-granular copy-on-write by default; assignment expressions
+        may reference any column of the row, qualified by ``alias`` too
+        (also from a correlated subquery). With
         ``write.update.mode=merge-on-read`` (Iceberg's independent
         update-mode knob) the matched rows become a positional delete
         file plus an appended data file of the rewritten rows — one
@@ -1675,8 +1685,8 @@ class Warehouse:
         if cond is None:
             cond = F.lit(True)
         if meta.properties.get("write.update.mode") == "merge-on-read":
-            return self._update_merge_on_read(meta, assignments, cond)
-        scan = self._scan_live(meta, with_file=True)
+            return self._update_merge_on_read(meta, assignments, cond, alias)
+        scan = self._aliased(self._scan_live(meta, with_file=True), alias)
         if scan is None:
             return {"updated_rows": 0, "rewritten_files": 0}
         n, affected, uris = self._matched_stats(meta, scan.filter(cond))
@@ -1699,7 +1709,9 @@ class Warehouse:
         self._rewrite_files(meta, rewritten, "update", affected)
         return {"updated_rows": n, "rewritten_files": len(affected)}
 
-    def _update_merge_on_read(self, meta: TableMeta, assignments: dict, cond) -> dict:
+    def _update_merge_on_read(
+        self, meta: TableMeta, assignments: dict, cond, alias: str | None
+    ) -> dict:
         """UPDATE under write.update.mode=merge-on-read: the spec's
         delete+insert decomposition — matched rows' (file_path, pos)
         tuples become a positional delete file, the assignment-applied
@@ -1709,7 +1721,7 @@ class Warehouse:
         rows are immune by identity, not by sequence. Cost at 100 TB:
         matched rows only (keys file + updated rows), vs CoW's rewrite
         of every file containing a match."""
-        scan = self._scan_live(meta, with_pos=True)
+        scan = self._aliased(self._scan_live(meta, with_pos=True), alias)
         if scan is None:
             return {"updated_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
         hit = F.coalesce(cond, F.lit(False))

@@ -8,6 +8,7 @@ family, not just that instance.
 """
 
 import itertools
+from collections import Counter
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -332,12 +333,16 @@ def test_spelling_matrix_keeps_the_decision(write_engine, stmt):
 
     sess = write_engine.session_for("wprop")
 
-    def decision(text: str) -> str:
+    def outcome(text: str) -> tuple:
+        """The decision, and what it did to the warehouse."""
+        before = _warehouse_state(write_engine)
         try:
             sess.sql(text)
         except ADE:
-            return "denied"
-        return "executed"
+            decision = "denied"
+        else:
+            decision = "executed"
+        return decision, _effect(before, _warehouse_state(write_engine))
 
     mutated = [
         "/* c */ " + stmt,
@@ -345,5 +350,102 @@ def test_spelling_matrix_keeps_the_decision(write_engine, stmt):
         stmt.replace(" ", "\n\t", 3),
         " ".join(t.lower() if t.isalpha() and t.isupper() else t for t in stmt.split(" ")),
     ]
-    want = decision(stmt)
-    assert [decision(m) for m in mutated] == [want] * len(mutated)
+    want = outcome(stmt)
+    assert [outcome(m) for m in mutated] == [want] * len(mutated)
+
+
+def _warehouse_state(eng) -> dict:
+    wh = eng.warehouse
+    return {
+        t: (
+            [(f.name, f.dataType.simpleString()) for f in wh.schema_of(t).fields],
+            Counter(tuple(r) for r in wh.read_table(t).collect()),
+        )
+        for t in wh.list_tables()
+    }
+
+
+def _effect(before: dict, after: dict) -> tuple:
+    """Tables created and dropped, and per changed table whether its
+    schema moved and which rows it gained and lost."""
+    return (
+        sorted(set(after) - set(before)),
+        sorted(set(before) - set(after)),
+        {
+            t: (
+                after[t][0] != before[t][0],
+                sorted((after[t][1] - before[t][1]).elements()),
+                sorted((before[t][1] - after[t][1]).elements()),
+            )
+            for t in set(before) & set(after)
+            if after[t] != before[t]
+        },
+    )
+
+
+# ------------------------------------------- effect-level spelling matrix
+# Spellings Spark parses that a text-matching dispatch let past their
+# statement shape: each must take effect in the warehouse — not in
+# Spark's own catalog, not on a scratch session — exactly as its
+# canonical spelling does.
+_BASE = [(1, "a"), (2, "b")]
+
+
+def _rows(eng, table: str) -> list:
+    return sorted(tuple(r) for r in eng.warehouse.read_table(table).collect())
+
+
+_EFFECT_MATRIX = {
+    "DROP TABLE `t`": lambda e, _: not e.warehouse.table_exists("t"),
+    "CREATE TABLE t5 AS (SELECT * FROM t)": lambda e, _: _rows(e, "t5") == _BASE,
+    "CREATE TABLE t2 TBLPROPERTIES ('a'='b') AS SELECT * FROM t": lambda e, _: (
+        _rows(e, "t2") == _BASE and e.warehouse._read_meta("t2").properties.get("a") == "b"
+    ),
+    "CREATE DATABASE `d1`": lambda e, _: "d1" in e.warehouse.list_databases(),
+    "SHOW TABLES LIKE 'zz*'": lambda e, df: df.columns == ["table_name"] and df.count() == 0,
+    "SHOW TABLES LIKE 't*'": lambda e, df: [tuple(r) for r in df.collect()] == [("t",)],
+    "INSERT INTO TABLE t VALUES (3, 'c')": lambda e, _: _rows(e, "t") == _BASE + [(3, "c")],
+    "INSERT INTO `t` VALUES (3, 'c')": lambda e, _: _rows(e, "t") == _BASE + [(3, "c")],
+    "INSERT INTO t (SELECT 3, 'c')": lambda e, _: _rows(e, "t") == _BASE + [(3, "c")],
+    "INSERT INTO t SELECT 3, 'c'": lambda e, _: _rows(e, "t") == _BASE + [(3, "c")],
+    "INSERT OVERWRITE t SELECT 3, 'c'": lambda e, _: _rows(e, "t") == [(3, "c")],
+    "DELETE FROM t AS x WHERE x.k = 1": lambda e, _: _rows(e, "t") == [(2, "b")],
+    "UPDATE t AS x SET v = 'z' WHERE x.k = 1": lambda e, _: _rows(e, "t") == [(1, "z"), (2, "b")],
+    "UPDATE `t` SET v = 'z' WHERE k = 1": lambda e, _: _rows(e, "t") == [(1, "z"), (2, "b")],
+    "MERGE INTO `t` USING (SELECT 1 AS k, 'z' AS v) s ON t.k = s.k "
+    "WHEN MATCHED THEN UPDATE SET v = s.v": lambda e, _: _rows(e, "t") == [(1, "z"), (2, "b")],
+    "TRUNCATE TABLE `t`": lambda e, _: _rows(e, "t") == [],
+    "ALTER TABLE t ADD COLUMN w INT": lambda e, _: (
+        [f.name for f in e.warehouse.schema_of("t").fields] == ["k", "v", "w"]
+    ),
+}
+
+
+@pytest.fixture()
+def effect_engine(spark, tmp_path):
+    eng = FgacEngine(spark, str(tmp_path / "effect_wh"))
+    eng.sql("CREATE TABLE t (k INT, v STRING)")
+    eng.sql("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    return eng
+
+
+@pytest.mark.parametrize("stmt", list(_EFFECT_MATRIX))
+def test_respelled_statement_takes_effect_in_the_warehouse(effect_engine, spark, stmt):
+    def spark_catalog():
+        return (
+            {t.name for t in spark.catalog.listTables()},
+            {d.name for d in spark.catalog.listDatabases()},
+        )
+
+    before = spark_catalog()
+    result = effect_engine.sql(stmt)
+    assert _EFFECT_MATRIX[stmt](effect_engine, result)
+    assert spark_catalog() == before
+
+
+def test_respelled_drop_through_a_granted_session(effect_engine):
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import DESCRIBE, DROP, SELECT
+
+    effect_engine.policy.grant("dropper", "t", {SELECT, DESCRIBE, DROP})
+    effect_engine.session_for("dropper").sql("DROP TABLE `t`")
+    assert not effect_engine.warehouse.table_exists("t")

@@ -433,3 +433,193 @@ def test_comment_prefixed_ddl_lands_in_the_warehouse(engine, spark):
     assert "commented_ddl_t" not in {t.name for t in spark.catalog.listTables()}
     engine.sql("/* c */ INSERT INTO commented_ddl_t VALUES (7) -- trailing")
     assert [tuple(r) for r in engine.sql("SELECT * FROM commented_ddl_t").collect()] == [(7,)]
+
+
+# ------------------------------------------ one parse-based dispatch
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "SET spark.sql.shuffle.partitions = 7",
+        "CREATE TEMPORARY VIEW ft_v USING parquet OPTIONS (path '/nonexistent')",
+        "INSERT OVERWRITE DIRECTORY '/nonexistent/ft_dir' SELECT 1",
+        "CACHE TABLE ft_t",
+    ],
+)
+def test_statement_without_a_handler_fails_closed(engine, spark, stmt):
+    """A parsed statement no handler takes is refused, never handed to a
+    scratch session or Spark's own catalog: nothing new appears in the
+    session catalog or under spark.sql.warehouse.dir."""
+    import os
+
+    engine.sql("CREATE TABLE ft_t (k INT)")
+    wh_dir = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def spark_side():
+        return (
+            {t.name for t in spark.catalog.listTables()},
+            sorted(os.listdir(wh_dir)) if os.path.isdir(wh_dir) else [],
+        )
+
+    before = spark_side()
+    with pytest.raises(ValueError, match="not supported"):
+        engine.sql(stmt)
+    assert spark_side() == before
+    assert spark.conf.get("spark.sql.shuffle.partitions") != "7"
+
+
+def test_both_surfaces_share_one_classification():
+    """Every plan class the consumer surface delegates has a producer
+    handler, and both surfaces match Spark-rejected text against the
+    same engine-grammar table."""
+    from sample_emr_on_eks_fgac_iceberg_spark import policy, sql_frontend
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import SecureSession
+    from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import SqlFrontend
+
+    delegating = {SecureSession._insert, SecureSession._create_table}
+    delegated = [
+        cls
+        for cls, (handler, _) in SecureSession._STATEMENTS.items()
+        if handler in delegating or handler.__qualname__.startswith("_delegated")
+    ]
+    assert len(delegated) >= 15
+    assert [c for c in delegated if c not in SqlFrontend._STATEMENTS] == []
+    assert policy.ENGINE_GRAMMAR is sql_frontend.ENGINE_GRAMMAR
+    assert policy.match_engine_grammar is sql_frontend.match_engine_grammar
+    assert set(SecureSession._ENGINE_STATEMENTS) <= set(sql_frontend.ENGINE_GRAMMAR)
+    assert all(hasattr(SqlFrontend, name) for name in sql_frontend.ENGINE_GRAMMAR)
+
+
+def _count_parses(monkeypatch) -> list:
+    from sample_emr_on_eks_fgac_iceberg_spark import policy, sql_frontend
+
+    calls = []
+    real = sql_frontend.parse_statement
+
+    def counted(spark, text):
+        calls.append(text)
+        return real(spark, text)
+
+    monkeypatch.setattr(sql_frontend, "parse_statement", counted)
+    monkeypatch.setattr(policy, "parse_statement", counted)
+    return calls
+
+
+def test_producer_statement_is_parsed_at_most_once(engine, monkeypatch):
+    engine.sql("CREATE TABLE pc_t (k INT, v STRING)")
+    engine.sql("CREATE TABLE pc_s (k INT, v STRING)")
+    engine.sql("INSERT INTO pc_s VALUES (1, 'a'), (2, 'b')")
+    calls = _count_parses(monkeypatch)
+    for stmt in [
+        "INSERT INTO pc_t VALUES (1, 'x')",
+        "INSERT INTO pc_t SELECT * FROM pc_s WHERE k IN (SELECT k FROM pc_s)",
+        "WITH c AS (SELECT 3 AS k) INSERT INTO pc_t (k) SELECT k FROM c",
+        "MERGE INTO pc_t t USING (SELECT * FROM pc_s) s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *",
+        "UPDATE pc_t SET v = 'u' WHERE k = 3",
+        "DELETE FROM pc_t WHERE k IN (SELECT k FROM pc_s WHERE k = 2)",
+        "CREATE TABLE pc_c AS SELECT * FROM pc_t",
+        "CREATE VIEW pc_v AS SELECT k FROM pc_t",
+        "SELECT count(*) FROM pc_v",
+        "EXPLAIN SELECT * FROM pc_t",
+        "DESCRIBE pc_t",
+    ]:
+        del calls[:]
+        engine.sql(stmt)
+        assert len(calls) <= 1, stmt
+    assert sorted(tuple(r) for r in engine.sql("SELECT * FROM pc_t").collect()) == [
+        (1, "a"),
+        (1, "a"),
+        (3, "u"),
+    ]
+
+
+def test_delegated_consumer_write_is_parsed_once(engine, monkeypatch):
+    """SecureSession hands its parse to the trusted frontend: a write is
+    parsed once across both surfaces."""
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import DELETE, INSERT, SELECT
+
+    engine.sql("CREATE TABLE pw_t (k INT, v STRING)")
+    engine.policy.grant("pw", "pw_t", {SELECT, INSERT, DELETE})
+    sess = engine.session_for("pw")
+    calls = _count_parses(monkeypatch)
+    for stmt in [
+        "INSERT INTO pw_t VALUES (1, 'a'), (2, 'b')",
+        "MERGE INTO pw_t t USING (SELECT 1 AS k, 'm' AS v) s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v",
+        "UPDATE pw_t SET v = 'u' WHERE k = 2",
+        "DELETE FROM pw_t WHERE k = 1",
+    ]:
+        del calls[:]
+        sess.sql(stmt)
+        assert len(calls) == 1, stmt
+    assert [tuple(r) for r in engine.sql("SELECT * FROM pw_t").collect()] == [(2, "u")]
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_aliased_dml_keeps_correlated_subqueries(engine, mode):
+    """The target alias of a DELETE/UPDATE names the table's rows inside
+    a correlated subquery too: a same-named key in the subquery's own
+    table must not capture ``o.order_id``."""
+    props = f"'write.delete.mode'='{mode}', 'write.update.mode'='{mode}'"
+    engine.sql(f"CREATE TABLE ad_orders (order_id INT, v STRING) TBLPROPERTIES ({props})")
+    engine.sql("CREATE TABLE ad_returns (order_id INT, tag STRING)")
+    engine.sql("INSERT INTO ad_orders VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd')")
+    engine.sql("INSERT INTO ad_returns VALUES (2, 'r2'), (3, 'r3'), (9, 'r9')")
+
+    def rows():
+        return sorted(tuple(r) for r in engine.sql("SELECT * FROM ad_orders").collect())
+
+    engine.sql(
+        "UPDATE ad_orders AS o SET v = (SELECT max(r.tag) FROM ad_returns r "
+        "WHERE r.order_id = o.order_id) WHERE o.order_id IN "
+        "(SELECT r.order_id FROM ad_returns r WHERE r.order_id = o.order_id AND r.tag = 'r3')"
+    )
+    assert rows() == [(1, "a"), (2, "b"), (3, "r3"), (4, "d")]
+    engine.sql(
+        "DELETE FROM ad_orders AS o WHERE EXISTS "
+        "(SELECT 1 FROM ad_returns r WHERE r.order_id = o.order_id)"
+    )
+    assert rows() == [(1, "a"), (4, "d")]
+    engine.sql("DELETE FROM ad_orders x WHERE x.order_id = 4")
+    assert rows() == [(1, "a")]
+
+
+def test_aliased_delete_through_a_granted_session(engine):
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import DELETE, SELECT
+
+    engine.sql("CREATE TABLE ag_orders (order_id INT)")
+    engine.sql("CREATE TABLE ag_returns (order_id INT)")
+    engine.sql("INSERT INTO ag_orders VALUES (1), (2), (3)")
+    engine.sql("INSERT INTO ag_returns VALUES (2)")
+    engine.policy.grant("ag", "ag_orders", {SELECT, DELETE})
+    engine.policy.grant("ag", "ag_returns", {SELECT})
+    engine.session_for("ag").sql(
+        "DELETE FROM ag_orders AS o WHERE EXISTS "
+        "(SELECT 1 FROM ag_returns r WHERE r.order_id = o.order_id)"
+    )
+    assert sorted(r[0] for r in engine.sql("SELECT * FROM ag_orders").collect()) == [1, 3]
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "WITH c AS (SELECT 1 AS k, 'w' AS v) MERGE INTO cw_t t USING c ON t.k = c.k "
+        "WHEN MATCHED THEN UPDATE SET v = c.v WHEN NOT MATCHED THEN INSERT *",
+        "WITH c AS (SELECT 1 AS k) DELETE FROM cw_t WHERE k IN (SELECT k FROM c)",
+        "WITH c AS (SELECT 1 AS k) UPDATE cw_t SET v = 'w' WHERE k IN (SELECT k FROM c)",
+    ],
+)
+def test_cte_prefixed_write_other_than_insert_refuses(engine, stmt):
+    """Only an INSERT carries its WITH clause into its source: any other
+    CTE-prefixed write is refused, and a table named like the CTE is
+    left alone and does not drive the write."""
+    engine.sql("CREATE TABLE cw_t (k INT, v STRING)")
+    engine.sql("CREATE TABLE c (k INT, v STRING)")
+    engine.sql("INSERT INTO cw_t VALUES (1, 'a'), (2, 'b')")
+    engine.sql("INSERT INTO c VALUES (2, 'c')")
+    with pytest.raises(ValueError, match="CTE-prefixed"):
+        engine.sql(stmt)
+    assert sorted(tuple(r) for r in engine.sql("SELECT * FROM cw_t").collect()) == [
+        (1, "a"),
+        (2, "b"),
+    ]

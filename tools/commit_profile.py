@@ -10,6 +10,10 @@ the median per commit kind over the rounds after the warm-up, and the
 live claims files at the end. py4j calls are counted by wrapping py4j's
 ``send_command``, so they include every driver-to-JVM round trip the
 statement makes (planning, policy checks and the writes themselves).
+``py4j_calls_without_gc`` leaves out py4j's own object release
+commands: Python's garbage collector sends them whenever it drops JVM
+proxies, during whatever statement happens to run, so they make
+``py4j_calls`` of one unchanged statement move between runs.
 """
 
 import argparse
@@ -28,15 +32,19 @@ KINDS = ("insert", "merge", "delete")
 
 
 def _count_py4j_calls() -> list[int]:
+    """``[all calls, object release calls]``, counted as they are sent."""
     import py4j.clientserver as cs
     import py4j.java_gateway as jg
+    from py4j import protocol
 
-    calls = [0]
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    calls = [0, 0]
     for cls in (cs.ClientServerConnection, jg.GatewayConnection):
         real = cls.send_command
 
         def counted(self, command, *a, _real=real, **k):
             calls[0] += 1
+            calls[1] += command.startswith(release)
             return _real(self, command, *a, **k)
 
         cls.send_command = counted
@@ -93,12 +101,15 @@ def main() -> None:
         }
         writer = engine.session_for("writer")
         rng, ids = random.Random(args.seed), [r[0] for r in claims]
-        per = {k: {"py4j_calls": [], "files_added": [], "wall_ms": []} for k in KINDS}
+        per = {
+            k: {"py4j_calls": [], "py4j_calls_without_gc": [], "files_added": [], "wall_ms": []}
+            for k in KINDS
+        }
         for i in range(args.rounds):
             for kind in KINDS:
                 sql = _statement(kind, rng, ids, i, fgac, gen)
                 n_snap = len(wh.snapshots("claims"))
-                c0, t0 = calls[0], time.perf_counter()
+                (c0, g0), t0 = calls[:], time.perf_counter()
                 res = writer.sql(sql)
                 if res is not None:
                     res.collect()
@@ -107,6 +118,7 @@ def main() -> None:
                     continue
                 added = wh._read_meta("claims").snapshots[n_snap:]
                 per[kind]["py4j_calls"].append(n_calls)
+                per[kind]["py4j_calls_without_gc"].append(n_calls - (calls[1] - g0))
                 per[kind]["wall_ms"].append(round(wall_ms, 1))
                 per[kind]["files_added"].append(sum(len(s["added_files"]) for s in added))
         out["per_commit_median"] = {
