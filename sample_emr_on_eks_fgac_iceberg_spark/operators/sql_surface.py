@@ -6,9 +6,9 @@ SQL sugar belongs in the frontend, not in a Python-only API).
 
 - ``QUALIFY`` (DuckDB/Snowflake/BigQuery's post-window filter) and
   ``ASOF JOIN`` (DuckDB/streaming-SQL) are rewritten by the frontend
-  (sql_frontend.rewrite_qualify / _rewrite_asof_joins) into plain
-  Spark plans — the window-filter wrap and the union+window as-of
-  (temporal.asof_join_frames) respectively.
+  (sql_frontend.rewrite_sugar: rewrite_qualify / rewrite_asof_joins)
+  into plain Spark SQL — the window-filter wrap and the union+window
+  as-of (temporal.asof_join_frames) respectively.
 - ``GROUP BY ALL`` is native to Spark ≥3.4 AND DuckDB: the IDENTICAL
   statement text runs on both engines (the nation_trade_reachability
   recursive-CTE pattern — parity by construction).
@@ -98,7 +98,8 @@ def qualify_top_suppliers_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 suppliers per nation by account balance, spelled with
     QUALIFY — the post-window filter DuckDB/Snowflake/BigQuery users
     write daily and Spark SQL lacks. The frontend rewrites the clause
-    into a wrapped window filter (sql_frontend.rewrite_qualify); the
+    into a wrapped window filter (sql_frontend.rewrite_sugar →
+    rewrite_qualify); the
     DuckDB oracle runs the SAME statement natively (names aside) —
     semantics parity by construction.
 
@@ -297,7 +298,8 @@ def distinct_on_latest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest click per user spelled with Postgres/DuckDB ``DISTINCT
     ON`` — the 'first row per group' idiom. The frontend rewrites it
     into the standard row_number window filter
-    (sql_frontend.rewrite_distinct_on; ORDER BY required, arbitrary-
+    (sql_frontend.rewrite_sugar → rewrite_distinct_on, plain SQL with
+    its helper columns in ``* EXCEPT``; ORDER BY required, arbitrary-
     row DISTINCT ON refuses — determinism rules); DuckDB runs the SAME
     statement natively.
 

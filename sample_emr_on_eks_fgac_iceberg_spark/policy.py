@@ -46,12 +46,11 @@ from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
     has_sugar,
     match_engine_grammar,
     parse_statement,
-    rewrite_asof_joins,
-    rewrite_distinct_on,
-    rewrite_qualify,
-    rewrite_text_sugar,
+    rewrite_sugar,
+    rewrite_table_refs,
     spj_candidate_tables,
     strip_sql_comments,
+    view_alias,
 )
 
 # File-format relation spellings (``parquet.`/path```) are never a
@@ -528,13 +527,6 @@ class SecureSession:
         raw = self._raw_scan(table, **time_travel)
         return self._policy.secured_frame(self.principal, table, raw)
 
-    @staticmethod
-    def _view_alias(name: str) -> str:
-        # Temp views are single-part identifiers; catalog-qualified
-        # grants (dev.db.table) register under a flattened alias and
-        # sql() rewrites the qualified reference to it.
-        return name.replace(".", "__")
-
     def _refresh_views(self) -> None:
         """Re-resolve grant + filter into the session catalog — called
         per sql() so policy changes (revoke, filter delete) propagate to
@@ -562,10 +554,10 @@ class SecureSession:
                 # Dangling grant (filter deleted): fail closed — the
                 # view disappears and touching the table denies below.
                 continue
-            secured.createOrReplaceTempView(self._view_alias(name))
+            secured.createOrReplaceTempView(view_alias(name))
             granted.add(name)
         for stale in self._registered - granted:
-            self._spark.catalog.dropTempView(self._view_alias(stale))
+            self._spark.catalog.dropTempView(view_alias(stale))
         self._registered = granted
         self._seen_version = token
 
@@ -799,7 +791,7 @@ class SecureSession:
         for other in sorted(views, key=len, reverse=True):
             if other != name and re.search(_token(other), blanked, re.I):
                 sub = self._stream_view(other, stack | {name})
-                alias = f"__svstream_{self._view_alias(other)}"
+                alias = f"__svstream_{view_alias(other)}"
                 sub.createOrReplaceTempView(alias)
                 text = _sub_outside_strings(
                     _token(other), f"`{alias}`", text, flags=re.I
@@ -810,7 +802,7 @@ class SecureSession:
                 # authorizes SELECT + applies the filter/masks to the
                 # unbounded frame — the invoker's-rights fence
                 sdf = self.readStream(t)
-                alias = f"__tstream_{self._view_alias(t)}"
+                alias = f"__tstream_{view_alias(t)}"
                 sdf.createOrReplaceTempView(alias)
                 text = _sub_outside_strings(
                     _token(t), f"`{alias}`", text, flags=re.I
@@ -932,7 +924,7 @@ class SecureSession:
                 return self._read(text, None)  # ASOF JOIN: only the read path can rewrite it
         entry = self._STATEMENTS.get(stmt.root)
         if entry is None:
-            return self._read(stmt.text, stmt, stmt.drops)
+            return self._read(stmt.text, stmt)
         handler, accessor = entry
         return handler(self, text, stmt, accessor and stmt.target(accessor))
 
@@ -1163,80 +1155,42 @@ class SecureSession:
             raise AccessDeniedException(self.principal, name)
         return self._spark.table(name)
 
-    def _read(self, query: str, stmt: ParsedStatement | None, drops=(False, False)) -> DataFrame:
+    def _metadata(self, name: str, kind: str) -> DataFrame | None:
+        """``t.snapshots`` / ``t.history`` under DESCRIBE: a principal who
+        may DESCRIBE the table may read its snapshot log and history. The
+        other metadata tables expose physical paths, a producer surface:
+        None leaves their text unresolved."""
+        if self._metadata_loader is None or kind not in ("snapshots", "history"):
+            return None
+        self._policy.authorize(self.principal, name, DESCRIBE)
+        # built against this session's SparkSession so the temp view
+        # lands in this session's catalog
+        return self._metadata_loader(self._spark, name, kind)
+
+    def _authorize_qualified(self, name: str) -> None:
+        # consumer_emr_on_eks_setup.sh:407 queries
+        # dev.consumer_healthcare_db.rl_patients through a 3-part name
+        if self._policy.grant_for(self.principal, name) is None:
+            self._deny(name)
+
+    def _read(self, query: str, stmt: ParsedStatement | None) -> DataFrame:
         """The secured read path. ``stmt`` is the parse of ``query``, or
-        None when ``query`` carries SQL sugar Spark cannot parse;
-        ``drops`` flags helper columns an earlier QUALIFY / DISTINCT ON
-        rewrite of ``query`` added (sql_frontend.desugar)."""
+        None when ``query`` carries SQL sugar Spark cannot parse."""
         text = query
-        # Metadata tables under DESCRIBE: a principal who may DESCRIBE
-        # the table may read its snapshot log / history (not files or
-        # partitions — those expose physical paths, a producer surface).
-        if self._metadata_loader is not None:
-
-            def _meta(mm: re.Match) -> str:
-                name, kind = mm.group(1), mm.group(2).lower()
-                if name not in set(self._known_tables()):
-                    return mm.group(0)
-                self._policy.authorize(self.principal, name, DESCRIBE)
-                # built against this session's SparkSession so the temp
-                # view lands in this session's catalog
-                df = self._metadata_loader(self._spark, name, kind)
-                view = f"__meta_{self._view_alias(name)}_{kind}"
-                df.createOrReplaceTempView(view)
-                return f"`{view}`"
-
-            query = re.sub(
-                r"([\w.]+)\.(snapshots|history)(?![\w.])", _meta, query, flags=re.I
-            )
-        # Time travel under policy: `t VERSION AS OF n` / `t TIMESTAMP
-        # AS OF 'ts'` loads the historical snapshot and applies the SAME
-        # row filter + column whitelist — history is never a policy
-        # bypass (a row the filter hides today is hidden in every
-        # snapshot it ever appeared in).
-        def _travel(tm: re.Match) -> str:
-            name = tm.group(1)
-            if name not in set(self._known_tables()):
-                return tm.group(0)
-            kind, literal = tm.group(2).upper(), tm.group(3)
-            if kind == "VERSION":
-                if literal.startswith("'"):
-                    kw = {"ref": literal.strip("'")}
-                    tag = f"r{literal.strip(chr(39))}"
-                else:
-                    kw = {"snapshot_id": int(literal)}
-                    tag = f"v{literal}"
-            else:
-                from datetime import datetime
-
-                ms = int(
-                    datetime.fromisoformat(literal.strip("'")).timestamp() * 1000
-                )
-                kw, tag = {"as_of_timestamp_ms": ms}, f"t{ms}"
-            secured = self._secured(name, **kw)  # authorizes; denies if ungranted
-            view = f"__tt_{self._view_alias(name)}_{tag}"
-            secured.createOrReplaceTempView(view)
-            return f"`{view}`"
-
-        query = re.sub(
-            r"([\w.]+)\s+(?:FOR\s+)?(?:SYSTEM_)?(VERSION|TIME(?:STAMP)?)\s+AS\s+OF\s+('[^']*'|\d+)",
-            _travel,
+        # Table references through this principal's policy path: time
+        # travel loads the historical snapshot through _secured, so the
+        # SAME row filter + column whitelist apply — history is never a
+        # policy bypass (a row the filter hides today is hidden in every
+        # snapshot it ever appeared in); metadata tables are
+        # DESCRIBE-gated; a catalog-qualified name denies unless granted.
+        query = rewrite_table_refs(
+            self._spark,
             query,
-            flags=re.I,
+            set(self._known_tables()),
+            self._secured,
+            self._metadata,
+            qualified=self._authorize_qualified,
         )
-        # Catalog-qualified references: a granted dev.db.table rewrites
-        # to its registered alias; a known-but-ungranted one is a
-        # plan-time denial (consumer_emr_on_eks_setup.sh:407 queries
-        # dev.consumer_healthcare_db.rl_patients through a 3-part name).
-        for name in sorted(self._known_tables(), key=len, reverse=True):
-            if "." not in name:
-                continue
-            pattern = rf"(?<![\w.`]){re.escape(name)}(?![\w.])"
-            if not re.search(pattern, query):
-                continue
-            if self._policy.grant_for(self.principal, name) is None:
-                raise AccessDeniedException(self.principal, name)
-            query = re.sub(pattern, f"`{self._view_alias(name)}`", query)
         # Consumer-side storage-partitioned joins: when this query joins
         # two granted bucket[N] tables on their bucket keys with equal
         # N, re-register those views over the policy-filtered BUCKETED
@@ -1260,8 +1214,7 @@ class SecureSession:
                     )
                 except AccessDeniedException:
                     continue
-                secured.createOrReplaceTempView(self._view_alias(name))
-        drop_qualify, drop_don = drops
+                secured.createOrReplaceTempView(view_alias(name))
         if has_sugar(query):
             # SQL sugar the Spark parser lacks or misreads (EXCLUDE,
             # FETCH FIRST, quantified ALL/ANY/SOME, ASOF JOIN, QUALIFY,
@@ -1270,13 +1223,8 @@ class SecureSession:
             # producer frontend, and the result is parsed. The textual
             # rewrites introduce no new relations; ASOF substitutes a
             # view joined from frames its resolver vended through the
-            # policy path. Each rewrite is a no-op on text desugar
-            # already rewrote.
-            query, _ = rewrite_text_sugar(query)
-            query = rewrite_asof_joins(query, self._asof_relation)
-            query, dq = rewrite_qualify(query)
-            query, dd = rewrite_distinct_on(query)
-            drop_qualify, drop_don = drop_qualify or dq, drop_don or dd
+            # policy path.
+            query = rewrite_sugar(query, self._asof_relation)
         if stmt is None or query != text:
             stmt = parse_statement(self._spark, query)
         # only a read query may run here: a Command or an eager node
@@ -1313,14 +1261,7 @@ class SecureSession:
         # filter changes propagate to every subsequent read.
         self._materialize_views(names)
         try:
-            df = self._spark.sql(query)
-            if drop_qualify:
-                df = df.drop("__qualify")
-            if drop_don:
-                df = df.drop(
-                    "__don", *[c for c in df.columns if c.startswith("__ob")]
-                )
-            return df
+            return self._spark.sql(query)
         except AnalysisException as exc:
             # A table exists in the warehouse but isn't granted → it was
             # never registered in this session's catalog. Surface that

@@ -1979,6 +1979,16 @@ class Warehouse:
             fence = self.last_committed_batch(meta.name, txn[0])
             if fence is not None and int(txn[1]) <= fence:
                 return {"skipped": True, "batch_id": int(txn[1])}
+        if source.sparkSession is not self.spark:
+            # re-home a source built on another session of the context:
+            # the write job, and the Observation counting its inserts,
+            # run on this session, and an Observation whose plan runs
+            # elsewhere never receives its metrics and waits forever
+            plan = source._jdf.queryExecution().analyzed()
+            jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                self.spark._jsparkSession, plan
+            )
+            source = DataFrame(jdf, self.spark)
         if meta.properties.get("write.merge.mode") == "merge-on-read":
             return self._merge_merge_on_read(
                 meta, source, on, m_cls, i_cls, s_cls,

@@ -148,6 +148,9 @@ _META_TABLE_RE = re.compile(
     r"|metadata_log_entries|entries|all_files|position_deletes)(?![\w.])",
     re.I,
 )
+# CloudTrail-style queryable audit: every authorization decision the
+# policy layer recorded, as SQL (producer surface only)
+_AUDIT_LOG_RE = re.compile(r"\bsystem\.audit_log\b", re.I)
 # SQL sugar the Spark parser lacks or misreads (DISTINCT ON parses as a
 # call to a function `ON`).
 _SUGAR_RE = re.compile(
@@ -212,31 +215,113 @@ def _strip_parquet_path(source: str) -> str:
     return m.group(1) if m else source.strip().strip("`")
 
 
-def _sub_outside_strings(pattern: str, repl: str, text: str, flags: int = 0) -> str:
-    """``re.sub`` applied only OUTSIDE single-quoted SQL string
-    literals (with '' escaping) — table-name rewrites must never
-    corrupt a comparison value that happens to contain a table name
-    (`WHERE v = 'db.t'`)."""
-    out: list[str] = []
-    i, seg_start, n = 0, 0, len(text)
-    while i < n:
-        if text[i] == "'":
-            out.append(re.sub(pattern, repl, text[seg_start:i], flags=flags))
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(text[i : j + 1])
-            i = j + 1
-            seg_start = i
-        else:
-            i += 1
-    out.append(re.sub(pattern, repl, text[seg_start:], flags=flags))
+def _sub_outside_strings(pattern, repl, text: str, flags: int = 0) -> str:
+    """``re.sub`` over the code of ``text`` only: the pattern runs over
+    the text with its string literals' contents and its comments blanked
+    (_blank_sql_strings, length-preserving), so no match starts, ends or
+    lies inside a literal — a rewrite never corrupts a value that
+    happens to spell a table reference (``WHERE v = 'db.t'``). A match
+    may hold a whole literal (``t TIMESTAMP AS OF '…'``); a function
+    ``repl`` reads such a group from ``text`` at the group's span, and
+    returns None to leave the match as written."""
+    blanked = _blank_sql_strings(text)
+    out, pos = [], 0
+    for m in re.compile(pattern, flags).finditer(blanked):
+        new = repl(m) if callable(repl) else m.expand(repl)
+        out.append(text[pos : m.start()])
+        out.append(text[m.start() : m.end()] if new is None else new)
+        pos = m.end()
+    out.append(text[pos:])
     return "".join(out)
+
+
+def view_alias(name: str) -> str:
+    """The temp-view name of a warehouse table: views are single-part
+    identifiers, so a catalog-qualified name flattens (``dev.db.t`` →
+    ``dev__db__t``)."""
+    return name.replace(".", "__")
+
+
+def timestamp_ms(spark: SparkSession, literal: str) -> int:
+    """Epoch milliseconds of a timestamp literal (``'2026-01-01
+    00:00:00'``, ``TIMESTAMP '…'``, ISO 8601 with or without an offset).
+    A literal without an offset is read in the session time zone
+    (``spark.sql.session.timeZone``), as Spark reads it — never in the
+    Python process's local time."""
+    import datetime as _dt
+    from zoneinfo import ZoneInfo
+
+    text = re.sub(r"^\s*TIMESTAMP\s+", "", str(literal), flags=re.I).strip().strip("'")
+    ts = _dt.datetime.fromisoformat(text)
+    if ts.tzinfo is None:
+        zone = spark.conf.get("spark.sql.session.timeZone")
+        m = re.fullmatch(r"(?:UTC|GMT)?([+-])(\d{1,2}):?(\d{2})?", zone)
+        if m:
+            delta = _dt.timedelta(hours=int(m.group(2)), minutes=int(m.group(3) or 0))
+            ts = ts.replace(tzinfo=_dt.timezone(-delta if m.group(1) == "-" else delta))
+        else:
+            ts = ts.replace(tzinfo=ZoneInfo("UTC" if zone == "Z" else zone))
+    return int(ts.timestamp() * 1000)
+
+
+def _as_view(df: DataFrame, view: str) -> str:
+    df.createOrReplaceTempView(view)
+    return f"`{view}`"
+
+
+def rewrite_table_refs(
+    spark: SparkSession, query: str, tables, load, metadata, audit=None, qualified=None
+) -> str:
+    """The read-time table references of both SQL surfaces, rewritten
+    once, outside string literals, to temp views registered in each
+    frame's own session. Only names in ``tables`` are touched:
+
+    - ``t VERSION AS OF n`` / ``t VERSION AS OF 'ref'`` / ``t TIMESTAMP
+      AS OF 'ts'`` → ``load(t, snapshot_id=n | ref= | as_of_timestamp_ms=)``
+      (timestamp_ms, in ``spark``'s time zone);
+    - ``t.<kind>`` (``_META_TABLE_RE``) → ``metadata(t, kind)``; None
+      leaves the text alone;
+    - ``system.audit_log`` → ``audit()``, when given;
+    - a catalog-qualified ``dev.db.t`` → its flattened view name
+      (view_alias), after ``qualified(name)`` when given.
+
+    Policy lives in the callbacks: the consumer's ``load`` authorizes
+    SELECT and applies the row filter, its ``metadata`` is DESCRIBE-gated
+    and its ``qualified`` denies an ungranted name."""
+
+    def travel(m: re.Match) -> str | None:
+        name, literal = m.group(1), query[m.start(3) : m.end(3)]
+        if name not in tables:
+            return None
+        if m.group(2).upper() != "VERSION":
+            ms = timestamp_ms(spark, literal)
+            kw, tag = {"as_of_timestamp_ms": ms}, f"t{ms}"
+        elif literal.startswith("'"):  # a named ref: tag or branch
+            ref = literal.strip("'")
+            kw, tag = {"ref": ref}, f"r{ref}"
+        else:
+            kw, tag = {"snapshot_id": int(literal)}, f"v{literal}"
+        return _as_view(load(name, **kw), f"__tt_{view_alias(name)}_{tag}")
+
+    def meta(m: re.Match) -> str | None:
+        name, kind = m.group(1), m.group(2).lower()
+        df = metadata(name, kind) if name in tables else None
+        return None if df is None else _as_view(df, f"__meta_{view_alias(name)}_{kind}")
+
+    def flat(m: re.Match) -> str:
+        if qualified is not None:
+            qualified(m.group(0))
+        return f"`{view_alias(m.group(0))}`"
+
+    query = _sub_outside_strings(_TIME_TRAVEL_RE, travel, query)
+    query = _sub_outside_strings(_META_TABLE_RE, meta, query)
+    if audit is not None:
+        query = _sub_outside_strings(
+            _AUDIT_LOG_RE, lambda m: _as_view(audit(), "__system_audit_log"), query
+        )
+    for name in sorted((t for t in tables if "." in t), key=len, reverse=True):
+        query = _sub_outside_strings(rf"(?<![\w.`]){re.escape(name)}(?![\w.])", flat, query)
+    return query
 
 
 def _split_top_level(text: str, keyword: str) -> tuple[str, str | None]:
@@ -315,7 +400,7 @@ def _matching_paren(text: str, open_idx: int) -> int:
     raise ValueError(f"Unbalanced parentheses in: {text[:80]}…")
 
 
-def rewrite_qualify(query: str) -> tuple[str, bool]:
+def rewrite_qualify(query: str) -> str:
     """Rewrite a top-level ``QUALIFY <pred>`` clause (DuckDB/Snowflake/
     BigQuery's post-window filter — Spark has no QUALIFY) into plain
     Spark SQL. Two shapes:
@@ -326,9 +411,9 @@ def rewrite_qualify(query: str) -> tuple[str, bool]:
       row_number() OVER (…) = 1``): the predicate is INJECTED into the
       query's own select list as a helper boolean column ``__qualify``
       (so its window sees every FROM column, like DuckDB's QUALIFY,
-      not just the projected ones), the wrapped query filters on it,
-      and the caller drops the helper column (second return value
-      True). For SELECT DISTINCT / set-operation heads — where
+      not just the projected ones), and the wrapped query filters on
+      it and hides it (``SELECT * EXCEPT (__qualify)``). For SELECT
+      DISTINCT / set-operation heads — where
       touching the select list would change semantics — it falls back
       to projecting over the wrapped output, which then only resolves
       projected columns.
@@ -342,9 +427,9 @@ def rewrite_qualify(query: str) -> tuple[str, bool]:
                 "QUALIFY is supported at the top level of the statement "
                 "only — rewrite the subquery's QUALIFY as a wrapped WHERE"
             )
-        return query, False
+        return query
     if re.search(r"__qualify\b", _strip_sql_strings(query), re.I):
-        # the rewrite introduces and then drops a __qualify helper
+        # the rewrite introduces and then hides a __qualify helper
         # column — a statement already referencing that name would lose
         # its own column silently; refuse loudly instead (ADVICE r12)
         raise ValueError(
@@ -357,11 +442,7 @@ def rewrite_qualify(query: str) -> tuple[str, bool]:
         if t is not None and len(h) < len(pred):
             pred, suffix = h, f"{kw} {t.strip()}"
     if not re.search(r"\bOVER\s*\(", pred, re.I):
-        return (
-            f"SELECT * FROM ({head.strip()}) AS __qsrc "
-            f"WHERE ({pred.strip()}) {suffix}",
-            False,
-        )
+        return f"SELECT * FROM ({head.strip()}) AS __qsrc WHERE ({pred.strip()}) {suffix}"
     set_op = any(
         _split_top_level(head, k)[1] is not None
         for k in ("UNION", "INTERSECT", "EXCEPT")
@@ -378,17 +459,12 @@ def rewrite_qualify(query: str) -> tuple[str, bool]:
                 f"{prefix} SELECT {sel.strip()}, ({pred.strip()}) "
                 f"AS __qualify FROM {rest.strip()}"
             )
-            return (
-                f"SELECT * FROM ({inner}) AS __qfil "
-                f"WHERE __qualify {suffix}",
-                True,
-            )
-    new = (
-        f"SELECT * FROM (SELECT __qsrc.*, ({pred.strip()}) AS __qualify "
+            return f"SELECT * EXCEPT (__qualify) FROM ({inner}) AS __qfil WHERE __qualify {suffix}"
+    return (
+        f"SELECT * EXCEPT (__qualify) FROM (SELECT __qsrc.*, ({pred.strip()}) AS __qualify "
         f"FROM ({head.strip()}) AS __qsrc) AS __qfil "
         f"WHERE __qualify {suffix}"
     )
-    return new, True
 
 
 _DISTINCT_ON_RE = re.compile(
@@ -396,15 +472,15 @@ _DISTINCT_ON_RE = re.compile(
 )
 
 
-def rewrite_distinct_on(query: str) -> tuple[str, bool]:
+def rewrite_distinct_on(query: str) -> str:
     """Rewrite Postgres/DuckDB ``SELECT DISTINCT ON (exprs) … ORDER BY
     exprs, tiebreaks`` (Spark has no DISTINCT ON) into the standard
     row_number window filter: partition by the ON exprs, order by the
     statement's own ORDER BY, keep rank 1. The ORDER BY is REQUIRED —
     without it DISTINCT ON returns an arbitrary row per group, which
     this engine's determinism rules refuse. Top-level only, same
-    contract as rewrite_qualify. Returns (rewritten, needs_drop) —
-    the caller drops the helper ``__don`` column."""
+    contract as rewrite_qualify. The helper columns (``__don``, one
+    ``__obN`` per order item) stay hidden: ``SELECT * EXCEPT (…)``."""
     # probe the BLANKED text (string literals spaced out, length
     # preserved so indices map back to the raw query): a literal
     # containing "SELECT DISTINCT ON (" must not trigger a rewrite,
@@ -413,13 +489,13 @@ def rewrite_distinct_on(query: str) -> tuple[str, bool]:
     blanked = _blank_sql_strings(query)
     m = _DISTINCT_ON_RE.search(blanked)
     if not m:
-        return query, False
+        return query
     if blanked.count("(", 0, m.start()) != blanked.count(")", 0, m.start()):
         raise ValueError(
             "DISTINCT ON is supported at the top level of the statement only"
         )
     if re.search(r"__don\b|__ob\d", blanked, re.I):
-        # the rewrite introduces __don/__obN helper columns and drops
+        # the rewrite introduces __don/__obN helper columns and hides
         # them from the result — a statement already carrying such
         # names would have its own columns silently removed; refuse
         # loudly instead (ADVICE r12)
@@ -464,8 +540,7 @@ def rewrite_distinct_on(query: str) -> tuple[str, bool]:
         raise ValueError("DISTINCT ON requires a FROM clause")
     # the final sort runs OUTSIDE the select-list projection, so each
     # order expression is projected as a hidden __obN column (the
-    # statement may order by columns it does not select) — the caller
-    # drops __don and __ob* from the result
+    # statement may order by columns it does not select)
     inner_extra, outer_order = [], []
     for i, item in enumerate(_split_top_commas(order_by)):
         om = re.match(
@@ -483,25 +558,25 @@ def rewrite_distinct_on(query: str) -> tuple[str, bool]:
         f"row_number() OVER (PARTITION BY {on_exprs} "
         f"ORDER BY {order_by}) AS __don FROM {from_tail.strip()}"
     )
+    hidden = ", ".join(["__don"] + [f"__ob{i}" for i in range(len(outer_order))])
     return (
-        f"SELECT * FROM ({inner}) AS __dfil WHERE __don = 1 "
-        f"ORDER BY {', '.join(outer_order)} {suffix}",
-        True,
+        f"SELECT * EXCEPT ({hidden}) FROM ({inner}) AS __dfil WHERE __don = 1 "
+        f"ORDER BY {', '.join(outer_order)} {suffix}"
     )
 
 
 def _sql_noise_spans(text: str) -> list[tuple[str, int, int]]:
     """The one comment- and string-aware lexer every SQL probe and
-    rewrite shares: ``(kind, start, end)`` for each single-quoted
-    literal's CONTENTS (``"str"``), each comment (``"comment"`` —
+    rewrite shares: ``(kind, start, end)`` for each string literal's
+    CONTENTS (``"str"``; single- or double-quoted, both literals in
+    Spark SQL), each comment (``"comment"`` —
     ``--`` to end-of-line, bracketed ``/* */`` with Spark's nesting) and
     each optimizer hint (``"hint"`` — ``/*+ … */``), found in ONE
     left-to-right scan, so a quote inside a comment (``-- don't``)
     cannot corrupt string state and a ``--`` inside a literal cannot
     start a phantom comment. Doubled quotes and backslash escapes stay
-    inside their token, as in Spark's lexer. Double-quoted strings and
-    backtick identifiers are skipped (not reported) but shield any
-    comment markers inside them."""
+    inside their token, as in Spark's lexer. Backtick identifiers are
+    skipped (not reported) but shield any comment markers inside them."""
     spans: list[tuple[str, int, int]] = []
     i, n = 0, len(text)
     while i < n:
@@ -517,7 +592,7 @@ def _sql_noise_spans(text: str) -> list[tuple[str, int, int]]:
                     j += 2  # doubled quote: an escape, the token continues
                 else:
                     break
-            if ch == "'":
+            if ch != "`":
                 spans.append(("str", i + 1, min(j, n)))
             i = j + 1
         elif text.startswith("--", i):
@@ -546,7 +621,7 @@ def _sql_noise_spans(text: str) -> list[tuple[str, int, int]]:
 
 
 def _blank_sql_strings(text: str) -> str:
-    """Length-preserving blanking of single-quoted literal contents
+    """Length-preserving blanking of string literal contents
     (outer quotes kept), comments and hints (_sql_noise_spans): match
     indices computed on the blanked text stay valid against the raw
     statement — required by probes that slice the original query at a
@@ -709,12 +784,11 @@ class ParsedStatement:
     relation identifier, the CTE names the statement defines, and the
     first node anywhere in the tree that executes rather than reads. No
     textual spelling (comments, case, quoting) can change any of these.
+    When the statement carried SQL sugar, ``text`` is its plain-SQL
+    rewrite (desugar)."""
 
-    ``sugar`` is ``(original text, cut, drop flags)`` when ``text`` is a
-    rewrite of SQL sugar (desugar): the two texts share ``[:cut]``."""
-
-    def __init__(self, plan, gateway, text: str, sugar=None):
-        self.plan, self.text, self.sugar = plan, text, sugar
+    def __init__(self, plan, gateway, text: str):
+        self.plan, self.text = plan, text
         node, root = plan, plan.getClass().getSimpleName()
         self.with_cte = root == "UnresolvedWith"  # WITH … <statement>
         while root == "UnresolvedWith":
@@ -726,13 +800,7 @@ class ParsedStatement:
     def nested(self, plan) -> ParsedStatement:
         """A sub-plan of this parse (EXPLAIN's statement, a view's
         query) as a statement of its own — no second parse."""
-        return ParsedStatement(plan, self._gateway, self.text, self.sugar)
-
-    @property
-    def drops(self) -> tuple[bool, bool]:
-        """Whether the sugar rewrite added a QUALIFY / DISTINCT ON
-        helper column that a read of ``text`` must drop."""
-        return self.sugar[2] if self.sugar else (False, False)
+        return ParsedStatement(plan, self._gateway, self.text)
 
     def target(self, accessor: str) -> str | None:
         """Name of the identifier node behind ``accessor`` (the write
@@ -764,15 +832,8 @@ class ParsedStatement:
     def tail(self, start: int) -> str:
         """The text from ``start`` to the statement's end, a trailing
         ``;`` dropped: a query that closes its statement (INSERT's
-        source, a CTAS query). From the point SQL sugar was rewritten
-        at, the original sugared text — each read path rewrites sugar,
-        and drops its helper columns, itself."""
-        text = self.text
-        if self.sugar is not None:
-            cut = self.sugar[1]
-            if start <= cut and not text[start:cut].strip():
-                text, start = self.sugar[0], cut
-        return text[start:].strip().rstrip(";").rstrip()
+        source, a CTAS query)."""
+        return self.text[start:].strip().rstrip(";").rstrip()
 
     def insert_source(self) -> str:
         """An INSERT's source query. The INSERT node's origin is its
@@ -973,14 +1034,10 @@ def desugar(spark: SparkSession, text: str, statements) -> ParsedStatement | Non
     ]
     for start in [0] + [h for h in heads if h][:1]:
         try:
-            body, _ = rewrite_text_sugar(text[start:])
-            body, drop_qualify = rewrite_qualify(body)
-            body, drop_don = rewrite_distinct_on(body)
-            stmt = parse_statement(spark, text[:start] + body)
+            stmt = parse_statement(spark, text[:start] + rewrite_sugar(text[start:]))
         except (ParseException, ValueError):
             continue
         if start == 0 or stmt.root in statements:
-            stmt.sugar = (text, start, (drop_qualify, drop_don))
             return stmt
     return None
 
@@ -1446,13 +1503,11 @@ def rewrite_quantified_subqueries(query: str) -> str:
         query = query[:span_start] + repl + query[close + 1 :]
 
 
-def rewrite_text_sugar(query: str) -> tuple[str, bool]:
+def rewrite_text_sugar(query: str) -> str:
     """The purely TEXTUAL SQL-sugar pass shared by both surfaces
     (producer frontend + SecureSession): ``* EXCLUDE`` → ``* EXCEPT``,
     ``FETCH FIRST … ONLY/WITH TIES``, and quantified ``ALL/ANY/SOME``
-    subqueries. Unlike QUALIFY/DISTINCT ON these rewrites add no
-    helper columns, so there is nothing to drop afterwards. Returns
-    (rewritten, changed)."""
+    subqueries."""
     probe = _strip_sql_strings(query)
     out = query
     if re.search(r"\bEXCLUDE\b", probe, re.I):
@@ -1461,7 +1516,19 @@ def rewrite_text_sugar(query: str) -> tuple[str, bool]:
         out, _ = rewrite_fetch_first(out)
     if re.search(r"\b(ALL|ANY|SOME)\s*\(", _strip_sql_strings(out), re.I):
         out = rewrite_quantified_subqueries(out)
-    return out, out != query
+    return out
+
+
+def rewrite_sugar(query: str, resolve=None) -> str:
+    """Every SQL-sugar rewrite, in the one order both surfaces use:
+    text sugar (rewrite_text_sugar) → ASOF JOIN (rewrite_asof_joins,
+    only when a frame resolver is given) → QUALIFY → DISTINCT ON. The
+    result is plain Spark SQL: helper columns are hidden in the SQL
+    itself. Each rewrite is a no-op on text it already rewrote."""
+    query = rewrite_text_sugar(query)
+    if resolve is not None:
+        query = rewrite_asof_joins(query, resolve)
+    return rewrite_distinct_on(rewrite_qualify(query))
 
 
 _SQL_KEYWORDS = {
@@ -2068,11 +2135,7 @@ class SqlFrontend:
             alias = alias or _ident(source)
             frame = self.warehouse.read_table(_ident(source))
         else:
-            # re-homed on the main session from the read path's scratch
-            # session: the MERGE's write job, and the Observation counting
-            # its inserts, run there
             frame = self._query(stmt.enclosed(source), checked=True)
-            frame = self._frame(frame._jdf.queryExecution().analyzed())
 
         def clauses(actions) -> list[dict]:
             out = []
@@ -2436,8 +2499,6 @@ class SqlFrontend:
         API. Mirrors the Spark-SQL `CALL catalog.system.<proc>(...)`
         surface: ``pos`` and ``named`` hold the positional and the
         ``name => value`` arguments (ParsedStatement.value)."""
-        import datetime as _dt
-
         def arg(name: str, idx: int, default=None):
             if name in named:
                 return named[name]
@@ -2449,13 +2510,7 @@ class SqlFrontend:
             keep = arg("retain_last", 2)
             older_ms = None
             if older is not None:
-                older_ms = (
-                    int(older)
-                    if isinstance(older, int)
-                    else int(
-                        _dt.datetime.fromisoformat(str(older)).timestamp() * 1000
-                    )
-                )
+                older_ms = older if isinstance(older, int) else timestamp_ms(self.spark, older)
             stats = self.warehouse.expire_snapshots(
                 table,
                 keep_last=int(keep) if keep is not None else None,
@@ -2626,9 +2681,7 @@ class SqlFrontend:
         if proc in ("rollback_to_timestamp", "set_current_snapshot"):
             prev = self.warehouse.current_snapshot_id(table)
             if proc == "rollback_to_timestamp":
-                ts = str(arg("timestamp", 1))
-                ts = re.sub(r"^\s*TIMESTAMP\s+", "", ts, flags=re.I).strip("'")
-                ms = int(_dt.datetime.fromisoformat(ts).timestamp() * 1000)
+                ms = timestamp_ms(self.spark, arg("timestamp", 1))
                 self.warehouse.rollback_to_timestamp(table, ms)
             else:
                 self.warehouse.set_current_snapshot(
@@ -2665,35 +2718,23 @@ class SqlFrontend:
         analyzer resolves subquery relations through the session
         catalog. Register every table as a fresh temp view (current
         snapshot at statement start — the correct read-committed source
-        for a self-referencing DML under copy-on-write) and rewrite
-        dotted names to the view spelling. Views are re-registered per
-        statement so they can never serve a stale snapshot."""
+        for a self-referencing DML under copy-on-write) and rewrite the
+        table references (rewrite_table_refs). Views are re-registered
+        per statement so they can never serve a stale snapshot."""
         tables = set(self.warehouse.list_tables())
         # drop views registered for since-dropped tables: a stale view
         # would silently serve the dropped table's last snapshot to a
         # later subquery instead of failing with table-not-found
         registered = getattr(self, "_dml_views", set())
-        current = {n.replace(".", "__") for n in tables}
+        current = {view_alias(n) for n in tables}
         for stale in registered - current:
             self.spark.catalog.dropTempView(stale)
         self._dml_views = current
         for name in tables:
             # registered on the warehouse's own session — the one whose
             # analyzer will resolve the subquery relations
-            self.warehouse.read_table(name).createOrReplaceTempView(
-                name.replace(".", "__")
-            )
-        for name in sorted(tables, key=len, reverse=True):
-            if "." in name:
-                texts = [
-                    _sub_outside_strings(
-                        rf"(?<![\w.`]){re.escape(name)}(?![\w.])",
-                        f"`{name.replace('.', '__')}`",
-                        text,
-                    )
-                    for text in texts
-                ]
-        return texts
+            self.warehouse.read_table(name).createOrReplaceTempView(view_alias(name))
+        return [self._table_refs(text, tables, self.warehouse) for text in texts]
 
     # join-planning confs the isolated scratch session must share with
     # the caller's session — newSession() starts from the context
@@ -2737,55 +2778,12 @@ class SqlFrontend:
         wh = Warehouse(scratch, self.warehouse.root)
         tables = set(self.warehouse.list_tables())
 
-        def _travel(m: re.Match) -> str:
-            name = m.group(1)
-            if name not in tables:
-                return m.group(0)
-            kind, literal = m.group(2).upper(), m.group(3)
-            if kind == "VERSION":
-                if literal.startswith("'"):  # named ref: tag or branch
-                    ref = literal.strip("'")
-                    df = wh.read_table(name, ref=ref)
-                    view = f"__tt_{name.replace('.', '__')}_r{ref}"
-                else:
-                    df = wh.read_table(name, snapshot_id=int(literal))
-                    view = f"__tt_{name.replace('.', '__')}_v{literal}"
-            else:
-                from datetime import datetime
+        def resolve(name: str) -> DataFrame | None:  # ASOF JOIN sides
+            try:
+                return scratch.table(name)
+            except Exception:
+                return None
 
-                ts = datetime.fromisoformat(literal.strip("'"))
-                ms = int(ts.timestamp() * 1000)
-                df = wh.read_table(name, as_of_timestamp_ms=ms)
-                view = f"__tt_{name.replace('.', '__')}_t{ms}"
-            df.createOrReplaceTempView(view)
-            return f"`{view}`"
-
-        query = _TIME_TRAVEL_RE.sub(_travel, query)
-
-        def _meta_table(m: re.Match) -> str:
-            name, kind = m.group(1), m.group(2).lower()
-            if name not in tables:
-                return m.group(0)
-            df = getattr(wh, f"{kind}_df")(name)
-            view = f"__meta_{name.replace('.', '__')}_{kind}"
-            df.createOrReplaceTempView(view)
-            return f"`{view}`"
-
-        query = _META_TABLE_RE.sub(_meta_table, query)
-        # CloudTrail-style queryable audit: every authorization decision
-        # the policy layer recorded, as SQL (producer-only — the scratch
-        # session is the trusted surface)
-        if self.policy is not None and re.search(
-            r"\bsystem\.audit_log\b", query, re.I
-        ):
-            scratch.createDataFrame(
-                list(self.policy.audit_log),
-                "principal string, table_name string, action string, "
-                "decision string",
-            ).createOrReplaceTempView("__system_audit_log")
-            query = re.sub(
-                r"\bsystem\.audit_log\b", "`__system_audit_log`", query, flags=re.I
-            )
         # changelog views registered via CALL system.create_changelog_view:
         # materialize the ones this query references into the scratch
         # session (manifest-planned CDC read — delta files only)
@@ -2823,9 +2821,10 @@ class SqlFrontend:
         # materialization below). The scan regex admits backticked
         # spellings (unlike the rewrite token, which must not match
         # inside quoted identifiers); over-matching (a name inside a
-        # string literal or a shadowing CTE) merely registers an unused
-        # view — harmless — while the full-catalog loop is the ONLY
-        # path that could resolve a name this scan misses.
+        # string literal, a shadowing CTE, a time-travelled table)
+        # merely registers an unused view — harmless — while the
+        # full-catalog loop is the ONLY path that could resolve a name
+        # this scan misses.
         def _scan_token(nm: str) -> str:
             return rf"(?<![\w.]){re.escape(nm)}(?![\w.])"
 
@@ -2855,18 +2854,8 @@ class SqlFrontend:
             frame = (
                 wh.bucketed_read(name) if name in spj else wh.read_table(name)
             )
-            frame.createOrReplaceTempView(name.replace(".", "__"))
-        def _rewrite_dotted(text: str) -> str:
-            for name in sorted(tables, key=len, reverse=True):
-                if "." in name:
-                    text = _sub_outside_strings(
-                        rf"(?<![\w.`]){re.escape(name)}(?![\w.])",
-                        f"`{name.replace('.', '__')}`",
-                        text,
-                    )
-            return text
-
-        query = _rewrite_dotted(query)
+            frame.createOrReplaceTempView(view_alias(name))
+        query = self._table_refs(query, tables, wh)
         # persistent SQL views (warehouse._views_dir, Iceberg-view-spec
         # versioned): materialize the CURRENT version of every view the
         # query references — bodies resolve tables, other views
@@ -2893,20 +2882,8 @@ class SqlFrontend:
             for other in wh_views:
                 if other != v and re.search(_token(other), body):
                     _materialize_view(other, stack | {v})
-            b = _rewrite_dotted(body)
-            b, _ = rewrite_text_sugar(b)
-            b = self._rewrite_asof_joins(b, scratch)
-            b, dq = rewrite_qualify(b)
-            b, dd = rewrite_distinct_on(b)
-            bdf = scratch.sql(b)
-            if dq:
-                bdf = bdf.drop("__qualify")
-            if dd:
-                bdf = bdf.drop(
-                    "__don",
-                    *[c for c in bdf.columns if c.startswith("__ob")],
-                )
-            bdf.createOrReplaceTempView(v.replace(".", "__"))
+            b = rewrite_sugar(self._table_refs(body, tables, wh), resolve)
+            scratch.sql(b).createOrReplaceTempView(view_alias(v))
             materialized.add(v)
 
         for v in wh_views:
@@ -2914,29 +2891,28 @@ class SqlFrontend:
                 _materialize_view(v, frozenset())
         for v in sorted(materialized, key=len, reverse=True):
             if "." in v:
-                query = _sub_outside_strings(
-                    _token(v), f"`{v.replace('.', '__')}`", query
-                )
-        query, _ = rewrite_text_sugar(query)
-        query = self._rewrite_asof_joins(query, scratch)
-        query, drop_qualify = rewrite_qualify(query)
-        query, drop_don = rewrite_distinct_on(query)
+                query = _sub_outside_strings(_token(v), f"`{view_alias(v)}`", query)
+        query = rewrite_sugar(query, resolve)
         if not checked:
             parsed = parse_statement(scratch, query)
             if not parsed.is_query:
                 raise ValueError(f"The statement must be a query, got {parsed.root}")
-        df = scratch.sql(query)
-        if drop_qualify:
-            df = df.drop("__qualify")
-        if drop_don:
-            df = df.drop("__don", *[c for c in df.columns if c.startswith("__ob")])
-        return df
+        return scratch.sql(query)
 
-    def _rewrite_asof_joins(self, query: str, scratch: SparkSession) -> str:
-        def resolve(name: str):
-            try:
-                return scratch.table(name)
-            except Exception:
-                return None
-
-        return rewrite_asof_joins(query, resolve)
+    def _table_refs(self, query: str, tables: set, wh: Warehouse) -> str:
+        """rewrite_table_refs with the producer's loaders: unmediated
+        reads of ``wh``, every metadata table, and the audit log."""
+        audit = None
+        if self.policy is not None:
+            audit = lambda: wh.spark.createDataFrame(  # noqa: E731
+                list(self.policy.audit_log),
+                "principal string, table_name string, action string, decision string",
+            )
+        return rewrite_table_refs(
+            self.spark,
+            query,
+            tables,
+            wh.read_table,
+            lambda name, kind: getattr(wh, f"{kind}_df")(name),
+            audit,
+        )

@@ -206,7 +206,7 @@ def test_consumer_create_view_rejects_cte_dml_body(spark, tmp_path):
 # ------------------------------- 4. DISTINCT ON probe + OFFSET handling
 def test_distinct_on_inside_string_literal_is_data():
     q = "SELECT 'SELECT DISTINCT ON (x)' AS s FROM t"
-    assert rewrite_distinct_on(q) == (q, False)
+    assert rewrite_distinct_on(q) == q
 
 
 def test_distinct_on_literal_parens_dont_unbalance_guard():
@@ -215,20 +215,19 @@ def test_distinct_on_literal_parens_dont_unbalance_guard():
         "SELECT DISTINCT ON (k) k, v FROM t WHERE v <> '(weird' "
         "ORDER BY k, v"
     )
-    out, drop = rewrite_distinct_on(q)
-    assert drop and "row_number()" in out
+    out = rewrite_distinct_on(q)
+    assert "row_number()" in out
 
 
 def test_distinct_on_offset_without_limit(spark):
     spark.createDataFrame(
         [(1, 10), (1, 20), (2, 30), (3, 40)], "k int, v int"
     ).createOrReplaceTempView("don_t")
-    out, drop = rewrite_distinct_on(
+    out = rewrite_distinct_on(
         "SELECT DISTINCT ON (k) k, v FROM don_t ORDER BY k, v DESC OFFSET 1"
     )
-    assert drop
     df = spark.sql(out)
-    df = df.drop("__don", *[c for c in df.columns if c.startswith("__ob")])
+    assert df.columns == ["k", "v"]  # the helper columns stay hidden
     # per-k winners are (1,20),(2,30),(3,40); OFFSET 1 skips the first
     assert [(r["k"], r["v"]) for r in df.collect()] == [(2, 30), (3, 40)]
 
@@ -237,11 +236,11 @@ def test_distinct_on_limit_offset_combined(spark):
     spark.createDataFrame(
         [(1, 10), (2, 30), (3, 40)], "k int, v int"
     ).createOrReplaceTempView("don_t2")
-    out, _ = rewrite_distinct_on(
+    out = rewrite_distinct_on(
         "SELECT DISTINCT ON (k) k, v FROM don_t2 ORDER BY k LIMIT 1 OFFSET 1"
     )
     df = spark.sql(out)
-    df = df.drop("__don", *[c for c in df.columns if c.startswith("__ob")])
+    assert df.columns == ["k", "v"]
     assert [(r["k"], r["v"]) for r in df.collect()] == [(2, 30)]
 
 
@@ -269,7 +268,7 @@ def test_qualify_literal_qualify_name_is_fine():
     # only a rewrite-triggering statement checks the collision; the
     # string literal spelling stays data
     q = "SELECT '__qualify' AS s FROM t"
-    assert rewrite_qualify(q) == (q, False)
+    assert rewrite_qualify(q) == q
 
 
 # ------------------------------------------ round-13 wave-4 operators

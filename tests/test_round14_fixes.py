@@ -150,11 +150,11 @@ def test_strip_sql_strings_blanks_comments_and_literals():
 
 def test_comment_does_not_trigger_sugar_rewrites():
     q = "SELECT a FROM t -- FETCH FIRST 5 ROWS ONLY"
-    out, changed = rewrite_text_sugar(q)
-    assert not changed and out == q
+    out = rewrite_text_sugar(q)
+    assert out == q
     q2 = "SELECT a FROM t /* x > ALL (SELECT v FROM r) */ WHERE a = 1"
-    out2, changed2 = rewrite_text_sugar(q2)
-    assert not changed2 and out2 == q2
+    out2 = rewrite_text_sugar(q2)
+    assert out2 == q2
 
 
 def test_trailing_comment_no_longer_blocks_fetch_anchor(fe14):

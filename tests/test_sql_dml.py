@@ -101,11 +101,12 @@ def test_sql_time_travel_version(engine):
 
 
 def test_sql_time_travel_timestamp(engine):
-    from datetime import datetime
+    from datetime import datetime, timezone
 
     snap_ts = engine.warehouse.snapshots("inv")[0]["timestamp_ms"]
     engine.sql("INSERT INTO inv VALUES (4, 40, 'Austin')")
-    lit = datetime.fromtimestamp(snap_ts / 1000).strftime("%Y-%m-%d %H:%M:%S.%f")
+    # in the session time zone (UTC), not the process's local time
+    lit = datetime.fromtimestamp(snap_ts / 1000, timezone.utc).strftime("%Y-%m-%d %H:%M:%S.%f")
     assert _rows(engine.sql(f"SELECT k FROM inv TIMESTAMP AS OF '{lit}'")) == [
         (1,), (2,), (3,),
     ]

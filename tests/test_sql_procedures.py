@@ -436,7 +436,8 @@ def test_call_rollback_to_timestamp(fe):
     wh = fe.warehouse
     first_ts = wh.snapshots("t")[0]["timestamp_ms"]
     fe.execute("INSERT INTO t VALUES (2)")
-    iso = dt.datetime.fromtimestamp(first_ts / 1000).isoformat()
+    # in the session time zone (UTC), not the process's local time
+    iso = dt.datetime.fromtimestamp(first_ts / 1000, dt.timezone.utc).replace(tzinfo=None).isoformat()
     out = fe.execute(
         f"CALL system.rollback_to_timestamp(table => 't', "
         f"timestamp => TIMESTAMP '{iso}')"

@@ -1,6 +1,6 @@
 """SQL-surface parity — QUALIFY, ASOF JOIN, GROUP BY ALL through the
 frontend (operators/sql_surface.py, sql_frontend.rewrite_qualify /
-_rewrite_asof_joins, temporal.asof_join_frames)."""
+rewrite_asof_joins, temporal.asof_join_frames)."""
 
 import duckdb
 import pytest
@@ -97,7 +97,7 @@ def test_qualify_nested_raises():
 
 def test_qualify_string_literal_not_a_clause():
     q = "SELECT 'no QUALIFY here' AS s FROM t"
-    assert rewrite_qualify(q) == (q, False)
+    assert rewrite_qualify(q) == q
 
 
 def test_qualify_adds_no_extra_exchange(fe, spark):
