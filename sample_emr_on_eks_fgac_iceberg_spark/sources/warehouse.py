@@ -1915,6 +1915,13 @@ class Warehouse:
             cols.append(e.alias(f.name))
         return picked.select(*cols)
 
+    def frame_of(self, plan) -> DataFrame:
+        """A DataFrame of this warehouse's session over a JVM logical plan
+        (a parsed relation, or the analyzed plan of a frame built on
+        another session of the context)."""
+        datasets = self.spark._jvm.org.apache.spark.sql.classic.Dataset
+        return DataFrame(datasets.ofRows(self.spark._jsparkSession, plan), self.spark)
+
     def merge_into(
         self,
         name: str,
@@ -1984,11 +1991,7 @@ class Warehouse:
             # the write job, and the Observation counting its inserts,
             # run on this session, and an Observation whose plan runs
             # elsewhere never receives its metrics and waits forever
-            plan = source._jdf.queryExecution().analyzed()
-            jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                self.spark._jsparkSession, plan
-            )
-            source = DataFrame(jdf, self.spark)
+            source = self.frame_of(source._jdf.queryExecution().analyzed())
         if meta.properties.get("write.merge.mode") == "merge-on-read":
             return self._merge_merge_on_read(
                 meta, source, on, m_cls, i_cls, s_cls,

@@ -220,11 +220,13 @@ def _sub_outside_strings(pattern, repl, text: str, flags: int = 0) -> str:
     the text with its string literals' contents and its comments blanked
     (_blank_sql_strings, length-preserving), so no match starts, ends or
     lies inside a literal — a rewrite never corrupts a value that
-    happens to spell a table reference (``WHERE v = 'db.t'``). A match
-    may hold a whole literal (``t TIMESTAMP AS OF '…'``); a function
-    ``repl`` reads such a group from ``text`` at the group's span, and
-    returns None to leave the match as written."""
-    blanked = _blank_sql_strings(text)
+    happens to spell a table reference (``WHERE v = 'db.t'``). Hint
+    bodies stay code: ``/*+ BROADCAST(dev.db.t) */`` names the view the
+    rewrite registers. A match may hold a whole literal (``t TIMESTAMP
+    AS OF '…'``); a function ``repl`` reads such a group from ``text``
+    at the group's span, and returns None to leave the match as
+    written."""
+    blanked = _blank_sql_strings(text, keep_hints=True)
     out, pos = [], 0
     for m in re.compile(pattern, flags).finditer(blanked):
         new = repl(m) if callable(repl) else m.expand(repl)
@@ -620,16 +622,18 @@ def _sql_noise_spans(text: str) -> list[tuple[str, int, int]]:
     return spans
 
 
-def _blank_sql_strings(text: str) -> str:
+def _blank_sql_strings(text: str, keep_hints: bool = False) -> str:
     """Length-preserving blanking of string literal contents
-    (outer quotes kept), comments and hints (_sql_noise_spans): match
-    indices computed on the blanked text stay valid against the raw
-    statement — required by probes that slice the original query at a
-    match position (rewrite_distinct_on, rewrite_fetch_first, the
-    quantifier scan). Newlines are kept so line-oriented probes stay
-    aligned."""
+    (outer quotes kept), comments and hints (_sql_noise_spans; hints
+    kept with ``keep_hints``): match indices computed on the blanked
+    text stay valid against the raw statement — required by probes that
+    slice the original query at a match position (rewrite_distinct_on,
+    rewrite_fetch_first, the quantifier scan). Newlines are kept so
+    line-oriented probes stay aligned."""
     out = list(text)
-    for _kind, start, end in _sql_noise_spans(text):
+    for kind, start, end in _sql_noise_spans(text):
+        if keep_hints and kind == "hint":
+            continue
         for k in range(start, end):
             if out[k] != "\n":
                 out[k] = " "
@@ -1758,13 +1762,15 @@ def spj_candidate_tables(query: str, tables, layout_of) -> set:
     conservative: a missed candidate falls back to the plain
     shuffled join (correct, just slower); mirrors are semantically
     identical to the plain scan, so a false positive costs only
-    the one-time per-snapshot mirror materialization."""
+    the one-time per-snapshot mirror materialization. ``query`` is the
+    statement after rewrite_table_refs: a table counts where its view
+    name (view_alias) appears, so a time-travelled one does not."""
     if not re.search(r"\bJOIN\b", query, re.I):
         return set()
     layouts = {}
     for name in tables:
         if not re.search(
-            rf"(?<![\w.`]){re.escape(name)}(?![\w.])", query
+            rf"(?<![\w.]){re.escape(view_alias(name))}(?![\w.])", query
         ):
             continue
         bl = layout_of(name)
@@ -2045,7 +2051,7 @@ class SqlFrontend:
         query = node.query()
         if _node_name(query) in ("LocalRelation", "UnresolvedInlineTable"):
             # VALUES rows: the parsed relation itself, no second parse
-            src = self._frame(query)
+            src = self.warehouse.frame_of(query)
         else:
             src = self._query(stmt.insert_source(), checked=True)
         listed = [str(c) for c in _seq(node.userSpecifiedCols())]
@@ -2058,14 +2064,6 @@ class SqlFrontend:
             [(stats["added_files"], stats["replaced_files"])],
             "added_files long, replaced_files long",
         )
-
-    @cached_property
-    def _datasets(self):
-        return self.spark._jvm.org.apache.spark.sql.classic.Dataset
-
-    def _frame(self, plan) -> DataFrame:
-        """A DataFrame of the main session over a JVM logical plan."""
-        return DataFrame(self._datasets.ofRows(self.spark._jsparkSession, plan), self.spark)
 
     def _align(self, name: str, src: DataFrame, listed: list[str], by_name: bool) -> DataFrame:
         """Map an INSERT source onto the table's columns. A column list
@@ -2807,7 +2805,13 @@ class SqlFrontend:
                         "rename one of them"
                     )
                 wh.read_changes(**spec).createOrReplaceTempView(view)
-        spj = self._spj_candidate_tables(query, tables, wh)
+        query = self._table_refs(query, tables, wh)
+        # the scans below read the rewritten statement with its literals,
+        # comments and hints blanked, by each table's view name: a table
+        # named only in a literal, or only time-travelled, registers no
+        # current-snapshot view
+        scan = _blank_sql_strings(query)
+        spj = self._spj_candidate_tables(scan, tables, wh)
         # Register only the tables this statement can actually resolve
         # (optimization r14): building a warehouse read (file listing,
         # snapshot resolution, schema merge) costs ~0.1-0.2 s per table
@@ -2816,20 +2820,19 @@ class SqlFrontend:
         # planning a single operator here, and on a real lake the
         # catalog is unbounded while a statement touches a handful of
         # relations. The needed set is a token scan over the statement
-        # text plus, transitively, the bodies of every referenced
+        # (``scan``) plus, transitively, the bodies of every referenced
         # persistent view (their tables resolve during view
         # materialization below). The scan regex admits backticked
         # spellings (unlike the rewrite token, which must not match
-        # inside quoted identifiers); over-matching (a name inside a
-        # string literal, a shadowing CTE, a time-travelled table)
-        # merely registers an unused view — harmless — while the
-        # full-catalog loop is the ONLY path that could resolve a name
-        # this scan misses.
+        # inside quoted identifiers); over-matching (a shadowing CTE, a
+        # name in a view body's literal) merely registers an unused
+        # view, while the full-catalog loop is the ONLY path that could
+        # resolve a name this scan misses.
         def _scan_token(nm: str) -> str:
             return rf"(?<![\w.]){re.escape(nm)}(?![\w.])"
 
         wh_views = self.warehouse.list_views()
-        needed = {n for n in tables if re.search(_scan_token(n), query)}
+        needed = {n for n in tables if re.search(_scan_token(view_alias(n)), scan)}
         seen_view_bodies: set = set()
 
         def _collect_view_tables(v: str) -> None:
@@ -2855,7 +2858,6 @@ class SqlFrontend:
                 wh.bucketed_read(name) if name in spj else wh.read_table(name)
             )
             frame.createOrReplaceTempView(view_alias(name))
-        query = self._table_refs(query, tables, wh)
         # persistent SQL views (warehouse._views_dir, Iceberg-view-spec
         # versioned): materialize the CURRENT version of every view the
         # query references — bodies resolve tables, other views

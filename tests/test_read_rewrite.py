@@ -158,3 +158,47 @@ def test_merge_source_from_another_session(spark, tmp_path, mode):
     assert "error" not in outcome, outcome.get("error")
     rows = sorted(tuple(r) for r in wh.read_table("m").collect())
     assert rows == [(1, "a"), (2, "B"), (3, "c")]
+
+
+# --------------------------------- what the producer plans and reads
+@pytest.fixture
+def read_table_calls(monkeypatch):
+    """The table names every Warehouse.read_table call is given."""
+    calls, read = [], Warehouse.read_table
+
+    def spy(self, name, *args, **kwargs):
+        calls.append(name)
+        return read(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "read_table", spy)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "SELECT count(*) FROM claims VERSION AS OF {first}",
+        "SELECT 'patients, rl_patients, rl_claims' AS s FROM claims",
+    ],
+)
+def test_producer_reads_only_the_tables_the_statement_reads(engine, read_table_calls, query):
+    first = engine.warehouse.snapshots("claims")[0]["snapshot_id"]
+    engine.sql(query.format(first=first)).collect()
+    assert read_table_calls == ["claims"]
+
+
+def test_hint_on_a_qualified_name_still_broadcasts(engine, spark):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # only the hint can plan a broadcast
+    try:
+        query = (
+            f"SELECT /*+ BROADCAST({QUALIFIED_RL_PATIENTS}) */ count(*) AS n "
+            f"FROM claims JOIN {QUALIFIED_RL_PATIENTS} USING (patient_id)"
+        )
+        for run, n in ((engine.sql, 10), (engine.session_for(TEAM1).sql, 6)):
+            df = run(query)
+            assert df.collect()[0]["n"] == n
+            assert "BroadcastHashJoin" in df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, saved)

@@ -3,17 +3,18 @@ tree, in pairs that run both sides on one seed.
 
     python3 tools/ab_pairs.py --parent HEAD~1 --out AB_NAME.json \\
         [--workload fgac_consumer_ingest --workload analytics_suite] \\
-        [--pairs 10] [--seed0 701] [--seconds 8] [--what "…"]
+        [--pairs 10] [--seed0 701] [--what "…"]
 
 The parent commit is exported with ``git archive`` into a temporary
 directory; the change side is this checkout. Each pair runs
-``python3 perfbench/run.py --workload W --seed S --seconds N`` once per
-side, alternating which side goes first, one run at a time. The output
-holds, per workload, every run (exit code, correctness, the end-to-end
-metrics, nproc, loadavg at start, steal share, per-operation CPU) and a
-summary per BENCHMARK.json end-to-end metric: median and quartiles per
-side, the change's wins over the pairs, the parent's IQR, the ratio of
-the medians and whether it stays within the metric's ``bound``.
+``python3 perfbench/run.py --workload W --seed S --seconds N`` (N is
+BENCHMARK.json's ``run_seconds``) once per side, alternating which side
+goes first, one run at a time. The output holds, per workload, every
+run (exit code, correctness, the end-to-end metrics, nproc, loadavg at
+start, steal share, per-operation CPU) and a summary per BENCHMARK.json
+end-to-end metric: median and quartiles per side, the change's wins over
+the pairs, the parent's IQR, the ratio of the medians and whether it
+stays within the metric's ``bound``.
 """
 
 from __future__ import annotations
@@ -145,7 +146,6 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", action="append")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=701)
-    ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--what", default="")
     args = ap.parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -158,7 +158,7 @@ def main(argv=None) -> int:
         trees = {"parent": parent_dir, "change": ROOT}
         doc = {
             "what": args.what,
-            "command": f"python3 perfbench/run.py --workload W --seed S --seconds {args.seconds:g} --trace 0",
+            "command": f"python3 perfbench/run.py --workload W --seed S --seconds {bench['run_seconds']:g} --trace 0",
             "box": {"nproc": os.cpu_count()},
             "sides": {"parent": f"commit {commit}", "change": "working tree"},
         }
@@ -168,7 +168,7 @@ def main(argv=None) -> int:
                 seed = args.seed0 + i
                 order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
                 for side in order:
-                    run = run_once(trees[side], w, seed, args.seconds)
+                    run = run_once(trees[side], w, seed, bench["run_seconds"])
                     run["side"] = side
                     runs.append(run)
                     print(json.dumps({k: run.get(k) for k in ("workload", "seed", "side", "exit", "correct", "setup_s", "op_cpu_ms", "peak_rss_mb")}), flush=True)
