@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import re
+from bisect import bisect_left
 from functools import cached_property
 
 from py4j.java_gateway import is_instance_of
@@ -158,18 +159,182 @@ _SUGAR_RE = re.compile(
 )
 
 
+def _sql_noise_spans(text: str) -> list[tuple[str, int, int]]:
+    """The one comment- and string-aware lexer every SQL probe and
+    rewrite shares: ``(kind, start, end)`` for each string literal's
+    CONTENTS (``"str"``; single- or double-quoted, both literals in
+    Spark SQL), each comment (``"comment"`` —
+    ``--`` to end-of-line, bracketed ``/* */`` with Spark's nesting) and
+    each optimizer hint (``"hint"`` — ``/*+ … */``), found in ONE
+    left-to-right scan, so a quote inside a comment (``-- don't``)
+    cannot corrupt string state and a ``--`` inside a literal cannot
+    start a phantom comment. Doubled quotes and backslash escapes stay
+    inside their token, as in Spark's lexer. Each backtick-quoted
+    identifier's contents are reported too (``"ident"``): they shield
+    comment markers, and they hold no structure."""
+    spans: list[tuple[str, int, int]] = []
+    i, n = 0, len(text)
+    while i < n:
+        ch = text[i]
+        if ch in ("'", '"', "`"):
+            j = i + 1
+            while j < n:
+                if text[j] == "\\" and ch != "`":
+                    j += 2
+                elif text[j] != ch:
+                    j += 1
+                elif j + 1 < n and text[j + 1] == ch:
+                    j += 2  # doubled quote: an escape, the token continues
+                else:
+                    break
+            spans.append(("ident" if ch == "`" else "str", i + 1, min(j, n)))
+            i = j + 1
+        elif text.startswith("--", i):
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+            spans.append(("comment", i, j))
+            i = j
+        elif text.startswith("/*", i):
+            depth, j = 0, i
+            while j < n:
+                if text.startswith("/*", j):
+                    depth += 1
+                    j += 2
+                elif text.startswith("*/", j):
+                    depth -= 1
+                    j += 2
+                    if depth == 0:
+                        break
+                else:
+                    j += 1
+            spans.append(("hint" if text.startswith("/*+", i) else "comment", i, j))
+            i = j
+        else:
+            i += 1
+    return spans
+
+
+def _blank_sql_strings(text: str, keep=("ident",), spans=None) -> str:
+    """Length-preserving blanking of the contents of every span
+    _sql_noise_spans reports (``spans``, when the caller already has
+    them) except the kinds in ``keep``: by default string literals'
+    contents (outer quotes kept), comments and hints are blanked and
+    quoted identifiers kept. Match indices computed on the blanked text
+    stay valid against the raw statement, and newlines are kept so
+    line-oriented probes stay aligned."""
+    out = list(text)
+    for kind, start, end in _sql_noise_spans(text) if spans is None else spans:
+        if kind in keep:
+            continue
+        for k in range(start, end):
+            if out[k] != "\n":
+                out[k] = " "
+    return "".join(out)
+
+
+def strip_sql_comments(text: str) -> str:
+    """``text`` with every comment replaced by one space — literals,
+    quoted identifiers and optimizer hints kept verbatim. Both SQL
+    surfaces dispatch on this form, so a comment can neither move a
+    statement past a fence nor split a keyword (``INSERT/**/INTO``)."""
+    out, pos = [], 0
+    for kind, start, end in _sql_noise_spans(text):
+        if kind == "comment":
+            out.append(text[pos:start])
+            out.append(" ")
+            pos = end
+    out.append(text[pos:])
+    return "".join(out)
+
+
+_BRACKET_RE = re.compile(r"[()]")
+_CLOSE_RE = re.compile(r"\)")
+
+
+class SqlScan:
+    """The one depth-aware reading of a SQL text that every sugar
+    rewrite and every origin mend shares. ``code`` is the text with the
+    contents of each string literal, quoted identifier, comment and hint
+    blanked (_sql_noise_spans, length preserved), so a bracket, keyword
+    or separator is structure exactly where ``code`` still shows it, and
+    an index into ``code`` is an index into ``text``; ``names`` keeps
+    quoted identifiers, for probes that read a name. It answers three
+    questions: where the bracket at i closes or opens (``partner``,
+    ``enclosing``), which matches of a pattern lie at one bracket depth
+    (``top``), and how a stretch of text splits at them (``split``)."""
+
+    def __init__(self, text: str):
+        self.text = text
+        self._spans = _sql_noise_spans(text)
+        self.code = _blank_sql_strings(text, keep=(), spans=self._spans)
+        self._pos: list[int] = []  # each bracket's index
+        self._depth: list[int] = []  # brackets open just after it
+        self._partner: dict[int, int] = {}
+        opened: list[int] = []
+        for m in _BRACKET_RE.finditer(self.code):
+            i = m.start()
+            if m.group() == "(":
+                opened.append(i)
+            elif opened:
+                j = opened.pop()
+                self._partner[i], self._partner[j] = j, i
+            self._pos.append(i)
+            self._depth.append(len(opened))
+
+    @cached_property
+    def names(self) -> str:
+        return _blank_sql_strings(self.text, spans=self._spans)
+
+    def depth(self, i: int) -> int:
+        """Brackets open at position ``i``."""
+        k = bisect_left(self._pos, i)
+        return self._depth[k - 1] if k else 0
+
+    def partner(self, i: int) -> int:
+        """Index of the bracket matching the one at ``i`` — the ``)``
+        closing a ``(``, the ``(`` opening a ``)`` — or -1 if none."""
+        return self._partner.get(i, -1)
+
+    def enclosing(self, i: int) -> int:
+        """Index of the ``(`` of the innermost bracket holding position
+        ``i``; -1 at the top level."""
+        for j in reversed(self._pos[: bisect_left(self._pos, i)]):
+            if self.code[j] == "(" and self._partner.get(j, len(self.code)) > i:
+                return j
+        return -1
+
+    def top(self, pattern: str, start: int = 0, end: int | None = None) -> list[re.Match]:
+        """The matches of ``pattern`` (case-insensitive) in
+        ``code[start:end]`` at the bracket depth of ``start``, up to and
+        including the ``)`` that closes the bracket holding ``start`` —
+        so ``\\)`` in the pattern finds where that bracket ends."""
+        end = len(self.code) if end is None else end
+        close = self._partner.get(self.enclosing(start))
+        if close is not None:
+            end = min(end, close + 1)
+        base = self.depth(start)
+        found = re.compile(pattern, re.I).finditer(self.code, start, end)
+        return [m for m in found if self.depth(m.start()) == base]
+
+    def split(self, pattern: str, start: int = 0, end: int | None = None, view=None) -> list[str]:
+        """The pieces of ``text[start:end]`` — or of ``view``, an
+        equal-length reading of it — between the ``top`` matches of
+        ``pattern``, each stripped."""
+        end = len(self.text) if end is None else end
+        view = self.text if view is None else view
+        pieces, pos = [], start
+        for m in self.top(pattern, start, end):
+            pieces.append(view[pos : m.start()].strip())
+            pos = m.end()
+        pieces.append(view[pos:end].strip())
+        return pieces
+
+
 def _split_top_and(text: str) -> list[str]:
-    """Split a predicate on AND *outside* single-quoted literals — a
-    literal containing the word ``and`` (``brand = 'A AND B'``) must
-    stay one term (ADVICE r11). SQL escapes a quote by doubling it, so
-    "inside a string" is exactly "odd number of quotes seen so far"."""
-    parts, start = [], 0
-    for m in re.finditer(r"\bAND\b", text, re.I):
-        if text.count("'", 0, m.start()) % 2 == 0:
-            parts.append(text[start : m.start()])
-            start = m.end()
-    parts.append(text[start:])
-    return [p.strip() for p in parts]
+    """The terms of a conjunction: ``text`` split at each top-level AND,
+    never at one inside a literal (``brand = 'A AND B'``, ADVICE r11) or
+    a bracket."""
+    return SqlScan(text).split(r"\bAND\b")
 
 
 def _parse_where_filters(text: str) -> list:
@@ -226,7 +391,7 @@ def _sub_outside_strings(pattern, repl, text: str, flags: int = 0) -> str:
     AS OF '…'``); a function ``repl`` reads such a group from ``text``
     at the group's span, and returns None to leave the match as
     written."""
-    blanked = _blank_sql_strings(text, keep_hints=True)
+    blanked = _blank_sql_strings(text, keep=("ident", "hint"))
     out, pos = [], 0
     for m in re.compile(pattern, flags).finditer(blanked):
         new = repl(m) if callable(repl) else m.expand(repl)
@@ -326,82 +491,6 @@ def rewrite_table_refs(
     return query
 
 
-def _split_top_level(text: str, keyword: str) -> tuple[str, str | None]:
-    """Split ``text`` at the first whole-word occurrence of ``keyword``
-    outside parentheses and string literals. Returns (head, tail) with
-    the keyword consumed; tail is None when the keyword is absent."""
-    depth = 0
-    in_str: str | None = None
-    kw = keyword.upper()
-    n = len(kw)
-    up = text.upper()
-    for i, ch in enumerate(text):
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and up[i : i + n] == kw
-            and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_"))
-            and (
-                i + n >= len(text)
-                or not (text[i + n].isalnum() or text[i + n] == "_")
-            )
-        ):
-            return text[:i], text[i + n :]
-    return text, None
-
-
-def _split_top_commas(text: str) -> list[str]:
-    """Split on commas outside parentheses and string literals."""
-    parts, depth, in_str, start = [], 0, None, 0
-    for i, ch in enumerate(text):
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return [p for p in (p.strip() for p in parts) if p]
-
-
-def _matching_paren(text: str, open_idx: int) -> int:
-    """Index of the ')' closing the '(' at open_idx (handles nesting —
-    column types like DECIMAL(10,2) — and quoted strings)."""
-    depth = 0
-    in_str: str | None = None
-    for i in range(open_idx, len(text)):
-        ch = text[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise ValueError(f"Unbalanced parentheses in: {text[:80]}…")
-
-
 def rewrite_qualify(query: str) -> str:
     """Rewrite a top-level ``QUALIFY <pred>`` clause (DuckDB/Snowflake/
     BigQuery's post-window filter — Spark has no QUALIFY) into plain
@@ -422,15 +511,16 @@ def rewrite_qualify(query: str) -> str:
 
     Top-level only — a QUALIFY inside a subquery is not rewritten and
     fails loudly below rather than reaching Spark's parser."""
-    head, tail = _split_top_level(query, "QUALIFY")
-    if tail is None:
-        if re.search(r"\bQUALIFY\b", _strip_sql_strings(query), re.I):
+    scan = SqlScan(query)
+    found = scan.top(r"\bQUALIFY\b")
+    if not found:
+        if re.search(r"\bQUALIFY\b", scan.code, re.I):
             raise ValueError(
                 "QUALIFY is supported at the top level of the statement "
                 "only — rewrite the subquery's QUALIFY as a wrapped WHERE"
             )
         return query
-    if re.search(r"__qualify\b", _strip_sql_strings(query), re.I):
+    if re.search(r"__qualify\b", scan.names, re.I):
         # the rewrite introduces and then hides a __qualify helper
         # column — a statement already referencing that name would lose
         # its own column silently; refuse loudly instead (ADVICE r12)
@@ -438,33 +528,28 @@ def rewrite_qualify(query: str) -> str:
             "QUALIFY cannot be rewritten over a statement that already "
             "references a __qualify column name — rename it"
         )
-    pred, suffix = tail, ""
-    for kw in ("ORDER", "LIMIT", "OFFSET"):
-        h, t = _split_top_level(pred, kw)
-        if t is not None and len(h) < len(pred):
-            pred, suffix = h, f"{kw} {t.strip()}"
-    if not re.search(r"\bOVER\s*\(", pred, re.I):
-        return f"SELECT * FROM ({head.strip()}) AS __qsrc WHERE ({pred.strip()}) {suffix}"
-    set_op = any(
-        _split_top_level(head, k)[1] is not None
-        for k in ("UNION", "INTERSECT", "EXCEPT")
-    )
-    prefix, body = _split_top_level(head, "SELECT")
+    at = found[0]
+    tail = scan.top(r"\b(?:ORDER|LIMIT|OFFSET)\b", at.end())
+    cut = tail[0].start() if tail else len(query)
+    head, pred, suffix = query[: at.start()].strip(), query[at.end() : cut].strip(), query[cut:].strip()
+    if not re.search(r"\bOVER\s*\(", scan.code[at.end() : cut], re.I):
+        return f"SELECT * FROM ({head}) AS __qsrc WHERE ({pred}) {suffix}"
+    select = scan.top(r"\bSELECT\b", 0, at.start())
+    source = select and scan.top(r"\bFROM\b", select[0].end(), at.start())
     if (
-        body is not None
-        and not set_op
-        and not re.match(r"\s*DISTINCT\b", body, re.I)
+        source
+        and not scan.top(r"\b(?:UNION|INTERSECT|EXCEPT)\b", 0, at.start())
+        and not re.match(r"\s*DISTINCT\b", scan.code[select[0].end() :], re.I)
     ):
-        sel, rest = _split_top_level(body, "FROM")
-        if rest is not None:
-            inner = (
-                f"{prefix} SELECT {sel.strip()}, ({pred.strip()}) "
-                f"AS __qualify FROM {rest.strip()}"
-            )
-            return f"SELECT * EXCEPT (__qualify) FROM ({inner}) AS __qfil WHERE __qualify {suffix}"
+        sel, frm = select[0], source[0]
+        inner = (
+            f"{query[: sel.start()]} SELECT {query[sel.end() : frm.start()].strip()}, "
+            f"({pred}) AS __qualify FROM {query[frm.end() : at.start()].strip()}"
+        )
+        return f"SELECT * EXCEPT (__qualify) FROM ({inner}) AS __qfil WHERE __qualify {suffix}"
     return (
-        f"SELECT * EXCEPT (__qualify) FROM (SELECT __qsrc.*, ({pred.strip()}) AS __qualify "
-        f"FROM ({head.strip()}) AS __qsrc) AS __qfil "
+        f"SELECT * EXCEPT (__qualify) FROM (SELECT __qsrc.*, ({pred}) AS __qualify "
+        f"FROM ({head}) AS __qsrc) AS __qfil "
         f"WHERE __qualify {suffix}"
     )
 
@@ -483,20 +568,19 @@ def rewrite_distinct_on(query: str) -> str:
     this engine's determinism rules refuse. Top-level only, same
     contract as rewrite_qualify. The helper columns (``__don``, one
     ``__obN`` per order item) stay hidden: ``SELECT * EXCEPT (…)``."""
-    # probe the BLANKED text (string literals spaced out, length
-    # preserved so indices map back to the raw query): a literal
-    # containing "SELECT DISTINCT ON (" must not trigger a rewrite,
-    # and the paren-balance guard must not count literal parens
-    # (ADVICE r12)
-    blanked = _blank_sql_strings(query)
-    m = _DISTINCT_ON_RE.search(blanked)
+    # probe the code (SqlScan: literals, quoted identifiers and
+    # comments blanked, indices shared with the raw query): a literal
+    # containing "SELECT DISTINCT ON (" must not trigger a rewrite, and
+    # the top-level guard must not count quoted parens (ADVICE r12)
+    scan = SqlScan(query)
+    m = _DISTINCT_ON_RE.search(scan.code)
     if not m:
         return query
-    if blanked.count("(", 0, m.start()) != blanked.count(")", 0, m.start()):
+    if scan.depth(m.start()):
         raise ValueError(
             "DISTINCT ON is supported at the top level of the statement only"
         )
-    if re.search(r"__don\b|__ob\d", blanked, re.I):
+    if re.search(r"__don\b|__ob\d", scan.names, re.I):
         # the rewrite introduces __don/__obN helper columns and hides
         # them from the result — a statement already carrying such
         # names would have its own columns silently removed; refuse
@@ -505,46 +589,35 @@ def rewrite_distinct_on(query: str) -> str:
             "DISTINCT ON cannot be rewritten over a statement that "
             "already references __don/__obN column names — rename them"
         )
-    close = _matching_paren(query, m.end() - 1)
+    close = scan.partner(m.end() - 1)
+    if close < 0:
+        raise ValueError(f"Unbalanced parentheses in: {query[:80]}…")
     on_exprs = query[m.end() : close].strip()
-    rest = query[close + 1 :]
-    head, order_tail = _split_top_level(rest, "ORDER")
-    if order_tail is None:
+    order = scan.top(r"\bORDER\s+BY\b", close + 1)
+    if not order:
         raise ValueError(
             "DISTINCT ON requires an ORDER BY (an arbitrary row per "
             "group is not deterministic); add ORDER BY <on-exprs>, "
             "<tie-breakers>"
         )
-    order_by = re.sub(r"^\s*BY\b", "", order_tail, flags=re.I).strip()
-    # split LIMIT and OFFSET out of the order-item list (either may
-    # appear without the other — `ORDER BY … OFFSET n` is valid SQL,
-    # and leaving OFFSET inside the items would parse it as an order
-    # expression; ADVICE r12)
-    suffix_parts: list[str] = []
-    limit_head, limit_tail = _split_top_level(order_by, "LIMIT")
-    if limit_tail is not None:
-        order_by = limit_head
-        # OFFSET may trail the LIMIT clause (`LIMIT n OFFSET m`)
-        lim, off = _split_top_level(limit_tail, "OFFSET")
-        suffix_parts.append(f"LIMIT {lim.strip()}")
-        if off is not None:
-            suffix_parts.append(f"OFFSET {off.strip()}")
-    off_head, off_tail = _split_top_level(order_by, "OFFSET")
-    if off_tail is not None:
-        order_by = off_head
-        # OFFSET-first spelling (`OFFSET m LIMIT n` is not SQL; Spark
-        # and DuckDB both take LIMIT first) — off_tail is the count
-        suffix_parts.insert(0, f"OFFSET {off_tail.strip()}")
-    suffix = " ".join(suffix_parts)
-    order_by = order_by.strip()
-    sel, from_tail = _split_top_level(head, "FROM")
-    if from_tail is None:
+    order = order[0]
+    # LIMIT and OFFSET leave the order-item list, in the order written
+    # (either may appear without the other — `ORDER BY … OFFSET n` is
+    # valid SQL, and an OFFSET left among the items would parse as an
+    # order expression; ADVICE r12)
+    tail = scan.top(r"\b(?:LIMIT|OFFSET)\b", order.end())
+    cut = tail[0].start() if tail else len(query)
+    order_by, suffix = query[order.end() : cut].strip(), query[cut:].strip()
+    source = scan.top(r"\bFROM\b", close + 1, order.start())
+    if not source:
         raise ValueError("DISTINCT ON requires a FROM clause")
+    sel, from_tail = query[close + 1 : source[0].start()], query[source[0].end() : order.start()]
     # the final sort runs OUTSIDE the select-list projection, so each
     # order expression is projected as a hidden __obN column (the
     # statement may order by columns it does not select)
     inner_extra, outer_order = [], []
-    for i, item in enumerate(_split_top_commas(order_by)):
+    items = [p for p in scan.split(",", order.end(), cut) if p]
+    for i, item in enumerate(items):
         om = re.match(
             r"(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?\s*$",
             item,
@@ -565,94 +638,6 @@ def rewrite_distinct_on(query: str) -> str:
         f"SELECT * EXCEPT ({hidden}) FROM ({inner}) AS __dfil WHERE __don = 1 "
         f"ORDER BY {', '.join(outer_order)} {suffix}"
     )
-
-
-def _sql_noise_spans(text: str) -> list[tuple[str, int, int]]:
-    """The one comment- and string-aware lexer every SQL probe and
-    rewrite shares: ``(kind, start, end)`` for each string literal's
-    CONTENTS (``"str"``; single- or double-quoted, both literals in
-    Spark SQL), each comment (``"comment"`` —
-    ``--`` to end-of-line, bracketed ``/* */`` with Spark's nesting) and
-    each optimizer hint (``"hint"`` — ``/*+ … */``), found in ONE
-    left-to-right scan, so a quote inside a comment (``-- don't``)
-    cannot corrupt string state and a ``--`` inside a literal cannot
-    start a phantom comment. Doubled quotes and backslash escapes stay
-    inside their token, as in Spark's lexer. Backtick identifiers are
-    skipped (not reported) but shield any comment markers inside them."""
-    spans: list[tuple[str, int, int]] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in ("'", '"', "`"):
-            j = i + 1
-            while j < n:
-                if text[j] == "\\" and ch != "`":
-                    j += 2
-                elif text[j] != ch:
-                    j += 1
-                elif j + 1 < n and text[j + 1] == ch:
-                    j += 2  # doubled quote: an escape, the token continues
-                else:
-                    break
-            if ch != "`":
-                spans.append(("str", i + 1, min(j, n)))
-            i = j + 1
-        elif text.startswith("--", i):
-            j = text.find("\n", i)
-            j = n if j < 0 else j
-            spans.append(("comment", i, j))
-            i = j
-        elif text.startswith("/*", i):
-            depth, j = 0, i
-            while j < n:
-                if text.startswith("/*", j):
-                    depth += 1
-                    j += 2
-                elif text.startswith("*/", j):
-                    depth -= 1
-                    j += 2
-                    if depth == 0:
-                        break
-                else:
-                    j += 1
-            spans.append(("hint" if text.startswith("/*+", i) else "comment", i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def _blank_sql_strings(text: str, keep_hints: bool = False) -> str:
-    """Length-preserving blanking of string literal contents
-    (outer quotes kept), comments and hints (_sql_noise_spans; hints
-    kept with ``keep_hints``): match indices computed on the blanked
-    text stay valid against the raw statement — required by probes that
-    slice the original query at a match position (rewrite_distinct_on,
-    rewrite_fetch_first, the quantifier scan). Newlines are kept so
-    line-oriented probes stay aligned."""
-    out = list(text)
-    for kind, start, end in _sql_noise_spans(text):
-        if keep_hints and kind == "hint":
-            continue
-        for k in range(start, end):
-            if out[k] != "\n":
-                out[k] = " "
-    return "".join(out)
-
-
-def strip_sql_comments(text: str) -> str:
-    """``text`` with every comment replaced by one space — literals,
-    quoted identifiers and optimizer hints kept verbatim. Both SQL
-    surfaces dispatch on this form, so a comment can neither move a
-    statement past a fence nor split a keyword (``INSERT/**/INTO``)."""
-    out, pos = [], 0
-    for kind, start, end in _sql_noise_spans(text):
-        if kind == "comment":
-            out.append(text[pos:start])
-            out.append(" ")
-            pos = end
-    out.append(text[pos:])
-    return "".join(out)
 
 
 # Parsed node classes that execute on spark.sql() yet are not Catalyst
@@ -830,8 +815,8 @@ class ParsedStatement:
         return str(node.alias()) if _node_name(node) == "SubqueryAlias" else None
 
     @cached_property
-    def _blanked(self) -> str:
-        return _blank_sql_strings(self.text)
+    def _scan(self) -> SqlScan:
+        return SqlScan(self.text)
 
     def tail(self, start: int) -> str:
         """The text from ``start`` to the statement's end, a trailing
@@ -851,23 +836,20 @@ class ParsedStatement:
         after the first top-level AS past the table name (a query's own
         origin can start late — at ORDER BY, at a hint, after TABLE)."""
         _start, stop = _origin(self.node.name())
-        head, tail = _split_top_level(self.text[stop + 1 :], "AS")
-        if tail is None:
+        found = self._scan.top(r"\bAS\b", stop + 1)
+        if not found:
             raise ValueError("CREATE TABLE … AS needs the AS keyword before its query")
-        return self.tail(len(self.text) - len(tail))
+        return self.tail(found[0].end())
 
     def enclosed(self, node) -> str:
         """The text inside the parentheses around a parenthesized query
         ``node`` (a MERGE source subquery)."""
         start, _stop = _origin(node)
-        depth, i = 0, start - 1
-        while i >= 0 and (self._blanked[i] != "(" or depth):
-            depth += {")": 1, "(": -1}.get(self._blanked[i], 0)
-            i -= 1
-        close = _balanced_end(self._blanked, i) if i >= 0 else -1
+        opened = self._scan.enclosing(start)
+        close = self._scan.partner(opened)
         if close < 0:
             raise ValueError("expected a table name or a parenthesized query")
-        return self.text[i + 1 : close].strip()
+        return self.text[opened + 1 : close].strip()
 
     def span(self, expr) -> str:
         """The text of expression ``expr``, from its parse origin. Spark
@@ -881,8 +863,8 @@ class ParsedStatement:
         if cls == "Literal":
             return str(expr.sql())
         start, stop = _origin(expr)
-        node = expr
-        while _PREDICATE_START.match(self._blanked, start):
+        scan, node = self._scan, expr
+        while _PREDICATE_START.match(scan.code, start):
             kids = node.children()
             if not kids.size():
                 break
@@ -891,14 +873,12 @@ class ParsedStatement:
             if found is None:
                 break
             start = min(start, found[0])
-        blanked = self._blanked
         if cls == "Exists":
-            head = blanked[: _open_paren(blanked, stop)].rstrip()
-            start = len(head) - len("EXISTS")
-        depth = blanked.count(")", start, stop + 1) - blanked.count("(", start, stop + 1)
-        while depth > 0 and start > 0:
-            start -= 1
-            depth -= {"(": 1, ")": -1}.get(blanked[start], 0)
+            start = len(scan.code[: scan.partner(stop)].rstrip()) - len("EXISTS")
+        for close in _CLOSE_RE.finditer(scan.code, start, stop + 1):
+            opened = scan.partner(close.start())
+            if 0 <= opened < start:  # a bracket the span closes but did not open
+                start = opened
         return self.text[start : stop + 1].strip()
 
     def value(self, expr):
@@ -1030,12 +1010,7 @@ def desugar(spark: SparkSession, text: str, statements) -> ParsedStatement | Non
     rewrite parses — an ASOF JOIN needs a read path's frame resolver."""
     if not has_sugar(text):
         return None
-    blanked = _blank_sql_strings(text)
-    heads = [
-        m.start()
-        for m in re.finditer(r"\b(?:SELECT|WITH)\b", blanked, re.I)
-        if blanked.count("(", 0, m.start()) == blanked.count(")", 0, m.start())
-    ]
+    heads = [m.start() for m in SqlScan(text).top(r"\b(?:SELECT|WITH)\b")]
     for start in [0] + [h for h in heads if h][:1]:
         try:
             stmt = parse_statement(spark, text[:start] + rewrite_sugar(text[start:]))
@@ -1044,38 +1019,6 @@ def desugar(spark: SparkSession, text: str, statements) -> ParsedStatement | Non
         if start == 0 or stmt.root in statements:
             return stmt
     return None
-
-
-def _strip_sql_strings(text: str) -> str:
-    """Blank out single-quoted literals (with '' escaping) AND SQL
-    comments so keyword probes can't false-positive on either. Not
-    length-preserving (literals collapse to ``''``) — positional
-    probes use _blank_sql_strings instead."""
-    return re.sub(r"'[^']*'", "''", _blank_sql_strings(text))
-
-
-def _balanced_end(text: str, open_idx: int) -> int:
-    """Index of the ')' matching the '(' at ``open_idx`` (on blanked
-    text — literals cannot unbalance the scan); -1 if unbalanced."""
-    depth = 0
-    for i in range(open_idx, len(text)):
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
-def _open_paren(text: str, close_idx: int) -> int:
-    """Index of the '(' matching the ')' at ``close_idx``."""
-    depth = 0
-    for i in range(close_idx, -1, -1):
-        depth += {")": 1, "(": -1}.get(text[i], 0)
-        if depth == 0:
-            return i
-    raise ValueError(f"Unbalanced parentheses in: {text[:80]}…")
 
 
 _STAR_EXCLUDE_RE = re.compile(r"\*\s*(EXCLUDE)\b", re.I)
@@ -1144,34 +1087,28 @@ _TIES_EXPR_KEYWORDS = {
 }
 
 
-def _ties_select_items(body: str) -> list[str] | None:
-    """Top-level select-list items of ``body`` (the first depth-0
-    SELECT — a leading WITH clause keeps its CTE bodies inside parens,
-    so the scan lands on the main query; a top-level set operation's
-    FIRST branch names the output columns, which is the correct branch
-    to check). None when the list can't be located textually."""
-    blanked = _blank_sql_strings(body)
-    depth, sel_end = 0, -1
-    for m in re.finditer(r"[()]|\bSELECT\b", blanked, re.I):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            sel_end = m.end()
-            break
-    if sel_end < 0:
+def _ties_select_items(scan: SqlScan, end: int) -> list[str] | None:
+    """Top-level select-list items of ``scan``'s text before ``end``
+    (the first depth-0 SELECT — a leading WITH clause keeps its CTE
+    bodies inside parens, so the scan lands on the main query; a
+    top-level set operation's FIRST branch names the output columns,
+    which is the correct branch to check), spelled with literals
+    blanked. None when the list can't be located textually."""
+    select = scan.top(r"\bSELECT\b", 0, end)
+    if not select:
         return None
-    head, _ = _split_top_level(blanked[sel_end:], "FROM")
-    head = re.sub(r"^\s*(DISTINCT|ALL)\b", "", head, flags=re.I)
-    return _split_top_commas(head)
+    start = select[0].end()
+    start += re.match(r"\s*(?:(?:DISTINCT|ALL)\b)?", scan.code[start:]).end()
+    source = scan.top(r"\bFROM\b", start, end)
+    stop = source[0].start() if source else end
+    return [p for p in scan.split(",", start, stop, view=scan.names) if p]
 
 
-def _ties_outer_key(body: str, key: str) -> str:
-    """The spelling of the WITH TIES ORDER BY key valid AGAINST the
-    ``__wt_src`` CTE (whose columns are the body's projection): a
-    qualified identifier drops its qualifier, an expression matching
+def _ties_outer_key(scan: SqlScan, end: int, key: str, blanked_key: str) -> str:
+    """The spelling of the WITH TIES ORDER BY key (``key``; literals
+    blanked in ``blanked_key``) valid AGAINST the ``__wt_src`` CTE,
+    whose columns are the projection of ``scan``'s text before ``end``:
+    a qualified identifier drops its qualifier, an expression matching
     an aliased select item becomes the alias. Raises the explanatory
     ValueError (same pattern as the multi-key/OFFSET refusals) when
     the key is not derivable from the projected columns — previously
@@ -1181,10 +1118,9 @@ def _ties_outer_key(body: str, key: str) -> str:
         "from the query's projected columns — project the key (or "
         "alias the expression) in the select list"
     )
-    blanked_key = _blank_sql_strings(key).strip()
     norm = lambda s: re.sub(r"\s+", " ", s).strip().lower()  # noqa: E731
     unq = lambda s: s.strip().strip("`").lower()  # noqa: E731
-    items = _ties_select_items(body)
+    items = _ties_select_items(scan, end)
     if items is None:
         # unlocatable select list: permissive fallback (Spark's own
         # analyzer reports any genuinely unresolved column)
@@ -1279,8 +1215,8 @@ def rewrite_fetch_first(query: str) -> tuple[str, bool]:
     single-key top-level ORDER BY (ASC/DESC, no NULLS override) whose
     key is a projected column; NULL keys sort last and never tie.
     Returns (rewritten, changed)."""
-    blanked = _blank_sql_strings(query)
-    m = _FETCH_RE.search(blanked)
+    scan = SqlScan(query)
+    m = _FETCH_RE.search(scan.code)
     if m is None:
         return query, False
     n = int(m.group(1) or 1)
@@ -1289,11 +1225,7 @@ def rewrite_fetch_first(query: str) -> tuple[str, bool]:
         # ISO pagination puts OFFSET m ROWS *before* FETCH; Spark only
         # parses LIMIT n OFFSET m, so lift a trailing standard OFFSET
         # into that spelling instead of emitting unparseable text
-        om = re.search(
-            r"\bOFFSET\s+(\d+)\s+ROWS?\s*$",
-            _blank_sql_strings(body),
-            re.I,
-        )
+        om = re.search(r"\bOFFSET\s+(\d+)\s+ROWS?\s*$", scan.code[: len(body)], re.I)
         if om:
             return (
                 body[: om.start()].rstrip()
@@ -1301,25 +1233,15 @@ def rewrite_fetch_first(query: str) -> tuple[str, bool]:
                 True,
             )
         return body + f" LIMIT {n}", True
-    # WITH TIES: locate the top-level ORDER BY feeding the fetch
-    depth = 0
-    ob_start = -1
-    for om in re.finditer(r"[()]|\bORDER\s+BY\b", blanked[: m.start()], re.I):
-        tok = om.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            ob_start = om.start()
-    if ob_start < 0:
+    # WITH TIES: the last top-level ORDER BY before the fetch feeds it
+    order = scan.top(r"\bORDER\s+BY\b", 0, m.start())
+    if not order:
         raise ValueError("FETCH … WITH TIES requires a top-level ORDER BY")
-    order_items = blanked[ob_start:m.start()]
-    body = query[:ob_start].rstrip()
-    items = re.sub(r"^\s*ORDER\s+BY\s*", "", order_items, flags=re.I)
-    # depth-aware comma scan (ADVICE r13): a single key containing
-    # commas inside parens — coalesce(a, b) — is one key, not multi-key
-    if len(_split_top_commas(items)) > 1 or re.search(r"\bNULLS\b", items, re.I):
+    order = order[-1]
+    items = scan.code[order.end() : m.start()]
+    # a single key holding commas inside parens — coalesce(a, b) — is
+    # one key, not multi-key (ADVICE r13)
+    if scan.top(",", order.end(), m.start()) or re.search(r"\bNULLS\b", items, re.I):
         raise ValueError(
             "FETCH … WITH TIES supports a single ORDER BY key without a "
             "NULLS override — rewrite multi-key ties as QUALIFY rank()"
@@ -1333,10 +1255,7 @@ def rewrite_fetch_first(query: str) -> tuple[str, bool]:
     # identifier ending in asc/desc ('salesasc') would be silently
     # truncated to a different column
     km = re.match(r"\s*(.*?)(?:\s+(ASC|DESC))?\s*$", items, re.I | re.S)
-    prefix_len = len(order_items) - len(items)
-    key = query[
-        ob_start + prefix_len + km.start(1) : ob_start + prefix_len + km.end(1)
-    ].strip()
+    key_at = slice(order.end() + km.start(1), order.end() + km.end(1))
     desc = (km.group(2) or "ASC").upper() == "DESC"
     direction = "DESC NULLS LAST" if desc else "ASC NULLS LAST"
     agg = "min" if desc else "max"
@@ -1345,7 +1264,8 @@ def rewrite_fetch_first(query: str) -> tuple[str, bool]:
     # must be respelled for the body's projection (qualifier dropped,
     # aliased expression → alias) — or refused explanatorily when the
     # projection can't supply it (ADVICE r13)
-    key = _ties_outer_key(body, key)
+    body = query[: order.start()].rstrip()
+    key = _ties_outer_key(scan, order.start(), query[key_at].strip(), scan.names[key_at].strip())
     # NULL keys sort LAST; when the top-n reaches into them (n exceeds
     # the non-null count, or every key is NULL) the NULL rows all tie
     # at the boundary rank, so rank() <= n admits them — the second
@@ -1396,15 +1316,14 @@ def rewrite_quantified_subqueries(query: str) -> str:
     over a large relation cost up to 3 bounded aggregate scans (each
     is a COUNT or a 1-row TakeOrderedAndProject — no global windows)."""
     while True:
-        blanked = _blank_sql_strings(query)
-        matches = list(_QUANT_RE.finditer(blanked))
+        scan = SqlScan(query)
         target = None
-        for m in reversed(matches):
+        for m in reversed(list(_QUANT_RE.finditer(scan.code))):
             open_idx = m.end() - 1
-            close = _balanced_end(blanked, open_idx)
+            close = scan.partner(open_idx)
             if close < 0:
                 raise ValueError("Unbalanced quantified subquery")
-            head = blanked[open_idx + 1 : close].lstrip().upper()
+            head = scan.code[open_idx + 1 : close].lstrip().upper()
             if head.startswith(("SELECT", "WITH", "VALUES")):
                 target = (m, open_idx, close)
                 break
@@ -1414,7 +1333,7 @@ def rewrite_quantified_subqueries(query: str) -> str:
         op = {"!=": "<>"}.get(m.group(1), m.group(1))
         quant = m.group(2).upper()
         sq = query[open_idx + 1 : close]
-        lhs_m = _QUANT_LHS_RE.search(blanked[: m.start()])
+        lhs_m = _QUANT_LHS_RE.search(scan.code[: m.start()])
         if lhs_m is None:
             raise ValueError(
                 f"Quantified {quant} supports a column or literal on "
@@ -1512,13 +1431,13 @@ def rewrite_text_sugar(query: str) -> str:
     (producer frontend + SecureSession): ``* EXCLUDE`` → ``* EXCEPT``,
     ``FETCH FIRST … ONLY/WITH TIES``, and quantified ``ALL/ANY/SOME``
     subqueries."""
-    probe = _strip_sql_strings(query)
+    probe = _blank_sql_strings(query)
     out = query
     if re.search(r"\bEXCLUDE\b", probe, re.I):
         out = rewrite_star_exclude(out)
     if re.search(r"\bFETCH\b", probe, re.I):
         out, _ = rewrite_fetch_first(out)
-    if re.search(r"\b(ALL|ANY|SOME)\s*\(", _strip_sql_strings(out), re.I):
+    if re.search(r"\b(ALL|ANY|SOME)\s*\(", _blank_sql_strings(out), re.I):
         out = rewrite_quantified_subqueries(out)
     return out
 
@@ -1546,57 +1465,12 @@ _ASOF_RE = re.compile(
     r"(`?[\w.]+`?)(?:\s+(?:AS\s+)?(\w+))?\s+ON\b",
     re.I,
 )
-_ASOF_STOP = (
-    "WHERE",
-    "GROUP",
-    "HAVING",
-    "WINDOW",
-    "QUALIFY",
-    "ORDER",
-    "LIMIT",
-    "OFFSET",
-    "UNION",
-    "EXCEPT",
-    "INTERSECT",
-    "JOIN",
-    "LEFT",
-    "RIGHT",
-    "FULL",
-    "INNER",
-    "CROSS",
-    "ASOF",
+# where an ASOF ON condition ends: the next clause, or the ')' closing
+# the bracket the join sits in (SqlScan.top)
+_ASOF_END = (
+    r"\)|\b(?:WHERE|GROUP|HAVING|WINDOW|QUALIFY|ORDER|LIMIT|OFFSET|UNION|EXCEPT"
+    r"|INTERSECT|JOIN|LEFT|RIGHT|FULL|INNER|CROSS|ASOF)\b"
 )
-
-
-def _asof_condition_end(text: str, start: int) -> int:
-    """End index (exclusive) of the ON condition beginning at ``start``:
-    the first top-level clause keyword or unmatched ')'."""
-    depth, in_str = 0, None
-    i, n = start, len(text)
-    while i < n:
-        ch = text[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"', "`"):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return i
-        elif depth == 0 and (ch.isalpha()) and (
-            i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")
-        ):
-            m = re.match(r"[A-Za-z_]+", text[i:])
-            word = m.group(0).upper()
-            if word in _ASOF_STOP:
-                return i
-            i += len(word)
-            continue
-        i += 1
-    return n
 
 
 def parse_asof_condition(cond: str, laliases: set, raliases: set):
@@ -1653,7 +1527,7 @@ def rewrite_asof_joins(query: str, resolve) -> str:
     relations the principal may not read (SecureSession: the rewrite
     reads frames directly, so the resolver IS the fence). The as-of
     views register in the resolved frames' own session catalog."""
-    if not re.search(r"\bASOF\b", _strip_sql_strings(query), re.I):
+    if not re.search(r"\bASOF\b", _blank_sql_strings(query), re.I):
         return query
     from sample_emr_on_eks_fgac_iceberg_spark.operators.temporal import (
         asof_join_frames,
@@ -1661,10 +1535,16 @@ def rewrite_asof_joins(query: str, resolve) -> str:
 
     count = 0
     while True:
-        m = _ASOF_RE.search(query)
+        # match where literals are blanked (a literal spelling `x ASOF
+        # JOIN y ON` is data, never a relation to resolve) and read the
+        # names from the statement at their spans
+        scan = SqlScan(query)
+        m = _ASOF_RE.search(scan.names)
         if not m:
             break
-        rel1, a1, left_kw, rel2, a2 = m.groups()
+        rel1, a1, left_kw, rel2, a2 = (
+            None if m.start(g) < 0 else query[m.start(g) : m.end(g)] for g in range(1, 6)
+        )
         seg_start = m.start(1)
         rel1, rel2 = rel1.strip("`"), rel2.strip("`")
         if rel1.upper() in _SQL_KEYWORDS and a1:
@@ -1682,7 +1562,8 @@ def rewrite_asof_joins(query: str, resolve) -> str:
                     "supported)"
                 )
             frames.append(frame)
-        cond_end = _asof_condition_end(query, m.end())
+        end = scan.top(_ASOF_END, m.end())
+        cond_end = end[0].start() if end else len(query)
         on, lts, rts, op = parse_asof_condition(
             query[m.end() : cond_end],
             {x.lower() for x in (a1, rel1) if x},
@@ -1706,31 +1587,24 @@ def rewrite_asof_joins(query: str, resolve) -> str:
             # would corrupt that relation's qualifiers; detect the
             # reuse on the post-substitution text and refuse loudly
             # (ADVICE r12).
-            stripped = _strip_sql_strings(query)
+            scan = SqlScan(query)
             named = re.compile(
                 rf"\b(?:FROM|JOIN)\s+(?:`?[\w.]+`?\s+(?:AS\s+)?)?"
                 rf"`?{re.escape(alias)}`?(?![\w.])",
                 re.I,
             )
             # the `(subquery) alias` form only introduces a relation
-            # inside a FROM clause — scan from the first TOP-LEVEL
+            # inside a FROM clause — search from the first TOP-LEVEL
             # FROM onward so a parenthesized select-list expression
             # aliased to the same name (`(price * 2) a, …`) does not
             # trigger a spurious refusal
-            depth, from_at = 0, len(stripped)
-            for tm in re.finditer(r"[()]|\bFROM\b", stripped, re.I):
-                t = tm.group(0)
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    depth -= 1
-                elif depth == 0:
-                    from_at = tm.start()
-                    break
+            source = scan.top(r"\bFROM\b")
             paren = re.compile(
                 rf"\)\s*(?:AS\s+)?`?{re.escape(alias)}`?(?![\w.])", re.I
             )
-            if named.search(stripped) or paren.search(stripped[from_at:]):
+            if named.search(scan.names) or (
+                source and paren.search(scan.names, source[0].start())
+            ):
                 raise ValueError(
                     f"ASOF JOIN alias {alias!r} is reused as a relation "
                     "name/alias elsewhere in the statement — rename one "
@@ -1741,7 +1615,7 @@ def rewrite_asof_joins(query: str, resolve) -> str:
                 rf"(?<![\w.`])`?{re.escape(alias)}`?\s*\.", "", query,
                 flags=re.I,
             )
-    if re.search(r"\bASOF\b", _strip_sql_strings(query), re.I):
+    if re.search(r"\bASOF\b", _blank_sql_strings(query), re.I):
         raise ValueError(
             "Unsupported ASOF JOIN shape — supported: "
             "table [alias] ASOF [LEFT] JOIN table [alias] ON "
@@ -2109,7 +1983,7 @@ class SqlFrontend:
         self.warehouse.update_where(name, dict(zip(keys, texts)), where, stmt.alias("table"))
 
     def _dml_texts(self, texts: list[str]) -> list[str]:
-        if any(_SUBQUERY_RE.search(t) for t in texts):
+        if any(_SUBQUERY_RE.search(_blank_sql_strings(t)) for t in texts):
             texts = self._resolve_dml_subqueries(texts)
         return texts
 
@@ -2248,7 +2122,7 @@ class SqlFrontend:
     def _alter_partitioning(self, m: re.Match) -> None:
         self.warehouse.alter_partition_spec(
             m.group(1),
-            [c.strip().strip("`") for c in _split_top_commas(m.group(2)) if c.strip()],
+            [c.strip("`") for c in SqlScan(m.group(2)).split(",") if c],
         )
 
     def _alter_write_order(self, m: re.Match) -> None:
@@ -2625,11 +2499,7 @@ class SqlFrontend:
                 om = re.match(r"map\s*\((.*)\)\s*$", str(opts_raw), re.S | re.I)
                 if not om:
                     raise ValueError("options must be map('k','v', …)")
-                kv = [
-                    p.strip().strip("'")
-                    for p in _split_top_commas(om.group(1))
-                    if p.strip()
-                ]
+                kv = [p.strip("'") for p in SqlScan(om.group(1)).split(",") if p]
                 if len(kv) % 2:
                     raise ValueError("options map needs key/value pairs")
                 omap = dict(zip(kv[::2], kv[1::2]))
@@ -2646,11 +2516,7 @@ class SqlFrontend:
                 im = re.match(r"array\s*\((.*)\)\s*$", str(ic_raw), re.S | re.I)
                 if not im:
                     raise ValueError("identifier_columns must be array('c', …)")
-                id_cols = [
-                    p.strip().strip("'`")
-                    for p in _split_top_commas(im.group(1))
-                    if p.strip()
-                ]
+                id_cols = [p.strip("'`") for p in SqlScan(im.group(1)).split(",") if p]
             spec = dict(
                 name=table,
                 from_snapshot_id=start,

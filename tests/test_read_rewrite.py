@@ -202,3 +202,13 @@ def test_hint_on_a_qualified_name_still_broadcasts(engine, spark):
             assert "BroadcastHashJoin" in df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set(key, saved)
+
+
+def test_dml_literal_spelling_a_subquery_reads_no_table(engine, read_table_calls):
+    # a literal that spells a subquery is data: the DELETE registers no
+    # warehouse table for its predicate (both match no row)
+    engine.sql("DELETE FROM claims WHERE status = 'x'")
+    plain = list(read_table_calls)
+    read_table_calls.clear()
+    engine.sql("DELETE FROM claims WHERE status = '(SELECT x)'")
+    assert read_table_calls == plain

@@ -109,6 +109,10 @@ def test_rewrite_where_split_respects_quoted_and():
     ]
     got = _parse_where_filters("brand = 'A AND B' AND k >= 10")
     assert got == [("brand", "=", "A AND B"), ("k", ">=", 10)]
+    # a double-quoted literal holding ' and a backslash-escaped quote
+    # end their literal where Spark's lexer ends it
+    assert _split_top_and('brand = "it\'s" AND k = 3') == ['brand = "it\'s"', "k = 3"]
+    assert _split_top_and("brand = 'O\\'Brien' AND k = 3") == ["brand = 'O\\'Brien'", "k = 3"]
 
 
 def test_rewrite_where_scoped_compaction_with_quoted_and(spark, tmp_path):

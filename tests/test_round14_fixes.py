@@ -9,7 +9,6 @@ import pytest
 from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
     SqlFrontend,
     _blank_sql_strings,
-    _strip_sql_strings,
     rewrite_fetch_first,
     rewrite_quantified_subqueries,
     rewrite_text_sugar,
@@ -141,7 +140,7 @@ def test_blank_sql_strings_blanks_comments_length_preserving():
 
 def test_strip_sql_strings_blanks_comments_and_literals():
     q = "SELECT 'keep -- not a comment', x -- real comment with 'quote\nFROM t"
-    out = _strip_sql_strings(q)
+    out = _blank_sql_strings(q)
     assert "not a comment" not in out
     assert "real comment" not in out and "quote" not in out
     # the literal's '--' must NOT have started a comment: FROM survives

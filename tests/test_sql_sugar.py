@@ -262,6 +262,52 @@ def test_consumer_view_body_with_sugar(hc_engine):
     sess.sql("DROP VIEW sugar_v")
 
 
+# Each statement holds a quote or a bracket the sugar rewrites must not
+# read as structure: a backslash-escaped quote in a literal, a paren in a
+# quoted identifier. Its twin spells the same query without it.
+_QUOTED_STRUCTURE = [
+    (
+        "SELECT patient_id, claim_id FROM claims WHERE claim_id <> 'O\\'Brien' "
+        "QUALIFY row_number() OVER (PARTITION BY patient_id ORDER BY claim_id) = 1",
+        "SELECT patient_id, claim_id FROM claims WHERE claim_id <> 'OBrien' "
+        "QUALIFY row_number() OVER (PARTITION BY patient_id ORDER BY claim_id) = 1",
+    ),
+    (
+        "SELECT DISTINCT ON (patient_id) patient_id, claim_id FROM claims "
+        "WHERE claim_id <> 'O\\'Brien' ORDER BY patient_id, claim_id",
+        "SELECT DISTINCT ON (patient_id) patient_id, claim_id FROM claims "
+        "WHERE claim_id <> 'OBrien' ORDER BY patient_id, claim_id",
+    ),
+    (
+        "SELECT patient_id, claim_id AS `a(b` FROM claims "
+        "QUALIFY row_number() OVER (PARTITION BY patient_id ORDER BY claim_id) = 1",
+        "SELECT patient_id, claim_id AS `ab` FROM claims "
+        "QUALIFY row_number() OVER (PARTITION BY patient_id ORDER BY claim_id) = 1",
+    ),
+    (
+        "SELECT DISTINCT ON (patient_id) patient_id, claim_id AS `x)y` FROM claims "
+        "ORDER BY patient_id, claim_id",
+        "SELECT DISTINCT ON (patient_id) patient_id, claim_id AS `xy` FROM claims "
+        "ORDER BY patient_id, claim_id",
+    ),
+    (
+        "SELECT patient_id, claim_id AS `a(b` FROM claims "
+        "ORDER BY patient_id FETCH FIRST 2 ROWS WITH TIES",
+        "SELECT patient_id, claim_id AS `ab` FROM claims "
+        "ORDER BY patient_id FETCH FIRST 2 ROWS WITH TIES",
+    ),
+]
+
+
+@pytest.mark.parametrize("surface", ["producer", TEAM1])
+@pytest.mark.parametrize("query, twin", _QUOTED_STRUCTURE)
+def test_quoted_structure_returns_the_twins_rows(hc_engine, surface, query, twin):
+    run = hc_engine.sql if surface == "producer" else hc_engine.session_for(surface).sql
+    want = sorted(tuple(r) for r in run(twin).collect())
+    assert want  # the twin reads rows: 10, 10, 10, 10 and 2
+    assert sorted(tuple(r) for r in run(query).collect()) == want
+
+
 def test_fetch_with_ties_refuses_offset():
     with pytest.raises(ValueError, match="OFFSET"):
         rewrite_fetch_first(

@@ -314,6 +314,29 @@ def test_consumer_asof_ungranted_side_denies(asof_engine):
         )
 
 
+_ASOF_ROWS = (
+    "t.xval, r.qv FROM tx t ASOF JOIN rq r ON t.user_id = r.quser AND t.xts >= r.qts"
+)
+
+
+@pytest.mark.parametrize("surface", ["producer", "ana"])
+def test_asof_spelled_in_a_literal_is_data(asof_engine, surface):
+    # the literal names a table ana may not read beside the real join:
+    # it is neither resolved nor authorized
+    asof_engine.sql("CREATE TABLE IF NOT EXISTS asof_vault (k BIGINT)")
+    run = asof_engine.sql if surface == "producer" else asof_engine.session_for(surface).sql
+    log = asof_engine.policy.audit_log
+    before = len(log)
+    want = sorted(tuple(r) for r in run(f"SELECT {_ASOF_ROWS}").collect())
+    twin_audit = log[before:]
+    before = len(log)
+    got = run(f"SELECT 'asof_vault ASOF JOIN tx ON' AS s, {_ASOF_ROWS}").collect()
+    assert sorted((r["xval"], r["qv"]) for r in got) == want
+    assert {r["s"] for r in got} == {"asof_vault ASOF JOIN tx ON"}
+    assert log[before:] == twin_audit
+    assert not [e for e in log[before:] if e[1] == "asof_vault"]
+
+
 def test_consumer_asof_and_qualify_deny_permanent_tables(
     spark, tmp_path_factory
 ):
