@@ -84,10 +84,7 @@ def _cdc_warehouse_for(spark: SparkSession):
     if key not in _CDC_STATE:
         wh = Warehouse(spark, tempfile.mkdtemp(prefix="cdc_mor_wh_"))
         wh.create_table(_CDC_TABLE, _CDC_SCHEMA)
-        with wh._table_lock(_CDC_TABLE):
-            meta = wh._read_meta(_CDC_TABLE)
-            meta.properties["write.merge.mode"] = "merge-on-read"
-            wh._write_meta(meta)
+        wh.set_properties(_CDC_TABLE, {"write.merge.mode": "merge-on-read"})
         wh.insert_values(_CDC_TABLE, [(1, "a", 10), (2, "b", 20), (3, "c", 30)])
         snap1 = wh.current_snapshot_id(_CDC_TABLE)
         src = spark.createDataFrame(
@@ -267,10 +264,7 @@ def _agg_warehouse_for(spark: SparkSession):
     if key not in _AGG_STATE:
         wh = Warehouse(spark, tempfile.mkdtemp(prefix="cdc_agg_wh_"))
         wh.create_table("metrics", "grp STRING, k BIGINT, amt BIGINT")
-        with wh._table_lock("metrics"):
-            meta = wh._read_meta("metrics")
-            meta.properties["write.merge.mode"] = "merge-on-read"
-            wh._write_meta(meta)
+        wh.set_properties("metrics", {"write.merge.mode": "merge-on-read"})
         wh.insert_values(
             "metrics",
             [("g1", 1, 10), ("g1", 2, 20), ("g2", 3, 30), ("g2", 4, 40)],

@@ -37,6 +37,7 @@ from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sample_emr_on_eks_fgac_iceberg_spark.session import new_session
 from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
     ENGINE_GRAMMAR,
     ParsedStatement,
@@ -421,7 +422,8 @@ class SecureSession:
         shared_views=None,
         stream_sinks=None,
     ):
-        self._spark = spark.newSession()
+        # join planning follows the engine session (session.new_session)
+        self._spark = new_session(spark)
         # The SQL surface is a principal boundary: path-based relations
         # (SELECT … FROM parquet.`/path`) would read the warehouse files
         # underneath the policy views, so they are off. The raw
@@ -429,20 +431,6 @@ class SecureSession:
         # reference's equivalent: the query-engine role can read S3,
         # user code cannot — consumer_emr_on_eks_setup.sh:18-19).
         self._spark.conf.set("spark.sql.runSQLOnFiles", "false")
-        # join-planning tuning follows the engine session — newSession()
-        # starts from context defaults, not the caller's runtime conf,
-        # so an operator-set broadcast threshold / AQE toggle would
-        # silently not apply to consumer queries (same inheritance the
-        # trusted frontend's scratch sessions get)
-        for key in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-        ):
-            try:
-                self._spark.conf.set(key, spark.conf.get(key))
-            except Exception:
-                pass
         self._policy = policy
         self.principal = principal
         self._table_loader = table_loader

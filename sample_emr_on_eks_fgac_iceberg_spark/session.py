@@ -143,5 +143,30 @@ def build_session(
     return builder.getOrCreate()
 
 
+# Join-planning confs a sub-session must share with the session it comes
+# from: newSession() starts from the context defaults, NOT the caller's
+# runtime conf, so a broadcast threshold or AQE toggle an operator set
+# would otherwise silently not apply to queries planned in the
+# sub-session.
+PLANNING_CONFS = (
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.shuffle.partitions",
+)
+
+
+def new_session(spark: SparkSession) -> SparkSession:
+    """``spark.newSession()`` (its own temp views and SQL conf) that plans
+    joins as ``spark`` does: the SecureSession's and the SQL frontend's
+    scratch sessions."""
+    sub = spark.newSession()
+    for key in PLANNING_CONFS:
+        try:
+            sub.conf.set(key, spark.conf.get(key))
+        except Exception:
+            pass
+    return sub
+
+
 def has_iceberg() -> bool:
     return _find_iceberg_jar() is not None

@@ -534,7 +534,9 @@ class Warehouse:
             name=name,
             schema_json=json.dumps(schema.jsonValue()),
             partition_by=partition_by,
-            properties=dict(properties or {"table_type": "PARQUET"}),
+            properties=self.validate_properties(
+                properties or {"table_type": "PARQUET"}
+            ),
         )
         os.makedirs(self.data_dir(name), exist_ok=True)
         self._write_meta(meta)
@@ -789,19 +791,42 @@ class Warehouse:
             meta.properties["identifier_fields"] = json.dumps(list(cols))
             self._write_meta(meta)
 
+    _WRITE_MODE_KEYS = ("write.delete.mode", "write.update.mode", "write.merge.mode")
+
+    @classmethod
+    def validate_properties(cls, props: dict[str, str] | None) -> dict[str, str]:
+        """Everything a table property write checks, callable WITHOUT
+        side effects (CREATE OR REPLACE checks before it drops): each
+        ``write.{delete,update,merge}.mode`` must be 'copy-on-write' or
+        'merge-on-read' — any other spelling would silently run
+        copy-on-write."""
+        props = dict(props or {})
+        for key in cls._WRITE_MODE_KEYS:
+            if key in props and props[key] not in ("copy-on-write", "merge-on-read"):
+                raise ValueError(
+                    f"Unknown {key} '{props[key]}': expected 'copy-on-write' "
+                    "or 'merge-on-read'"
+                )
+        return props
+
+    def set_properties(self, name: str, props: dict[str, str]) -> None:
+        """ALTER TABLE … SET TBLPROPERTIES: validate every value first
+        (``validate_properties``), then write them in one metadata
+        update — a rejected value leaves the table unchanged."""
+        props = self.validate_properties(props)
+        name = self._resolve_dml_target(name).name
+        with self._table_lock(name):
+            meta = self._read_meta(name)
+            meta.properties.update(props)
+            self._write_meta(meta)
+
     def set_delete_mode(self, name: str, mode: str) -> None:
         """write.delete.mode: 'copy-on-write' (default) or
         'merge-on-read'. With identifier fields MoR writes EQUALITY
         delete files (content=2, key tuples); without them it writes
         POSITIONAL delete files (content=1, (file_path, pos) rows) —
         the spec's two row-level delete kinds."""
-        name = self._resolve_dml_target(name).name
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"Unknown delete mode '{mode}'")
-        with self._table_lock(name):
-            meta = self._read_meta(name)
-            meta.properties["write.delete.mode"] = mode
-            self._write_meta(meta)
+        self.set_properties(name, {"write.delete.mode": mode})
 
     def _apply_equality_deletes(
         self, meta: TableMeta, df: DataFrame, del_map: dict[str, int]
@@ -1279,7 +1304,10 @@ class Warehouse:
             kept = None
             affected: set[str] = set()
             if scan is not None and pred is not None:
-                _, affected, uris = self._matched_stats(meta, scan.filter(pred))
+                uris = scan.filter(pred).agg(
+                    F.collect_set("__file_path").alias("files")
+                ).collect()[0]["files"]  # scale-ok: 1-row commit-planning aggregate
+                affected = {self._rel_file(meta, u) for u in uris}
                 if affected:
                     kept = (
                         scan.filter(F.col("__file_path").isin(uris))
@@ -1287,7 +1315,7 @@ class Warehouse:
                         .drop("__file_path")
                     )
             rewritten = aligned if kept is None else kept.unionByName(aligned)
-            added = self._rewrite_files(meta, rewritten, "overwrite", affected)
+            added, _ = self._rewrite_files(meta, rewritten, "overwrite", affected)
             return {
                 "added_files": len(added),
                 "replaced_files": len(affected),
@@ -1353,24 +1381,10 @@ class Warehouse:
         path = uri[len("file:"):] if uri.startswith("file:") else uri
         return os.path.relpath(path, os.path.abspath(self.data_dir(meta.name)))
 
-    def _matched_stats(
-        self, meta: TableMeta, matched: DataFrame
-    ) -> tuple[int, set[str], list[str]]:
-        """(row count, relative file set, raw file URIs) of the matched
-        rows — one job: the collect is a per-file aggregate, bounded by
-        file count. The raw URIs are kept verbatim for membership
-        filters (URI normalization — file:/ vs file:/// — must not be
-        reconstructed, only echoed)."""
-        row = matched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set("__file_path").alias("files"),
-        ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-        return row["n"], {self._rel_file(meta, u) for u in row["files"]}, list(row["files"])
-
     def _rewrite_files(
         self,
         meta: TableMeta,
-        rewritten: DataFrame,
+        rewritten: DataFrame | None,
         operation: str,
         removed: set[str],
         removed_deletes: set[str] | None = None,
@@ -1378,75 +1392,117 @@ class Warehouse:
         empty_guard=None,
         order: list | None = None,
         distribute: bool = True,
-    ) -> set[str]:
+        position_deletes: tuple[DataFrame, set[str]] | None = None,
+    ) -> tuple[set[str], set[str]]:
         """Append the rewritten rows as new data files and commit a
-        snapshot that removes the old files from the live set.
-        ``order`` and ``distribute`` pass through to ``_write_data``.
+        snapshot that removes the old files from the live set; returns
+        the added (data files, delete files). ``order`` and
+        ``distribute`` pass through to ``_write_data``.
+        ``position_deletes`` — (rows, data files they reference) — are
+        written by ``_write_position_deletes`` under the same lock and
+        commit in the same snapshot (merge-on-read row-level writes).
 
         ``empty_guard``: an ``Observation`` counting the written rows
-        (metric 'n'). When the statement removes nothing and the guard
-        reports zero rows written — an insert-only MERGE that inserted
-        nothing — the write's 0-row debris is unlinked and NO snapshot
-        commits, preserving the statement's historical no-op semantics
-        without a separate pre-count job."""
+        (metric 'n'). When the statement removes and deletes nothing
+        and the guard reports zero rows written — a MERGE that only
+        inserted, and inserted nothing — the write's 0-row debris is
+        unlinked and NO snapshot commits, preserving the statement's
+        historical no-op semantics without a separate pre-count job."""
         with self._table_lock(meta.name):
-            added = self._write_data(meta, rewritten, order, distribute)
+            deletes = (
+                {}
+                if position_deletes is None
+                else self._write_position_deletes(meta, *position_deletes)
+            )
+            added = (
+                set()
+                if rewritten is None
+                else self._write_data(meta, rewritten, order, distribute)
+            )
             if (
                 empty_guard is not None
                 and not removed
                 and not removed_deletes
+                and not deletes
                 and int(empty_guard.get["n"]) == 0
             ):
                 for f in added:
                     os.remove(os.path.join(self.data_dir(meta.name), f))
-                return set()
+                return set(), set()
             self._commit_snapshot(
                 meta, operation, added, removed,
-                removed_deletes=removed_deletes, txn=txn,
+                removed_deletes=removed_deletes, txn=txn, **deletes,
             )
-        return added
+        return added, deletes.get("added_deletes", set())
+
+    def _write_position_deletes(
+        self, meta: TableMeta, rows: DataFrame, refs: set[str]
+    ) -> dict:
+        """Append ``rows`` — (file_path, pos) pairs — as positional
+        delete files (Iceberg content=1; columns named per the spec's
+        reserved fields 2147483546/2147483545), deduplicated and sorted
+        by (file_path, pos) as the spec asks. Returns the commit
+        arguments: the added files, their kind, and the data files
+        ``refs`` they reference (a scan skips a delete file whose refs
+        miss every file it reads). The caller holds the table lock, so
+        the delete-dir diff sees this write only."""
+        ddir = self.delete_dir(meta.name)
+        os.makedirs(ddir, exist_ok=True)
+        before = self._delete_files_on_disk(meta.name)
+        rows = rows.dropDuplicates(["file_path", "pos"])
+        rows.sortWithinPartitions("file_path", "pos").write.mode("append").parquet(ddir)
+        added = self._delete_files_on_disk(meta.name) - before
+        refs = sorted(refs)
+        return {
+            "added_deletes": added,
+            "delete_kinds": {f: "positional" for f in added},
+            "delete_refs": {f: refs for f in added},
+        }
+
+    @staticmethod
+    def _predicate(condition) -> F.Column:
+        """A DELETE/UPDATE WHERE: SQL text, a Column, or None (all rows)."""
+        if condition is None:
+            return F.lit(True)
+        return F.expr(condition) if isinstance(condition, str) else condition
 
     def delete_from(self, name: str, condition=None, alias: str | None = None) -> dict:
-        """DELETE FROM name [AS alias] [WHERE condition] — copy-on-
-        write: files containing no matching row are untouched; matched
-        files are rewritten without the matching rows. Rows where the
+        """DELETE FROM name [AS alias] [WHERE condition]. Rows where the
         predicate is NULL are kept (SQL three-valued semantics). The
         condition sees the table's rows under ``alias`` (``x.k``, also
-        from a correlated subquery)."""
-        meta = self._resolve_dml_target(name)
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        if cond is None:
-            cond = F.lit(True)
-        if meta.properties.get("write.delete.mode") == "merge-on-read":
-            return self._delete_merge_on_read(meta, cond, alias)
-        scan = self._aliased(self._scan_live(meta, with_file=True), alias)
-        if scan is None:
-            return {"deleted_rows": 0, "rewritten_files": 0}
-        n, affected, uris = self._matched_stats(meta, scan.filter(cond))
-        if not affected:
-            return {"deleted_rows": 0, "rewritten_files": 0}
-        in_affected = F.col("__file_path").isin(uris)
-        kept = (
-            scan.filter(in_affected)
-            .filter(~F.coalesce(cond, F.lit(False)))
-            .drop("__file_path")
-        )
-        self._rewrite_files(meta, kept, "delete", affected)
-        return {"deleted_rows": n, "rewritten_files": len(affected)}
+        from a correlated subquery).
 
-    def _delete_merge_on_read(self, meta: TableMeta, cond, alias: str | None) -> dict:
-        """DELETE under write.delete.mode=merge-on-read: write the
-        matched rows' identifier-column tuples as an equality delete
+        A row-level write (``_row_level_write``) of one WHEN MATCHED
+        THEN DELETE clause, the WHERE being the match. Copy-on-write
+        (default) rewrites only the files holding a matched row,
+        without it: ``{"deleted_rows", "rewritten_files"}``. With
+        ``write.delete.mode=merge-on-read`` no data file is rewritten:
+        the matched rows become one positional delete file, or, on a
+        table with identifier fields, an equality delete file of their
+        keys (``_delete_equality``): ``{"deleted_rows",
+        "delete_files", "mode"}``."""
+        meta = self._resolve_dml_target(name)
+        cond = self._predicate(condition)
+        mor = meta.properties.get("write.delete.mode") == "merge-on-read"
+        keys = json.loads(meta.properties.get("identifier_fields", "[]"))
+        if mor and keys:
+            return self._delete_equality(meta, cond, alias, keys)
+        stats = self._row_level_write(
+            meta, "delete", mor, cond, [{"action": "delete"}], target_alias=alias
+        )
+        del stats["updated_rows"], stats["inserted_rows"]
+        return stats
+
+    def _delete_equality(
+        self, meta: TableMeta, cond, alias: str | None, keys: list[str]
+    ) -> dict:
+        """Merge-on-read DELETE on a table with identifier fields: write
+        the matched rows' identifier-column tuples as an equality delete
         file and commit — no data file is rewritten. The scan already
         subtracts previously-committed deletes, so re-deleting the same
         rows is a no-op commit. Cost at 100 TB: one pruned scan to find
         the keys + a keys-only write, vs CoW's rewrite of every file
         containing a match."""
-        keys = json.loads(meta.properties.get("identifier_fields", "[]"))
-        if not keys:
-            # no row identity -> the spec's OTHER delete kind:
-            # positional delete files
-            return self._delete_positional(meta, cond, alias)
         scan = self._aliased(self._scan_live(meta, with_file=True), alias)
         if scan is None:
             return {"deleted_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
@@ -1502,55 +1558,6 @@ class Warehouse:
         (absolute URIs go stale when rename_table moves the directory;
         the rel path does not)."""
         return F.substring_index(col, Warehouse._REL_AFTER_DATA, -1)
-
-    def _delete_positional(self, meta: TableMeta, cond, alias: str | None) -> dict:
-        """DELETE under merge-on-read WITHOUT identifier fields: write
-        the matched rows' (file_path, pos) tuples as a POSITIONAL
-        delete file (Iceberg content=1; columns named per the spec's
-        reserved fields 2147483546/2147483545) and commit — no data
-        file rewritten, no row identity required. The scan already
-        subtracts previously-committed deletes, so re-deleting the
-        same rows is a no-op commit."""
-        scan = self._aliased(self._scan_live(meta, with_pos=True), alias)
-        if scan is None:
-            return {"deleted_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
-        hit = F.coalesce(cond, F.lit(False))
-        matched = (
-            scan.filter(hit)
-            .select(
-                F.col("__pos_file").alias("file_path"),
-                F.col("__pos").cast("bigint").alias("pos"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # one job: match count + the referenced data files (bounded by
-        # the table's file count — the manifest stats Iceberg records
-        # per delete file, used by scans to scope delete application)
-        row = matched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(self._rel_expr(F.col("file_path"))).alias("refs"),
-        ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-        n, refs = row["n"], sorted(row["refs"])
-        if n == 0:
-            return {"deleted_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
-        ddir = self.delete_dir(meta.name)
-        os.makedirs(ddir, exist_ok=True)
-        with self._table_lock(meta.name):
-            before = self._delete_files_on_disk(meta.name)
-            # spec: positional delete rows sorted by (file_path, pos)
-            matched.dropDuplicates(["file_path", "pos"]).sortWithinPartitions(
-                "file_path", "pos"
-            ).write.mode("append").parquet(ddir)
-            added = self._delete_files_on_disk(meta.name) - before
-            self._commit_snapshot(
-                meta,
-                "delete",
-                added=set(),
-                added_deletes=added,
-                delete_kinds={f: "positional" for f in added},
-                delete_refs={f: refs for f in added},
-            )
-        return {"deleted_rows": n, "delete_files": len(added), "mode": "merge-on-read"}
 
     @staticmethod
     def _delete_kinds_from_meta(meta: TableMeta) -> dict[str, str]:
@@ -1659,7 +1666,7 @@ class Warehouse:
         for p in parts[1:]:
             dels = dels.unionByName(p)
         cond = (
-            (self._rel_expr(F.col("__pos_file")) == F.col("__d_rel"))
+            (self._rel_expr(F.col("__file_path")) == F.col("__d_rel"))
             & (F.col("__pos") == F.col("__d_pos"))
             & (F.col("__del_seq") >= F.col("__seq"))
         )
@@ -1668,104 +1675,34 @@ class Warehouse:
     def update_where(
         self, name: str, assignments: dict, condition=None, alias: str | None = None
     ) -> dict:
-        """UPDATE name [AS alias] SET col = expr[, …] [WHERE condition]
-        — file-granular copy-on-write by default; assignment expressions
-        may reference any column of the row, qualified by ``alias`` too
-        (also from a correlated subquery). With
-        ``write.update.mode=merge-on-read`` (Iceberg's independent
-        update-mode knob) the matched rows become a positional delete
-        file plus an appended data file of the rewritten rows — one
-        snapshot, no existing data file rewritten."""
+        """UPDATE name [AS alias] SET col = expr[, …] [WHERE condition].
+        Assignment expressions may reference any column of the row,
+        qualified by ``alias`` too (also from a correlated subquery).
+
+        A row-level write (``_row_level_write``) of one WHEN MATCHED
+        THEN UPDATE clause, the WHERE being the match. Copy-on-write
+        (default) rewrites the files holding a matched row:
+        ``{"updated_rows", "rewritten_files"}``. With
+        ``write.update.mode=merge-on-read`` (Iceberg's update-mode knob,
+        independent of the delete mode) the matched rows become one
+        positional delete file plus appended rows carrying the new
+        values, in one snapshot; no data file is rewritten:
+        ``{"updated_rows", "delete_files", "mode"}``."""
         meta = self._resolve_dml_target(name)
         schema_names = {f.name for f in meta.schema.fields}
         for col in assignments:
             if col not in schema_names:
                 raise SchemaMismatchError(f"UPDATE {name}: unknown column '{col}'")
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        if cond is None:
-            cond = F.lit(True)
-        if meta.properties.get("write.update.mode") == "merge-on-read":
-            return self._update_merge_on_read(meta, assignments, cond, alias)
-        scan = self._aliased(self._scan_live(meta, with_file=True), alias)
-        if scan is None:
-            return {"updated_rows": 0, "rewritten_files": 0}
-        n, affected, uris = self._matched_stats(meta, scan.filter(cond))
-        if not affected:
-            return {"updated_rows": 0, "rewritten_files": 0}
-        in_affected = F.col("__file_path").isin(uris)
-        hit = F.coalesce(cond, F.lit(False))
-        rewritten = scan.filter(in_affected).select(
-            *[
-                (
-                    F.when(hit, F.expr(assignments[f.name]).cast(f.dataType))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name)
-                )
-                for f in meta.schema.fields
-            ]
+        stats = self._row_level_write(
+            meta,
+            "update",
+            meta.properties.get("write.update.mode") == "merge-on-read",
+            self._predicate(condition),
+            [{"action": "update", "set": assignments}],
+            target_alias=alias,
         )
-        self._rewrite_files(meta, rewritten, "update", affected)
-        return {"updated_rows": n, "rewritten_files": len(affected)}
-
-    def _update_merge_on_read(
-        self, meta: TableMeta, assignments: dict, cond, alias: str | None
-    ) -> dict:
-        """UPDATE under write.update.mode=merge-on-read: the spec's
-        delete+insert decomposition — matched rows' (file_path, pos)
-        tuples become a positional delete file, the assignment-applied
-        rows append as a NEW data file, and both commit in ONE
-        snapshot. The new file's data sequence equals the delete's, and
-        positional deletes key on (path, ordinal), so the rewritten
-        rows are immune by identity, not by sequence. Cost at 100 TB:
-        matched rows only (keys file + updated rows), vs CoW's rewrite
-        of every file containing a match."""
-        scan = self._aliased(self._scan_live(meta, with_pos=True), alias)
-        if scan is None:
-            return {"updated_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
-        hit = F.coalesce(cond, F.lit(False))
-        matched = scan.filter(hit).localCheckpoint(eager=False)
-        row = matched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(self._rel_expr(F.col("__pos_file"))).alias("refs"),
-        ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-        n, refs = row["n"], sorted(row["refs"])
-        if n == 0:
-            return {"updated_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
-        updated = matched.select(
-            *[
-                F.expr(assignments[f.name]).alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
-                for f in meta.schema.fields
-            ]
-        )
-        dels = matched.select(
-            F.col("__pos_file").alias("file_path"),
-            F.col("__pos").cast("bigint").alias("pos"),
-        )
-        ddir = self.delete_dir(meta.name)
-        os.makedirs(ddir, exist_ok=True)
-        with self._table_lock(meta.name):
-            before_d = self._delete_files_on_disk(meta.name)
-            dels.dropDuplicates(["file_path", "pos"]).sortWithinPartitions(
-                "file_path", "pos"
-            ).write.mode("append").parquet(ddir)
-            added_deletes = self._delete_files_on_disk(meta.name) - before_d
-            self._commit_snapshot(
-                meta,
-                "update",
-                added=self._write_data(meta, updated),
-                added_deletes=added_deletes,
-                delete_kinds={f: "positional" for f in added_deletes},
-                delete_refs={f: refs for f in added_deletes},
-            )
-        return {
-            "updated_rows": n,
-            "delete_files": len(added_deletes),
-            "mode": "merge-on-read",
-        }
+        del stats["deleted_rows"], stats["inserted_rows"]
+        return stats
 
     # ------------------------------------------------------------- MERGE
     @staticmethod
@@ -1821,22 +1758,18 @@ class Warehouse:
         return list(matched_clauses), list(not_matched_clauses), not_matched_by_source
 
     @staticmethod
-    def _clause_col(clauses, gate, base) -> F.Column:
+    def _clause_col(clauses, base) -> F.Column:
         """First-match-wins clause selector: an int column holding
-        base+i for the first clause whose condition passes under
-        ``gate`` (the matched / not-matched predicate), else NULL.
-        NULL-valued conditions fail closed (SQL three-valued logic)."""
+        base+i for the first clause whose condition passes, else NULL.
+        NULL-valued conditions fail closed (SQL three-valued logic); no
+        clause after an unconditional one can fire."""
         expr = None
         for i, c in enumerate(clauses):
-            cond = gate
-            if c.get("condition") is not None:
-                cond = cond & F.coalesce(F.expr(c["condition"]), F.lit(False))
+            if c.get("condition") is None:
+                return F.lit(base + i) if expr is None else expr.otherwise(base + i)
+            cond = F.coalesce(F.expr(c["condition"]), F.lit(False))
             expr = F.when(cond, base + i) if expr is None else expr.when(cond, base + i)
-        return (
-            expr.otherwise(F.lit(None).cast("int"))
-            if expr is not None
-            else F.lit(None).cast("int")
-        )
+        return F.lit(None).cast("int") if expr is None else expr
 
     @staticmethod
     def _clause_actions(clauses, base) -> tuple[set, set]:
@@ -1858,31 +1791,34 @@ class Warehouse:
             e = F.when(cond, v) if e is None else e.when(cond, v)
         return e.otherwise(keep_col) if e is not None else keep_col
 
-    def _merged_row_cols(self, m_cls, s_cls, clause_col, fields, ta):
-        """Post-merge value of every schema column for a surviving
-        (non-deleted) target row: matched UPDATE clauses layer over the
-        kept target value, by-source UPDATE clauses over that — clause
-        indices are disjoint (0.. vs 100..), so exactly one CASE arm
-        fires per row."""
-        return [
-            self._update_col(
-                s_cls, 100, clause_col, f,
-                self._update_col(
-                    m_cls, 0, clause_col, f, F.col(f"{ta}.{f.name}")
-                ),
-            ).alias(f.name)
-            for f in fields
-        ]
+    def _updated_cols(self, matched, by_source, fields, ta) -> dict[str, F.Column]:
+        """Post-write value of each schema column an UPDATE clause sets,
+        over a classified target row: matched UPDATE clauses layer over
+        the kept target value (``ta.col``, or ``col`` without an alias),
+        by-source UPDATE clauses over that — clause indices are
+        disjoint (0.. vs 100..), so exactly one CASE arm fires per
+        row."""
+        clause = F.col("__clause")
+        out = {}
+        for f in fields:
+            if any(
+                c["action"] == "update" and f.name in c["set"]
+                for c in (*matched, *by_source)
+            ):
+                keep = F.col(f"{ta}.{f.name}" if ta else f.name)
+                out[f.name] = self._update_col(
+                    by_source, 100, clause, f,
+                    self._update_col(matched, 0, clause, f, keep),
+                )
+        return out
 
     def _insert_frame(
         self, meta: TableMeta, unmatched: DataFrame, clauses, source_cols
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """NOT MATCHED [AND cond] THEN INSERT, first-match-wins: rows
         matching no insert clause are NOT inserted; each clause maps
         target columns from source expressions (values=True → by
         name)."""
-        if not clauses:
-            return None
         for c in clauses:
             if c["values"] is True:
                 missing = [
@@ -1896,7 +1832,7 @@ class Warehouse:
                         f"columns {missing}"
                     )
         picked = unmatched.withColumn(
-            "__ic", self._clause_col(clauses, F.lit(True), 0)
+            "__ic", self._clause_col(clauses, 0)
         ).filter(F.col("__ic").isNotNull())
         cols = []
         for f in meta.schema.fields:
@@ -1963,16 +1899,18 @@ class Warehouse:
         (exactly-once CDC apply): a batch at or below the source's
         committed watermark returns ``{"skipped": True}``.
 
-        Plan shape (copy-on-write): ONE join evaluates every clause
-        gate, enforces the one-source-row-per-target-row cardinality
-        rule, counts per-action rows, and discovers the affected files
-        — only files where some clause fired are rewritten. Without
-        by-source clauses it is an inner join grouped by each target
-        row's (file, row ordinal); with them, a left join over the
-        whole target. The source is plan-barriered so it evaluates once.
-        With ``write.merge.mode=merge-on-read`` rows firing a clause
-        become ONE positional delete file plus appended replacements —
-        only firing rows pay, no data file is rewritten."""
+        A row-level write (``_row_level_write``): ONE join evaluates
+        every clause gate, enforces the one-source-row-per-target-row
+        cardinality rule and counts per-action rows — an inner join
+        grouped by each target row's (file, row ordinal) without
+        by-source clauses, a left join over the whole target with them.
+        The source is plan-barriered so it evaluates once.
+        Copy-on-write (default) rewrites only the files where some
+        clause fired: ``{"updated_rows", "deleted_rows",
+        "inserted_rows", "rewritten_files"}``. With
+        ``write.merge.mode=merge-on-read`` the firing rows become ONE
+        positional delete file plus appended replacements, and no data
+        file is rewritten: ``{…, "delete_files", "mode"}``."""
         meta = self._resolve_dml_target(name)
         m_cls, i_cls, s_cls = self._norm_merge_clauses(
             matched_update,
@@ -1992,283 +1930,193 @@ class Warehouse:
             # run on this session, and an Observation whose plan runs
             # elsewhere never receives its metrics and waits forever
             source = self.frame_of(source._jdf.queryExecution().analyzed())
-        if meta.properties.get("write.merge.mode") == "merge-on-read":
-            return self._merge_merge_on_read(
-                meta, source, on, m_cls, i_cls, s_cls,
-                target_alias=target_alias, source_alias=source_alias, txn=txn,
-            )
-        source = source.localCheckpoint(eager=False)
-        src = source.withColumn("__matched", F.lit(True)).alias(source_alias)
-        scan = self._scan_live(
-            meta, with_file=True, with_pos=bool(m_cls) and not s_cls
-        )
-        stats = {
-            "updated_rows": 0,
-            "deleted_rows": 0,
-            "inserted_rows": 0,
-            "rewritten_files": 0,
-        }
-        ta = target_alias
-        hit = F.coalesce(F.col("__matched"), F.lit(False))
-        m_upd, m_del = self._clause_actions(m_cls, 0)
-        s_upd, s_del = self._clause_actions(s_cls, 100)
-        upd_idx, del_idx = sorted(m_upd | s_upd), sorted(m_del | s_del)
-
-        def clause_over_joined():
-            return F.when(
-                hit, self._clause_col(m_cls, F.lit(True), 0)
-            ).otherwise(self._clause_col(s_cls, F.lit(True), 100))
-
-        def count_in(idx):
-            if not idx:
-                return F.lit(0)
-            return F.sum(F.when(F.col("c").isin(idx), 1).otherwise(0))
-
-        t = None
-        affected: set[str] = set()
-        uris: list[str] = []
-        if scan is not None and (m_cls or s_cls):
-            if s_cls:
-                # by-source clauses fire on target rows with no match,
-                # so every target row goes through a left join; freeze
-                # row ids so the cardinality check counts real rows
-                t = scan.withColumn(
-                    "__uid", F.monotonically_increasing_id()
-                ).localCheckpoint(eager=False).alias(ta)
-                joined, row_id = t.join(src, F.expr(on), "left"), ["__uid"]
-            else:
-                # only a matched row can fire a clause: join the matched
-                # rows alone, keyed by the (file, row ordinal) identity
-                # the merge-on-read path uses — no barrier over the target
-                t = scan.alias(ta)
-                joined = t.join(src, F.expr(on), "inner")
-                row_id = [F.col(f"{ta}.__file_path"), F.col(f"{ta}.__pos")]
-            per_row = joined.withColumn("__clause", clause_over_joined()).groupBy(
-                *row_id
-            ).agg(
-                F.sum(hit.cast("int")).alias("n"),
-                F.first("__file_path").alias("f"),
-                F.min("__clause").alias("c"),
-            )
-            agg = per_row.agg(
-                F.max("n").alias("max_n"),
-                F.collect_set(
-                    F.when(F.col("c").isNotNull(), F.col("f"))
-                ).alias("files"),
-                count_in(upd_idx).alias("upd"),
-                count_in(del_idx).alias("del"),
-            ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-            if agg["max_n"] is not None and agg["max_n"] > 1:
-                raise MergeCardinalityError(
-                    f"MERGE INTO {name}: a target row matched "
-                    f"{agg['max_n']} source rows"
-                )
-            stats["updated_rows"] = int(agg["upd"] or 0)
-            stats["deleted_rows"] = int(agg["del"] or 0)
-            affected = {self._rel_file(meta, u) for u in agg["files"]}
-            uris = list(agg["files"])
-        elif scan is not None:
-            t = scan.localCheckpoint(eager=False).alias(ta)
-
-        rewritten = None
-        if affected:
-            joined = (
-                t.filter(F.col("__file_path").isin(uris))
-                .join(src, F.expr(on), "left")
-                .withColumn("__clause", clause_over_joined())
-            )
-            if del_idx:
-                joined = joined.filter(
-                    ~F.coalesce(F.col("__clause").isin(del_idx), F.lit(False))
-                )
-            rewritten = joined.select(
-                *self._merged_row_cols(
-                    m_cls, s_cls, F.col("__clause"), meta.schema.fields, ta
-                )
-            )
-
-        inserts = self._insert_frame(
+        return self._row_level_write(
             meta,
-            src.join(t, F.expr(on), "left_anti") if t is not None else src,
-            i_cls,
-            source.columns,
+            "merge",
+            meta.properties.get("write.merge.mode") == "merge-on-read",
+            on,
+            m_cls,
+            by_source=s_cls,
+            inserts=i_cls,
+            source=source,
+            target_alias=target_alias,
+            source_alias=source_alias,
+            txn=txn,
         )
-        # the insert count rides the write job via Observation instead
-        # of a separate count action (VERDICT r9: one fewer pass over
-        # the source per statement; same pattern as the MoR path below)
-        obs = None
-        if inserts is not None:
-            from pyspark.sql import Observation
 
-            obs = Observation()
-            inserts = inserts.observe(obs, F.count(F.lit(1)).alias("n"))
-
-        if rewritten is not None and inserts is not None:
-            out = rewritten.unionByName(inserts)
-        elif rewritten is not None:
-            out = rewritten
-        elif inserts is not None:
-            out = inserts
-        else:
-            return stats
-        self._rewrite_files(meta, out, "merge", affected, txn=txn, empty_guard=obs)
-        if obs is not None:
-            stats["inserted_rows"] = int(obs.get["n"])
-        stats["rewritten_files"] = len(affected)
-        return stats
-
-    def _merge_merge_on_read(
+    def _row_level_write(
         self,
         meta: TableMeta,
-        source: DataFrame,
-        on: str,
-        m_cls: list[dict],
-        i_cls: list[dict],
-        s_cls: list[dict],
+        operation: str,
+        mor: bool,
+        on,
+        matched: list[dict],
         *,
-        target_alias: str,
-        source_alias: str,
+        by_source: list[dict] = (),
+        inserts: list[dict] = (),
+        source: DataFrame | None = None,
+        target_alias: str | None = None,
+        source_alias: str = "s",
         txn: tuple[str, int] | None = None,
     ) -> dict:
-        """MERGE under write.merge.mode=merge-on-read: rows firing a
-        matched / not-matched-by-source clause become a positional
-        delete file; their UPDATE-applied replacements and the NOT
-        MATCHED inserts append as new data files; everything commits in
-        ONE snapshot stamped with the delete files' kind and referenced
-        data files (scan-time scoping). Only firing ROWS pay — other
-        rows in the same files are untouched. The (file, pos) identity
-        doubles as the row id for the cardinality rule. The insert
-        count rides the write job via ``Observation`` instead of a
-        separate count action per micro-batch (VERDICT r8)."""
+        """The one row-level write under DELETE, UPDATE and MERGE: a row
+        classifier, one aggregate, then one commit step per write mode
+        (Iceberg's ``write.{delete,update,merge}.mode`` picks how a
+        change commits, not how it is computed).
+
+        Classifier: the target scan under ``target_alias``, each row
+        matched by ``on`` — the MERGE join condition with ``source``,
+        or without a source the DELETE/UPDATE WHERE — and tagged with
+        ``__clause``: the first firing ``matched`` clause (0..) of a
+        matched row, the first firing ``by_source`` clause (100..) of
+        an unmatched one, else NULL. Without by-source clauses only a
+        matched row can fire, so the classifier keeps the matched rows
+        alone (an inner join, or a filter); with them it is a left join
+        over the whole target.
+
+        Aggregate, one job: per-action row counts, the files holding a
+        firing row, and for MERGE the most source rows one target row
+        matched (the cardinality rule) — grouped by the row identity
+        (``__file_path``, ``__pos``), or by frozen ``__uid`` row ids
+        where a copy-on-write by-source MERGE reads no positions.
+
+        Commit: copy-on-write re-classifies the rows of the touched
+        files and rewrites them without the deleted rows and with the
+        updates applied; merge-on-read writes the firing rows'
+        positions as one positional delete file and appends only the
+        updated rows (they share the delete file's sequence number, but
+        a positional delete names (path, ordinal), so they are immune by
+        identity, not by sequence). The NOT MATCHED ``inserts`` ride the
+        same write, counted by an ``Observation``; a statement that
+        changes nothing commits nothing."""
         from pyspark.sql import Observation
 
-        source = source.localCheckpoint(eager=False)
-        src = source.withColumn("__matched", F.lit(True)).alias(source_alias)
-        scan = self._scan_live(meta, with_pos=True)
-        stats = {
-            "updated_rows": 0,
-            "deleted_rows": 0,
-            "inserted_rows": 0,
-            "delete_files": 0,
-            "mode": "merge-on-read",
-        }
-        ta = target_alias
-        hit = F.coalesce(F.col("__matched"), F.lit(False))
-        m_upd, m_del = self._clause_actions(m_cls, 0)
-        s_upd, s_del = self._clause_actions(s_cls, 100)
+        stats = {"updated_rows": 0, "deleted_rows": 0, "inserted_rows": 0}
+        if mor:
+            stats.update(delete_files=0, mode="merge-on-read")
+        else:
+            stats["rewritten_files"] = 0
+        fires = bool(matched or by_source)
+        src = None
+        if source is not None:
+            source = source.localCheckpoint(eager=False)
+            src = source.withColumn("__matched", F.lit(True)).alias(source_alias)
+            on = F.expr(on)
+            hit = F.coalesce(F.col("__matched"), F.lit(False))
+        else:
+            hit = F.coalesce(on, F.lit(False))
+        # positions name the rows of a delete file and identify a MERGE's
+        # target rows; a copy-on-write by-source MERGE uses row ids
+        with_pos = fires and (mor or (src is not None and not by_source))
+        scan = self._scan_live(meta, with_file=fires, with_pos=with_pos)
+        row_id = ["__file_path", "__pos"]
+        if scan is not None and src is not None and fires and not with_pos:
+            # every target row goes through the left join: freeze row
+            # ids so the cardinality check counts real rows
+            scan = scan.withColumn(
+                "__uid", F.monotonically_increasing_id()
+            ).localCheckpoint(eager=False)
+            row_id = ["__file_path", "__uid"]
+        t = self._aliased(scan, target_alias)
+        on_match = self._clause_col(matched, 0)
+        clause = F.when(hit, on_match)
+        if by_source:
+            clause = clause.otherwise(self._clause_col(by_source, 100))
+
+        def classify(target: DataFrame, how: str) -> DataFrame:
+            # an inner match keeps matched rows only: their clause needs
+            # no gate
+            if src is not None:
+                rows = target.join(src, on, how)
+            else:
+                rows = target.filter(on) if how == "inner" else target
+            return rows.withColumn("__clause", on_match if how == "inner" else clause)
+
+        m_upd, m_del = self._clause_actions(matched, 0)
+        s_upd, s_del = self._clause_actions(by_source, 100)
         upd_idx, del_idx = sorted(m_upd | s_upd), sorted(m_del | s_del)
-        t = None
-        dels = None
-        new_rows = None
-        if scan is not None and (m_cls or s_cls):
-            t = scan.localCheckpoint(eager=False).alias(ta)
-            clause = F.when(
-                hit, self._clause_col(m_cls, F.lit(True), 0)
-            ).otherwise(self._clause_col(s_cls, F.lit(True), 100))
-            joined = (
-                t.join(src, F.expr(on), "left")
-                .withColumn("__clause", clause)
-                .localCheckpoint(eager=False)
-            )
-            per_row = joined.groupBy(
-                F.col(f"{ta}.__pos_file"), F.col(f"{ta}.__pos")
-            ).agg(
-                F.sum(hit.cast("int")).alias("n"), F.min("__clause").alias("c")
-            )
-
-            def count_in(idx):
-                if not idx:
-                    return F.lit(0)
-                return F.sum(F.when(F.col("c").isin(idx), 1).otherwise(0))
-
-            agg = per_row.agg(
-                F.max("n").alias("max_n"),
-                count_in(upd_idx).alias("upd"),
-                count_in(del_idx).alias("del"),
+        # SQL text over the classifier's columns: one py4j call each
+        fired = "__clause IS NOT NULL"
+        upd_in = f"__clause IN ({', '.join(map(str, upd_idx))})" if upd_idx else "false"
+        del_in = f"__clause IN ({', '.join(map(str, del_idx))})" if del_idx else "false"
+        affected: set[str] = set()
+        rows = dels = None
+        if t is not None and fires:
+            classified = classify(t, "left" if by_source else "inner")
+            if mor:  # read again by the delete and append writes
+                classified = classified.localCheckpoint(eager=False)
+            per_row, most = classified, []
+            if src is not None:
+                per_row = classified.groupBy(*row_id).agg(
+                    F.expr("count(__matched) AS __n"),
+                    F.expr("min(__clause) AS __clause"),
+                )
+                most = ["max(__n) AS max_n"]
+            agg = per_row.selectExpr(
+                f"collect_set(if({fired}, __file_path, NULL)) AS files",
+                f"count_if({upd_in}) AS upd",
+                f"count_if({del_in}) AS del",
+                *most,
             ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-            if agg["max_n"] is not None and agg["max_n"] > 1:
+            if most and (agg["max_n"] or 0) > 1:
                 raise MergeCardinalityError(
                     f"MERGE INTO {meta.name}: a target row matched "
                     f"{agg['max_n']} source rows"
                 )
-            stats["updated_rows"] = int(agg["upd"] or 0)
-            stats["deleted_rows"] = int(agg["del"] or 0)
-            if stats["updated_rows"] or stats["deleted_rows"]:
-                fired = joined.filter(F.col("__clause").isNotNull())
-                dels = fired.select(
-                    F.col(f"{ta}.__pos_file").alias("file_path"),
-                    F.col(f"{ta}.__pos").cast("bigint").alias("pos"),
+            stats["updated_rows"], stats["deleted_rows"] = agg["upd"], agg["del"]
+            # raw URIs are echoed verbatim into the rewrite's membership
+            # filter (file:/ vs file:/// must not be rebuilt)
+            uris = list(agg["files"])
+            affected = {self._rel_file(meta, u) for u in uris}
+            if affected and mor:
+                dels = classified.filter(fired).selectExpr(
+                    "__file_path AS file_path", "__pos AS pos"
                 )
-                if upd_idx:
-                    new_rows = fired.filter(
-                        F.col("__clause").isin(upd_idx)
-                    ).select(
-                        *self._merged_row_cols(
-                            m_cls, s_cls, F.col("__clause"),
-                            meta.schema.fields, ta,
-                        )
+                rows = classified.filter(upd_in) if upd_idx else None
+            elif affected:
+                rows = classify(t.filter(F.col("__file_path").isin(uris)), "left")
+                if del_idx:
+                    rows = rows.filter(f"NOT coalesce({del_in}, false)")
+        out = None
+        if rows is not None:
+            fields = meta.schema.fields
+            new = self._updated_cols(matched, by_source, fields, target_alias)
+            if src is None:  # the write projects to the declared schema
+                out = rows.withColumns(new) if new else rows
+            else:  # the source's columns go: inserts union by name
+                out = rows.select(
+                    *(
+                        new[f.name].alias(f.name)
+                        if f.name in new
+                        else F.col(f"{target_alias}.{f.name}")
+                        for f in fields
                     )
-        elif scan is not None:
-            t = scan.localCheckpoint(eager=False).alias(ta)
-
-        inserts = self._insert_frame(
-            meta,
-            src.join(t, F.expr(on), "left_anti") if t is not None else src,
-            i_cls,
-            source.columns,
-        )
-        obs = None
-        if inserts is not None:
-            obs = Observation()
-            inserts = inserts.observe(obs, F.count(F.lit(1)).alias("n"))
-
-        appended = new_rows
-        if inserts is not None:
-            appended = (
-                appended.unionByName(inserts) if appended is not None else inserts
-            )
-        if appended is None and dels is None:
-            return stats
-
-        ddir = self.delete_dir(meta.name)
-        os.makedirs(ddir, exist_ok=True)
-        with self._table_lock(meta.name):
-            added_deletes: set[str] = set()
-            refs: list[str] = []
-            if dels is not None:
-                ddf = dels.dropDuplicates(["file_path", "pos"]).localCheckpoint(
-                    eager=False
                 )
-                row = ddf.agg(
-                    F.collect_set(self._rel_expr(F.col("file_path"))).alias("r")
-                ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-                refs = sorted(row["r"])
-                before_d = self._delete_files_on_disk(meta.name)
-                ddf.sortWithinPartitions("file_path", "pos").write.mode(
-                    "append"
-                ).parquet(ddir)
-                added_deletes = self._delete_files_on_disk(meta.name) - before_d
-            added = set() if appended is None else self._write_data(meta, appended)
-            if obs is not None:
-                stats["inserted_rows"] = int(obs.get.get("n", 0))
-            if dels is None and new_rows is None and stats["inserted_rows"] == 0:
-                # nothing fired and nothing inserted: drop the 0-row
-                # part files the empty write may have produced and
-                # skip the commit (no no-op snapshots)
-                data = self.data_dir(meta.name)
-                for f in added:
-                    os.remove(os.path.join(data, f))
-                return stats
-            self._commit_snapshot(
-                meta,
-                "merge",
-                added=added,
-                added_deletes=added_deletes,
-                txn=txn,
-                delete_kinds={f: "positional" for f in added_deletes},
-                delete_refs={f: refs for f in added_deletes},
+        obs = None
+        if inserts:
+            unmatched = src.join(t, on, "left_anti") if t is not None else src
+            obs = Observation()
+            added = self._insert_frame(meta, unmatched, inserts, source.columns).observe(
+                obs, F.count(F.lit(1)).alias("n")
             )
-        stats["delete_files"] = len(added_deletes)
+            out = added if out is None else out.unionByName(added)
+        if out is None and dels is None:
+            return stats
+        _, added_deletes = self._rewrite_files(
+            meta,
+            out,
+            operation,
+            set() if mor else affected,
+            txn=txn,
+            empty_guard=obs,
+            position_deletes=None if dels is None else (dels, affected),
+        )
+        if obs is not None:
+            stats["inserted_rows"] = int(obs.get["n"])
+        if mor:
+            stats["delete_files"] = len(added_deletes)
+        else:
+            stats["rewritten_files"] = len(affected)
         return stats
 
     # -------------------------------------------------------------- scan
@@ -2751,14 +2599,15 @@ class Warehouse:
             spec = specs.get(f, tuple(meta.partition_by))
             key = (spec, seq_of.get(f, 0)) if seq_of is not None else (spec,)
             groups.setdefault(key, []).append(f)
+        # (file, row ordinal) identity for positional deletes —
+        # Iceberg's (file_path, pos) tuple, via Spark's parquet metadata
+        # columns
+        with_file = with_file or with_pos
         extra = ("__file_path",) if with_file else ()
         if seq_of is not None:
             extra = extra + ("__seq",)
         if with_pos:
-            # (file, row ordinal) identity for positional deletes —
-            # Iceberg's (file_path, pos) tuple, via Spark's parquet
-            # metadata columns
-            extra = extra + ("__pos_file", "__pos")
+            extra = extra + ("__pos",)
         parts = []
         for key, group_files in groups.items():
             raw = (
@@ -2771,9 +2620,7 @@ class Warehouse:
             if seq_of is not None:
                 raw = raw.withColumn("__seq", F.lit(int(key[1])))
             if with_pos:
-                raw = raw.withColumn(
-                    "__pos_file", F.col("_metadata.file_path")
-                ).withColumn("__pos", F.col("_metadata.row_index"))
+                raw = raw.withColumn("__pos", F.col("_metadata.row_index"))
             parts.append(self._project(raw, meta, extra=extra))
         out = parts[0]
         for p in parts[1:]:
@@ -2951,7 +2798,7 @@ class Warehouse:
         elif del_map:
             scan = scan.drop("__seq")
         if need_pos and not with_pos:
-            scan = scan.drop("__pos_file", "__pos")
+            scan = scan.drop(*(["__pos"] if with_file else ["__file_path", "__pos"]))
         return scan
 
     def _project(self, df: DataFrame, meta: TableMeta, extra: tuple = ()) -> DataFrame:
@@ -3739,7 +3586,7 @@ class Warehouse:
                         img = pre.join(
                             F.broadcast(dels),
                             (
-                                self._rel_expr(F.col("__pos_file"))
+                                self._rel_expr(F.col("__file_path"))
                                 == F.col("__d_rel")
                             )
                             & (F.col("__pos") == F.col("__d_pos")),
@@ -4277,33 +4124,26 @@ class Warehouse:
                     "left_semi",
                 )
                 .drop("__rel")
-                .dropDuplicates(["file_path", "pos"])
                 .localCheckpoint(eager=False)
             )
             row = kept.agg(
-                F.count(F.lit(1)).alias("n"),
+                F.count_distinct("file_path", "pos").alias("n"),
                 F.collect_set(self._rel_expr(F.col("file_path"))).alias("refs"),
             ).collect()[0]  # scale-ok: 1-row schema-probe aggregate
-            n, refs = int(row["n"]), sorted(row["refs"])
-            added: set[str] = set()
-            if n > 0:
-                before = self._delete_files_on_disk(name)
-                kept.sortWithinPartitions("file_path", "pos").write.mode(
-                    "append"
-                ).parquet(ddir)
-                added = self._delete_files_on_disk(name) - before
+            n = int(row["n"])
+            deletes = (
+                self._write_position_deletes(meta, kept, row["refs"]) if n else {}
+            )
             self._commit_snapshot(
                 meta,
                 "replace",
                 added=set(),
-                added_deletes=added,
                 removed_deletes=set(pos_map) | dangling_eq,
-                delete_kinds={f: "positional" for f in added},
-                delete_refs={f: refs for f in added},
+                **deletes,
             )
         return {
             "removed_delete_files": len(pos_map) + len(dangling_eq),
-            "added_delete_files": len(added),
+            "added_delete_files": len(deletes.get("added_deletes", ())),
             "remaining_rows": n,
         }
 
@@ -4440,7 +4280,7 @@ class Warehouse:
                 if cluster
                 else df.repartition(int(n_out))
             )
-        added = self._rewrite_files(
+        added, _ = self._rewrite_files(
             meta, packed, "replace", live, removed_deletes=set(live_dels),
             order=order, distribute=False,
         )

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sample_emr_on_eks_fgac_iceberg_spark.session import new_session
 from sample_emr_on_eks_fgac_iceberg_spark.sources.warehouse import Warehouse
 
 # Engine grammar: statements Spark 4.1's parser rejects, matched on the
@@ -1882,10 +1883,11 @@ class SqlFrontend:
             T.StructType.fromJson(json.loads(node.tableSchema().json())),
             _partition_spec(node),
         )
+        props = self.warehouse.validate_properties(_properties(node))
         if or_replace and self.warehouse.table_exists(name):
             self.warehouse.drop_table(name)
         self.warehouse.create_table(
-            name, schema, partition_by=partition_by, properties=_properties(node)
+            name, schema, partition_by=partition_by, properties=props
         )
 
     def _ctas(self, stmt: ParsedStatement, name: str) -> None:
@@ -1902,13 +1904,14 @@ class SqlFrontend:
         # validate the full replacement definition BEFORE any drop — a
         # bad partition spec must never destroy the table it replaces
         self.warehouse.validate_table_definition(df.schema, partition_by)
+        props = self.warehouse.validate_properties(_properties(node))
         if or_replace and self.warehouse.table_exists(name):
             # a replace may SELECT from the table it replaces — pin the
             # source rows in executor storage BEFORE the old files go
             df = df.localCheckpoint(eager=True)
             self.warehouse.drop_table(name)
         self.warehouse.create_table(
-            name, df.schema, partition_by=partition_by, properties=_properties(node)
+            name, df.schema, partition_by=partition_by, properties=props
         )
         self.warehouse.insert_into(name, df)
 
@@ -2106,18 +2109,14 @@ class SqlFrontend:
             )
 
     def _set_properties(self, stmt: ParsedStatement, name: str) -> None:
-        for key, value in _scala_map(stmt.node.properties()).items():
-            if key == "write.delete.mode":
-                self.warehouse.set_delete_mode(name, value)
-            elif key == "identifier_fields":
-                self.warehouse.set_identifier_fields(
-                    name, [c.strip() for c in value.split(",") if c.strip()]
-                )
-            else:
-                with self.warehouse._table_lock(name):
-                    meta = self.warehouse._read_meta(name)
-                    meta.properties[key] = value
-                    self.warehouse._write_meta(meta)
+        props = _scala_map(stmt.node.properties())
+        cols = props.pop("identifier_fields", None)
+        if props:
+            self.warehouse.set_properties(name, props)
+        if cols is not None:
+            self.warehouse.set_identifier_fields(
+                name, [c.strip() for c in cols.split(",") if c.strip()]
+            )
 
     def _alter_partitioning(self, m: re.Match) -> None:
         self.warehouse.alter_partition_spec(
@@ -2600,17 +2599,6 @@ class SqlFrontend:
             self.warehouse.read_table(name).createOrReplaceTempView(view_alias(name))
         return [self._table_refs(text, tables, self.warehouse) for text in texts]
 
-    # join-planning confs the isolated scratch session must share with
-    # the caller's session — newSession() starts from the context
-    # defaults, NOT the caller's runtime conf, so a broadcast threshold
-    # or AQE toggle set by the operator would otherwise silently not
-    # apply to frontend-planned queries
-    _SCRATCH_CONF_ALLOWLIST = (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.enabled",
-        "spark.sql.shuffle.partitions",
-    )
-
     def _spj_candidate_tables(self, query: str, tables: set, wh) -> set:
         return spj_candidate_tables(query, tables, wh.bucket_layout)
 
@@ -2628,12 +2616,7 @@ class SqlFrontend:
         grammar only lets hold a query. Otherwise the rewritten text is
         parsed here first. Stored view bodies were checked the same way
         when CREATE VIEW stored them."""
-        scratch = self.spark.newSession()
-        for key in self._SCRATCH_CONF_ALLOWLIST:
-            try:
-                scratch.conf.set(key, self.spark.conf.get(key))
-            except Exception:
-                pass
+        scratch = new_session(self.spark)  # plans joins as the caller's session
         # Trusted ≠ path-addressable: the scratch session resolves every
         # legitimate source through registered views, so SQL-on-files
         # stays off (defense in depth behind the consumer-side

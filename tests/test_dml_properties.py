@@ -1,10 +1,11 @@
 """Property-based DML (hypothesis): for *arbitrary* sequences of
 insert / delete / update / merge over arbitrary modulus predicates, the
-warehouse's copy-on-write state machine must agree with a trivial
-in-memory model — final state, row-level values, AND every historical
-snapshot (time travel replays the whole history). The example-based
-tests pin the named behaviors; these properties show the commit
-machinery composes."""
+warehouse's row-level writes must agree with a trivial in-memory model
+— final state, row-level values, AND every historical snapshot (time
+travel replays the whole history) — under both write modes:
+copy-on-write, and merge-on-read with positional deletes (no identifier
+fields). The example-based tests pin the named behaviors; these
+properties show the commit machinery composes."""
 
 import itertools
 
@@ -85,10 +86,14 @@ def _model_rows(model):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=st.lists(_op, min_size=1, max_size=5))
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
 @pytest.mark.slow
-def test_dml_sequences_match_model(wh, ops):
+def test_dml_sequences_match_model(wh, mode, ops):
     name = f"t{next(_seq)}"
     wh.create_table(name, "k int, v int")
+    wh.set_properties(
+        name, {f"write.{s}.mode": mode for s in ("delete", "update", "merge")}
+    )
     model: dict = {}
     history = []  # (snapshot_id_after_op, expected rows)
     for op in ops:
