@@ -32,12 +32,14 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sample_emr_on_eks_fgac_iceberg_spark.session import new_session
+from sample_emr_on_eks_fgac_iceberg_spark.sources.warehouse import Warehouse
 from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
     ENGINE_GRAMMAR,
     ParsedStatement,
@@ -53,6 +55,9 @@ from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
     strip_sql_comments,
     view_alias,
 )
+
+if TYPE_CHECKING:
+    from sample_emr_on_eks_fgac_iceberg_spark.engine import FgacEngine
 
 # File-format relation spellings (``parquet.`/path```) are never a
 # legitimate consumer token: the policy catalog exposes views only, and
@@ -358,17 +363,39 @@ class PolicyStore:
         return grant
 
     def secured_frame(
-        self, principal: str, table: str, df: DataFrame, action: str = SELECT
+        self, principal: str, table: str, load, action: str = SELECT
     ) -> DataFrame:
+        """The consumer fence: authorize ``action`` on ``table``, then
+        ``load()`` the raw frame, then apply the grant's data-cells
+        filter. Nothing is read before the check passes, so a denied
+        principal learns nothing from the load's own errors (unknown
+        snapshot ids, refs, stream validation)."""
         grant = self.authorize(principal, table, action)
+        f = None
         if grant.filter_name is not None:
             f = self._filters.get(grant.filter_name)
             if f is None:
                 # Dangling grant (its filter was deleted): fail closed
                 # as a denial, never as a KeyError.
                 raise AccessDeniedException(principal, table, action)
-            df = f.apply(df)
-        return df
+        df = load()
+        return df if f is None else f.apply(df)
+
+
+def show_grants_frame(spark: SparkSession, m: re.Match, grants) -> DataFrame:
+    """The rows of ``SHOW GRANTS [ON DATABASE d | ON t]`` (the match of
+    sql_frontend.ENGINE_GRAMMAR's ``_show_grants``), one per Grant that
+    ``grants(resource)`` lists, on both SQL surfaces."""
+    resource = database_resource(m.group(1)) if m.group(1) else m.group(2)
+    rows = [
+        (g.principal, g.table, ", ".join(sorted(g.permissions)), g.grant_option, g.filter_name or "")
+        for g in grants(resource)
+    ]
+    return spark.createDataFrame(
+        sorted(rows),
+        "principal string, table string, permissions string, "
+        "grant_option boolean, data_cells_filter string",
+    )
 
 
 def _delegated(*perms: str, unfiltered: bool = False):
@@ -404,26 +431,9 @@ class SecureSession:
         "Call": "CALL",
     }
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        policy: PolicyStore,
-        principal: str,
-        table_loader,
-        known_tables,
-        scan_version,
-        dml_executor=None,
-        data_version=None,
-        metadata_loader=None,
-        view_store: dict | None = None,
-        stream_loader=None,
-        bucket_layout=None,
-        bucketed_loader=None,
-        shared_views=None,
-        stream_sinks=None,
-    ):
+    def __init__(self, engine: FgacEngine, principal: str):
         # join planning follows the engine session (session.new_session)
-        self._spark = new_session(spark)
+        self._spark = new_session(engine.spark)
         # The SQL surface is a principal boundary: path-based relations
         # (SELECT … FROM parquet.`/path`) would read the warehouse files
         # underneath the policy views, so they are off. The raw
@@ -431,65 +441,35 @@ class SecureSession:
         # reference's equivalent: the query-engine role can read S3,
         # user code cannot — consumer_emr_on_eks_setup.sh:18-19).
         self._spark.conf.set("spark.sql.runSQLOnFiles", "false")
-        self._policy = policy
+        # Writes that pass the permission check execute through the
+        # trusted producer frontend (``engine.sql``) and the streaming
+        # sinks over ``engine.warehouse``. FGAC filters do not apply to
+        # writes: LF write permissions are table-level, and a
+        # filter-scoped principal holds SELECT only.
+        self._engine = engine
+        self._policy = engine.policy
         self.principal = principal
-        self._table_loader = table_loader
-        self._known_tables = known_tables
-        # Trusted write path used only AFTER a write permission check
-        # passes (None → the session is read-only and authorized writes
-        # still deny: fail closed). FGAC filters do not apply to writes
-        # — LF write permissions are table-level, and a filter-scoped
-        # principal holds SELECT only.
-        self._dml_executor = dml_executor
-        # Data-side change token (e.g. Warehouse.state_token): manifest-
-        # planned reads freeze the snapshot's file list inside the
-        # registered view, so views must re-resolve after commits too,
-        # not only after policy mutations.
-        self._data_version = data_version or (lambda: None)
-        # name -> (base table, metadata version) (e.g.
-        # Warehouse.scan_version): the raw scan of a current-snapshot
-        # read is reused while its base table's version holds, so
-        # resource links share one scan and a commit to one table does
-        # not re-plan the others. The policy filter is applied per call.
-        self._scan_version = scan_version
+        # The session's one warehouse handle, bound to the session's
+        # Spark: every table, time-travel, metadata, stream and bucketed
+        # frame it returns resolves in this session's catalog and conf,
+        # and its footer cache lives as long as the session.
+        self._warehouse = Warehouse(self._spark, engine.warehouse.root)
+        # base table -> (metadata version, raw scan): the raw scan of a
+        # current-snapshot read is reused while its base table's version
+        # holds, so resource links share one scan and a commit to one
+        # table does not re-plan the others. The policy filter is
+        # applied per call.
         self._scans: dict[str, tuple] = {}
-        # (name, kind) -> DataFrame for t.snapshots / t.history under
-        # the DESCRIBE permission (LF: table metadata is DESCRIBE-
-        # scoped). t.files / t.partitions stay producer-only — they
-        # expose physical paths.
-        self._metadata_loader = metadata_loader
-        # (spark, name) -> unbounded DataFrame for the policy-mediated
-        # streaming surface (None → this session cannot stream)
-        self._stream_loader = stream_loader
-        # {"append": (table, source_id) -> foreachBatch callable,
-        #  "upsert": (table, source_id, on, keys, order_by) -> …} —
-        # TRUSTED sink builders used only AFTER a write-permission
-        # check passes (the streaming counterpart of dml_executor;
-        # None → this session cannot stream-write, and authorized
-        # writes still deny: fail closed).
-        self._stream_sinks = stream_sinks
-        # storage-partitioned joins for CONSUMERS (the reference's SQL
-        # users get SPJ transparently): name -> (key, N) layout probe,
-        # and (spark, name) -> bucketed-mirror frame the policy filter
-        # then wraps. Both None → consumer joins plan shuffled.
-        self._bucket_layout = bucket_layout
-        self._bucketed_loader = bucketed_loader
         # Engine-shared user-view registry (SURVEY §1.6 maps the
         # reference's resource links to "a view or second catalog
         # name"): name -> {"owner", "text"}. Views are INVOKER'S
         # RIGHTS — the stored SQL text is re-secured per read in the
         # querying principal's own session, so policy changes (revoke,
         # filter edits) propagate instantly and a view is never a
-        # privilege escalation channel.
-        self._views = view_store
-        # () -> {name: sql} of the PRODUCER's persistent catalog views
-        # (warehouse CREATE VIEW). Shared into consumer sessions with
-        # INVOKER'S RIGHTS — the Athena/LF model: the view's stored
-        # text re-secures under the READING principal per query, so a
-        # view never vends rows its reader's own grants would deny.
-        # A consumer's own CREATE VIEW of the same name shadows it
-        # (session scope wins over catalog scope).
-        self._shared_views = shared_views
+        # privilege escalation channel. The producer's catalog views
+        # (warehouse CREATE VIEW) are shared the same way; a consumer's
+        # own view of the same name shadows one (_all_view_texts).
+        self._views = engine.views
         self._views_in_progress: set[str] = set()
         self._view_registered: set[str] = set()
         self._registered: set[str] = set()
@@ -498,12 +478,12 @@ class SecureSession:
 
     def _raw_scan(self, table: str, **time_travel) -> DataFrame:
         if time_travel:
-            return self._table_loader(self._spark, table, **time_travel)
+            return self._warehouse.read_table(table, **time_travel)
         # version first: a commit racing the load only forces a re-plan
-        base, version = self._scan_version(table)
+        base, version = self._warehouse.scan_version(table)
         hit = self._scans.get(base)
         if hit is None or hit[0] != version:
-            hit = (version, self._table_loader(self._spark, table))
+            hit = (version, self._warehouse.read_table(table))
             self._scans[base] = hit
         # fresh attribute ids per frame, as a fresh load would have:
         # two frames of one table (or of a table and its link) must
@@ -512,22 +492,24 @@ class SecureSession:
         return df.toDF(*df.columns)
 
     def _secured(self, table: str, **time_travel) -> DataFrame:
-        raw = self._raw_scan(table, **time_travel)
-        return self._policy.secured_frame(self.principal, table, raw)
+        return self._policy.secured_frame(
+            self.principal, table, lambda: self._raw_scan(table, **time_travel)
+        )
 
     def _refresh_views(self) -> None:
         """Re-resolve grant + filter into the session catalog — called
         per sql() so policy changes (revoke, filter delete) propagate to
         live sessions instead of serving a stale construction-time
         snapshot; the .table() path re-authorizes per call already.
-        Gated on (policy version, warehouse state token), so the
-        steady-state cost per query is one compare + one stat() per
-        table, not N view registrations."""
-        token = (self._policy.version, self._data_version())
+        Gated on (policy version, warehouse state token) — a view
+        freezes its snapshot's file list, so a commit re-resolves it
+        too — so the steady-state cost per query is one compare + one
+        stat() per table, not N view registrations."""
+        token = (self._policy.version, self._warehouse.state_token())
         if token == self._seen_version:
             return
         granted = set()
-        known = set(self._known_tables())
+        known = set(self._warehouse.list_tables())
         for name in self._policy.tables_granted(self.principal):
             if name not in known:
                 # Orphan grant — its table was dropped (LF keeps such
@@ -576,7 +558,7 @@ class SecureSession:
         WRITE ORDERED BY — carry no source clause)."""
         if _FILE_RELATION_TOKEN_RE.search(text) or _has_pathlike_ident(text):
             raise AccessDeniedException(self.principal, "<file-relation>", SELECT)
-        known = {t.lower(): t for t in self._known_tables()}
+        known = {t.lower(): t for t in self._warehouse.list_tables()}
         tgt = target.lower()
         if stmt is not None:
             if stmt.relations is None:
@@ -603,7 +585,7 @@ class SecureSession:
                     )
                 self._authorize_unfiltered_select(resolved)
         else:
-            for t in self._known_tables():
+            for t in self._warehouse.list_tables():
                 if t.lower() != tgt and re.search(
                     rf"\b{re.escape(t)}\b", text, re.I
                 ):
@@ -616,7 +598,7 @@ class SecureSession:
         node = stmt.node
         if node.userSpecifiedColumns().size():
             raise ValueError("View column lists are not supported on the consumer surface")
-        if node.allowExisting() and self._views and name in self._views:
+        if node.allowExisting() and name in self._views:
             return None
         body = node.originalText().get()
         return self._store_view(node.replace(), name, body, stmt.nested(node.query()))
@@ -630,13 +612,11 @@ class SecureSession:
         return self._store_view(bool(m.group(1)), m.group(2), body, None)
 
     def _store_view(self, or_replace: bool, name: str, body: str, parsed):
-        if self._views is None:
-            raise AccessDeniedException(self.principal, name, "CREATE_VIEW")
         if "." in name:
             raise ValueError(
                 f"View names are single-part identifiers, got '{name}'"
             )
-        if name.lower() in {t.lower() for t in self._known_tables()}:
+        if name.lower() in {t.lower() for t in self._warehouse.list_tables()}:
             raise ValueError(f"View name '{name}' collides with a table")
         existing = self._views.get(name)
         if existing is not None:
@@ -658,7 +638,7 @@ class SecureSession:
         return None
 
     def _drop_view(self, text: str, stmt: ParsedStatement, name: str):
-        if self._views is None or name not in self._views:
+        if name not in self._views:
             if stmt.node.ifExists():
                 return None
             raise ValueError(f"View '{name}' does not exist")
@@ -695,7 +675,7 @@ class SecureSession:
 
     # ---------------------------------------------------------- queries
     def table(self, name: str) -> DataFrame:
-        if name not in set(self._known_tables()):
+        if name not in set(self._warehouse.list_tables()):
             raise AccessDeniedException(self.principal, name)
         return self._secured(name)
 
@@ -724,34 +704,20 @@ class SecureSession:
         can tail a shared view and a revoke denies at the next stream
         definition. Bodies that do not resolve to a streamable plan
         refuse loudly."""
-        if name not in set(self._known_tables()):
-            views = self._all_view_texts()
-            if name in views and self._stream_loader is not None:
+        if name not in set(self._warehouse.list_tables()):
+            if name in self._all_view_texts():
                 return self._stream_view(name, frozenset())
             raise AccessDeniedException(self.principal, name)
-        if self._stream_loader is None:
-            raise AccessDeniedException(self.principal, name, "STREAM")
-        # authorize BEFORE touching storage: an ungranted principal
-        # must not learn the table's history shape from the loader's
-        # append-only validation errors
-        grant = self._policy.authorize(self.principal, name, SELECT)
-        raw = self._stream_loader(self._spark, name)
-        if grant.filter_name is not None:
-            f = self._policy._filters.get(grant.filter_name)
-            if f is None:  # dangling grant: fail closed (as in _secured)
-                raise AccessDeniedException(self.principal, name, SELECT)
-            raw = f.apply(raw)
-        return raw
+        return self._policy.secured_frame(
+            self.principal, name, lambda: self._warehouse.stream_table(name)
+        )
 
     def _all_view_texts(self) -> dict:
         """name -> body for every view this session can see: shared
         producer views merged UNDER the session's own (same shadowing
         rule as _materialize_views)."""
-        texts: dict = {}
-        if self._shared_views:
-            texts.update(self._shared_views())
-        if self._views:
-            texts.update({n: v["text"] for n, v in self._views.items()})
+        texts = {v: self._warehouse.view_sql(v) for v in self._warehouse.list_views()}
+        texts.update({n: v["text"] for n, v in self._views.items()})
         return texts
 
     def _stream_view(self, name: str, stack: frozenset) -> DataFrame:
@@ -785,7 +751,7 @@ class SecureSession:
                     _token(other), f"`{alias}`", text, flags=re.I
                 )
         blanked = _blank_sql_strings(text)
-        for t in sorted(set(self._known_tables()), key=len, reverse=True):
+        for t in sorted(set(self._warehouse.list_tables()), key=len, reverse=True):
             if re.search(_token(t), blanked, re.I):
                 # authorizes SELECT + applies the filter/masks to the
                 # unbounded frame — the invoker's-rights fence
@@ -813,12 +779,10 @@ class SecureSession:
         DML path, writes are table-level and unfiltered (LF write
         permissions have no cell-level variant), so a data-cells-
         filtered principal's write grant still applies as-is."""
-        if table not in set(self._known_tables()):
+        if table not in set(self._warehouse.list_tables()):
             raise AccessDeniedException(self.principal, table, perms[0])
         for perm in perms:
             self._policy.authorize(self.principal, table, perm)
-        if self._stream_sinks is None:
-            raise AccessDeniedException(self.principal, table, perms[0])
 
     def writeStream_into(
         self,
@@ -839,8 +803,10 @@ class SecureSession:
         captured at stream start: a revoke mid-stream does not kill a
         running query (stop + restart re-authorizes). Returns the
         StreamingQuery (drained first when available_now)."""
+        from sample_emr_on_eks_fgac_iceberg_spark.streaming.ingest import warehouse_sink
+
         self._authorize_stream_sink(table, (INSERT,))
-        sink = self._stream_sinks["append"](table, source_id)
+        sink = warehouse_sink(self._engine.warehouse, table, source_id)
         writer = stream.writeStream.foreachBatch(sink).option(
             "checkpointLocation", checkpoint_dir
         )
@@ -870,8 +836,10 @@ class SecureSession:
         rule the batch surface applies to UPDATE/MERGE
         (_STATEMENTS); either missing grant raises at sink
         definition, before any micro-batch."""
+        from sample_emr_on_eks_fgac_iceberg_spark.streaming.ingest import upsert_sink
+
         self._authorize_stream_sink(table, (INSERT, DELETE))
-        sink = self._stream_sinks["upsert"](table, source_id, on, keys, order_by)
+        sink = upsert_sink(self._engine.warehouse, table, source_id, on, keys, order_by)
         writer = stream.writeStream.foreachBatch(sink).option(
             "checkpointLocation", checkpoint_dir
         )
@@ -955,14 +923,12 @@ class SecureSession:
         # authorize every referenced relation like any other delegated
         # write (plain DDL has no source relations)
         self._authorize_write_sources(text, target, stmt)
-        if self._dml_executor is None:
-            raise AccessDeniedException(self.principal, database_resource(db), CREATE_TABLE)
-        existed = target in set(self._known_tables())
-        out = self._dml_executor(text, stmt)
+        existed = target in set(self._warehouse.list_tables())
+        out = self._engine.sql(text, stmt)
         # owner grant — only if the statement actually created the
         # table (IF NOT EXISTS on an existing table is a no-op and must
         # not mint grants for a bystander)
-        if not existed and target in set(self._known_tables()):
+        if not existed and target in set(self._warehouse.list_tables()):
             self._policy.grant(
                 self.principal,
                 target,
@@ -1000,9 +966,7 @@ class SecureSession:
         # write grant on one table becomes a read of any table
         # (exfiltration via DML source).
         self._authorize_write_sources(text, target, stmt)
-        if self._dml_executor is None:
-            raise AccessDeniedException(self.principal, target, perms[0])
-        return self._dml_executor(text, stmt)
+        return self._engine.sql(text, stmt)
 
     # Catalog discovery under database-level DESCRIBE (the reference's
     # cross-account Database DESCRIBE, producer_iceberg_datalake_setup
@@ -1015,7 +979,7 @@ class SecureSession:
     def _granted_tables_in(self, db: str) -> list[str]:
         return [
             t
-            for t in self._known_tables()
+            for t in self._warehouse.list_tables()
             if database_of(t) == db and self._policy.grant_for(self.principal, t) is not None
         ]
 
@@ -1045,29 +1009,15 @@ class SecureSession:
 
     def _show_views(self, text: str, stmt: ParsedStatement, _target) -> DataFrame:
         self._refuse_pattern(stmt)
-        rows = sorted((name, v["owner"]) for name, v in (self._views or {}).items())
+        rows = sorted((name, v["owner"]) for name, v in self._views.items())
         return self._spark.createDataFrame(rows, "view_name string, owner string")
 
     def _show_grants(self, text: str, m: re.Match) -> DataFrame:
         """SHOW GRANTS [ON t]: Lake Formation lets any principal list its
         own permissions (and the ones it granted down a delegation
-        chain) — never other principals'. Same row shape as the
-        producer surface (sql_frontend.py) so tooling can reuse it."""
-        resource = database_resource(m.group(1)) if m.group(1) else m.group(2)
-        rows = [
-            (
-                g.principal,
-                g.table,
-                ", ".join(sorted(g.permissions)),
-                g.grant_option,
-                g.filter_name or "",
-            )
-            for g in self._policy.list_grants_visible_to(self.principal, resource)
-        ]
-        return self._spark.createDataFrame(
-            sorted(rows),
-            "principal string, table string, permissions string, "
-            "grant_option boolean, data_cells_filter string",
+        chain) — never other principals'."""
+        return show_grants_frame(
+            self._spark, m, lambda r: self._policy.list_grants_visible_to(self.principal, r)
         )
 
     # The consumer surface's allowlist: parsed root class → (handler,
@@ -1136,7 +1086,7 @@ class SecureSession:
             # exists in the warehouse but not registered for this
             # principal → the same plan-time denial the
             # unresolved-relation handler produces
-            if name in set(self._known_tables()) and name not in self._registered:
+            if name in set(self._warehouse.list_tables()) and name not in self._registered:
                 self._deny(name)
             return None
         if not t.isTemporary:
@@ -1148,12 +1098,10 @@ class SecureSession:
         may DESCRIBE the table may read its snapshot log and history. The
         other metadata tables expose physical paths, a producer surface:
         None leaves their text unresolved."""
-        if self._metadata_loader is None or kind not in ("snapshots", "history"):
+        if kind not in ("snapshots", "history"):
             return None
         self._policy.authorize(self.principal, name, DESCRIBE)
-        # built against this session's SparkSession so the temp view
-        # lands in this session's catalog
-        return self._metadata_loader(self._spark, name, kind)
+        return getattr(self._warehouse, f"{kind}_df")(name)
 
     def _authorize_qualified(self, name: str) -> None:
         # consumer_emr_on_eks_setup.sh:407 queries
@@ -1174,7 +1122,7 @@ class SecureSession:
         query = rewrite_table_refs(
             self._spark,
             query,
-            set(self._known_tables()),
+            set(self._warehouse.list_tables()),
             self._secured,
             self._metadata,
             qualified=self._authorize_qualified,
@@ -1187,22 +1135,19 @@ class SecureSession:
         # ZERO Exchange below it, exactly like the producer SQL path
         # (the reference's SQL users get SPJ transparently; no special
         # method). Fail-open to the plain shuffled view on any denial.
-        if self._bucketed_loader is not None and self._bucket_layout is not None:
-            cands = spj_candidate_tables(
-                query,
-                {n for n in self._registered if "." not in n},
-                self._bucket_layout,
-            )
-            for name in cands:
-                try:
-                    secured = self._policy.secured_frame(
-                        self.principal,
-                        name,
-                        self._bucketed_loader(self._spark, name),
-                    )
-                except AccessDeniedException:
-                    continue
-                secured.createOrReplaceTempView(view_alias(name))
+        cands = spj_candidate_tables(
+            query,
+            {n for n in self._registered if "." not in n},
+            self._warehouse.bucket_layout,
+        )
+        for name in cands:
+            try:
+                secured = self._policy.secured_frame(
+                    self.principal, name, lambda: self._warehouse.bucketed_read(name)
+                )
+            except AccessDeniedException:
+                continue
+            secured.createOrReplaceTempView(view_alias(name))
         if has_sugar(query):
             # SQL sugar the Spark parser lacks or misreads (EXCLUDE,
             # FETCH FIRST, quantified ALL/ANY/SOME, ASOF JOIN, QUALIFY,
@@ -1262,7 +1207,7 @@ class SecureSession:
                 ident.split(".")[-1]
                 for ident in re.findall(r"`([^`]+)`", str(exc))
             }
-            for name in self._known_tables():
+            for name in self._warehouse.list_tables():
                 if name in unresolved and name not in self._registered:
                     # Exists in the warehouse but is not serveable for
                     # this principal (ungranted, or its filter was
@@ -1272,16 +1217,10 @@ class SecureSession:
             raise
 
     def describe(self, name: str) -> list[tuple[str, str]]:
-        self._policy.authorize(self.principal, name, DESCRIBE)
-        grant = self._policy.grant_for(self.principal, name)
-        df = self._raw_scan(name)
-        if grant.filter_name is not None:
-            try:
-                f = self._policy.get_filter(grant.filter_name)
-            except KeyError:
-                raise AccessDeniedException(self.principal, name, DESCRIBE) from None
-            if f.allowed_columns is not None:
-                df = df.select(*f.allowed_columns)
+        # the filtered frame's schema only: nothing executes
+        df = self._policy.secured_frame(
+            self.principal, name, lambda: self._raw_scan(name), DESCRIBE
+        )
         return [(fld.name, fld.dataType.simpleString()) for fld in df.schema.fields]
 
     @property

@@ -1304,10 +1304,11 @@ class Warehouse:
             kept = None
             affected: set[str] = set()
             if scan is not None and pred is not None:
-                uris = scan.filter(pred).agg(
-                    F.collect_set("__file_path").alias("files")
+                files = scan.filter(pred).selectExpr(
+                    f"collect_set({self._FILE_REF}) AS files"
                 ).collect()[0]["files"]  # scale-ok: 1-row commit-planning aggregate
-                affected = {self._rel_file(meta, u) for u in uris}
+                uris = [f.uri for f in files]
+                affected = {f.rel for f in files}
                 if affected:
                     kept = (
                         scan.filter(F.col("__file_path").isin(uris))
@@ -1376,10 +1377,6 @@ class Warehouse:
     def _aliased(scan: DataFrame | None, alias: str | None) -> DataFrame | None:
         """A DML scan under the statement's target alias (``t AS x``)."""
         return scan.alias(alias) if scan is not None and alias else scan
-
-    def _rel_file(self, meta: TableMeta, uri: str) -> str:
-        path = uri[len("file:"):] if uri.startswith("file:") else uri
-        return os.path.relpath(path, os.path.abspath(self.data_dir(meta.name)))
 
     def _rewrite_files(
         self,
@@ -1522,7 +1519,7 @@ class Warehouse:
         # the application's seq guard regardless).
         row = matched.agg(
             F.count(F.lit(1)).alias("n"),
-            F.collect_set(self._rel_expr(F.col("__file_path"))).alias("refs"),
+            F.collect_set(F.expr(self._rel_sql("__file_path"))).alias("refs"),
         ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
         n, refs = int(row["n"]), sorted(row["refs"])
         if n == 0:
@@ -1549,15 +1546,24 @@ class Warehouse:
             )
         return {"deleted_rows": n, "delete_files": len(added), "mode": "merge-on-read"}
 
-    _REL_AFTER_DATA = "/data/"
-
     @staticmethod
-    def _rel_expr(col):
-        """Data-dir-relative path from a file URI/path column — the
-        join key both sides of a positional-delete application share
-        (absolute URIs go stale when rename_table moves the directory;
-        the rel path does not)."""
-        return F.substring_index(col, Warehouse._REL_AFTER_DATA, -1)
+    def _rel_sql(col: str) -> str:
+        """SQL for the data-relative name of a file, as the snapshot log
+        records it, from a file-path column: Spark's
+        ``_metadata.file_path`` or a positional delete's ``file_path``
+        (the same URI). It is the join key of a positional-delete
+        application (absolute URIs go stale when rename_table moves the
+        directory; the rel path does not), and the name of every file a
+        row-level write removes or a delete file references. The URI is
+        percent-encoded (a space is %20, a partition value's escaped
+        %25 is %2525) and keeps ``+`` as is, so ``+`` is escaped before
+        ``url_decode``, which would read it as a space."""
+        return f"url_decode(replace(substring_index({col}, '/data/', -1), '+', '%2B'))"
+
+    # a scanned row's file: ``uri`` for a rewrite's membership filter
+    # (echoed verbatim: file:/ vs file:/// must not be rebuilt), ``rel``
+    # for the snapshot log
+    _FILE_REF = f"named_struct('uri', __file_path, 'rel', {_rel_sql('__file_path')})"
 
     @staticmethod
     def _delete_kinds_from_meta(meta: TableMeta) -> dict[str, str]:
@@ -1658,7 +1664,7 @@ class Warehouse:
             raw = self._read_position_deletes(ddir, files)
             parts.append(
                 raw.select(
-                    self._rel_expr(F.col("file_path")).alias("__d_rel"),
+                    F.expr(self._rel_sql("file_path")).alias("__d_rel"),
                     F.col("pos").alias("__d_pos"),
                 ).withColumn("__del_seq", F.lit(int(seq)))
             )
@@ -1666,7 +1672,7 @@ class Warehouse:
         for p in parts[1:]:
             dels = dels.unionByName(p)
         cond = (
-            (self._rel_expr(F.col("__file_path")) == F.col("__d_rel"))
+            (F.expr(self._rel_sql("__file_path")) == F.col("__d_rel"))
             & (F.col("__pos") == F.col("__d_pos"))
             & (F.col("__del_seq") >= F.col("__seq"))
         )
@@ -2053,7 +2059,7 @@ class Warehouse:
                 )
                 most = ["max(__n) AS max_n"]
             agg = per_row.selectExpr(
-                f"collect_set(if({fired}, __file_path, NULL)) AS files",
+                f"collect_set(if({fired}, {self._FILE_REF}, NULL)) AS files",
                 f"count_if({upd_in}) AS upd",
                 f"count_if({del_in}) AS del",
                 *most,
@@ -2064,10 +2070,8 @@ class Warehouse:
                     f"{agg['max_n']} source rows"
                 )
             stats["updated_rows"], stats["deleted_rows"] = agg["upd"], agg["del"]
-            # raw URIs are echoed verbatim into the rewrite's membership
-            # filter (file:/ vs file:/// must not be rebuilt)
-            uris = list(agg["files"])
-            affected = {self._rel_file(meta, u) for u in uris}
+            uris = [f.uri for f in agg["files"]]
+            affected = {f.rel for f in agg["files"]}
             if affected and mor:
                 dels = classified.filter(fired).selectExpr(
                     "__file_path AS file_path", "__pos AS pos"
@@ -3580,13 +3584,13 @@ class Warehouse:
                     )
                     if pre is not None:
                         dels = self._read_position_deletes(ddir, pos_files).select(
-                            self._rel_expr(F.col("file_path")).alias("__d_rel"),
+                            F.expr(self._rel_sql("file_path")).alias("__d_rel"),
                             F.col("pos").alias("__d_pos"),
                         )
                         img = pre.join(
                             F.broadcast(dels),
                             (
-                                self._rel_expr(F.col("__file_path"))
+                                F.expr(self._rel_sql("__file_path"))
                                 == F.col("__d_rel")
                             )
                             & (F.col("__pos") == F.col("__d_pos")),
@@ -4117,22 +4121,23 @@ class Warehouse:
                 [(f,) for f in sorted(live)], "__live_rel string"
             )
             kept = (
-                raw.withColumn("__rel", self._rel_expr(F.col("file_path")))
+                raw.withColumn("__rel", F.expr(self._rel_sql("file_path")))
                 .join(
                     F.broadcast(live_df),
                     F.col("__rel") == F.col("__live_rel"),
                     "left_semi",
                 )
-                .drop("__rel")
                 .localCheckpoint(eager=False)
             )
             row = kept.agg(
                 F.count_distinct("file_path", "pos").alias("n"),
-                F.collect_set(self._rel_expr(F.col("file_path"))).alias("refs"),
+                F.collect_set("__rel").alias("refs"),
             ).collect()[0]  # scale-ok: 1-row schema-probe aggregate
             n = int(row["n"])
             deletes = (
-                self._write_position_deletes(meta, kept, row["refs"]) if n else {}
+                self._write_position_deletes(meta, kept.drop("__rel"), row["refs"])
+                if n
+                else {}
             )
             self._commit_snapshot(
                 meta,

@@ -2184,27 +2184,9 @@ class SqlFrontend:
     def _show_grants(self, m: re.Match) -> DataFrame:
         if self.policy is None:
             raise ValueError("No policy store wired for SHOW GRANTS")
-        if m.group(1):
-            from sample_emr_on_eks_fgac_iceberg_spark.policy import database_resource
+        from sample_emr_on_eks_fgac_iceberg_spark.policy import show_grants_frame
 
-            table = database_resource(m.group(1))
-        else:
-            table = m.group(2)
-        rows = [
-            (
-                g.principal,
-                g.table,
-                ", ".join(sorted(g.permissions)),
-                g.grant_option,
-                g.filter_name or "",
-            )
-            for g in self.policy.list_grants(table)
-        ]
-        return self.spark.createDataFrame(
-            sorted(rows),
-            "principal string, table string, permissions string, "
-            "grant_option boolean, data_cells_filter string",
-        )
+        return show_grants_frame(self.spark, m, self.policy.list_grants)
 
     def _grant_database(self, m: re.Match) -> None:
         if self.policy is None:

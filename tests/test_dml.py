@@ -143,6 +143,54 @@ def test_merge_insert_with_expressions(wh):
     assert _rows(wh.read_table("t")) == [(1, "a", "init"), (5, "E", "merged")]
 
 
+# ------------------------------------- partition values in file paths
+# Spark's _metadata.file_path is a URI: the directory of a partition
+# value is percent-encoded (a space as %20, the on-disk %25 escape of a
+# '%' as %2525) and a '+' stays as is (url_decode alone would read it as
+# a space).
+ODD_CITIES = ("New York", "a%b", "c+d", "plain")
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+@pytest.mark.parametrize("op", ["delete", "delete-keyed", "update", "merge"])
+def test_row_level_writes_name_files_in_encoded_partitions(wh, op, mode):
+    """DELETE (also with identifier fields, whose merge-on-read form
+    writes equality deletes), UPDATE and MERGE under both write modes
+    name the files they remove or reference as the snapshot log does,
+    whatever the partition value holds: the rows match a Python model
+    after two statements and after rewrite_position_delete_files."""
+    wh.create_table("pc", "k int, city string", partition_by=["city"])
+    if op == "delete-keyed":
+        wh.set_identifier_fields("pc", ["k"])
+        op = "delete"
+    wh.set_properties("pc", {f"write.{op}.mode": mode})
+    model = {k: ODD_CITIES[k % 4] for k in range(12)}
+    wh.insert_values("pc", sorted(model.items()))
+    for step, keys in enumerate(((0, 1, 2), (4, 5, 6, 101))):
+        cond = f"k IN ({', '.join(map(str, keys))})"
+        hit = [k for k in keys if k in model]
+        if op == "delete":
+            wh.delete_from("pc", cond)
+            for k in hit:
+                del model[k]
+        elif op == "update":
+            wh.update_where("pc", {"k": "k + 100"}, cond)
+            for k in hit:
+                model[k + 100] = model.pop(k)
+        else:
+            new = [(60 + 10 * step + i, c) for i, c in enumerate(ODD_CITIES)]
+            src = wh.spark.createDataFrame(
+                [(k, "x") for k in keys] + new, "k int, city string"
+            )
+            wh.merge_into("pc", src, "t.k = s.k", matched_update={"k": "s.k + 100"})
+            for k in hit:
+                model[k + 100] = model.pop(k)
+            model.update(new)
+        assert _rows(wh.read_table("pc")) == sorted(model.items())
+    wh.rewrite_position_delete_files("pc")
+    assert _rows(wh.read_table("pc")) == sorted(model.items())
+
+
 # --------------------------------------------------- schema evolution
 def test_add_column_null_fills_old_files(wh):
     wh.create_table("t", "k int")

@@ -161,3 +161,39 @@ def test_drop_table_removes_data_and_meta(engine, spark, tmp_path):
         pass
     wh.create_table("t_tmp", "a int", partition_by=[])
     assert wh.read_table("t_tmp").count() == 0
+
+
+@pytest.mark.parametrize(
+    "clause",
+    ["VERSION AS OF 999", "VERSION AS OF 'nobranch'", "TIMESTAMP AS OF '2000-01-01'"],
+)
+def test_time_travel_denies_before_loading(engine, clause):
+    """An ungranted principal's time-travel read is denied before the
+    snapshot is resolved, so an unknown snapshot id, ref or timestamp
+    tells it nothing about the table's history: one denial, one audit
+    entry."""
+    sess = engine.session_for(TEAM2)
+    start = len(engine.policy.audit_log)
+    with pytest.raises(AccessDeniedException):
+        sess.sql(f"SELECT * FROM patients {clause}")
+    assert engine.policy.audit_log[start:] == [(TEAM2, "patients", "SELECT", "denied")]
+
+
+def test_stream_and_describe_deny_ungranted_and_dangling(spark, tmp_path):
+    """readStream and describe go through the same fence: an ungranted
+    table denies with an audit entry, and a grant whose filter was
+    deleted denies after it."""
+    eng = FgacEngine(spark, str(tmp_path / "wh"))
+    setup_healthcare(eng)
+    team2, team1 = eng.session_for(TEAM2), eng.session_for(TEAM1)
+    for call, action in ((team2.readStream, "SELECT"), (team2.describe, "DESCRIBE")):
+        start = len(eng.policy.audit_log)
+        with pytest.raises(AccessDeniedException):
+            call("patients")
+        assert eng.policy.audit_log[start:] == [(TEAM2, "patients", action, "denied")]
+    eng.policy.delete_data_cells_filter(
+        eng.policy.grant_for(TEAM1, "patients").filter_name
+    )
+    for call in (team1.readStream, team1.describe):
+        with pytest.raises(AccessDeniedException):
+            call("patients")

@@ -131,18 +131,28 @@ def test_positional_delete_scan_starts_no_job(spark, wh):
     assert deletes.count() == 9
 
 
-def test_secure_session_reuses_base_table_scans(spark, tmp_path):
+def test_secure_session_reuses_base_table_scans(spark, tmp_path, monkeypatch):
     """Inside one SecureSession each base table is planned once per
     metadata version: resource links share the scan, a commit to claims
     re-plans claims only, and time travel always plans afresh. The
-    policy filter still applies on every read."""
+    policy filter still applies on every read. Loads are the session
+    warehouse's outermost ``read_table`` calls (a resource link's load
+    recurses into its target's)."""
     engine = FgacEngine(spark, str(tmp_path / "wh"))
     healthcare.setup_healthcare(engine)
-    loads = []
-    load = engine._load_for_session
-    engine._load_for_session = lambda s, name, **kw: loads.append(name) or load(
-        s, name, **kw
-    )
+    loads, open_calls = [], []
+    load = Warehouse.read_table
+
+    def spy(self, name, **kw):
+        if self is not engine.warehouse and not open_calls:
+            loads.append(name)
+        open_calls.append(name)
+        try:
+            return load(self, name, **kw)
+        finally:
+            open_calls.pop()
+
+    monkeypatch.setattr(Warehouse, "read_table", spy)
 
     sess = engine.session_for(healthcare.TEAM1)
     # patients + 2 links share one scan; claims + 1 link share another
