@@ -34,7 +34,7 @@ import re
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
 
-from pyspark.errors import AnalysisException, ParseException
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1113,6 +1113,7 @@ class SecureSession:
         """The secured read path. ``stmt`` is the parse of ``query``, or
         None when ``query`` carries SQL sugar Spark cannot parse."""
         text = query
+        tables = self._warehouse.list_tables()
         # Table references through this principal's policy path: time
         # travel loads the historical snapshot through _secured, so the
         # SAME row filter + column whitelist apply — history is never a
@@ -1122,7 +1123,7 @@ class SecureSession:
         query = rewrite_table_refs(
             self._spark,
             query,
-            set(self._warehouse.list_tables()),
+            set(tables),
             self._secured,
             self._metadata,
             qualified=self._authorize_qualified,
@@ -1175,14 +1176,31 @@ class SecureSession:
         # catalog table; the session's own registrations (policy
         # views, __meta/__tt views, user views) are all temp views and
         # pass, and unknown names still flow to TABLE_OR_VIEW_NOT_FOUND.
+        # A relation naming a warehouse table this session never
+        # registered (ungranted, or its filter was deleted) is the
+        # reference's plan-time denial (consumer_emr_on_eks_setup.sh:
+        # 480-488), decided here from the parse, before Spark analyzes
+        # the statement; as a catalog-qualified name it is matched on
+        # its last part. CTEs and stored views of that name shadow it.
         if stmt.relations is None:
             self._deny("<unnamed relation>")
         idents, cte_names = stmt.relations
         names = {".".join(ident).lower() for ident in idents}
+        by_view = {view_alias(t).lower(): t for t in tables}
+        view_names = None
         for ident in idents:
             nm = ".".join(ident)
             if nm.lower() in cte_names:
                 continue
+            table = by_view.get(ident[-1].lower())
+            if table in self._registered:
+                if len(ident) == 1:
+                    continue  # the session's own policy view
+            elif table is not None:
+                if view_names is None:
+                    view_names = {v.lower() for v in self._all_view_texts()}
+                if nm.lower() not in view_names:
+                    self._deny(table)
             try:
                 t = self._spark.catalog.getTable(nm)
             except Exception:
@@ -1193,28 +1211,7 @@ class SecureSession:
         # principal's own policy path (invoker's rights) so revokes and
         # filter changes propagate to every subsequent read.
         self._materialize_views(names)
-        try:
-            return self._spark.sql(query)
-        except AnalysisException as exc:
-            # A table exists in the warehouse but isn't granted → it was
-            # never registered in this session's catalog. Surface that
-            # as the reference's plan-time denial rather than a
-            # not-found error (consumer_emr_on_eks_setup.sh:480-488).
-            # Match the *exact* unresolved identifier from the error
-            # (backtick-quoted), not a substring — `patientsss` must
-            # stay TABLE_OR_VIEW_NOT_FOUND, not become a denial.
-            unresolved = {
-                ident.split(".")[-1]
-                for ident in re.findall(r"`([^`]+)`", str(exc))
-            }
-            for name in self._warehouse.list_tables():
-                if name in unresolved and name not in self._registered:
-                    # Exists in the warehouse but is not serveable for
-                    # this principal (ungranted, or its filter was
-                    # deleted) → plan-time denial, recorded in the
-                    # audit trail like every other authorization check.
-                    self._deny(name)
-            raise
+        return self._spark.sql(query)
 
     def describe(self, name: str) -> list[tuple[str, str]]:
         # the filtered frame's schema only: nothing executes

@@ -118,6 +118,9 @@ def build_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from the engine's daemon, which stops each
+        # task from re-reading pyspark.zip's index (pydaemon.py)
+        .config("spark.python.daemon.module", "sample_emr_on_eks_fgac_iceberg_spark.pydaemon")
     )
 
     iceberg_jar = _find_iceberg_jar()

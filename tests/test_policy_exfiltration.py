@@ -16,6 +16,7 @@ Defense layers under test:
 """
 
 import pytest
+from pyspark.sql import SparkSession
 
 from sample_emr_on_eks_fgac_iceberg_spark.engine import FgacEngine
 from sample_emr_on_eks_fgac_iceberg_spark.policy import (
@@ -271,3 +272,27 @@ def test_spj_mirror_tables_not_readable_by_consumers(spark, tmp_path):
         f"WITH {mirrors[0]} AS (SELECT 1 AS one) SELECT * FROM {mirrors[0]}"
     ).collect()
     assert [tuple(r) for r in got] == [(1,)]
+
+
+def test_ungranted_table_denies_from_the_parse(spark, tmp_path, monkeypatch):
+    """A relation naming an ungranted warehouse table denies from the
+    parsed relations, in any letter case and beside a granted table,
+    with one audit entry each and before Spark analyzes the statement;
+    a CTE of that name shadows it."""
+    e = FgacEngine(spark, str(tmp_path / "wh"))
+    e.sql("CREATE TABLE vault (k BIGINT)")
+    e.sql("CREATE TABLE lookup (k BIGINT)")
+    e.policy.grant("mallory", "lookup", {SELECT})
+    sess = e.session_for("mallory")
+    analyzed = []
+    real_sql = SparkSession.sql
+    monkeypatch.setattr(
+        SparkSession, "sql", lambda self, q, *a, **kw: analyzed.append(q) or real_sql(self, q, *a, **kw)
+    )
+    for q in ("SELECT * FROM vault", "SELECT * FROM VAULT", "SELECT * FROM lookup JOIN vault USING (k)"):
+        before = len(e.policy.audit_log)
+        with pytest.raises(AccessDeniedException, match="vault"):
+            sess.sql(q)
+        assert e.policy.audit_log[before:] == [("mallory", "vault", SELECT, "denied")]
+    assert analyzed == []
+    assert sess.sql("WITH vault AS (SELECT 1 AS one) SELECT * FROM vault").collect()[0].one == 1

@@ -6,15 +6,21 @@ tree, in pairs that run both sides on one seed.
         [--pairs 10] [--seed0 701] [--what "…"]
 
 The parent commit is exported with ``git archive`` into a temporary
-directory; the change side is this checkout. Each pair runs
+directory, and the change side, this checkout's tracked and untracked
+(not ignored) files as they are at the start, is copied into another:
+both sides run from the same kind of fresh tree, with no build or run
+leftovers of the checkout. Each pair runs
 ``python3 perfbench/run.py --workload W --seed S --seconds N`` (N is
 BENCHMARK.json's ``run_seconds``) once per side, alternating which side
 goes first, one run at a time. The output holds, per workload, every
 run (exit code, correctness, the end-to-end metrics, nproc, loadavg at
-start, steal share, per-operation CPU) and a summary per BENCHMARK.json
-end-to-end metric: median and quartiles per side, the change's wins over
-the pairs, the parent's IQR, the ratio of the medians and whether it
-stays within the metric's ``bound``.
+start, steal share, units run, per-operation CPU) and a summary per
+BENCHMARK.json end-to-end metric: median and quartiles per side, the
+change's wins over the pairs, the parent's IQR, the ratio of the
+medians and whether it stays within the metric's ``bound``. The summary
+flags pairs whose sides ran a different number of units, and pairs
+whose ``setup_s`` moved by more than ``DRIFT``× from the first pair on
+both sides (the box's throughput changed under the run).
 """
 
 from __future__ import annotations
@@ -34,6 +40,8 @@ sys.path.insert(0, ROOT)
 
 from perfbench import stats  # noqa: E402
 
+DRIFT = 1.5
+
 
 def _loadavg() -> float:
     with open("/proc/loadavg") as f:
@@ -50,6 +58,20 @@ def export_tree(rev: str, dest: str) -> str:
     if archive.wait() != 0:
         raise SystemExit(f"git archive {commit} failed")
     return commit
+
+
+def export_worktree(dest: str) -> None:
+    """This checkout's tracked and untracked, not ignored, files under
+    ``dest``, as they are now."""
+    listed = subprocess.run(
+        ["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+        cwd=ROOT, check=True, capture_output=True, text=True,
+    ).stdout.split("\0")
+    for rel in filter(None, listed):
+        src = os.path.join(ROOT, rel)
+        if os.path.isfile(src):  # a deleted tracked file is still listed
+            os.makedirs(os.path.dirname(os.path.join(dest, rel)), exist_ok=True)
+            shutil.copy2(src, os.path.join(dest, rel))
 
 
 def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
@@ -83,6 +105,7 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
         run.update(
             nproc=artifact["box"]["nproc"],
             steal_frac=artifact["box"]["steal_frac"],
+            units_n=artifact["units"]["n"],
             work_cpu_ms={
                 k.split(":", 1)[1]: round(v["p50"], 1)
                 for k, v in artifact["ops_cpu"].items()
@@ -92,10 +115,29 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
     return run
 
 
+def pair_flags(pairs: list[dict]) -> list[dict]:
+    """Pairs not comparable as they stand: the sides ran a different
+    number of units, or the box drifted — ``setup_s`` moved by more than
+    ``DRIFT``× from the first pair's on both sides."""
+    flags = []
+    first = pairs[0] if pairs else {}
+    for p in pairs:
+        seed = p["parent"]["seed"]
+        units = {s: p[s].get("units_n") for s in ("parent", "change")}
+        if units["parent"] != units["change"]:
+            flags.append({"seed": seed, "flag": "units_differ", **units})
+        moved = {s: p[s]["setup_s"] / first[s]["setup_s"] for s in ("parent", "change")}
+        if all(m > DRIFT for m in moved.values()) or all(m < 1 / DRIFT for m in moved.values()):
+            flags.append({"seed": seed, "flag": "box_drift",
+                          **{f"setup_x_{s}": round(m, 2) for s, m in moved.items()}})
+    return flags
+
+
 def summarize(runs: list[dict], metrics: list[dict]) -> dict:
     """Per end-to-end metric: both sides' median and quartiles, wins of
     the change over the pairs, the parent's IQR, the ratio and delta of
-    the medians, and whether the ratio stays within the bound."""
+    the medians, and whether the ratio stays within the bound; then the
+    flagged pairs (pair_flags)."""
     by_seed: dict[int, dict] = {}
     for r in runs:
         by_seed.setdefault(r["seed"], {})[r["side"]] = r
@@ -122,6 +164,7 @@ def summarize(runs: list[dict], metrics: list[dict]) -> dict:
             "bound": m["bound"],
             "within_bound": ratio <= 1 + m["bound"] if lower else ratio >= 1 - m["bound"],
         }
+    out["flags"] = pair_flags(pairs)
     out["all_correct"] = all(r.get("correct") for r in runs)
     for s in ("parent", "change"):
         mine = [r for r in runs if r["side"] == s]
@@ -152,15 +195,15 @@ def main(argv=None) -> int:
         bench = json.load(f)
     workloads = args.workload or [w["name"] for w in bench["workloads"]]
 
-    parent_dir = tempfile.mkdtemp(prefix="ab-parent-")
+    trees = {s: tempfile.mkdtemp(prefix=f"ab-{s}-") for s in ("parent", "change")}
     try:
-        commit = export_tree(args.parent, parent_dir)
-        trees = {"parent": parent_dir, "change": ROOT}
+        commit = export_tree(args.parent, trees["parent"])
+        export_worktree(trees["change"])
         doc = {
             "what": args.what,
             "command": f"python3 perfbench/run.py --workload W --seed S --seconds {bench['run_seconds']:g} --trace 0",
             "box": {"nproc": os.cpu_count()},
-            "sides": {"parent": f"commit {commit}", "change": "working tree"},
+            "sides": {"parent": f"commit {commit}", "change": "working tree, copied"},
         }
         for w in workloads:
             runs = []
@@ -180,7 +223,8 @@ def main(argv=None) -> int:
             with open(args.out, "w") as f:
                 json.dump(doc, f, indent=1)
     finally:
-        shutil.rmtree(parent_dir, ignore_errors=True)
+        for tree in trees.values():
+            shutil.rmtree(tree, ignore_errors=True)
     return 0
 
 
