@@ -1907,8 +1907,8 @@ class Warehouse:
 
         A row-level write (``_row_level_write``): ONE join evaluates
         every clause gate, enforces the one-source-row-per-target-row
-        cardinality rule and counts per-action rows — an inner join
-        grouped by each target row's (file, row ordinal) without
+        cardinality rule and counts per-action rows, grouped by each
+        target row's (file, row ordinal) — an inner join without
         by-source clauses, a left join over the whole target with them.
         The source is plan-barriered so it evaluates once.
         Copy-on-write (default) rewrites only the files where some
@@ -1983,8 +1983,7 @@ class Warehouse:
         Aggregate, one job: per-action row counts, the files holding a
         firing row, and for MERGE the most source rows one target row
         matched (the cardinality rule) — grouped by the row identity
-        (``__file_path``, ``__pos``), or by frozen ``__uid`` row ids
-        where a copy-on-write by-source MERGE reads no positions.
+        (``__file_path``, ``__pos``).
 
         Commit: copy-on-write re-classifies the rows of the touched
         files and rewrites them without the deleted rows and with the
@@ -2012,17 +2011,9 @@ class Warehouse:
         else:
             hit = F.coalesce(on, F.lit(False))
         # positions name the rows of a delete file and identify a MERGE's
-        # target rows; a copy-on-write by-source MERGE uses row ids
-        with_pos = fires and (mor or (src is not None and not by_source))
+        # target rows
+        with_pos = fires and (mor or src is not None)
         scan = self._scan_live(meta, with_file=fires, with_pos=with_pos)
-        row_id = ["__file_path", "__pos"]
-        if scan is not None and src is not None and fires and not with_pos:
-            # every target row goes through the left join: freeze row
-            # ids so the cardinality check counts real rows
-            scan = scan.withColumn(
-                "__uid", F.monotonically_increasing_id()
-            ).localCheckpoint(eager=False)
-            row_id = ["__file_path", "__uid"]
         t = self._aliased(scan, target_alias)
         on_match = self._clause_col(matched, 0)
         clause = F.when(hit, on_match)
@@ -2053,7 +2044,7 @@ class Warehouse:
                 classified = classified.localCheckpoint(eager=False)
             per_row, most = classified, []
             if src is not None:
-                per_row = classified.groupBy(*row_id).agg(
+                per_row = classified.groupBy("__file_path", "__pos").agg(
                     F.expr("count(__matched) AS __n"),
                     F.expr("min(__clause) AS __clause"),
                 )
@@ -2146,7 +2137,8 @@ class Warehouse:
         of every manifest up to and including it — appends are
         cumulative), mirroring Iceberg's ``VERSION AS OF``;
         ``as_of_timestamp_ms`` picks the last snapshot committed at or
-        before that time (``TIMESTAMP AS OF``).
+        before that time (``TIMESTAMP AS OF``); a time before the first
+        snapshot raises SnapshotNotFoundError, as Iceberg refuses it.
 
         ``filters`` — [(col, op, literal), …] with op in
         {=, <, <=, >, >=, in} over SOURCE columns — plans the file set
@@ -2174,7 +2166,11 @@ class Warehouse:
                 if s["timestamp_ms"] <= as_of_timestamp_ms
             ]
             if not eligible:
-                return self.spark.createDataFrame([], meta.schema)
+                stamp = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(as_of_timestamp_ms // 1000))
+                raise SnapshotNotFoundError(
+                    f"Cannot find a snapshot of '{name}' older than "
+                    f"{stamp}.{as_of_timestamp_ms % 1000:03d} UTC"
+                )
             snapshot_id = eligible[-1]
         if snapshot_id is not None:
             known = {s["snapshot_id"] for s in meta.snapshots}

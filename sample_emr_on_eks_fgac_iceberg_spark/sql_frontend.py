@@ -16,9 +16,10 @@ exactly as in Spark SQL. The statements this engine adds that Spark
 rejects (Iceberg's ALTER TABLE extensions, grants, OPTIMIZE) form a
 small regex table, ``ENGINE_GRAMMAR``, that the consumer surface
 classifies with too; SQL sugar is rewritten and then parsed
-(``desugar``). A plan with no handler runs only if it is a read, over
-the warehouse's tables registered as views — the trusted producer
-surface (no policy mediation; consumers go through SecureSession).
+(``desugar``). A plan with no handler runs only if it is a read, in a
+``StatementScope`` that registers, as unmediated views, the relations
+its parse names — the trusted producer surface (no policy mediation;
+consumers go through SecureSession).
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from bisect import bisect_left
 from functools import cached_property
 
 from py4j.java_gateway import is_instance_of
-from pyspark.errors import ParseException
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -133,9 +134,6 @@ ENGINE_GRAMMAR = {
     ),
 }
 _ALL_GRANTABLE = {"SELECT", "DESCRIBE", "INSERT", "DELETE", "ALTER", "DROP"}
-# a subquery anywhere in a DML predicate/assignment — the cue to make
-# warehouse tables resolvable in the executing session's catalog
-_SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.I)
 # Iceberg time-travel SQL: SELECT … FROM t VERSION AS OF 3 /
 # t TIMESTAMP AS OF '2026-01-01 00:00:00' (FOR SYSTEM_VERSION/
 # SYSTEM_TIME spellings accepted)
@@ -825,12 +823,19 @@ class ParsedStatement:
         source, a CTAS query)."""
         return self.text[start:].strip().rstrip(";").rstrip()
 
-    def insert_source(self) -> str:
-        """An INSERT's source query. The INSERT node's origin is its
-        INSERT clause alone, so the source is the rest of the statement,
-        behind the WITH clause of a CTE-prefixed INSERT."""
+    def insert_source(self) -> tuple[str, ParsedStatement]:
+        """An INSERT's source query and its parse. The INSERT node's
+        origin is its INSERT clause alone, so the source is the rest of
+        the statement, behind the WITH clause of a CTE-prefixed INSERT,
+        whose parse is the WITH node over the INSERT's query."""
         start, stop = _origin(self.node)
-        return self.text[:start] + self.tail(stop + 1)
+        plan = self.node.query()
+        if self.with_cte:
+            jvm = self._gateway.jvm
+            kids = jvm.java.util.ArrayList()
+            kids.add(plan)
+            plan = self.plan.withNewChildren(jvm.org.apache.spark.api.python.PythonUtils.toSeq(kids))
+        return self.text[:start] + self.tail(stop + 1), self.nested(plan)
 
     def ctas_query(self) -> str:
         """A CREATE TABLE … AS statement's query: the rest of the text
@@ -912,20 +917,31 @@ class ParsedStatement:
         the statement defines. None when the walk cannot name every
         relation (an ``IDENTIFIER(…)`` clause, a runaway tree): callers
         deny."""
-        idents, cte_names, _, named = self._walk
+        idents, cte_names, _, named, _ = self._walk
         return (idents, cte_names) if named else None
 
+    @property
+    def sources(self) -> list[tuple[str, ...]] | None:
+        """The relation identifiers a catalog resolves: every one but a
+        reference to a CTE in scope where it stands (a CTE's own body
+        does not see its name, so there the name is the outer relation).
+        None when the walk cannot name every relation."""
+        *_, named, sources = self._walk
+        return sources if named else None
+
     @cached_property
-    def _walk(self) -> tuple[list[tuple[str, ...]], set[str], str | None, bool]:
+    def _walk(self):
         idents: list[tuple[str, ...]] = []
+        sources: list[tuple[str, ...]] = []
         cte_names: set[str] = set()
         non_read, named = None, True
-        stack, visited = [self.plan], 0
+        # each node with the CTE names in scope where it stands
+        stack, visited = [(self.plan, frozenset())], 0
         while stack:
             visited += 1
             if visited > _MAX_WALK_NODES:
-                return idents, cte_names, non_read, False
-            node = stack.pop()
+                return idents, cte_names, non_read, False, sources
+            node, scope = stack.pop()
             try:
                 name = node.getClass().getName()
             except Exception:
@@ -942,9 +958,13 @@ class ParsedStatement:
                 # don't and are skipped by the probe.
                 try:
                     seq = node.multipartIdentifier()
-                    idents.append(tuple(seq.apply(i) for i in range(seq.size())))
+                    ident = tuple(seq.apply(i) for i in range(seq.size()))
                 except Exception:
-                    pass
+                    ident = None
+                if ident:
+                    idents.append(ident)
+                    if len(ident) > 1 or ident[0].lower() not in scope:
+                        sources.append(ident)
             if cls == "UnresolvedWith":
                 # CTE definitions introduce local names that are not
                 # warehouse tables; references to them are legitimate.
@@ -955,8 +975,10 @@ class ParsedStatement:
                 try:
                     rels = node.cteRelations()
                     for i in range(rels.size()):
-                        cte_names.add(str(rels.apply(i)._1()).lower())
-                        stack.append(rels.apply(i)._2())
+                        stack.append((rels.apply(i)._2(), scope))  # sees the CTEs before it
+                        name = str(rels.apply(i)._1()).lower()
+                        cte_names.add(name)
+                        scope = scope | {name}
                 except Exception:
                     pass
             # children() on every TreeNode; expressions() on plan nodes
@@ -970,14 +992,14 @@ class ParsedStatement:
                     for i in range(seq.size()):
                         kid = seq.apply(i)
                         if (is_plan and probe == "children") or _holds_subquery(self._gateway, kid):
-                            stack.append(kid)
+                            stack.append((kid, scope))
                 except Exception:
                     pass
             try:
-                stack.append(node.plan())
+                stack.append((node.plan(), scope))
             except Exception:
                 pass
-        return idents, cte_names, non_read, named
+        return idents, cte_names, non_read, named, sources
 
 
 def parse_statement(spark: SparkSession, text: str) -> ParsedStatement:
@@ -1681,17 +1703,18 @@ class SqlFrontend:
         self.warehouse = warehouse
         self.policy = policy  # PolicyStore for GRANT/REVOKE statements
         # CALL system.create_changelog_view registrations: view name →
-        # read_changes kwargs. Materialized lazily into each _query's
-        # scratch session (a stored temp view would not survive the
-        # per-query newSession isolation), so the view always reflects
+        # read_changes kwargs. A statement scope materializes one when
+        # the statement's parse names it, so the view always reflects
         # the CURRENT snapshot range semantics of its registration.
         self._changelog_views: dict[str, dict] = {}
         # SQL-defined scalar functions (Spark 4 `CREATE FUNCTION …
-        # RETURN expr`): name → normalized DDL. Replayed into each
-        # _query scratch session (like changelog views) AND registered
-        # on the primary session so DML predicates/assignments resolve
-        # them through F.expr.
+        # RETURN expr`): name → normalized DDL, replayed into every
+        # statement scope, where reads, DML predicates and assignments
+        # resolve them.
         self._sql_functions: dict[str, str] = {}
+        # stored view body (after the read rewrites) → its parse: a body
+        # is parsed once per frontend, not on every read of the view
+        self._view_parses: dict[str, ParsedStatement] = {}
         # The frontend executes consumer-delegated DML on behalf of
         # SecureSession principals; path relations (``parquet.`/p```)
         # are never a legitimate spelling here — every source the
@@ -1734,7 +1757,7 @@ class SqlFrontend:
             return handler(self, stmt, accessor and stmt.target(accessor))
         if not stmt.is_query:
             raise ValueError(f"{stmt.root} statements are not supported by the SQL frontend")
-        return self._query(stmt.tail(0), checked=True)
+        return self._query(stmt.tail(0), stmt)
 
     # ----------------------------------------------------------- handlers
     # Each takes the statement's parse and the name of its target (the
@@ -1743,14 +1766,15 @@ class SqlFrontend:
         """EXPLAIN <query> (Athena/Spark parity): plan text without
         execution, for read queries only — a statement would run through
         its handler to be explained."""
-        if not stmt.nested(stmt.node.logicalPlan()).is_query:
+        inner = stmt.nested(stmt.node.logicalPlan())
+        if not inner.is_query:
             raise ValueError("EXPLAIN supports queries (SELECT/WITH/VALUES) only")
-        return self._explain_text(ENGINE_GRAMMAR["_explain_text"].match(stmt.text), checked=True)
+        return self._explain_text(ENGINE_GRAMMAR["_explain_text"].match(stmt.text), inner)
 
-    def _explain_text(self, m: re.Match, checked: bool = False) -> DataFrame:
+    def _explain_text(self, m: re.Match, inner: ParsedStatement | None = None) -> DataFrame:
         from sample_emr_on_eks_fgac_iceberg_spark.plans import explain_str
 
-        df = self._query(m.group(2).strip().rstrip(";"), checked=checked)
+        df = self._query(m.group(2).strip().rstrip(";"), inner)
         plan = explain_str(df, (m.group(1) or "simple").strip().lower())
         return self.spark.createDataFrame([(plan,)], "plan string")
 
@@ -1779,10 +1803,9 @@ class SqlFrontend:
             f"({params.get() if params.isDefined() else ''}) "
             f"RETURNS {node.returnTypeText()} RETURN {body.get()}"
         )
-        # validate + register on the primary session NOW (DML predicate
-        # resolution); scratch sessions replay from the stored DDL per
-        # query
-        self.spark.sql(ddl)
+        # validated NOW on a throwaway session; each statement scope
+        # replays the stored DDL
+        new_session(self.spark).sql(ddl)
         self._sql_functions[name] = ddl
 
     def _drop_function(self, stmt: ParsedStatement, name: str | None) -> None:
@@ -1793,7 +1816,6 @@ class SqlFrontend:
                 return None
             raise ValueError(f"Unknown function '{name}'")
         del self._sql_functions[name]
-        self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
 
     def _create_view(self, stmt: ParsedStatement, name: str) -> None:
         node = stmt.node
@@ -1802,19 +1824,21 @@ class SqlFrontend:
         if node.allowExisting() and self.warehouse.view_exists(name):
             return None
         body = node.originalText().get()
-        return self._store_view(node.replace(), name, body, checked=True)
+        return self._store_view(node.replace(), name, body, stmt.nested(node.query()))
 
     def _create_view_text(self, m: re.Match) -> None:
         return self._store_view(bool(m.group(1)), m.group(2), m.group(3).rstrip().rstrip(";"))
 
-    def _store_view(self, replace: bool, name: str, body: str, checked: bool = False) -> None:
+    def _store_view(
+        self, replace: bool, name: str, body: str, parsed: ParsedStatement | None = None
+    ) -> None:
         if not replace and self.warehouse.view_exists(name):
             raise ValueError(f"View '{name}' already exists")
         # validate NOW (plan only, nothing executes): syntax, missing
         # relations, view cycles and a body that is not a query — one
         # that would run a side effect on every read — all surface at
         # CREATE time instead of first read
-        self._query(body, checked=checked)
+        StatementScope(self).read(body, parsed, parses=self._view_parses)
         self.warehouse.create_view(name, body, replace=replace)
 
     def _drop_view(self, stmt: ParsedStatement, name: str) -> None:
@@ -1900,7 +1924,7 @@ class SqlFrontend:
         if not or_replace and node.ignoreIfExists() and self.warehouse.table_exists(name):
             return None
         partition_by = _partition_spec(node)
-        df = self._query(stmt.ctas_query(), checked=True)
+        df = self._query(stmt.ctas_query(), stmt.nested(node.query()))
         # validate the full replacement definition BEFORE any drop — a
         # bad partition spec must never destroy the table it replaces
         self.warehouse.validate_table_definition(df.schema, partition_by)
@@ -1930,7 +1954,7 @@ class SqlFrontend:
             # VALUES rows: the parsed relation itself, no second parse
             src = self.warehouse.frame_of(query)
         else:
-            src = self._query(stmt.insert_source(), checked=True)
+            src = self._query(*stmt.insert_source())
         listed = [str(c) for c in _seq(node.userSpecifiedCols())]
         src = self._align(name, src, listed, node.byName())
         if not node.overwrite():
@@ -1966,29 +1990,24 @@ class SqlFrontend:
         ]
         return src.select(*cols, *fill) if fill else src
 
-    # DELETE/UPDATE predicates and SET values go to the warehouse as
-    # written: it evaluates them against its scan of the table under the
-    # target's alias, with the warehouse tables their subqueries read
-    # made resolvable.
+    # DELETE/UPDATE predicates and SET values go to the statement scope's
+    # warehouse as written: it evaluates them against its scan of the
+    # table under the target's alias, with the relations their subqueries
+    # name registered in the scope.
     def _delete(self, stmt: ParsedStatement, name: str) -> None:
         cond = stmt.node.condition()
-        texts = self._dml_texts([] if str(cond) == "true" else [stmt.span(cond)])
-        self.warehouse.delete_from(name, texts[0] if texts else None, stmt.alias("table"))
+        scope = StatementScope(self)
+        where = None if str(cond) == "true" else scope.expression(stmt, cond)
+        scope.warehouse.delete_from(name, where, stmt.alias("table"))
 
     def _update(self, stmt: ParsedStatement, name: str) -> None:
-        node = stmt.node
-        keys = [_set_key(a.key()) for a in _seq(node.assignments())]
-        texts = [stmt.span(a.value()) for a in _seq(node.assignments())]
-        if node.condition().isDefined():
-            texts.append(stmt.span(node.condition().get()))
-        texts = self._dml_texts(texts)
-        where = texts.pop() if len(texts) > len(keys) else None
-        self.warehouse.update_where(name, dict(zip(keys, texts)), where, stmt.alias("table"))
-
-    def _dml_texts(self, texts: list[str]) -> list[str]:
-        if any(_SUBQUERY_RE.search(_blank_sql_strings(t)) for t in texts):
-            texts = self._resolve_dml_subqueries(texts)
-        return texts
+        node, scope = stmt.node, StatementScope(self)
+        sets = {
+            _set_key(a.key()): scope.expression(stmt, a.value()) for a in _seq(node.assignments())
+        }
+        cond = node.condition()
+        where = scope.expression(stmt, cond.get()) if cond.isDefined() else None
+        scope.warehouse.update_where(name, sets, where, stmt.alias("table"))
 
     def _merge(self, stmt: ParsedStatement, target: str) -> None:
         """MERGE INTO target [AS t] USING (source|(subquery)) [AS s]
@@ -2002,15 +2021,15 @@ class SqlFrontend:
           WHEN NOT MATCHED BY SOURCE [AND cond]
             THEN UPDATE SET … | DELETE                         (×N)
         """
-        node = stmt.node
+        node, scope = stmt.node, StatementScope(self)
         source, alias = node.sourceTable(), None
         if _node_name(source) == "SubqueryAlias":
             alias, source = str(source.alias()), source.child()
         if _node_name(source) == "UnresolvedRelation":
             alias = alias or _ident(source)
-            frame = self.warehouse.read_table(_ident(source))
+            frame = scope.table(_ident(source))
         else:
-            frame = self._query(stmt.enclosed(source), checked=True)
+            frame = scope.read(stmt.enclosed(source), stmt.nested(source))
 
         def clauses(actions) -> list[dict]:
             out = []
@@ -2033,7 +2052,7 @@ class SqlFrontend:
                 out.append(clause)
             return out
 
-        self.warehouse.merge_into(
+        scope.warehouse.merge_into(
             target,
             frame,
             stmt.span(node.mergeCondition()),
@@ -2555,182 +2574,12 @@ class SqlFrontend:
             )
         raise ValueError(f"Unknown procedure system.{proc}")
 
-    def _resolve_dml_subqueries(self, texts: list[str]) -> list[str]:
-        """Make warehouse tables resolvable for subqueries inside DML
-        predicates/assignments (``DELETE … WHERE k IN (SELECT …)``,
-        ``UPDATE … SET v = (SELECT max(…) …)``): each text is later
-        handed to ``F.expr`` against a scan in THIS session, where the
-        analyzer resolves subquery relations through the session
-        catalog. Register every table as a fresh temp view (current
-        snapshot at statement start — the correct read-committed source
-        for a self-referencing DML under copy-on-write) and rewrite the
-        table references (rewrite_table_refs). Views are re-registered
-        per statement so they can never serve a stale snapshot."""
-        tables = set(self.warehouse.list_tables())
-        # drop views registered for since-dropped tables: a stale view
-        # would silently serve the dropped table's last snapshot to a
-        # later subquery instead of failing with table-not-found
-        registered = getattr(self, "_dml_views", set())
-        current = {view_alias(n) for n in tables}
-        for stale in registered - current:
-            self.spark.catalog.dropTempView(stale)
-        self._dml_views = current
-        for name in tables:
-            # registered on the warehouse's own session — the one whose
-            # analyzer will resolve the subquery relations
-            self.warehouse.read_table(name).createOrReplaceTempView(view_alias(name))
-        return [self._table_refs(text, tables, self.warehouse) for text in texts]
-
-    def _spj_candidate_tables(self, query: str, tables: set, wh) -> set:
-        return spj_candidate_tables(query, tables, wh.bucket_layout)
-
-    def _query(self, query: str, checked: bool = False) -> DataFrame:
-        """Trusted read path: every warehouse table as an unmediated view
-        in an isolated session (the producer role reads its own lake).
-        ``t VERSION AS OF n`` / ``t TIMESTAMP AS OF 'ts'`` resolve
-        through the warehouse's snapshot log (Iceberg time-travel SQL).
-        Joins whose two sides are bucket[N] tables on the join keys
-        resolve through bucketed mirrors and plan shuffle-free (SPJ).
-
-        Only a read reaches ``scratch.sql``. ``checked`` says the
-        caller's parse already shows ``query`` is one: a whole read
-        statement, or the query part of a parsed statement, which Spark's
-        grammar only lets hold a query. Otherwise the rewritten text is
-        parsed here first. Stored view bodies were checked the same way
-        when CREATE VIEW stored them."""
-        scratch = new_session(self.spark)  # plans joins as the caller's session
-        # Trusted ≠ path-addressable: the scratch session resolves every
-        # legitimate source through registered views, so SQL-on-files
-        # stays off (defense in depth behind the consumer-side
-        # plan-relation authorization).
-        scratch.conf.set("spark.sql.runSQLOnFiles", "false")
-        wh = Warehouse(scratch, self.warehouse.root)
-        tables = set(self.warehouse.list_tables())
-
-        def resolve(name: str) -> DataFrame | None:  # ASOF JOIN sides
-            try:
-                return scratch.table(name)
-            except Exception:
-                return None
-
-        # changelog views registered via CALL system.create_changelog_view:
-        # materialize the ones this query references into the scratch
-        # session (manifest-planned CDC read — delta files only)
-        # SQL-defined functions replay into the scratch session (cheap
-        # catalog DDL; the stored form is CREATE OR REPLACE TEMPORARY,
-        # so replay is idempotent)
-        for ddl in self._sql_functions.values():
-            scratch.sql(ddl)
-        for view, spec in self._changelog_views.items():
-            if re.search(rf"(?<![\w.`]){re.escape(view)}(?![\w.])", query):
-                # the collision check at CALL time (create_changelog_view)
-                # only covers tables that existed THEN; a table created
-                # after the CALL with the same name would otherwise
-                # silently shadow the changelog view here (changelog
-                # views materialize before table views). Raising matches
-                # the CALL-time contract (ADVICE r10).
-                if view in tables:
-                    raise ValueError(
-                        f"changelog_view '{view}' collides with a table "
-                        "created after the view was registered — drop or "
-                        "rename one of them"
-                    )
-                wh.read_changes(**spec).createOrReplaceTempView(view)
-        query = self._table_refs(query, tables, wh)
-        # the scans below read the rewritten statement with its literals,
-        # comments and hints blanked, by each table's view name: a table
-        # named only in a literal, or only time-travelled, registers no
-        # current-snapshot view
-        scan = _blank_sql_strings(query)
-        spj = self._spj_candidate_tables(scan, tables, wh)
-        # Register only the tables this statement can actually resolve
-        # (optimization r14): building a warehouse read (file listing,
-        # snapshot resolution, schema merge) costs ~0.1-0.2 s per table
-        # per statement, and registering the WHOLE catalog made every
-        # frontend query pay the full catalog's cost — ~0.8 s before
-        # planning a single operator here, and on a real lake the
-        # catalog is unbounded while a statement touches a handful of
-        # relations. The needed set is a token scan over the statement
-        # (``scan``) plus, transitively, the bodies of every referenced
-        # persistent view (their tables resolve during view
-        # materialization below). The scan regex admits backticked
-        # spellings (unlike the rewrite token, which must not match
-        # inside quoted identifiers); over-matching (a shadowing CTE, a
-        # name in a view body's literal) merely registers an unused
-        # view, while the full-catalog loop is the ONLY path that could
-        # resolve a name this scan misses.
-        def _scan_token(nm: str) -> str:
-            return rf"(?<![\w.]){re.escape(nm)}(?![\w.])"
-
-        wh_views = self.warehouse.list_views()
-        needed = {n for n in tables if re.search(_scan_token(view_alias(n)), scan)}
-        seen_view_bodies: set = set()
-
-        def _collect_view_tables(v: str) -> None:
-            if v in seen_view_bodies:
-                return
-            seen_view_bodies.add(v)
-            try:
-                body = self.warehouse.view_sql(v)
-            except Exception:
-                return  # unreadable body fails later, loudly, in _materialize_view
-            needed.update(
-                n for n in tables if re.search(_scan_token(n), body)
-            )
-            for other in wh_views:
-                if other != v and re.search(_scan_token(other), body):
-                    _collect_view_tables(other)
-
-        for v in wh_views:
-            if re.search(_scan_token(v), query):
-                _collect_view_tables(v)
-        for name in needed:
-            frame = (
-                wh.bucketed_read(name) if name in spj else wh.read_table(name)
-            )
-            frame.createOrReplaceTempView(view_alias(name))
-        # persistent SQL views (warehouse._views_dir, Iceberg-view-spec
-        # versioned): materialize the CURRENT version of every view the
-        # query references — bodies resolve tables, other views
-        # (recursively, cycle-guarded) and the frontend's SQL sugar
-        def _token(nm: str) -> str:
-            return rf"(?<![\w.`]){re.escape(nm)}(?![\w.])"
-
-        materialized: set = set()
-
-        def _materialize_view(v: str, stack: frozenset) -> None:
-            if v in materialized:
-                return
-            if v in stack:
-                raise ValueError(
-                    f"View cycle detected through '{v}' — a REPLACE "
-                    "made these views mutually recursive"
-                )
-            if v in tables:
-                raise ValueError(
-                    f"'{v}' is both a table and a view — drop one "
-                    "(single catalog namespace)"
-                )
-            body = self.warehouse.view_sql(v)
-            for other in wh_views:
-                if other != v and re.search(_token(other), body):
-                    _materialize_view(other, stack | {v})
-            b = rewrite_sugar(self._table_refs(body, tables, wh), resolve)
-            scratch.sql(b).createOrReplaceTempView(view_alias(v))
-            materialized.add(v)
-
-        for v in wh_views:
-            if re.search(_token(v), query):
-                _materialize_view(v, frozenset())
-        for v in sorted(materialized, key=len, reverse=True):
-            if "." in v:
-                query = _sub_outside_strings(_token(v), f"`{view_alias(v)}`", query)
-        query = rewrite_sugar(query, resolve)
-        if not checked:
-            parsed = parse_statement(scratch, query)
-            if not parsed.is_query:
-                raise ValueError(f"The statement must be a query, got {parsed.root}")
-        return scratch.sql(query)
+    def _query(self, query: str, stmt: ParsedStatement | None = None) -> DataFrame:
+        """Trusted read path (the producer role reads its own lake):
+        ``query`` on a fresh statement scope, where every relation its
+        parse names is an unmediated view. ``stmt`` is the caller's parse
+        of ``query`` (StatementScope.read)."""
+        return StatementScope(self).read(query, stmt)
 
     def _table_refs(self, query: str, tables: set, wh: Warehouse) -> str:
         """rewrite_table_refs with the producer's loaders: unmediated
@@ -2749,3 +2598,146 @@ class SqlFrontend:
             lambda name, kind: getattr(wh, f"{kind}_df")(name),
             audit,
         )
+
+
+class StatementScope:
+    """One producer statement's view of the warehouse: an isolated
+    session (new_session, SQL-on-files off, the frontend's SQL functions
+    replayed) and a Warehouse bound to it. A relation is registered there
+    only where the statement's parse names it, matched case-insensitively
+    by its view name (view_alias), as SecureSession._read decides: a
+    warehouse table (its bucketed mirror when the statement joins it
+    storage-partitioned, spj_candidate_tables), a changelog view, or a
+    warehouse view, whose body goes through the same steps. The engine's
+    own session never holds a warehouse view."""
+
+    def __init__(self, frontend: SqlFrontend):
+        self._frontend = frontend
+        self.spark = new_session(frontend.spark)  # plans joins as the caller's session
+        # Trusted ≠ path-addressable: every legitimate source resolves
+        # through a registered view, so SQL-on-files stays off (defense
+        # in depth behind the consumer-side relation authorization).
+        self.spark.conf.set("spark.sql.runSQLOnFiles", "false")
+        # stored as CREATE OR REPLACE TEMPORARY: the replay is idempotent
+        for ddl in frontend._sql_functions.values():
+            self.spark.sql(ddl)
+        self.warehouse = Warehouse(self.spark, frontend.warehouse.root)
+        self._tables = {view_alias(t).lower(): t for t in self.warehouse.list_tables()}
+        self._views = {view_alias(v).lower(): v for v in self.warehouse.list_views()}
+        self._changelog = {v.lower(): v for v in frontend._changelog_views}
+        self._registered: set[str] = set()
+
+    def read(
+        self,
+        query: str,
+        parsed: ParsedStatement | None = None,
+        stack: frozenset = frozenset(),
+        parses: dict | None = None,
+    ) -> DataFrame:
+        """``query`` as a read on the scope's session (planned, not run).
+        ``parsed`` is the caller's parse of ``query``, ``stack`` the
+        views being materialized around it (the cycle guard) and
+        ``parses`` a cache of parses by rewritten text (_resolve)."""
+        return self.spark.sql(self._resolve(query, parsed, stack, parses))
+
+    def expression(self, stmt: ParsedStatement, expr) -> str:
+        """The text of DML predicate or SET value ``expr`` of ``stmt``,
+        the relations its subqueries name registered."""
+        text = stmt.span(expr)
+        if not _holds_subquery(stmt._gateway, expr):
+            return text
+        return self._resolve(text, stmt.nested(expr), expression=True)
+
+    def _resolve(
+        self,
+        text: str,
+        parsed: ParsedStatement | None,
+        stack: frozenset = frozenset(),
+        parses: dict | None = None,
+        expression: bool = False,
+    ) -> str:
+        """``text`` rewritten for the scope's session, in SecureSession
+        ._read's steps: the table references (rewrite_table_refs), the
+        SQL sugar (an ASOF JOIN side registers on demand), the parse —
+        ``parsed`` when the rewrites left the text alone, else a parse of
+        the rewritten text (found in ``parses`` when given) — a non-read
+        refused, then each relation the parse names registered; a
+        reference to a CTE is none (ParsedStatement.sources)."""
+        query = self._frontend._table_refs(text, set(self._tables.values()), self.warehouse)
+        if has_sugar(query):
+            query = rewrite_sugar(query, lambda name: self._side(name, stack))
+        if parsed is None or query != text:
+            parsed = (parses or {}).get(query)
+            if parsed is None:
+                parsed = parse_statement(self.spark, f"SELECT {query}" if expression else query)
+        if parses is not None:
+            if len(parses) > 1024:
+                parses.clear()
+            parses[query] = parsed
+        if not parsed.is_query:
+            raise ValueError(f"The statement must be a query, got {parsed.non_read}")
+        names = {}
+        for ident in parsed.sources or ():
+            name = ".".join(ident)
+            names[view_alias(name).lower()] = name
+        spj = spj_candidate_tables(
+            _blank_sql_strings(query),
+            {self._tables[key] for key in names if key in self._tables},
+            self.warehouse.bucket_layout,
+        )
+        for key, name in names.items():
+            self._register(key, stack, spj)
+            if "." in name and key in self._views:  # a dotted view name, flattened
+                query = _sub_outside_strings(
+                    rf"(?<![\w.`]){re.escape(name)}(?![\w.])", f"`{key}`", query, re.I
+                )
+        return query
+
+    def _register(self, key: str, stack: frozenset, spj: set) -> None:
+        if key in self._registered:
+            return
+        table, view, changelog = (m.get(key) for m in (self._tables, self._views, self._changelog))
+        if changelog is not None:
+            # CALL create_changelog_view checks only the tables that
+            # existed then: a table created since must not be shadowed
+            if table is not None:
+                raise ValueError(
+                    f"changelog_view '{changelog}' collides with a table "
+                    "created after the view was registered — drop or "
+                    "rename one of them"
+                )
+            spec = self._frontend._changelog_views[changelog]
+            frame = self.warehouse.read_changes(**spec)
+        elif table is not None:
+            if view is not None:
+                raise ValueError(
+                    f"'{view}' is both a table and a view — drop one (single catalog namespace)"
+                )
+            wh = self.warehouse
+            frame = wh.bucketed_read(table) if table in spj else wh.read_table(table)
+        elif view is not None:
+            if view in stack:
+                raise ValueError(
+                    f"View cycle detected through '{view}' — a REPLACE "
+                    "made these views mutually recursive"
+                )
+            frame = self.read(
+                self.warehouse.view_sql(view), None, stack | {view}, self._frontend._view_parses
+            )
+        else:
+            return
+        frame.createOrReplaceTempView(key)
+        self._registered.add(key)
+
+    def table(self, name: str, stack: frozenset = frozenset()) -> DataFrame:
+        """The relation ``name`` names (a MERGE source, an ASOF JOIN
+        side), registered; Spark's not-found error for anything else."""
+        key = view_alias(name).lower()
+        self._register(key, stack, set())
+        return self.spark.table(key if key in self._registered else name)
+
+    def _side(self, name: str, stack: frozenset) -> DataFrame | None:
+        try:
+            return self.table(name, stack)
+        except AnalysisException:
+            return None

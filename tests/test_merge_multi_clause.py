@@ -334,6 +334,6 @@ def test_cow_by_source_merge_keeps_the_left_join(wh, spark, monkeypatch):
         not_matched_insert=None,
         not_matched_by_source=[{"action": "delete", "condition": "t.amt >= 30"}],
     )
-    assert calls == [False]
+    assert calls == [True]
     assert (stats["updated_rows"], stats["deleted_rows"]) == (1, 2)
     assert _rows(wh.read_table("acct")) == [(1, "a2", 10), (2, "b", 20)]

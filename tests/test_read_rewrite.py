@@ -179,12 +179,27 @@ def read_table_calls(monkeypatch):
     [
         "SELECT count(*) FROM claims VERSION AS OF {first}",
         "SELECT 'patients, rl_patients, rl_claims' AS s FROM claims",
+        # a CTE named like a table is no source; inside its own body
+        # the name is the table
+        "WITH patients AS (SELECT * FROM claims) SELECT count(*) FROM patients",
+        "WITH claims AS (SELECT * FROM claims WHERE amount > 0) SELECT count(*) FROM claims",
     ],
 )
 def test_producer_reads_only_the_tables_the_statement_reads(engine, read_table_calls, query):
     first = engine.warehouse.snapshots("claims")[0]["snapshot_id"]
     engine.sql(query.format(first=first)).collect()
     assert read_table_calls == ["claims"]
+
+
+def test_timestamp_before_the_first_snapshot_raises_on_both_surfaces(engine):
+    """Iceberg refuses a TIMESTAMP AS OF older than the table's first
+    snapshot; an empty frame would read a mistyped year as 0 rows."""
+    from sample_emr_on_eks_fgac_iceberg_spark.sources.warehouse import SnapshotNotFoundError
+
+    query = "SELECT count(*) FROM claims TIMESTAMP AS OF '2000-01-01 00:00:00'"
+    for run in (engine.sql, engine.session_for(TEAM1).sql):
+        with pytest.raises(SnapshotNotFoundError, match="older than 2000-01-01 00:00:00"):
+            run(query).collect()
 
 
 def test_hint_on_a_qualified_name_still_broadcasts(engine, spark):

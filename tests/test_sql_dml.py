@@ -54,6 +54,20 @@ def test_sql_merge_upsert(engine):
     ]
 
 
+def test_merge_source_name_resolves_like_any_relation(engine):
+    """A MERGE's named source is a relation of the parse: matched
+    case-insensitively, and a warehouse view as well as a table."""
+    engine.sql("CREATE TABLE updates (k INT, qty INT, city STRING)")
+    engine.sql("INSERT INTO updates VALUES (2, 99, 'Dallas')")
+    engine.sql("CREATE VIEW big_updates AS SELECT k, qty + 1 AS qty, city FROM updates")
+    for source, qty in (("UPDATES", 99), ("big_updates", 100)):
+        engine.sql(
+            f"MERGE INTO inv t USING {source} s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET qty = s.qty"
+        )
+        assert _rows(engine.sql("SELECT qty FROM inv WHERE k = 2")) == [(qty,)], source
+
+
 def test_sql_merge_subquery_source_and_delete_clause(engine):
     engine.sql("CREATE TABLE updates (k INT, qty INT)")
     engine.sql("INSERT INTO updates VALUES (1, -1), (3, -1)")
@@ -288,3 +302,38 @@ def test_dml_subqueries_with_database_qualified_tables(engine):
     assert rows == [(2, 20)]
     engine.sql("UPDATE qdb.t SET v = (SELECT max(k) FROM qdb.s) WHERE k = 2")
     assert engine.sql("SELECT v FROM qdb.t").collect()[0].v == 3
+
+
+def test_dml_subquery_registers_only_what_it_reads(engine, monkeypatch):
+    """A DELETE's subquery loads only the tables its parse names, into
+    the statement's own session: the engine session gains no temp view
+    that a later commit could leave stale."""
+    from sample_emr_on_eks_fgac_iceberg_spark.sources.warehouse import Warehouse
+
+    engine.sql("CREATE TABLE claims (claim_id INT, patient_id INT)")
+    engine.sql("CREATE TABLE patients (patient_id INT, claim_id INT, amount INT)")
+    engine.sql("CREATE TABLE providers (k INT)")
+    engine.sql("CREATE TABLE visits (k INT)")
+    engine.sql("INSERT INTO claims VALUES (1, 10), (2, 20), (3, 30)")
+    engine.sql("INSERT INTO patients VALUES (10, 1, 9), (20, 2, 1)")
+    calls, read = [], Warehouse.read_table
+
+    def spy(self, name, *args, **kwargs):
+        calls.append(name)
+        return read(self, name, *args, **kwargs)
+
+    def temp_views():
+        return {t.name for t in engine.spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    monkeypatch.setattr(Warehouse, "read_table", spy)
+    engine.sql(
+        "DELETE FROM claims WHERE claim_id IN (SELECT claim_id FROM patients WHERE amount > 5)"
+    )
+    assert calls == ["patients"]
+    assert temp_views() == before
+    monkeypatch.undo()
+    assert _rows(engine.sql("SELECT claim_id FROM claims")) == [(2,), (3,)]
+    engine.sql("INSERT INTO patients VALUES (30, 3, 7)")
+    assert engine.sql("SELECT count(*) FROM patients").collect()[0][0] == 3
+    assert temp_views() == before

@@ -72,6 +72,16 @@ def test_sql_select_over_warehouse(engine):
     assert df.collect()[0].n == 4
 
 
+def test_table_names_resolve_case_insensitively(engine):
+    """The producer matches the relations a statement's parse names by
+    view name, case-insensitively, as Spark resolves identifiers and as
+    the consumer surface does."""
+    _sql_only_fixture(engine)
+    for spelled in ("CLAIMS", "Claims", "`claims`"):
+        df = engine.sql(f"SELECT count(*) AS n FROM {spelled} c JOIN PATIENTS p USING (patient_id)")
+        assert df.collect()[0].n == len(CLAIMS_ROWS), spelled
+
+
 def test_sql_describe(engine):
     engine.sql("CREATE TABLE t (k INT, v STRING)")
     rows = engine.sql("DESCRIBE t").collect()

@@ -78,6 +78,33 @@ def test_replace_cycle_detected_at_read(fe):
         fe.execute("SELECT * FROM a_v")
 
 
+def test_view_names_in_literals_are_data(fe):
+    """A view's body names another view only where its parse does: two
+    views that spell each other in string literals are no cycle."""
+    fe.execute("CREATE TABLE u (k BIGINT)")
+    fe.execute("INSERT INTO u VALUES (5)")
+    fe.execute("CREATE VIEW va AS SELECT 'vb' AS tag, k FROM t")
+    fe.execute("CREATE VIEW vb AS SELECT 'va' AS tag, k FROM u")
+    assert sorted(map(tuple, fe.execute("SELECT * FROM va").collect())) == [
+        ("vb", 1), ("vb", 1), ("vb", 2),
+    ]
+    assert [tuple(r) for r in fe.execute("SELECT * FROM vb").collect()] == [("va", 5)]
+
+
+def test_view_read_loads_only_the_tables_its_body_reads(fe, monkeypatch):
+    fe.execute("CREATE TABLE u (k BIGINT)")
+    fe.execute("CREATE VIEW vc AS SELECT 'u' AS note, k FROM t")
+    calls, read = [], Warehouse.read_table
+
+    def spy(self, name, *args, **kwargs):
+        calls.append(name)
+        return read(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "read_table", spy)
+    assert fe.execute("SELECT count(*) FROM vc").collect()[0][0] == 3
+    assert calls == ["t"]
+
+
 def test_drop_and_show(fe):
     fe.execute("CREATE VIEW sv AS SELECT k FROM t")
     rows = fe.execute("SHOW VIEWS").collect()

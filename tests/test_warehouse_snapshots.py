@@ -47,9 +47,9 @@ def test_timestamp_time_travel(wh):
     wh.insert_values("t", [(2,)])
     old = wh.read_table("t", as_of_timestamp_ms=ts_after_first)
     assert [r.k for r in old.collect()] == [1]
-    # before any snapshot → empty table with declared schema
-    none_yet = wh.read_table("t", as_of_timestamp_ms=ts_after_first - 10_000)
-    assert none_yet.count() == 0 and none_yet.columns == ["k"]
+    # before any snapshot → refused, as Iceberg refuses it
+    with pytest.raises(SnapshotNotFoundError, match="older than"):
+        wh.read_table("t", as_of_timestamp_ms=ts_after_first - 10_000)
 
 
 def test_unknown_snapshot_raises(wh):
