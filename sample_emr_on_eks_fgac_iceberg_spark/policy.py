@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from itertools import count
 from typing import TYPE_CHECKING
 
 from pyspark.errors import ParseException
@@ -471,6 +472,9 @@ class SecureSession:
         # own view of the same name shadows one (_all_view_texts).
         self._views = engine.views
         self._views_in_progress: set[str] = set()
+        # the statement's as-of view numbers (rewrite_asof_joins): the
+        # view bodies a statement reads draw from them too
+        self._asof_views = count()
         self._view_registered: set[str] = set()
         self._registered: set[str] = set()
         self._seen_version: tuple | None = None
@@ -862,6 +866,8 @@ class SecureSession:
         surface) or SQL sugar, rewritten and then parsed (desugar). A
         delegated write hands its parse to the trusted frontend."""
         self._refresh_views()
+        if not self._views_in_progress:  # a statement, not a view body it reads
+            self._asof_views = count()
         text = strip_sql_comments(query).strip()
         try:
             stmt = parse_statement(self._spark, text)
@@ -1158,7 +1164,7 @@ class SecureSession:
             # rewrites introduce no new relations; ASOF substitutes a
             # view joined from frames its resolver vended through the
             # policy path.
-            query = rewrite_sugar(query, self._asof_relation)
+            query = rewrite_sugar(query, self._asof_relation, self._asof_views)
         if stmt is None or query != text:
             stmt = parse_statement(self._spark, query)
         # only a read query may run here: a Command or an eager node

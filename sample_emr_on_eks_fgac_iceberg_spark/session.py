@@ -146,28 +146,22 @@ def build_session(
     return builder.getOrCreate()
 
 
-# Join-planning confs a sub-session must share with the session it comes
-# from: newSession() starts from the context defaults, NOT the caller's
-# runtime conf, so a broadcast threshold or AQE toggle an operator set
-# would otherwise silently not apply to queries planned in the
-# sub-session.
-PLANNING_CONFS = (
-    "spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.adaptive.enabled",
-    "spark.sql.shuffle.partitions",
-)
-
-
 def new_session(spark: SparkSession) -> SparkSession:
-    """``spark.newSession()`` (its own temp views and SQL conf) that plans
-    joins as ``spark`` does: the SecureSession's and the SQL frontend's
-    scratch sessions."""
+    """``spark.newSession()`` (its own temp views, functions and SQL
+    conf) that starts from ``spark``'s SQL conf, where newSession() starts
+    from the context's: a time zone, ANSI or store-assignment policy,
+    broadcast threshold or Parquet write setting set on ``spark`` applies
+    to what the sub-session plans, evaluates and writes. The
+    SecureSession's and the SQL frontend's statement sessions."""
     sub = spark.newSession()
-    for key in PLANNING_CONFS:
-        try:
-            sub.conf.set(key, spark.conf.get(key))
-        except Exception:
-            pass
+    jvm = spark._jvm
+    confs = jvm.java.util.Properties()
+    confs.putAll(
+        jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            spark._jsparkSession.sessionState().conf().getAllConfs()
+        )
+    )
+    sub._jsparkSession.sessionState().conf().setConf(confs)
     return sub
 
 

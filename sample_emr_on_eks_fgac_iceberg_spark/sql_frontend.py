@@ -28,6 +28,7 @@ import json
 import re
 from bisect import bisect_left
 from functools import cached_property
+from itertools import count
 
 from py4j.java_gateway import is_instance_of
 from pyspark.errors import AnalysisException, ParseException
@@ -1465,7 +1466,7 @@ def rewrite_text_sugar(query: str) -> str:
     return out
 
 
-def rewrite_sugar(query: str, resolve=None) -> str:
+def rewrite_sugar(query: str, resolve=None, views=None) -> str:
     """Every SQL-sugar rewrite, in the one order both surfaces use:
     text sugar (rewrite_text_sugar) → ASOF JOIN (rewrite_asof_joins,
     only when a frame resolver is given) → QUALIFY → DISTINCT ON. The
@@ -1473,7 +1474,7 @@ def rewrite_sugar(query: str, resolve=None) -> str:
     itself. Each rewrite is a no-op on text it already rewrote."""
     query = rewrite_text_sugar(query)
     if resolve is not None:
-        query = rewrite_asof_joins(query, resolve)
+        query = rewrite_asof_joins(query, resolve, views)
     return rewrite_distinct_on(rewrite_qualify(query))
 
 
@@ -1535,7 +1536,7 @@ def parse_asof_condition(cond: str, laliases: set, raliases: set):
     return on, ineq[0], ineq[1], ineq[2]
 
 
-def rewrite_asof_joins(query: str, resolve) -> str:
+def rewrite_asof_joins(query: str, resolve, views=None) -> str:
     """Rewrite every ``l [a] ASOF [LEFT] JOIN r [b] ON <cond>``
     (DuckDB's as-of SQL — Spark has no ASOF grammar) into a
     materialized union+window as-of view (temporal.asof_join_frames)
@@ -1549,14 +1550,16 @@ def rewrite_asof_joins(query: str, resolve) -> str:
     resolver that vends SECURED frames and raises its own denial for
     relations the principal may not read (SecureSession: the rewrite
     reads frames directly, so the resolver IS the fence). The as-of
-    views register in the resolved frames' own session catalog."""
+    views register in the resolved frames' own session catalog, numbered
+    from counter ``views``: one statement's rewrites, its view bodies'
+    included, share one, so none replaces a view the statement reads."""
     if not re.search(r"\bASOF\b", _blank_sql_strings(query), re.I):
         return query
     from sample_emr_on_eks_fgac_iceberg_spark.operators.temporal import (
         asof_join_frames,
     )
 
-    count = 0
+    views = count() if views is None else views
     while True:
         # match where literals are blanked (a literal spelling `x ASOF
         # JOIN y ON` is data, never a relation to resolve) and read the
@@ -1596,8 +1599,7 @@ def rewrite_asof_joins(query: str, resolve) -> str:
             frames[0], frames[1], on, lts, rts, op,
             how="left" if left_kw else "inner",
         )
-        view = f"__asof_{count}"
-        count += 1
+        view = f"__asof_{next(views)}"
         joined.createOrReplaceTempView(view)
         query = query[:seg_start] + f"`{view}`" + query[cond_end:]
         for alias in {a1 or rel1, a2 or rel2}:
@@ -1712,9 +1714,10 @@ class SqlFrontend:
         # statement scope, where reads, DML predicates and assignments
         # resolve them.
         self._sql_functions: dict[str, str] = {}
-        # stored view body (after the read rewrites) → its parse: a body
-        # is parsed once per frontend, not on every read of the view
-        self._view_parses: dict[str, ParsedStatement] = {}
+        # stored view (view_alias, lower-cased) → (body, the tables its
+        # rewrites saw, the rewritten body's relation names): a body is
+        # parsed once per frontend, not on every read of the view
+        self._view_sources: dict[str, tuple[str, frozenset, list]] = {}
         # The frontend executes consumer-delegated DML on behalf of
         # SecureSession principals; path relations (``parquet.`/p```)
         # are never a legitimate spelling here — every source the
@@ -1838,7 +1841,7 @@ class SqlFrontend:
         # relations, view cycles and a body that is not a query — one
         # that would run a side effect on every read — all surface at
         # CREATE time instead of first read
-        StatementScope(self).read(body, parsed, parses=self._view_parses)
+        StatementScope(self).view(name, body, parsed)
         self.warehouse.create_view(name, body, replace=replace)
 
     def _drop_view(self, stmt: ParsedStatement, name: str) -> None:
@@ -2626,19 +2629,20 @@ class StatementScope:
         self._views = {view_alias(v).lower(): v for v in self.warehouse.list_views()}
         self._changelog = {v.lower(): v for v in frontend._changelog_views}
         self._registered: set[str] = set()
+        self._asof_views = count()  # as-of view numbers (rewrite_asof_joins)
 
     def read(
-        self,
-        query: str,
-        parsed: ParsedStatement | None = None,
-        stack: frozenset = frozenset(),
-        parses: dict | None = None,
+        self, query: str, parsed: ParsedStatement | None = None, stack: frozenset = frozenset()
     ) -> DataFrame:
         """``query`` as a read on the scope's session (planned, not run).
-        ``parsed`` is the caller's parse of ``query``, ``stack`` the
-        views being materialized around it (the cycle guard) and
-        ``parses`` a cache of parses by rewritten text (_resolve)."""
-        return self.spark.sql(self._resolve(query, parsed, stack, parses))
+        ``parsed`` is the caller's parse of ``query`` and ``stack`` the
+        views being materialized around it (the cycle guard)."""
+        return self.spark.sql(self._resolve(query, parsed, stack))
+
+    def view(self, name: str, body: str, parsed=None, stack: frozenset = frozenset()) -> DataFrame:
+        """Stored view ``name``'s ``body`` as a read, its relation names
+        kept by the frontend per body (_view_sources)."""
+        return self.spark.sql(self._resolve(body, parsed, stack, view=view_alias(name).lower()))
 
     def expression(self, stmt: ParsedStatement, expr) -> str:
         """The text of DML predicate or SET value ``expr`` of ``stmt``,
@@ -2653,31 +2657,35 @@ class StatementScope:
         text: str,
         parsed: ParsedStatement | None,
         stack: frozenset = frozenset(),
-        parses: dict | None = None,
         expression: bool = False,
+        view: str | None = None,
     ) -> str:
         """``text`` rewritten for the scope's session, in SecureSession
         ._read's steps: the table references (rewrite_table_refs), the
         SQL sugar (an ASOF JOIN side registers on demand), the parse —
         ``parsed`` when the rewrites left the text alone, else a parse of
-        the rewritten text (found in ``parses`` when given) — a non-read
-        refused, then each relation the parse names registered; a
-        reference to a CTE is none (ParsedStatement.sources)."""
-        query = self._frontend._table_refs(text, set(self._tables.values()), self.warehouse)
+        the rewritten text — a non-read refused, then each relation the
+        parse names registered; a reference to a CTE is none
+        (ParsedStatement.sources). ``view`` names a stored view's body."""
+        tables = frozenset(self._tables.values())
+        query = self._frontend._table_refs(text, set(tables), self.warehouse)
         if has_sugar(query):
-            query = rewrite_sugar(query, lambda name: self._side(name, stack))
-        if parsed is None or query != text:
-            parsed = (parses or {}).get(query)
-            if parsed is None:
+            query = rewrite_sugar(query, lambda name: self._side(name, stack), self._asof_views)
+        known = self._frontend._view_sources.get(view)
+        if known is not None and known[:2] == (text, tables):
+            sources = known[2]
+        else:
+            if parsed is None or query != text:
                 parsed = parse_statement(self.spark, f"SELECT {query}" if expression else query)
-        if parses is not None:
-            if len(parses) > 1024:
-                parses.clear()
-            parses[query] = parsed
-        if not parsed.is_query:
-            raise ValueError(f"The statement must be a query, got {parsed.non_read}")
+            if not parsed.is_query:
+                raise ValueError(f"The statement must be a query, got {parsed.non_read}")
+            sources = parsed.sources
+            if sources is None:
+                raise ValueError("Cannot name every relation the statement reads")
+            if view is not None:
+                self._frontend._view_sources[view] = (text, tables, sources)
         names = {}
-        for ident in parsed.sources or ():
+        for ident in sources:
             name = ".".join(ident)
             names[view_alias(name).lower()] = name
         spj = spj_candidate_tables(
@@ -2721,9 +2729,7 @@ class StatementScope:
                     f"View cycle detected through '{view}' — a REPLACE "
                     "made these views mutually recursive"
                 )
-            frame = self.read(
-                self.warehouse.view_sql(view), None, stack | {view}, self._frontend._view_parses
-            )
+            frame = self.view(view, self.warehouse.view_sql(view), None, stack | {view})
         else:
             return
         frame.createOrReplaceTempView(key)

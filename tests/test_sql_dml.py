@@ -337,3 +337,20 @@ def test_dml_subquery_registers_only_what_it_reads(engine, monkeypatch):
     engine.sql("INSERT INTO patients VALUES (30, 3, 7)")
     assert engine.sql("SELECT count(*) FROM patients").collect()[0][0] == 3
     assert temp_views() == before
+
+
+def test_dml_follows_the_callers_sql_conf(spark, tmp_path):
+    """A caller-provided engine session's SQL conf applies to DML and
+    reads, though each statement runs in a session of its own: a DELETE
+    predicate compares timestamps in the caller's time zone."""
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    e = FgacEngine(caller, str(tmp_path / "tzwh"))
+    e.sql("CREATE TABLE ev (k INT, ts TIMESTAMP)")
+    # 2024-01-01 04:00 and 12:00 UTC: 2023-12-31 20:00 and 2024-01-01
+    # 04:00 in Los Angeles
+    e.sql("INSERT INTO ev SELECT 1, timestamp_seconds(1704081600)")
+    e.sql("INSERT INTO ev SELECT 2, timestamp_seconds(1704110400)")
+    assert _rows(e.sql("SELECT k FROM ev WHERE ts < '2024-01-01 00:00:00'")) == [(1,)]
+    e.sql("DELETE FROM ev WHERE ts < '2024-01-01 00:00:00'")
+    assert _rows(e.sql("SELECT k, hour(ts) FROM ev")) == [(2, 4)]

@@ -82,6 +82,20 @@ def test_table_names_resolve_case_insensitively(engine):
         assert df.collect()[0].n == len(CLAIMS_ROWS), spelled
 
 
+def test_relation_named_only_at_analysis_is_refused(engine):
+    """A relation the parse cannot name (IDENTIFIER) is refused by name,
+    as on the consumer surface, never left to whatever the session
+    resolves it to."""
+    _sql_only_fixture(engine)
+    for query in (
+        "SELECT count(*) FROM IDENTIFIER('claims')",
+        "DELETE FROM claims WHERE claim_id IN (SELECT claim_id FROM IDENTIFIER('claims'))",
+    ):
+        with pytest.raises(ValueError, match="Cannot name every relation"):
+            engine.sql(query)
+    assert engine.sql("SELECT count(*) FROM claims").collect()[0][0] == len(CLAIMS_ROWS)
+
+
 def test_sql_describe(engine):
     engine.sql("CREATE TABLE t (k INT, v STRING)")
     rows = engine.sql("DESCRIBE t").collect()
@@ -541,6 +555,29 @@ def test_producer_statement_is_parsed_at_most_once(engine, monkeypatch):
         (1, "a"),
         (3, "u"),
     ]
+
+
+def test_view_body_is_parsed_once_per_body(engine, monkeypatch):
+    """A read through a stored view parses only the statement, an ASOF
+    body included; CREATE OR REPLACE gives the view its new body's
+    relations."""
+    engine.sql("CREATE TABLE pl (lk INT, lts INT)")
+    engine.sql("CREATE TABLE pr (rk INT, rts INT)")
+    engine.sql("INSERT INTO pl VALUES (1, 5)")
+    engine.sql("INSERT INTO pr VALUES (1, 3), (1, 7)")
+    engine.sql(
+        "CREATE VIEW pav AS SELECT l.lk, r.rts FROM pl l ASOF JOIN pr r "
+        "ON l.lk = r.rk AND l.lts >= r.rts"
+    )
+    calls = _count_parses(monkeypatch)
+    for _ in range(2):
+        del calls[:]
+        assert [tuple(r) for r in engine.sql("SELECT * FROM pav").collect()] == [(1, 3)]
+        assert len(calls) == 1
+    engine.sql("CREATE OR REPLACE VIEW pav AS SELECT rk, rts FROM pr")
+    del calls[:]
+    assert sorted(tuple(r) for r in engine.sql("SELECT * FROM pav").collect()) == [(1, 3), (1, 7)]
+    assert len(calls) == 1
 
 
 def test_delegated_consumer_write_is_parsed_once(engine, monkeypatch):

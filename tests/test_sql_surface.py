@@ -337,6 +337,26 @@ def test_asof_spelled_in_a_literal_is_data(asof_engine, surface):
     assert not [e for e in log[before:] if e[1] == "asof_vault"]
 
 
+@pytest.mark.parametrize("surface", ["producer", "ana"])
+def test_asof_beside_a_view_with_its_own_asof(asof_engine, surface):
+    # the view's body is desugared in the same session after the outer
+    # join was: each as-of join keeps its own registration
+    asof_engine.sql(
+        "CREATE OR REPLACE VIEW asof_fwd AS SELECT t.xval AS fx, r.qv AS fq FROM tx t "
+        "ASOF JOIN rq r ON t.user_id = r.quser AND t.xts <= r.qts"
+    )
+    run = asof_engine.sql if surface == "producer" else asof_engine.session_for(surface).sql
+    back = [("back", 11, 5), ("back", 12, 6)] + [("back", 21, 7)] * (surface == "producer")
+    got = run(f"SELECT 'back', {_ASOF_ROWS} UNION ALL SELECT 'fwd', fx, fq FROM asof_fwd")
+    assert sorted(map(tuple, got.collect())) == sorted(back + [("fwd", 11, 6)])
+    # the view as the side of a later as-of join of the statement
+    got = run(
+        f"SELECT 'back', {_ASOF_ROWS} UNION ALL SELECT 'side', q.qv, f.fx "
+        "FROM rq q ASOF JOIN asof_fwd f ON q.qv = f.fq AND q.qts >= f.fx"
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(back + [("side", 6, 11)])
+
+
 def test_consumer_asof_and_qualify_deny_permanent_tables(
     spark, tmp_path_factory
 ):
