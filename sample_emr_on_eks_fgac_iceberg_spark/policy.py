@@ -32,10 +32,9 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from itertools import count
 from typing import TYPE_CHECKING
 
-from pyspark.errors import ParseException
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,15 +43,14 @@ from sample_emr_on_eks_fgac_iceberg_spark.sources.warehouse import Warehouse
 from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
     ENGINE_GRAMMAR,
     ParsedStatement,
+    StatementScope,
     _blank_sql_strings,
     _sub_outside_strings,
     desugar,
     has_sugar,
     match_engine_grammar,
     parse_statement,
-    rewrite_sugar,
     rewrite_table_refs,
-    spj_candidate_tables,
     strip_sql_comments,
     view_alias,
 )
@@ -416,11 +414,12 @@ class SecureSession:
     privileged query-engine role (SURVEY.md §3.1 step 4).
 
     Wraps ``spark.newSession()`` (isolated temp-view catalog + SQL conf,
-    shared SparkContext) and registers only policy-wrapped views, so
-    both the DataFrame path (``.table``) and the SQL path (``.sql``)
-    see the filtered relation; ``SELECT *`` expands to the filtered
-    column set (SURVEY.md §2 P1) and a reference to an ungranted table
-    fails at plan time with ``AccessDeniedException``.
+    shared SparkContext) and registers only policy-wrapped views, each
+    where a statement's parse first names it, so both the DataFrame
+    path (``.table``) and the SQL path (``.sql``) see the filtered
+    relation; ``SELECT *`` expands to the filtered column set (SURVEY.md
+    §2 P1) and a reference to an ungranted table fails at plan time
+    with ``AccessDeniedException``.
     """
 
     # Denied classes whose LF permission name says more than the class:
@@ -469,16 +468,14 @@ class SecureSession:
         # filter edits) propagate instantly and a view is never a
         # privilege escalation channel. The producer's catalog views
         # (warehouse CREATE VIEW) are shared the same way; a consumer's
-        # own view of the same name shadows one (_all_view_texts).
+        # own view of the same name shadows one (_view_body).
         self._views = engine.views
-        self._views_in_progress: set[str] = set()
-        # the statement's as-of view numbers (rewrite_asof_joins): the
-        # view bodies a statement reads draw from them too
-        self._asof_views = count()
-        self._view_registered: set[str] = set()
-        self._registered: set[str] = set()
+        # stored view → its body's relation names (StatementScope)
+        self._view_sources: dict[str, tuple] = {}
+        # view name of each registered table → registered as its
+        # bucketed mirror; valid while _seen_version holds
+        self._registered: dict[str, bool] = {}
         self._seen_version: tuple | None = None
-        self._refresh_views()
 
     def _raw_scan(self, table: str, **time_travel) -> DataFrame:
         if time_travel:
@@ -501,39 +498,17 @@ class SecureSession:
         )
 
     def _refresh_views(self) -> None:
-        """Re-resolve grant + filter into the session catalog — called
-        per sql() so policy changes (revoke, filter delete) propagate to
-        live sessions instead of serving a stale construction-time
-        snapshot; the .table() path re-authorizes per call already.
-        Gated on (policy version, warehouse state token) — a view
-        freezes its snapshot's file list, so a commit re-resolves it
-        too — so the steady-state cost per query is one compare + one
-        stat() per table, not N view registrations."""
+        """Drop the table registrations once the policy or the warehouse
+        moved — a registration freezes its grant, filter and snapshot
+        file list. Called per sql(), so a revoke, a filter change or a
+        commit reaches the next statement of a live session; each table
+        registers again on its next named use (_relation). The steady-
+        state cost per statement is one compare + one stat() per table."""
         token = (self._policy.version, self._warehouse.state_token())
-        if token == self._seen_version:
-            return
-        granted = set()
-        known = set(self._warehouse.list_tables())
-        for name in self._policy.tables_granted(self.principal):
-            if name not in known:
-                # Orphan grant — its table was dropped (LF keeps such
-                # grants around too). It must not break the session's
-                # OTHER tables; the dropped name simply never registers.
-                continue
-            if SELECT not in self._policy.grant_for(self.principal, name).permissions:
-                continue
-            try:
-                secured = self._secured(name)
-            except AccessDeniedException:
-                # Dangling grant (filter deleted): fail closed — the
-                # view disappears and touching the table denies below.
-                continue
-            secured.createOrReplaceTempView(view_alias(name))
-            granted.add(name)
-        for stale in self._registered - granted:
-            self._spark.catalog.dropTempView(view_alias(stale))
-        self._registered = granted
-        self._seen_version = token
+        if token != self._seen_version:
+            for key in self._registered:
+                self._spark.catalog.dropTempView(key)
+            self._registered, self._seen_version = {}, token
 
     # ------------------------------------------ write-source authorization
     def _authorize_unfiltered_select(self, table: str) -> None:
@@ -556,7 +531,9 @@ class SecureSession:
         solely of known tables, each authorized for unfiltered SELECT —
         an identifier that is not a known table (glob path, foreign
         temp view) — or a relation the walk cannot name — is a denial,
-        never a pass-through; (2) statements
+        never a pass-through. A CTE's name is no relation where the CTE
+        is in scope, but inside its own body it names the outer table
+        (ParsedStatement.sources); (2) statements
         Spark cannot parse fall back to a conservative word-boundary
         scan over known table names (those shapes — OPTIMIZE, ALTER …
         WRITE ORDERED BY — carry no source clause)."""
@@ -565,28 +542,15 @@ class SecureSession:
         known = {t.lower(): t for t in self._warehouse.list_tables()}
         tgt = target.lower()
         if stmt is not None:
-            if stmt.relations is None:
+            if stmt.sources is None:
                 self._deny("<unnamed relation>")
-            idents, cte_names = stmt.relations
-            for parts in idents:
-                name = ".".join(str(p) for p in parts).lower()
-                if name == tgt:
+            for parts in stmt.sources:
+                name = ".".join(parts)
+                if name.lower() == tgt:
                     continue
-                # A CTE-local name is exempt ONLY if it does not shadow
-                # a real table: Spark resolves a CTE body's reference
-                # to its own name against the OUTER scope (the base
-                # table), so `WITH t AS (SELECT … FROM t) …` reads the
-                # real t. Scoping the exemption per-branch isn't worth
-                # the complexity — when a CTE name collides with a
-                # known table, the statement needs the grant (fail
-                # closed; rename the CTE to avoid it).
-                if len(parts) == 1 and name in cte_names and name not in known:
-                    continue
-                resolved = known.get(name)
+                resolved = known.get(name.lower())
                 if resolved is None:
-                    raise AccessDeniedException(
-                        self.principal, ".".join(str(p) for p in parts), SELECT
-                    )
+                    raise AccessDeniedException(self.principal, name, SELECT)
                 self._authorize_unfiltered_select(resolved)
         else:
             for t in self._warehouse.list_tables():
@@ -633,11 +597,7 @@ class SecureSession:
         # same way it would at read time (fail closed, plan-time), and
         # the read path admits query plans only — a body re-executes on
         # every referencing read, so it may never be a statement.
-        self._views_in_progress.add(name)
-        try:
-            self._read(body, parsed)
-        finally:
-            self._views_in_progress.discard(name)
+        self._read(body, parsed, view=name)
         self._views[name] = {"owner": self.principal, "text": body}
         return None
 
@@ -650,32 +610,6 @@ class SecureSession:
             raise AccessDeniedException(self.principal, name, "DROP_VIEW")
         del self._views[name]
         return None
-
-    def _view_frame(self, name: str, body: str) -> DataFrame:
-        """A stored view's body, freshly re-secured under this
-        principal (invoker's rights), cycle-guarded."""
-        self._views_in_progress.add(name)
-        try:
-            return self.sql(body)
-        finally:
-            self._views_in_progress.discard(name)
-
-    def _materialize_views(self, names: set[str]) -> None:
-        """Register (invoker's-rights, freshly re-secured) frames for
-        every stored view among ``names`` — the statement's parsed
-        relation identifiers, lower-cased — and sweep session temp
-        views whose registry entry is gone: a dropped view must not keep
-        serving from a stale temp copy. Rebuild cost is plan-time
-        metadata only; no data materializes."""
-        texts = self._all_view_texts()
-        for stale in self._view_registered - set(texts):
-            self._spark.catalog.dropTempView(stale)
-            self._view_registered.discard(stale)
-        for vname, body in texts.items():
-            # cycle guard: a view never re-materializes inside its own body
-            if vname.lower() in names and vname not in self._views_in_progress:
-                self._view_frame(vname, body).createOrReplaceTempView(vname)
-                self._view_registered.add(vname)
 
     # ---------------------------------------------------------- queries
     def table(self, name: str) -> DataFrame:
@@ -719,7 +653,7 @@ class SecureSession:
     def _all_view_texts(self) -> dict:
         """name -> body for every view this session can see: shared
         producer views merged UNDER the session's own (same shadowing
-        rule as _materialize_views)."""
+        rule as _view_body)."""
         texts = {v: self._warehouse.view_sql(v) for v in self._warehouse.list_views()}
         texts.update({n: v["text"] for n, v in self._views.items()})
         return texts
@@ -866,8 +800,6 @@ class SecureSession:
         surface) or SQL sugar, rewritten and then parsed (desugar). A
         delegated write hands its parse to the trusted frontend."""
         self._refresh_views()
-        if not self._views_in_progress:  # a statement, not a view body it reads
-            self._asof_views = count()
         text = strip_sql_comments(query).strip()
         try:
             stmt = parse_statement(self._spark, text)
@@ -1071,34 +1003,6 @@ class SecureSession:
     }
 
     # ---------------------------------------------------------- reads
-    def _asof_relation(self, name: str) -> DataFrame | None:
-        """ASOF JOIN side resolver. The as-of rewrite reads relation
-        frames directly, so this IS the policy fence: a stored view
-        re-secures under this principal (invoker's rights), only this
-        session's TEMPORARY views — the policy-filtered registrations,
-        __meta/__tt views — resolve, a permanent catalog table (an
-        unfiltered SPJ mirror) raises the same plan-time denial as the
-        parsed-relation fence, and unknown names stay not-found."""
-        views = {v.lower(): (v, body) for v, body in self._all_view_texts().items()}
-        if name.lower() in views:
-            vname, body = views[name.lower()]
-            if vname not in self._views_in_progress:
-                return self._view_frame(vname, body)
-        if name in self._view_registered:
-            return None  # a dropped view's stale registration
-        try:
-            t = self._spark.catalog.getTable(name)
-        except Exception:
-            # exists in the warehouse but not registered for this
-            # principal → the same plan-time denial the
-            # unresolved-relation handler produces
-            if name in set(self._warehouse.list_tables()) and name not in self._registered:
-                self._deny(name)
-            return None
-        if not t.isTemporary:
-            raise AccessDeniedException(self.principal, name)
-        return self._spark.table(name)
-
     def _metadata(self, name: str, kind: str) -> DataFrame | None:
         """``t.snapshots`` / ``t.history`` under DESCRIBE: a principal who
         may DESCRIBE the table may read its snapshot log and history. The
@@ -1115,109 +1019,104 @@ class SecureSession:
         if self._policy.grant_for(self.principal, name) is None:
             self._deny(name)
 
-    def _read(self, query: str, stmt: ParsedStatement | None) -> DataFrame:
-        """The secured read path. ``stmt`` is the parse of ``query``, or
-        None when ``query`` carries SQL sugar Spark cannot parse."""
-        text = query
-        tables = self._warehouse.list_tables()
-        # Table references through this principal's policy path: time
-        # travel loads the historical snapshot through _secured, so the
-        # SAME row filter + column whitelist apply — history is never a
-        # policy bypass (a row the filter hides today is hidden in every
-        # snapshot it ever appeared in); metadata tables are
-        # DESCRIBE-gated; a catalog-qualified name denies unless granted.
-        query = rewrite_table_refs(
+    def _read(self, query: str, stmt: ParsedStatement | None, view: str | None = None) -> DataFrame:
+        """The secured read path: ``query`` — stored view ``view``'s body
+        when given — resolved by a StatementScope over this session
+        under this principal's relation rule (_relation). ``stmt`` is
+        the parse of ``query``, or None when ``query`` carries SQL sugar
+        Spark cannot parse. The views a statement reads re-resolve on
+        every statement: their registrations are dropped once it is
+        planned, so a dropped or replaced view never serves a stale
+        copy."""
+        scope = StatementScope(self._warehouse, self)
+        try:
+            return scope.view(view, query, stmt) if view else scope.read(query, stmt)
+        finally:
+            for key in scope.views:
+                self._spark.catalog.dropTempView(key)
+
+    # The consumer's side of StatementScope: its table references, its
+    # relation rule and its refusals.
+    def _table_refs(self, query: str, scope: StatementScope) -> str:
+        """Table references through this principal's policy path: time
+        travel loads the historical snapshot through _secured, so the
+        SAME row filter + column whitelist apply — history is never a
+        policy bypass (a row the filter hides today is hidden in every
+        snapshot it ever appeared in); metadata tables are
+        DESCRIBE-gated; a catalog-qualified name denies unless granted."""
+        return rewrite_table_refs(
             self._spark,
             query,
-            set(tables),
+            set(scope.tables.values()),
             self._secured,
             self._metadata,
             qualified=self._authorize_qualified,
         )
-        # Consumer-side storage-partitioned joins: when this query joins
-        # two granted bucket[N] tables on their bucket keys with equal
-        # N, re-register those views over the policy-filtered BUCKETED
-        # mirror frames — the filter/mask projection preserves the
-        # mirror's hash partitioning, so the consumer's join plans with
-        # ZERO Exchange below it, exactly like the producer SQL path
-        # (the reference's SQL users get SPJ transparently; no special
-        # method). Fail-open to the plain shuffled view on any denial.
-        cands = spj_candidate_tables(
-            query,
-            {n for n in self._registered if "." not in n},
-            self._warehouse.bucket_layout,
-        )
-        for name in cands:
+
+    def _relation(self, scope: StatementScope, key: str, name: str, spj: bool):
+        """What parsed name ``name`` (view name ``key``) resolves to for
+        this principal:
+
+        - a stored view → its body, re-secured under this principal on
+          every statement (invoker's rights);
+        - a granted table → its secured frame (over the bucketed mirror
+          when ``spj``), registered on first named use and kept until
+          the policy or the warehouse moves (_refresh_views), its grant
+          audited on every use;
+        - an ungranted table → denied from the parse, before Spark
+          analyzes the statement (the reference's plan-time denial,
+          consumer_emr_on_eks_setup.sh:480-488);
+        - a PERMANENT catalog table → denied: engine-internal ones (the
+          SPJ bucketed mirrors ``__spj_*``) are visible to every session
+          of the context and hold UNFILTERED rows;
+        - anything else (this session's __tt/__meta/__asof views, an
+          unknown name) → None, left to Spark."""
+        body = self._view_body(key)
+        if body is not None:
+            self._registered.pop(key, None)  # the view's registration replaces a table's
+            return body
+        table = scope.tables.get(key)
+        if table is None:
             try:
-                secured = self._policy.secured_frame(
-                    self.principal, name, lambda: self._warehouse.bucketed_read(name)
-                )
-            except AccessDeniedException:
-                continue
-            secured.createOrReplaceTempView(view_alias(name))
-        if has_sugar(query):
-            # SQL sugar the Spark parser lacks or misreads (EXCLUDE,
-            # FETCH FIRST, quantified ALL/ANY/SOME, ASOF JOIN, QUALIFY,
-            # DISTINCT ON — which parses as a call to a function `ON`)
-            # rewrites BEFORE the relation fence, exactly as on the
-            # producer frontend, and the result is parsed. The textual
-            # rewrites introduce no new relations; ASOF substitutes a
-            # view joined from frames its resolver vended through the
-            # policy path.
-            query = rewrite_sugar(query, self._asof_relation, self._asof_views)
-        if stmt is None or query != text:
-            stmt = parse_statement(self._spark, query)
-        # only a read query may run here: a Command or an eager node
-        # anywhere in the tree (a multi-insert's INSERTs under a Union,
-        # EXECUTE IMMEDIATE) is denied
-        if not stmt.is_query:
-            self._deny_statement(stmt.non_read)
-        # Engine-internal PERMANENT catalog tables (the SPJ bucketed
-        # mirrors `__spj_*`, or anything else saveAsTable'd into the
-        # shared metastore) are visible to every session of the
-        # context — including this one. They hold UNFILTERED rows, so
-        # resolving one here would be a policy bypass (round-12 probe:
-        # a consumer could SELECT a mirror of an ungranted table).
-        # Deny any parsed relation that resolves to a non-temporary
-        # catalog table; the session's own registrations (policy
-        # views, __meta/__tt views, user views) are all temp views and
-        # pass, and unknown names still flow to TABLE_OR_VIEW_NOT_FOUND.
-        # A relation naming a warehouse table this session never
-        # registered (ungranted, or its filter was deleted) is the
-        # reference's plan-time denial (consumer_emr_on_eks_setup.sh:
-        # 480-488), decided here from the parse, before Spark analyzes
-        # the statement; as a catalog-qualified name it is matched on
-        # its last part. CTEs and stored views of that name shadow it.
-        if stmt.relations is None:
+                found = self._spark.catalog.getTable(name)
+            except AnalysisException:
+                return None
+            if not found.isTemporary:
+                self._deny(name)
+            return None
+        if self._registered.get(key) == spj:
+            # audited on every statement, as on the first use: the
+            # audit of a statement does not depend on what is registered
+            self._policy.authorize(self.principal, table)
+            return None
+        grant = self._policy.grant_for(self.principal, table)
+        if grant is None or SELECT not in grant.permissions:
+            self._deny(table)
+        load = self._warehouse.bucketed_read if spj else self._raw_scan
+        try:
+            frame = self._policy.secured_frame(self.principal, table, lambda: load(table))
+        except AccessDeniedException:  # a dangling grant: its filter was deleted
+            self._deny(table)
+        self._registered[key] = spj
+        return frame
+
+    def _view_body(self, key: str) -> str | None:
+        """The body of the stored view whose view name is ``key``: a
+        consumer view shadows a producer view of the same name."""
+        for name, view in self._views.items():
+            if view_alias(name).lower() == key:
+                return view["text"]
+        shared = next((v for v in self._warehouse.list_views() if view_alias(v).lower() == key), None)
+        return None if shared is None else self._warehouse.view_sql(shared)
+
+    def _refuse(self, non_read: str | None) -> None:
+        """A plan that executes anywhere in its tree (``non_read``: a
+        Command, a multi-insert's INSERTs under a Union, EXECUTE
+        IMMEDIATE) or names a relation only at analysis (None) is
+        denied, with one audit entry."""
+        if non_read is None:
             self._deny("<unnamed relation>")
-        idents, cte_names = stmt.relations
-        names = {".".join(ident).lower() for ident in idents}
-        by_view = {view_alias(t).lower(): t for t in tables}
-        view_names = None
-        for ident in idents:
-            nm = ".".join(ident)
-            if nm.lower() in cte_names:
-                continue
-            table = by_view.get(ident[-1].lower())
-            if table in self._registered:
-                if len(ident) == 1:
-                    continue  # the session's own policy view
-            elif table is not None:
-                if view_names is None:
-                    view_names = {v.lower() for v in self._all_view_texts()}
-                if nm.lower() not in view_names:
-                    self._deny(table)
-            try:
-                t = self._spark.catalog.getTable(nm)
-            except Exception:
-                continue
-            if not t.isTemporary:
-                raise AccessDeniedException(self.principal, nm)
-        # User views referenced by the query: rebuild each through this
-        # principal's own policy path (invoker's rights) so revokes and
-        # filter changes propagate to every subsequent read.
-        self._materialize_views(names)
-        return self._spark.sql(query)
+        self._deny_statement(non_read)
 
     def describe(self, name: str) -> list[tuple[str, str]]:
         # the filtered frame's schema only: nothing executes

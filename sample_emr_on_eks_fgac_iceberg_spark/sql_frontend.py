@@ -770,8 +770,8 @@ class ParsedStatement:
     """One statement as Spark's own parser sees it: the root plan class
     (CTE wrappers unwrapped) and its node, the text it was parsed from,
     plus — from ONE py4j walk over the whole tree, on first use — every
-    relation identifier, the CTE names the statement defines, and the
-    first node anywhere in the tree that executes rather than reads. No
+    relation identifier a catalog resolves (``sources``) and the first
+    node anywhere in the tree that executes rather than reads. No
     textual spelling (comments, case, quoting) can change any of these.
     When the statement carried SQL sugar, ``text`` is its plain-SQL
     rewrite (desugar)."""
@@ -909,39 +909,29 @@ class ParsedStatement:
     def non_read(self) -> str | None:
         """Class of the first executing node in the tree (the root's own
         class when the root is a statement), or None for a read."""
-        return self._walk[2]
-
-    @property
-    def relations(self) -> tuple[list[tuple[str, ...]], set[str]] | None:
-        """``(idents, cte_names)``: every relation identifier in the
-        plan — subqueries and CTE bodies included — and the CTE names
-        the statement defines. None when the walk cannot name every
-        relation (an ``IDENTIFIER(…)`` clause, a runaway tree): callers
-        deny."""
-        idents, cte_names, _, named, _ = self._walk
-        return (idents, cte_names) if named else None
+        return self._walk[0]
 
     @property
     def sources(self) -> list[tuple[str, ...]] | None:
-        """The relation identifiers a catalog resolves: every one but a
-        reference to a CTE in scope where it stands (a CTE's own body
-        does not see its name, so there the name is the outer relation).
-        None when the walk cannot name every relation."""
-        *_, named, sources = self._walk
+        """The relation identifiers a catalog resolves — subqueries and
+        CTE bodies included: every one but a reference to a CTE in scope
+        where it stands (a CTE's own body does not see its name, so
+        there the name is the outer relation). None when the walk cannot
+        name every relation (an ``IDENTIFIER(…)`` clause, a runaway
+        tree): callers refuse."""
+        _, named, sources = self._walk
         return sources if named else None
 
     @cached_property
     def _walk(self):
-        idents: list[tuple[str, ...]] = []
         sources: list[tuple[str, ...]] = []
-        cte_names: set[str] = set()
         non_read, named = None, True
         # each node with the CTE names in scope where it stands
         stack, visited = [(self.plan, frozenset())], 0
         while stack:
             visited += 1
             if visited > _MAX_WALK_NODES:
-                return idents, cte_names, non_read, False, sources
+                return non_read, False, sources
             node, scope = stack.pop()
             try:
                 name = node.getClass().getName()
@@ -962,10 +952,8 @@ class ParsedStatement:
                     ident = tuple(seq.apply(i) for i in range(seq.size()))
                 except Exception:
                     ident = None
-                if ident:
-                    idents.append(ident)
-                    if len(ident) > 1 or ident[0].lower() not in scope:
-                        sources.append(ident)
+                if ident and (len(ident) > 1 or ident[0].lower() not in scope):
+                    sources.append(ident)
             if cls == "UnresolvedWith":
                 # CTE definitions introduce local names that are not
                 # warehouse tables; references to them are legitimate.
@@ -977,9 +965,7 @@ class ParsedStatement:
                     rels = node.cteRelations()
                     for i in range(rels.size()):
                         stack.append((rels.apply(i)._2(), scope))  # sees the CTEs before it
-                        name = str(rels.apply(i)._1()).lower()
-                        cte_names.add(name)
-                        scope = scope | {name}
+                        scope = scope | {str(rels.apply(i)._1()).lower()}
                 except Exception:
                     pass
             # children() on every TreeNode; expressions() on plan nodes
@@ -1000,7 +986,7 @@ class ParsedStatement:
                 stack.append((node.plan(), scope))
             except Exception:
                 pass
-        return idents, cte_names, non_read, named, sources
+        return non_read, named, sources
 
 
 def parse_statement(spark: SparkSession, text: str) -> ParsedStatement:
@@ -1841,7 +1827,7 @@ class SqlFrontend:
         # relations, view cycles and a body that is not a query — one
         # that would run a side effect on every read — all surface at
         # CREATE time instead of first read
-        StatementScope(self).view(name, body, parsed)
+        self._scope().view(name, body, parsed)
         self.warehouse.create_view(name, body, replace=replace)
 
     def _drop_view(self, stmt: ParsedStatement, name: str) -> None:
@@ -1999,12 +1985,12 @@ class SqlFrontend:
     # name registered in the scope.
     def _delete(self, stmt: ParsedStatement, name: str) -> None:
         cond = stmt.node.condition()
-        scope = StatementScope(self)
+        scope = self._scope()
         where = None if str(cond) == "true" else scope.expression(stmt, cond)
         scope.warehouse.delete_from(name, where, stmt.alias("table"))
 
     def _update(self, stmt: ParsedStatement, name: str) -> None:
-        node, scope = stmt.node, StatementScope(self)
+        node, scope = stmt.node, self._scope()
         sets = {
             _set_key(a.key()): scope.expression(stmt, a.value()) for a in _seq(node.assignments())
         }
@@ -2024,7 +2010,7 @@ class SqlFrontend:
           WHEN NOT MATCHED BY SOURCE [AND cond]
             THEN UPDATE SET … | DELETE                         (×N)
         """
-        node, scope = stmt.node, StatementScope(self)
+        node, scope = stmt.node, self._scope()
         source, alias = node.sourceTable(), None
         if _node_name(source) == "SubqueryAlias":
             alias, source = str(source.alias()), source.child()
@@ -2582,12 +2568,30 @@ class SqlFrontend:
         ``query`` on a fresh statement scope, where every relation its
         parse names is an unmediated view. ``stmt`` is the caller's parse
         of ``query`` (StatementScope.read)."""
-        return StatementScope(self).read(query, stmt)
+        return self._scope().read(query, stmt)
 
-    def _table_refs(self, query: str, tables: set, wh: Warehouse) -> str:
+    def _scope(self) -> StatementScope:
+        """A statement's scope on an isolated session (new_session, so
+        joins plan as in the caller's session) with the frontend's SQL
+        functions replayed. Trusted ≠ path-addressable: every legitimate
+        source resolves through a registered view, so SQL-on-files stays
+        off (defense in depth behind the consumer-side relation
+        authorization). The engine's own session never holds a
+        warehouse view."""
+        spark = new_session(self.spark)
+        spark.conf.set("spark.sql.runSQLOnFiles", "false")
+        # stored as CREATE OR REPLACE TEMPORARY: the replay is idempotent
+        for ddl in self._sql_functions.values():
+            spark.sql(ddl)
+        return StatementScope(Warehouse(spark, self.warehouse.root), self)
+
+    # The producer's side of StatementScope: its table references, its
+    # relation rule and its refusals.
+    def _table_refs(self, query: str, scope: StatementScope) -> str:
         """rewrite_table_refs with the producer's loaders: unmediated
-        reads of ``wh``, every metadata table, and the audit log."""
-        audit = None
+        reads of the scope's warehouse, every metadata table, and the
+        audit log."""
+        wh, audit = scope.warehouse, None
         if self.policy is not None:
             audit = lambda: wh.spark.createDataFrame(  # noqa: E731
                 list(self.policy.audit_log),
@@ -2596,38 +2600,67 @@ class SqlFrontend:
         return rewrite_table_refs(
             self.spark,
             query,
-            tables,
+            set(scope.tables.values()),
             wh.read_table,
             lambda name, kind: getattr(wh, f"{kind}_df")(name),
             audit,
         )
 
+    def _relation(self, scope: StatementScope, key: str, name: str, spj: bool):
+        """What parsed name ``name`` (view name ``key``) resolves to,
+        unmediated: a changelog view's frame, a warehouse table's (its
+        bucketed mirror when ``spj``) or a warehouse view's body; None
+        leaves the name to Spark."""
+        wh, table = scope.warehouse, scope.tables.get(key)
+        view = next((v for v in wh.list_views() if view_alias(v).lower() == key), None)
+        changelog = next((v for v in self._changelog_views if v.lower() == key), None)
+        if changelog is not None:
+            # CALL create_changelog_view checks only the tables that
+            # existed then: a table created since must not be shadowed
+            if table is not None:
+                raise ValueError(
+                    f"changelog_view '{changelog}' collides with a table "
+                    "created after the view was registered — drop or "
+                    "rename one of them"
+                )
+            return wh.read_changes(**self._changelog_views[changelog])
+        if table is not None:
+            if view is not None:
+                raise ValueError(
+                    f"'{view}' is both a table and a view — drop one (single catalog namespace)"
+                )
+            return wh.bucketed_read(table) if spj else wh.read_table(table)
+        return None if view is None else wh.view_sql(view)
+
+    @staticmethod
+    def _refuse(non_read: str | None) -> None:
+        if non_read is None:
+            raise ValueError("Cannot name every relation the statement reads")
+        raise ValueError(f"The statement must be a query, got {non_read}")
+
 
 class StatementScope:
-    """One producer statement's view of the warehouse: an isolated
-    session (new_session, SQL-on-files off, the frontend's SQL functions
-    replayed) and a Warehouse bound to it. A relation is registered there
-    only where the statement's parse names it, matched case-insensitively
-    by its view name (view_alias), as SecureSession._read decides: a
-    warehouse table (its bucketed mirror when the statement joins it
-    storage-partitioned, spj_candidate_tables), a changelog view, or a
-    warehouse view, whose body goes through the same steps. The engine's
-    own session never holds a warehouse view."""
+    """One statement's read resolver, shared by both SQL surfaces: it
+    runs a read's steps in ``warehouse``'s session. The table references
+    are rewritten (the surface's ``_table_refs``), then the SQL sugar (an
+    ASOF JOIN side resolves on demand); the text is parsed — the caller's
+    parse when the rewrites left it alone — and a non-read is refused
+    (the surface's ``_refuse``). Then each relation the parse names
+    (ParsedStatement.sources) registers under its view name (view_alias,
+    matched case-insensitively) as the surface's relation rule,
+    ``_relation``, resolves it: to a frame, to a stored view's body,
+    which goes through the same steps with the view stack as the cycle
+    guard, or to None, which leaves the name to Spark; the rule raises a
+    denial itself. A table the statement joins storage-partitioned
+    (spj_candidate_tables) is asked for as its bucketed mirror. A view
+    body's relation names are kept per surface and body
+    (``_view_sources``), so a view is parsed once per body."""
 
-    def __init__(self, frontend: SqlFrontend):
-        self._frontend = frontend
-        self.spark = new_session(frontend.spark)  # plans joins as the caller's session
-        # Trusted ≠ path-addressable: every legitimate source resolves
-        # through a registered view, so SQL-on-files stays off (defense
-        # in depth behind the consumer-side relation authorization).
-        self.spark.conf.set("spark.sql.runSQLOnFiles", "false")
-        # stored as CREATE OR REPLACE TEMPORARY: the replay is idempotent
-        for ddl in frontend._sql_functions.values():
-            self.spark.sql(ddl)
-        self.warehouse = Warehouse(self.spark, frontend.warehouse.root)
-        self._tables = {view_alias(t).lower(): t for t in self.warehouse.list_tables()}
-        self._views = {view_alias(v).lower(): v for v in self.warehouse.list_views()}
-        self._changelog = {v.lower(): v for v in frontend._changelog_views}
+    def __init__(self, warehouse: Warehouse, surface):
+        self.warehouse, self.spark = warehouse, warehouse.spark
+        self._surface = surface
+        self.tables = {view_alias(t).lower(): t for t in warehouse.list_tables()}
+        self.views: set[str] = set()  # the stored views registered, by view name
         self._registered: set[str] = set()
         self._asof_views = count()  # as-of view numbers (rewrite_asof_joins)
 
@@ -2640,8 +2673,7 @@ class StatementScope:
         return self.spark.sql(self._resolve(query, parsed, stack))
 
     def view(self, name: str, body: str, parsed=None, stack: frozenset = frozenset()) -> DataFrame:
-        """Stored view ``name``'s ``body`` as a read, its relation names
-        kept by the frontend per body (_view_sources)."""
+        """Stored view ``name``'s ``body`` as a read."""
         return self.spark.sql(self._resolve(body, parsed, stack, view=view_alias(name).lower()))
 
     def expression(self, stmt: ParsedStatement, expr) -> str:
@@ -2660,86 +2692,65 @@ class StatementScope:
         expression: bool = False,
         view: str | None = None,
     ) -> str:
-        """``text`` rewritten for the scope's session, in SecureSession
-        ._read's steps: the table references (rewrite_table_refs), the
-        SQL sugar (an ASOF JOIN side registers on demand), the parse —
-        ``parsed`` when the rewrites left the text alone, else a parse of
-        the rewritten text — a non-read refused, then each relation the
-        parse names registered; a reference to a CTE is none
-        (ParsedStatement.sources). ``view`` names a stored view's body."""
-        tables = frozenset(self._tables.values())
-        query = self._frontend._table_refs(text, set(tables), self.warehouse)
+        """``text`` rewritten for the scope's session, its relations
+        registered. ``view`` names a stored view's body."""
+        surface = self._surface
+        query = surface._table_refs(text, self)
         if has_sugar(query):
             query = rewrite_sugar(query, lambda name: self._side(name, stack), self._asof_views)
-        known = self._frontend._view_sources.get(view)
+        tables = frozenset(self.tables.values())
+        known = surface._view_sources.get(view)
         if known is not None and known[:2] == (text, tables):
             sources = known[2]
         else:
             if parsed is None or query != text:
                 parsed = parse_statement(self.spark, f"SELECT {query}" if expression else query)
             if not parsed.is_query:
-                raise ValueError(f"The statement must be a query, got {parsed.non_read}")
+                surface._refuse(parsed.non_read)
             sources = parsed.sources
             if sources is None:
-                raise ValueError("Cannot name every relation the statement reads")
+                surface._refuse(None)
             if view is not None:
-                self._frontend._view_sources[view] = (text, tables, sources)
+                surface._view_sources[view] = (text, tables, sources)
         names = {}
         for ident in sources:
             name = ".".join(ident)
             names[view_alias(name).lower()] = name
         spj = spj_candidate_tables(
             _blank_sql_strings(query),
-            {self._tables[key] for key in names if key in self._tables},
+            {self.tables[key] for key in names if key in self.tables},
             self.warehouse.bucket_layout,
         )
+        spj = {view_alias(table).lower() for table in spj}
         for key, name in names.items():
-            self._register(key, stack, spj)
-            if "." in name and key in self._views:  # a dotted view name, flattened
+            self._register(key, name, stack, key in spj)
+            if "." in name and key in self.views:  # a dotted view name, flattened
                 query = _sub_outside_strings(
                     rf"(?<![\w.`]){re.escape(name)}(?![\w.])", f"`{key}`", query, re.I
                 )
         return query
 
-    def _register(self, key: str, stack: frozenset, spj: set) -> None:
+    def _register(self, key: str, name: str, stack: frozenset, spj: bool = False) -> None:
         if key in self._registered:
             return
-        table, view, changelog = (m.get(key) for m in (self._tables, self._views, self._changelog))
-        if changelog is not None:
-            # CALL create_changelog_view checks only the tables that
-            # existed then: a table created since must not be shadowed
-            if table is not None:
+        frame = self._surface._relation(self, key, name, spj)
+        if isinstance(frame, str):  # a stored view's body
+            if key in stack:
                 raise ValueError(
-                    f"changelog_view '{changelog}' collides with a table "
-                    "created after the view was registered — drop or "
-                    "rename one of them"
-                )
-            spec = self._frontend._changelog_views[changelog]
-            frame = self.warehouse.read_changes(**spec)
-        elif table is not None:
-            if view is not None:
-                raise ValueError(
-                    f"'{view}' is both a table and a view — drop one (single catalog namespace)"
-                )
-            wh = self.warehouse
-            frame = wh.bucketed_read(table) if table in spj else wh.read_table(table)
-        elif view is not None:
-            if view in stack:
-                raise ValueError(
-                    f"View cycle detected through '{view}' — a REPLACE "
+                    f"View cycle detected through '{name}' — a REPLACE "
                     "made these views mutually recursive"
                 )
-            frame = self.view(view, self.warehouse.view_sql(view), None, stack | {view})
-        else:
-            return
-        frame.createOrReplaceTempView(key)
-        self._registered.add(key)
+            frame = self.view(key, frame, None, stack | {key})
+            self.views.add(key)
+        if frame is not None:
+            frame.createOrReplaceTempView(key)
+            self._registered.add(key)
 
     def table(self, name: str, stack: frozenset = frozenset()) -> DataFrame:
         """The relation ``name`` names (a MERGE source, an ASOF JOIN
         side), registered; Spark's not-found error for anything else."""
         key = view_alias(name).lower()
-        self._register(key, stack, set())
+        self._register(key, name, stack)
         return self.spark.table(key if key in self._registered else name)
 
     def _side(self, name: str, stack: frozenset) -> DataFrame | None:

@@ -259,6 +259,9 @@ def test_spj_mirror_tables_not_readable_by_consumers(spark, tmp_path):
             sess.sql(f"SELECT count(*) FROM (SELECT * FROM {m})")
         with pytest.raises(AccessDeniedException):
             sess.sql(f"SELECT * FROM IDENTIFIER('{m}')")
+        # the as-of rewrite reads its sides' frames directly
+        with pytest.raises(AccessDeniedException):
+            sess.sql(f"SELECT l.x FROM lookup l ASOF JOIN {m} v ON l.dk = v.k AND l.dk >= v.k")
     # granted reads still work, and unknown names stay NOT_FOUND
     assert sess.sql("SELECT * FROM lookup").count() == 1
     with pytest.raises(Exception) as ei:
@@ -277,8 +280,9 @@ def test_spj_mirror_tables_not_readable_by_consumers(spark, tmp_path):
 def test_ungranted_table_denies_from_the_parse(spark, tmp_path, monkeypatch):
     """A relation naming an ungranted warehouse table denies from the
     parsed relations, in any letter case and beside a granted table,
-    with one audit entry each and before Spark analyzes the statement;
-    a CTE of that name shadows it."""
+    with one audit entry each and before Spark analyzes the statement —
+    also where a CTE of that name reads it in its own body; a CTE of
+    that name shadows it."""
     e = FgacEngine(spark, str(tmp_path / "wh"))
     e.sql("CREATE TABLE vault (k BIGINT)")
     e.sql("CREATE TABLE lookup (k BIGINT)")
@@ -289,7 +293,12 @@ def test_ungranted_table_denies_from_the_parse(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         SparkSession, "sql", lambda self, q, *a, **kw: analyzed.append(q) or real_sql(self, q, *a, **kw)
     )
-    for q in ("SELECT * FROM vault", "SELECT * FROM VAULT", "SELECT * FROM lookup JOIN vault USING (k)"):
+    for q in (
+        "SELECT * FROM vault",
+        "SELECT * FROM VAULT",
+        "SELECT * FROM lookup JOIN vault USING (k)",
+        "WITH vault AS (SELECT * FROM vault) SELECT * FROM vault",
+    ):
         before = len(e.policy.audit_log)
         with pytest.raises(AccessDeniedException, match="vault"):
             sess.sql(q)

@@ -175,7 +175,7 @@ def test_masked_scan_equals_manual_mask(engine, states, masked):
 
 # ------------------------------------------------ write-source authorizer
 # The plan-based write authorizer (policy.py::_authorize_write_sources,
-# the py4j walk in ParsedStatement.relations) is the security keystone
+# the py4j walk in ParsedStatement.sources) is the security keystone
 # of the delegated-DML path. Property: for ARBITRARY generated
 # statements mixing CTEs, IN/scalar subqueries in WHERE/SET/ON, nested
 # CTE chains and quoted identifiers — in any spelling of comments,

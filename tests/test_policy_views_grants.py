@@ -393,15 +393,15 @@ def test_producer_explain_cte_dml_rejected_without_executing(engine):
 def test_view_resecured_once_per_sugared_read(engine, monkeypatch):
     """A read that needs a sugar rewrite (QUALIFY) re-secures each view
     it references once, not once per rewrite pass."""
-    from sample_emr_on_eks_fgac_iceberg_spark.policy import SecureSession
+    from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import StatementScope
 
     body = "SELECT claim_id, amount FROM claims"
     sess = engine.session_for(TEAM1)
     sess.sql(f"CREATE VIEW once_v AS {body}")
     seen = []
-    real = SecureSession.sql
+    real = StatementScope._resolve
     monkeypatch.setattr(
-        SecureSession, "sql", lambda self, q: seen.append(q) or real(self, q)
+        StatementScope, "_resolve", lambda self, q, *a, **kw: seen.append(q) or real(self, q, *a, **kw)
     )
     rows = sess.sql(
         "SELECT claim_id FROM once_v "

@@ -174,6 +174,7 @@ def read_table_calls(monkeypatch):
     return calls
 
 
+@pytest.mark.parametrize("surface", ["producer", TEAM1])
 @pytest.mark.parametrize(
     "query",
     [
@@ -185,9 +186,11 @@ def read_table_calls(monkeypatch):
         "WITH claims AS (SELECT * FROM claims WHERE amount > 0) SELECT count(*) FROM claims",
     ],
 )
-def test_producer_reads_only_the_tables_the_statement_reads(engine, read_table_calls, query):
+def test_producer_reads_only_the_tables_the_statement_reads(engine, read_table_calls, query, surface):
+    # a fresh SecureSession loads no table before a statement names it
     first = engine.warehouse.snapshots("claims")[0]["snapshot_id"]
-    engine.sql(query.format(first=first)).collect()
+    run = engine.sql if surface == "producer" else engine.session_for(surface).sql
+    run(query.format(first=first)).collect()
     assert read_table_calls == ["claims"]
 
 

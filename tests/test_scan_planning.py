@@ -155,8 +155,9 @@ def test_secure_session_reuses_base_table_scans(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(Warehouse, "read_table", spy)
 
     sess = engine.session_for(healthcare.TEAM1)
-    # patients + 2 links share one scan; claims + 1 link share another
-    assert len(loads) == 2
+    # a session loads nothing until a statement names a table; then
+    # patients + 2 links share one scan, claims + 1 link another
+    assert len(loads) == 0
     assert sess.table("rl_patients").count() == 8
     assert sess.sql("SELECT * FROM claims").count() == 10
     assert len(loads) == 2

@@ -246,8 +246,8 @@ def test_consumer_fetch_ties_under_row_filter(hc_engine):
 
 def test_consumer_view_body_with_sugar(hc_engine):
     # a consumer view whose BODY uses EXCLUDE + WITH TIES resolves
-    # through the invoker's-rights path (policy._materialize_views →
-    # self.sql → rewrite_text_sugar), composing with the row filter
+    # through the invoker's-rights path (the SecureSession's
+    # StatementScope → rewrite_sugar), composing with the row filter
     sess = hc_engine.session_for(TEAM1)
     sess.sql(
         "CREATE VIEW sugar_v AS "

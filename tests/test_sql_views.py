@@ -67,15 +67,21 @@ def test_create_validates_body(fe):
     assert "bad2" not in fe.warehouse.list_views()
 
 
-def test_replace_cycle_detected_at_read(fe):
-    fe.execute("CREATE VIEW a_v AS SELECT k FROM t")
-    fe.execute("CREATE VIEW b_v AS SELECT k FROM a_v")
+@pytest.mark.parametrize("surface", ["producer", "consumer"])
+def test_replace_cycle_detected_at_read(spark, tmp_path, fe, surface):
+    run = fe.execute
+    if surface == "consumer":  # a SecureSession over the same warehouse
+        eng = FgacEngine(spark, str(tmp_path / "wh"))
+        eng.policy.grant("reader", "t")
+        run = eng.session_for("reader").sql
+    run("CREATE VIEW a_v AS SELECT k FROM t")
+    run("CREATE VIEW b_v AS SELECT k FROM a_v")
     # REPLACE a_v to read b_v: validation sees the OLD a_v inside b_v,
     # so the cycle only exists after the swap — the read must refuse
-    # loudly, not recurse forever
-    fe.execute("CREATE OR REPLACE VIEW a_v AS SELECT k FROM b_v")
+    # loudly, not recurse forever or read a stale a_v
+    run("CREATE OR REPLACE VIEW a_v AS SELECT k FROM b_v")
     with pytest.raises(ValueError, match="cycle"):
-        fe.execute("SELECT * FROM a_v")
+        run("SELECT * FROM a_v").collect()
 
 
 def test_view_names_in_literals_are_data(fe):
