@@ -301,6 +301,48 @@ def _release_blocks(spark) -> None:
         pass  # diagnostics only — never fail the bench over cleanup
 
 
+def run_query(spark, sf_dir: str, name: str) -> None:
+    """Query ``name`` executed through a ``noop`` sink."""
+    QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+
+
+def pre_query(spark) -> None:
+    """Release the previous query's localCheckpoint RDDs before timing:
+    materialize_once barriers pin MEMORY_AND_DISK blocks until the
+    Python frame objects are collected and the JVM ContextCleaner reaps
+    them — across 40 queries that residue inflates later queries' GC
+    time."""
+    gc.collect()
+    _release_blocks(spark)
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """The untimed start of the suite."""
+    # warm the JVM/codegen and file-listing caches once with the smallest query
+    run_query(spark, sf_dir, "q1_pricing_summary")
+    # materialize the FGAC warehouse (DDL + inserts) outside the timed
+    # loop — the reference provisions tables in a separate Athena step
+    # (producer_iceberg_datalake_setup.sh), so table setup is not query
+    # latency; the timed fgac_* entries then measure the policy-wrapped
+    # scan/join itself
+    run_query(spark, sf_dir, "fgac_patients_scan")
+    # spawn the Python worker pool (one worker per core) outside the
+    # timed loop — Arrow/pandas queries otherwise pay ~5-10 s of
+    # one-time worker startup in whichever of them runs first
+    import pandas as _pd  # noqa: F401
+
+    spark.range(0, 32, 1, 32).mapInPandas(
+        lambda it: it, "id long"
+    ).write.mode("overwrite").format("noop").save()
+
+
+def codegen_compiles(spark) -> int:
+    """Classes Spark's code generator compiled so far in this JVM (one
+    per cache miss)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _loadavg_1m() -> float:
     try:
         with open("/proc/loadavg") as f:
@@ -322,24 +364,7 @@ LOADAVG_WAIT_S = int(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT", "300"))
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    # JIT headroom for a 180+-query suite in ONE JVM: the default
-    # 240 MB ReservedCodeCacheSize fills with WholeStageCodegen
-    # classes (~4 timed repeats × 184 distinct plans) and the sweeper
-    # then flushes HOT methods, so late-positioned queries creep to
-    # ×1.3-1.4 their fresh-JVM cost (measured: full suite 193 s →
-    # 135 s with 1g; a fresh-JVM half-suite reproduced the same
-    # queries at 0.79× their full-suite times). Set via
-    # SPARK_SUBMIT_OPTS BEFORE the gateway launches the JVM —
-    # spark.driver.extraJavaOptions would be too late under an
-    # already-running gateway.
-    # per-flag presence checks: a caller's explicit setting of EITHER
-    # knob must survive (JVM last-flag-wins would otherwise silently
-    # downgrade it)
-    opts = os.environ.get("SPARK_SUBMIT_OPTS", "")
-    for flag in ("-XX:ReservedCodeCacheSize=1g", "-XX:MaxMetaspaceSize=3g"):
-        if flag.split("=")[0] not in opts:
-            opts = (opts + " " + flag).strip()
-    os.environ["SPARK_SUBMIT_OPTS"] = opts
+    jvm_headroom()
     waited = 0
     while _loadavg_1m() > LOADAVG_THRESHOLD and waited < LOADAVG_WAIT_S:
         time.sleep(15)
@@ -368,26 +393,7 @@ def main() -> None:
     if subset:
         wanted = {s.strip() for s in subset.split(",") if s.strip()}
         names = [n for n in names if n in wanted]
-    # warm the JVM/codegen and file-listing caches once with the smallest query
-    QUERIES["q1_pricing_summary"](spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # materialize the FGAC warehouse (DDL + inserts) outside the timed
-    # loop — the reference provisions tables in a separate Athena step
-    # (producer_iceberg_datalake_setup.sh), so table setup is not query
-    # latency; the timed fgac_* entries then measure the policy-wrapped
-    # scan/join itself
-    QUERIES["fgac_patients_scan"](spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    # spawn the Python worker pool (one worker per core) outside the
-    # timed loop — Arrow/pandas queries otherwise pay ~5-10 s of
-    # one-time worker startup in whichever of them runs first
-    import pandas as _pd  # noqa: F401
-
-    spark.range(0, 32, 1, 32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.mode("overwrite").format("noop").save()
+    warm_up(spark, sf_dir)
 
     # best-of-two per query: the first execution of a plan pays JIT /
     # codegen-compile / Python-worker-spawn costs that are one-time in
@@ -407,34 +413,29 @@ def main() -> None:
     # full-suite re-runs; see PLANS.md "round-10 regression
     # root-cause").  The second pass decouples its sample by ~30-60 s
     # of other queries, far wider than the observed interference, while
-    # the pair keeps the warm (codegen/file-listing-cached) steady-state
-    # number that a pure two-pass scheme loses to the cache release
-    # between samples.
+    # the pair keeps the warm (file-listing-cached) steady-state number
+    # that a pure two-pass scheme loses to the cache release between
+    # samples. Generated classes survive the passes: the codegen cache
+    # holds the suite's working set (session.CODEGEN_CACHE_ENTRIES), so
+    # the second pass compiles few classes — the side file records the
+    # count of each pass.
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
 
     def _run_once(name: str) -> float:
         start = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
+        run_query(spark, sf_dir, name)
         return time.perf_counter() - start
 
-    def _pre_query() -> None:
-        # release the previous query's localCheckpoint RDDs before
-        # timing: materialize_once barriers pin MEMORY_AND_DISK blocks
-        # until the Python frame objects are collected and the JVM
-        # ContextCleaner reaps them — across 40 queries that residue
-        # inflates later queries' GC time
-        gc.collect()
-        _release_blocks(spark)
-
+    compiles = [codegen_compiles(spark)]
     for name in names:
-        _pre_query()
+        pre_query(spark)
         all_runs[name] = [_run_once(name), _run_once(name)]
+    compiles.append(codegen_compiles(spark))
     for name in names:
-        _pre_query()
+        pre_query(spark)
         all_runs[name].append(_run_once(name))
+    compiles.append(codegen_compiles(spark))
     for name in names:
         runs = all_runs[name]
         timings[name] = round(min(runs), 4)
@@ -518,6 +519,10 @@ def main() -> None:
                     "loadavg_start": loadavg_start,
                     "loadavg_end": loadavg,
                     "contended": contended,
+                    "cpus": os.cpu_count(),
+                    # classes compiled by the pair pass and by the
+                    # decoupled pass
+                    "codegen_compiles": [b - a for a, b in zip(compiles, compiles[1:])],
                 },
                 f,
                 indent=1,
@@ -528,6 +533,28 @@ def main() -> None:
         # compact stdout headline below must always print (ADVICE r6)
         print(f"bench: BENCH_RUNS.json not written: {exc}", file=sys.stderr)
     print(line)
+
+
+def jvm_headroom() -> None:
+    """Set the suite's JVM flags, before the gateway starts."""
+    # JIT headroom for a 180+-query suite in ONE JVM: the default
+    # 240 MB ReservedCodeCacheSize fills with WholeStageCodegen
+    # classes (~4 timed repeats × 184 distinct plans) and the sweeper
+    # then flushes HOT methods, so late-positioned queries creep to
+    # ×1.3-1.4 their fresh-JVM cost (measured: full suite 193 s →
+    # 135 s with 1g; a fresh-JVM half-suite reproduced the same
+    # queries at 0.79× their full-suite times). Set via
+    # SPARK_SUBMIT_OPTS BEFORE the gateway launches the JVM —
+    # spark.driver.extraJavaOptions would be too late under an
+    # already-running gateway.
+    # per-flag presence checks: a caller's explicit setting of EITHER
+    # knob must survive (JVM last-flag-wins would otherwise silently
+    # downgrade it)
+    opts = os.environ.get("SPARK_SUBMIT_OPTS", "")
+    for flag in ("-XX:ReservedCodeCacheSize=1g", "-XX:MaxMetaspaceSize=3g"):
+        if flag.split("=")[0] not in opts:
+            opts = (opts + " " + flag).strip()
+    os.environ["SPARK_SUBMIT_OPTS"] = opts
 
 
 if __name__ == "__main__":

@@ -1027,12 +1027,14 @@ class SecureSession:
         Spark cannot parse. The views a statement reads re-resolve on
         every statement: their registrations are dropped once it is
         planned, so a dropped or replaced view never serves a stale
-        copy."""
+        copy. So are the views its rewrites registered (time travel,
+        metadata tables, as-of joins): each holds rows read under the
+        grants of this statement only."""
         scope = StatementScope(self._warehouse, self)
         try:
             return scope.view(view, query, stmt) if view else scope.read(query, stmt)
         finally:
-            for key in scope.views:
+            for key in (*scope.views, *scope.temp_views.names):
                 self._spark.catalog.dropTempView(key)
 
     # The consumer's side of StatementScope: its table references, its
@@ -1051,6 +1053,7 @@ class SecureSession:
             self._secured,
             self._metadata,
             qualified=self._authorize_qualified,
+            views=scope.temp_views,
         )
 
     def _relation(self, scope: StatementScope, key: str, name: str, spj: bool):
@@ -1066,10 +1069,14 @@ class SecureSession:
         - an ungranted table → denied from the parse, before Spark
           analyzes the statement (the reference's plan-time denial,
           consumer_emr_on_eks_setup.sh:480-488);
-        - a PERMANENT catalog table → denied: engine-internal ones (the
-          SPJ bucketed mirrors ``__spj_*``) are visible to every session
-          of the context and hold UNFILTERED rows;
-        - anything else (this session's __tt/__meta/__asof views, an
+        - an engine-internal ``__`` name this statement's rewrites did
+          not register (another statement's time-travel, metadata or
+          as-of view, an SPJ bucketed mirror ``__spj_*``) → denied:
+          such a view froze rows under another statement's grants, and
+          a mirror holds unfiltered rows;
+        - a PERMANENT catalog table → denied: it is visible to every
+          session of the context;
+        - anything else (this statement's __tt/__meta/__asof views, an
           unknown name) → None, left to Spark."""
         body = self._view_body(key)
         if body is not None:
@@ -1077,6 +1084,10 @@ class SecureSession:
             return body
         table = scope.tables.get(key)
         if table is None:
+            if key.startswith("__"):
+                if key not in {v.lower() for v in scope.temp_views.names}:
+                    self._deny(name)
+                return None
             try:
                 found = self._spark.catalog.getTable(name)
             except AnalysisException:

@@ -37,6 +37,19 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # sequential metadata call per file would cost more, for tables of many
 # files, than Spark's parallel listing did.
 PARTITION_DISCOVERY_THRESHOLD = 1_000_000
+# Spark compiles each generated class (whole-stage code, projections,
+# predicates) once per entry of one JVM-wide cache, which holds 100
+# entries by default. The analytics_suite five compile 199 classes a
+# pass, so each pass evicted the last one's classes, compiled them all
+# again and ran them in the JVM interpreter until the JIT warmed again.
+# The census (CODEGEN_CENSUS.json, tools/profile.py) sizes the cache
+# from bench.py's 202 headline queries: their working set is ~3,100
+# classes, which cost 24 MB more Metaspace than 100 entries (and ~0.1 GB
+# of heap, mostly generated source), so it holds all of them with ~26%
+# headroom for classes that carry inlined literals. The conf is static
+# and the cache is built by whichever session compiles first, so it is
+# set before the context starts.
+CODEGEN_CACHE_ENTRIES = 4_000
 
 
 def _find_iceberg_jar() -> str | None:
@@ -88,6 +101,7 @@ def build_session(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(PARTITION_DISCOVERY_THRESHOLD),

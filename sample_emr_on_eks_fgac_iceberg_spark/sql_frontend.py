@@ -431,17 +431,36 @@ def timestamp_ms(spark: SparkSession, literal: str) -> int:
     return int(ts.timestamp() * 1000)
 
 
-def _as_view(df: DataFrame, view: str) -> str:
-    df.createOrReplaceTempView(view)
-    return f"`{view}`"
+class TempViews:
+    """The engine-internal temp views one statement's rewrites register,
+    each in its frame's own session: time travel (``__tt_*``), metadata
+    tables (``__meta_*``), the audit log and as-of joins (``__asof_N``).
+    ``names`` keeps them in order, so the statement's owner can drop
+    them, and the as-of views are numbered from one counter: a view
+    body's as-of join, rewritten in the same statement, never replaces
+    the statement's own."""
+
+    def __init__(self) -> None:
+        self.names: list[str] = []
+        self._asof = count()
+
+    def add(self, df: DataFrame, name: str | None = None) -> str:
+        """Register ``df`` as ``name`` (the next as-of view when None);
+        returns the quoted name to substitute into the statement."""
+        name = f"__asof_{next(self._asof)}" if name is None else name
+        df.createOrReplaceTempView(name)
+        self.names.append(name)
+        return f"`{name}`"
 
 
 def rewrite_table_refs(
-    spark: SparkSession, query: str, tables, load, metadata, audit=None, qualified=None
+    spark: SparkSession, query: str, tables, load, metadata, audit=None, qualified=None,
+    views: TempViews | None = None,
 ) -> str:
     """The read-time table references of both SQL surfaces, rewritten
     once, outside string literals, to temp views registered in each
-    frame's own session. Only names in ``tables`` are touched:
+    frame's own session and recorded in ``views``. Only names in
+    ``tables`` are touched:
 
     - ``t VERSION AS OF n`` / ``t VERSION AS OF 'ref'`` / ``t TIMESTAMP
       AS OF 'ts'`` → ``load(t, snapshot_id=n | ref= | as_of_timestamp_ms=)``
@@ -455,6 +474,7 @@ def rewrite_table_refs(
     Policy lives in the callbacks: the consumer's ``load`` authorizes
     SELECT and applies the row filter, its ``metadata`` is DESCRIBE-gated
     and its ``qualified`` denies an ungranted name."""
+    views = TempViews() if views is None else views
 
     def travel(m: re.Match) -> str | None:
         name, literal = m.group(1), query[m.start(3) : m.end(3)]
@@ -468,12 +488,12 @@ def rewrite_table_refs(
             kw, tag = {"ref": ref}, f"r{ref}"
         else:
             kw, tag = {"snapshot_id": int(literal)}, f"v{literal}"
-        return _as_view(load(name, **kw), f"__tt_{view_alias(name)}_{tag}")
+        return views.add(load(name, **kw), f"__tt_{view_alias(name)}_{tag}")
 
     def meta(m: re.Match) -> str | None:
         name, kind = m.group(1), m.group(2).lower()
         df = metadata(name, kind) if name in tables else None
-        return None if df is None else _as_view(df, f"__meta_{view_alias(name)}_{kind}")
+        return None if df is None else views.add(df, f"__meta_{view_alias(name)}_{kind}")
 
     def flat(m: re.Match) -> str:
         if qualified is not None:
@@ -484,7 +504,7 @@ def rewrite_table_refs(
     query = _sub_outside_strings(_META_TABLE_RE, meta, query)
     if audit is not None:
         query = _sub_outside_strings(
-            _AUDIT_LOG_RE, lambda m: _as_view(audit(), "__system_audit_log"), query
+            _AUDIT_LOG_RE, lambda m: views.add(audit(), "__system_audit_log"), query
         )
     for name in sorted((t for t in tables if "." in t), key=len, reverse=True):
         query = _sub_outside_strings(rf"(?<![\w.`]){re.escape(name)}(?![\w.])", flat, query)
@@ -1452,7 +1472,7 @@ def rewrite_text_sugar(query: str) -> str:
     return out
 
 
-def rewrite_sugar(query: str, resolve=None, views=None) -> str:
+def rewrite_sugar(query: str, resolve=None, views: TempViews | None = None) -> str:
     """Every SQL-sugar rewrite, in the one order both surfaces use:
     text sugar (rewrite_text_sugar) → ASOF JOIN (rewrite_asof_joins,
     only when a frame resolver is given) → QUALIFY → DISTINCT ON. The
@@ -1522,7 +1542,7 @@ def parse_asof_condition(cond: str, laliases: set, raliases: set):
     return on, ineq[0], ineq[1], ineq[2]
 
 
-def rewrite_asof_joins(query: str, resolve, views=None) -> str:
+def rewrite_asof_joins(query: str, resolve, views: TempViews | None = None) -> str:
     """Rewrite every ``l [a] ASOF [LEFT] JOIN r [b] ON <cond>``
     (DuckDB's as-of SQL — Spark has no ASOF grammar) into a
     materialized union+window as-of view (temporal.asof_join_frames)
@@ -1536,16 +1556,16 @@ def rewrite_asof_joins(query: str, resolve, views=None) -> str:
     resolver that vends SECURED frames and raises its own denial for
     relations the principal may not read (SecureSession: the rewrite
     reads frames directly, so the resolver IS the fence). The as-of
-    views register in the resolved frames' own session catalog, numbered
-    from counter ``views``: one statement's rewrites, its view bodies'
-    included, share one, so none replaces a view the statement reads."""
+    views register in the resolved frames' own session catalog through
+    ``views``: one statement's rewrites, its view bodies' included,
+    share one, so none replaces a view the statement reads."""
     if not re.search(r"\bASOF\b", _blank_sql_strings(query), re.I):
         return query
     from sample_emr_on_eks_fgac_iceberg_spark.operators.temporal import (
         asof_join_frames,
     )
 
-    views = count() if views is None else views
+    views = TempViews() if views is None else views
     while True:
         # match where literals are blanked (a literal spelling `x ASOF
         # JOIN y ON` is data, never a relation to resolve) and read the
@@ -1585,9 +1605,7 @@ def rewrite_asof_joins(query: str, resolve, views=None) -> str:
             frames[0], frames[1], on, lts, rts, op,
             how="left" if left_kw else "inner",
         )
-        view = f"__asof_{next(views)}"
-        joined.createOrReplaceTempView(view)
-        query = query[:seg_start] + f"`{view}`" + query[cond_end:]
+        query = query[:seg_start] + views.add(joined) + query[cond_end:]
         for alias in {a1 or rel1, a2 or rel2}:
             # The qualifier strip below runs over the WHOLE remaining
             # statement (qualified references to the as-of columns
@@ -2604,6 +2622,7 @@ class SqlFrontend:
             wh.read_table,
             lambda name, kind: getattr(wh, f"{kind}_df")(name),
             audit,
+            views=scope.temp_views,
         )
 
     def _relation(self, scope: StatementScope, key: str, name: str, spj: bool):
@@ -2662,7 +2681,7 @@ class StatementScope:
         self.tables = {view_alias(t).lower(): t for t in warehouse.list_tables()}
         self.views: set[str] = set()  # the stored views registered, by view name
         self._registered: set[str] = set()
-        self._asof_views = count()  # as-of view numbers (rewrite_asof_joins)
+        self.temp_views = TempViews()  # what the rewrites register
 
     def read(
         self, query: str, parsed: ParsedStatement | None = None, stack: frozenset = frozenset()
@@ -2697,7 +2716,7 @@ class StatementScope:
         surface = self._surface
         query = surface._table_refs(text, self)
         if has_sugar(query):
-            query = rewrite_sugar(query, lambda name: self._side(name, stack), self._asof_views)
+            query = rewrite_sugar(query, lambda name: self._side(name, stack), self.temp_views)
         tables = frozenset(self.tables.values())
         known = surface._view_sources.get(view)
         if known is not None and known[:2] == (text, tables):

@@ -305,3 +305,29 @@ def test_ungranted_table_denies_from_the_parse(spark, tmp_path, monkeypatch):
         assert e.policy.audit_log[before:] == [("mallory", "vault", SELECT, "denied")]
     assert analyzed == []
     assert sess.sql("WITH vault AS (SELECT 1 AS one) SELECT * FROM vault").collect()[0].one == 1
+
+
+def test_rewrite_views_end_with_their_statement(spark, tmp_path):
+    """The views a consumer statement's rewrites register (time travel,
+    metadata tables) are dropped once it is planned, and a statement
+    naming an engine-internal view it did not register itself is denied
+    with one audit entry: after a revoke, the snapshot an earlier
+    statement read is not readable through its view name."""
+    e = FgacEngine(spark, str(tmp_path / "wh"))
+    e.sql("CREATE TABLE claims (k BIGINT)")
+    e.sql("INSERT INTO claims VALUES (1), (2)")
+    e.policy.grant("mallory", "claims", {SELECT, DESCRIBE})
+    sess = e.session_for("mallory")
+    snaps = e.warehouse.snapshots_df("claims").collect()
+    sid = snaps[-1].snapshot_id
+    assert sess.sql(f"SELECT count(*) AS n FROM claims VERSION AS OF {sid}").collect()[0].n == 2
+    assert sess.sql("SELECT count(*) AS n FROM claims.snapshots").collect()[0].n == len(snaps)
+    assert [t.name for t in sess.spark.catalog.listTables() if t.isTemporary and t.name.startswith("__")] == []
+    e.policy.revoke("mallory", "claims")
+    with pytest.raises(AccessDeniedException):
+        sess.sql("SELECT count(*) FROM claims")
+    for view in (f"__tt_claims_v{sid}", "__meta_claims_snapshots"):
+        before = len(e.policy.audit_log)
+        with pytest.raises(AccessDeniedException, match=view):
+            sess.sql(f"SELECT count(*) FROM {view}")
+        assert e.policy.audit_log[before:] == [("mallory", view, SELECT, "denied")]
