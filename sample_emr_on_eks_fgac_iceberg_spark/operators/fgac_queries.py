@@ -45,19 +45,15 @@ def _engine_for(spark: SparkSession):
     return _ENGINES[key]
 
 
-def _bounded_key_stream_parts(spark: SparkSession) -> int:
-    """State-partition count for the BOUNDED-KEY streaming aggregates.
-
-    A complete-mode stateful aggregate creates one state store (and
-    commits one delta file per micro-batch) per shuffle partition, and
-    that count is frozen into the checkpoint at stream start. For the
-    demo streams the aggregate key domain is bounded by construction
-    (US states: ≤ 50 keys at ANY corpus size), so the right sizing is
-    key-cardinality-derived, not the session's data-parallel shuffle
-    width — 32 (or a cluster's 200+) state stores for ≤ 50 keys is
-    pure per-batch commit overhead. Parameterised so a deployment with
-    a genuinely wide key domain can raise it."""
-    return int(spark.conf.get("spark_graft.stream.bounded_key_partitions", "8"))
+# State-partition count for the BOUNDED-KEY streaming aggregates. A
+# complete-mode stateful aggregate creates one state store (and commits
+# one delta file per micro-batch) per shuffle partition, and that count
+# is frozen into the checkpoint at stream start. The demo streams'
+# aggregate key domain is bounded by construction (US states: ≤ 50 keys
+# at ANY corpus size), so the count is sized to the keys, not to the
+# session's data-parallel shuffle width — 32 (or a cluster's 200+)
+# state stores for ≤ 50 keys is pure per-batch commit overhead.
+_BOUNDED_KEY_STREAM_PARTS = 8
 
 
 class _scoped_shuffle_partitions:
@@ -350,9 +346,7 @@ def fgac_stream_patients_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_patients"))
     )
     sink = f"fgac_stream_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(
-        sess.spark, _bounded_key_stream_parts(sess.spark)
-    ):
+    with _scoped_shuffle_partitions(sess.spark, _BOUNDED_KEY_STREAM_PARTS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -558,9 +552,7 @@ def fgac_stream_view_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"fgac_svagg_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(
-        sess.spark, _bounded_key_stream_parts(sess.spark)
-    ):
+    with _scoped_shuffle_partitions(sess.spark, _BOUNDED_KEY_STREAM_PARTS):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)

@@ -28,7 +28,7 @@ import json
 import re
 from bisect import bisect_left
 from functools import cached_property
-from itertools import count
+from itertools import combinations, count
 
 from py4j.java_gateway import is_instance_of
 from pyspark.errors import AnalysisException, ParseException
@@ -939,19 +939,51 @@ class ParsedStatement:
         there the name is the outer relation). None when the walk cannot
         name every relation (an ``IDENTIFIER(…)`` clause, a runaway
         tree): callers refuse."""
-        _, named, sources = self._walk
+        _, named, sources, _ = self._walk
         return sources if named else None
+
+    @property
+    def has_join(self) -> bool:
+        return any(cls == "Join" for cls, _ in self._walk[3])
+
+    @cached_property
+    def equated_columns(self) -> frozenset[frozenset[str]]:
+        """The column-name pairs (lower-cased, qualifier dropped) that
+        a Join condition, a USING list or a Filter condition of the
+        statement equates at its top-level ANDs: ``a.k = b.dk`` is
+        {k, dk}, ``USING (k)`` is {k}. Walked on first use."""
+        pairs, conds = set(), []
+        for cls, node in self._walk[3]:
+            if cls == "Filter":
+                conds.append(node.condition())
+                continue
+            kind = node.joinType()
+            if kind.getClass().getSimpleName() == "UsingJoin":
+                pairs.update(frozenset({str(c).lower()}) for c in _seq(kind.usingColumns()))
+            if node.condition().isDefined():
+                conds.append(node.condition().get())
+        while conds:
+            expr = conds.pop()
+            cls = _node_name(expr)
+            if cls == "And":
+                conds += [expr.left(), expr.right()]
+            elif cls == "EqualTo":
+                sides = [expr.left(), expr.right()]
+                if all(_node_name(e) == "UnresolvedAttribute" for e in sides):
+                    pairs.add(frozenset(_set_key(e).lower() for e in sides))
+        return frozenset(pairs)
 
     @cached_property
     def _walk(self):
         sources: list[tuple[str, ...]] = []
+        conditions = []  # (class, node) of each Join and Filter
         non_read, named = None, True
         # each node with the CTE names in scope where it stands
         stack, visited = [(self.plan, frozenset())], 0
         while stack:
             visited += 1
             if visited > _MAX_WALK_NODES:
-                return non_read, False, sources
+                return non_read, False, sources, conditions
             node, scope = stack.pop()
             try:
                 name = node.getClass().getName()
@@ -963,6 +995,8 @@ class ParsedStatement:
             non_read = non_read or eager
             if cls == "PlanWithUnresolvedIdentifier":
                 named = False  # IDENTIFIER(…) names its relation only at analysis
+            elif cls in ("Join", "Filter"):
+                conditions.append((cls, node))
             if cls.startswith("Unresolved"):
                 # UnresolvedRelation / UnresolvedTable / UnresolvedTableOrView
                 # all carry multipartIdentifier(); other Unresolved* nodes
@@ -1006,7 +1040,7 @@ class ParsedStatement:
                 stack.append((node.plan(), scope))
             except Exception:
                 pass
-        return non_read, named, sources
+        return non_read, named, sources, conditions
 
 
 def parse_statement(spark: SparkSession, text: str) -> ParsedStatement:
@@ -1653,51 +1687,23 @@ def rewrite_asof_joins(query: str, resolve, views: TempViews | None = None) -> s
     return query
 
 
-def spj_candidate_tables(query: str, tables, layout_of) -> set:
-    """Tables this query joins on their own ``bucket[N]`` keys with
-    matching N — the storage-partitioned-join preconditions
-    (VERDICT r11 missing #1). Registering these through their
-    bucketed mirrors (instead of plain scans) lets Catalyst plan
-    the SQL join with ZERO Exchange below it, transparently — the
-    way the reference's Spark + Iceberg SparkCatalog pairing does
-    (consumer_emr_on_eks_setup.sh:440-449): a user writing SQL
-    never calls a special method. The check is deliberately
-    conservative: a missed candidate falls back to the plain
-    shuffled join (correct, just slower); mirrors are semantically
-    identical to the plain scan, so a false positive costs only
-    the one-time per-snapshot mirror materialization. ``query`` is the
-    statement after rewrite_table_refs: a table counts where its view
-    name (view_alias) appears, so a time-travelled one does not."""
-    if not re.search(r"\bJOIN\b", query, re.I):
+def spj_candidate_tables(stmt: ParsedStatement, tables: dict, layout_of) -> set:
+    """View names (keys of ``tables``: view name → table) of the tables
+    ``stmt`` joins on their own ``bucket[N]`` keys with one N: read
+    through their bucketed mirrors, the SQL join plans with ZERO Exchange
+    below it (VERDICT r11 missing #1), as with the reference's Spark +
+    Iceberg SparkCatalog (consumer_emr_on_eks_setup.sh:440-449). A miss
+    falls back to the shuffled join; a false positive costs only the
+    per-snapshot mirror materialization."""
+    if not stmt.has_join:
         return set()
-    layouts = {}
-    for name in tables:
-        if not re.search(
-            rf"(?<![\w.]){re.escape(view_alias(name))}(?![\w.])", query
-        ):
-            continue
-        bl = layout_of(name)
-        if bl is not None:
-            layouts[name] = bl
+    keys = [view_alias(name).lower() for name in map(".".join, stmt.sources)]
+    layouts = {key: layout_of(tables[key]) for key in set(keys) if key in tables}
+    bucketed = [(key, layouts[key]) for key in keys if layouts.get(key) is not None]
     out: set = set()
-    names = sorted(layouts)
-    for i, a in enumerate(names):
-        ka, na = layouts[a]
-        for b in names[i:]:
-            kb, nb = layouts[b]
-            if na != nb:
-                continue
-            def _key(k: str) -> str:
-                # whole-identifier match, optionally alias-qualified
-                return rf"(?:[\w]+\.)?`?\b{re.escape(k)}\b`?"
-
-            pat = (
-                rf"{_key(ka)}\s*=\s*{_key(kb)}"
-                rf"|{_key(kb)}\s*=\s*{_key(ka)}"
-            )
-            if re.search(pat, query, re.I):
-                out.add(a)
-                out.add(b)
+    for (a, (ka, na)), (b, (kb, nb)) in combinations(bucketed, 2):
+        if na == nb and frozenset({ka.lower(), kb.lower()}) in stmt.equated_columns:
+            out |= {a, b}
     return out
 
 
@@ -1719,9 +1725,9 @@ class SqlFrontend:
         # resolve them.
         self._sql_functions: dict[str, str] = {}
         # stored view (view_alias, lower-cased) → (body, the tables its
-        # rewrites saw, the rewritten body's relation names): a body is
-        # parsed once per frontend, not on every read of the view
-        self._view_sources: dict[str, tuple[str, frozenset, list]] = {}
+        # rewrites saw, the rewritten body's parse): a body is parsed
+        # once per frontend, not on every read of the view
+        self._view_sources: dict[str, tuple[str, frozenset, ParsedStatement]] = {}
         # The frontend executes consumer-delegated DML on behalf of
         # SecureSession principals; path relations (``parquet.`/p```)
         # are never a legitimate spelling here — every source the
@@ -2671,16 +2677,17 @@ class StatementScope:
     which goes through the same steps with the view stack as the cycle
     guard, or to None, which leaves the name to Spark; the rule raises a
     denial itself. A table the statement joins storage-partitioned
-    (spj_candidate_tables) is asked for as its bucketed mirror. A view
-    body's relation names are kept per surface and body
-    (``_view_sources``), so a view is parsed once per body."""
+    (spj_candidate_tables) is asked for as its bucketed mirror, unless
+    the scope resolves a ``stream`` definition. A view body's parse is
+    kept per surface and body (``_view_sources``), so a view is parsed
+    once per body."""
 
-    def __init__(self, warehouse: Warehouse, surface):
+    def __init__(self, warehouse: Warehouse, surface, stream: bool = False):
         self.warehouse, self.spark = warehouse, warehouse.spark
-        self._surface = surface
+        self._surface, self.stream = surface, stream
         self.tables = {view_alias(t).lower(): t for t in warehouse.list_tables()}
         self.views: set[str] = set()  # the stored views registered, by view name
-        self._registered: set[str] = set()
+        self.registered: set[str] = set()  # every view name registered
         self.temp_views = TempViews()  # what the rewrites register
 
     def read(
@@ -2720,27 +2727,18 @@ class StatementScope:
         tables = frozenset(self.tables.values())
         known = surface._view_sources.get(view)
         if known is not None and known[:2] == (text, tables):
-            sources = known[2]
+            parsed = known[2]
         else:
             if parsed is None or query != text:
                 parsed = parse_statement(self.spark, f"SELECT {query}" if expression else query)
             if not parsed.is_query:
                 surface._refuse(parsed.non_read)
-            sources = parsed.sources
-            if sources is None:
+            if parsed.sources is None:
                 surface._refuse(None)
             if view is not None:
-                surface._view_sources[view] = (text, tables, sources)
-        names = {}
-        for ident in sources:
-            name = ".".join(ident)
-            names[view_alias(name).lower()] = name
-        spj = spj_candidate_tables(
-            _blank_sql_strings(query),
-            {self.tables[key] for key in names if key in self.tables},
-            self.warehouse.bucket_layout,
-        )
-        spj = {view_alias(table).lower() for table in spj}
+                surface._view_sources[view] = (text, tables, parsed)
+        names = {view_alias(name).lower(): name for name in map(".".join, parsed.sources)}
+        spj = set() if self.stream else spj_candidate_tables(parsed, self.tables, self.warehouse.bucket_layout)
         for key, name in names.items():
             self._register(key, name, stack, key in spj)
             if "." in name and key in self.views:  # a dotted view name, flattened
@@ -2750,7 +2748,7 @@ class StatementScope:
         return query
 
     def _register(self, key: str, name: str, stack: frozenset, spj: bool = False) -> None:
-        if key in self._registered:
+        if key in self.registered:
             return
         frame = self._surface._relation(self, key, name, spj)
         if isinstance(frame, str):  # a stored view's body
@@ -2763,14 +2761,14 @@ class StatementScope:
             self.views.add(key)
         if frame is not None:
             frame.createOrReplaceTempView(key)
-            self._registered.add(key)
+            self.registered.add(key)
 
     def table(self, name: str, stack: frozenset = frozenset()) -> DataFrame:
         """The relation ``name`` names (a MERGE source, an ASOF JOIN
         side), registered; Spark's not-found error for anything else."""
         key = view_alias(name).lower()
         self._register(key, name, stack)
-        return self.spark.table(key if key in self._registered else name)
+        return self.spark.table(key if key in self.registered else name)
 
     def _side(self, name: str, stack: frozenset) -> DataFrame | None:
         try:

@@ -9,9 +9,9 @@ plan-time AccessDeniedException.
 
 Defense layers under test:
 1. SecureSession._authorize_write_sources — plan-based relation
-   authorization (Spark's own parser; unknown identifiers deny).
-2. File-relation token / path-like identifier rejection.
-3. SqlFrontend sessions run with spark.sql.runSQLOnFiles=false, so a
+   authorization (Spark's own parser; an identifier that is no known
+   table, a path relation among them, denies with one audit entry).
+2. SqlFrontend sessions run with spark.sql.runSQLOnFiles=false, so a
    path relation that somehow reached the trusted side cannot resolve.
 """
 
@@ -331,3 +331,79 @@ def test_rewrite_views_end_with_their_statement(spark, tmp_path):
         with pytest.raises(AccessDeniedException, match=view):
             sess.sql(f"SELECT count(*) FROM {view}")
         assert e.policy.audit_log[before:] == [("mallory", view, SELECT, "denied")]
+
+
+def _denials(engine, before):
+    return [e for e in engine.policy.audit_log[before:] if e[3] == "denied"]
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "WITH c AS (SELECT * FROM parquet.`{d}`) INSERT INTO scratch SELECT * FROM c",
+        "UPDATE scratch SET ssn = (SELECT max(ssn) FROM parquet.`{d}`)",
+        "MERGE INTO scratch t USING parquet.`{d}` s ON t.id = s.id "
+        "WHEN NOT MATCHED THEN INSERT (id, ssn) VALUES (s.id, s.ssn)",
+        "INSERT INTO scratch SELECT * FROM IDENTIFIER('parquet.`{d}`')",
+    ],
+)
+def test_path_sources_denied_from_the_parse(engine, stmt):
+    """A path relation is a source that names no known table: denied
+    from the statement's parse, wherever it stands, with one audit
+    entry."""
+    engine.sql("INSERT INTO scratch VALUES (1, 'mine')")
+    engine.policy.grant("mallory", "scratch", {SELECT, DESCRIBE, INSERT, "DELETE"})
+    sess = engine.session_for("mallory")
+    before = len(engine.policy.audit_log)
+    with pytest.raises(AccessDeniedException):
+        sess.sql(stmt.format(d=engine.warehouse.data_dir("secrets")))
+    assert len(_denials(engine, before)) == 1
+    assert _scratch_rows(engine) == [(1, "mine")]
+
+
+def test_delegated_write_denials_audit_once(engine):
+    """Every denial on the delegated-write path leaves one audit entry:
+    an unknown source, a filtered grant used as a DML source (audited
+    as no grant), and ANALYZE or OPTIMIZE under a filtered grant."""
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import ALTER, DataCellsFilter
+
+    engine.policy.create_data_cells_filter(
+        DataCellsFilter(name="ids", table="secrets", row_filter="id > 1")
+    )
+    engine.policy.grant("mallory", "secrets", {SELECT}, filter_name="ids")
+    engine.policy.create_data_cells_filter(
+        DataCellsFilter(name="own", table="scratch", row_filter="id > 1")
+    )
+    engine.policy.grant("owner", "scratch", {SELECT, ALTER}, filter_name="own")
+    cases = [
+        ("mallory", "INSERT INTO scratch SELECT * FROM nosuch", ("nosuch", SELECT)),
+        ("mallory", "INSERT INTO scratch SELECT * FROM secrets", ("secrets", "SELECT (unfiltered)")),
+        ("owner", "ANALYZE TABLE scratch COMPUTE STATISTICS", ("scratch", "ALTER (unfiltered)")),
+        ("owner", "OPTIMIZE scratch", ("scratch", "ALTER (unfiltered)")),
+    ]
+    for principal, stmt, (table, action) in cases:
+        before = len(engine.policy.audit_log)
+        with pytest.raises(AccessDeniedException):
+            engine.session_for(principal).sql(stmt)
+        assert _denials(engine, before) == [(principal, table, action, "denied")], stmt
+        assert all(e[1] != table for e in engine.policy.audit_log[before:-1]), stmt
+    assert _scratch_rows(engine) == []
+
+
+def test_path_lookalike_text_is_no_relation(engine):
+    """A quoted alias holding a slash and a literal spelling a path
+    relation name no relation: both run, with the producer's rows."""
+    engine.policy.grant("mallory", "secrets", {SELECT})
+    engine.policy.grant("mallory", "scratch", {SELECT, DESCRIBE, INSERT, "DELETE"})
+    engine.sql("CREATE TABLE twin (id INT, ssn STRING)")
+    sess = engine.session_for("mallory")
+    for stmt in (
+        "INSERT INTO {t} SELECT count(*) AS `a/b`, ssn FROM secrets GROUP BY ssn",
+        "INSERT INTO {t} VALUES (3, 'parquet.`p`')",
+        "DELETE FROM {t} WHERE ssn = 'parquet.`p`' OR id = 1 AND ssn LIKE '123%'",
+    ):
+        sess.sql(stmt.format(t="scratch"))
+        engine.sql(stmt.format(t="twin"))
+        twin = [tuple(r) for r in engine.warehouse.read_table("twin").collect()]
+        assert sorted(_scratch_rows(engine)) == sorted(twin), stmt
+    assert sorted(_scratch_rows(engine)) == [(1, "987-65-4321")]

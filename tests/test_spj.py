@@ -279,3 +279,40 @@ def test_consumer_spj_view_refreshes_after_commit(spark, tmp_path, no_broadcast)
     e.sql("INSERT INTO fact VALUES (7, 70)")
     got = {(r["k"], r["v"], r["name"]) for r in sess.sql(q).collect()}
     assert (7, 70, "g") in got and len(got) == 3
+
+
+def test_sql_join_using_bucket_key_is_zero_exchange(fe, wh, no_broadcast):
+    """``JOIN … USING (k)`` equates the bucket keys as ``ON`` does: the
+    keys come from the parse, so both sides read their mirrors."""
+    wh.create_table("dim_k", "k bigint, name string", partition_by=["bucket(4, k)"])
+    wh.insert_values("dim_k", [(i, f"n{i}") for i in range(50)])
+    j = fe.execute("SELECT k, v, name FROM fact JOIN dim_k USING (k)")
+    plan = _executed_plan(j)
+    assert "SortMergeJoin" in plan, plan
+    assert plan.count("Bucketed: true") == 2, plan
+    assert "Exchange" not in plan, plan
+    assert j.count() == 400
+
+
+def test_spj_candidates_read_the_parse(spark):
+    """Candidates come from the parse's join keys: a comma join keyed
+    in WHERE counts, a key spelled in a string literal does not, and a
+    join of unbucketed tables never walks the conditions."""
+    from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
+        parse_statement,
+        spj_candidate_tables,
+    )
+
+    tables = {"fact": "fact", "dim": "dim", "plain": "plain"}
+    layouts = {"fact": ("k", 4), "dim": ("dk", 4)}
+
+    def candidates(sql):
+        return spj_candidate_tables(parse_statement(spark, sql), tables, layouts.get)
+
+    assert candidates("SELECT * FROM fact f, dim d WHERE f.k = d.dk") == {"fact", "dim"}
+    assert candidates("SELECT * FROM fact JOIN dim ON k = dk AND v > 1") == {"fact", "dim"}
+    assert candidates("SELECT * FROM fact JOIN dim ON v = dk WHERE name = 'k = dk'") == set()
+    assert candidates("SELECT * FROM fact WHERE k = 1") == set()
+    stmt = parse_statement(spark, "SELECT * FROM plain a JOIN plain b ON a.k = b.k")
+    assert spj_candidate_tables(stmt, tables, layouts.get) == set()
+    assert "equated_columns" not in vars(stmt)

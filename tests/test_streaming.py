@@ -1080,6 +1080,59 @@ def test_stream_own_view_and_nested_view(fgac_engine):
     ]
 
 
+def _stream_rows(sess, view, name):
+    return _rows(_drain(sess.readStream(view), sess, name, "append"))
+
+
+def test_stream_view_cte_shadowing_a_table_drains_its_batch_rows(fgac_engine):
+    """A CTE named after a table the reader holds no grant on is a local
+    relation: the stream reads what the parse names (claims), as the
+    batch read does, and audits no denial."""
+    s2 = fgac_engine.session_for("team2")
+    s2.sql(
+        "CREATE VIEW v_cte AS WITH patients AS (SELECT patient_id FROM claims) "
+        "SELECT patient_id FROM patients"
+    )
+    batch = _rows(s2.sql("SELECT * FROM v_cte"))
+    before = len(fgac_engine.policy.audit_log)
+    assert _stream_rows(s2, "v_cte", "sv_cte_rows") == batch and len(batch) == 10
+    assert [e for e in fgac_engine.policy.audit_log[before:] if e[3] == "denied"] == []
+
+
+def test_stream_view_column_named_like_a_table_drains_its_batch_rows(fgac_engine):
+    """A column that shares its name with a table (``state``) is no
+    relation of the view body."""
+    fgac_engine.sql("CREATE TABLE state (code STRING)")
+    s1 = fgac_engine.session_for("team1")
+    s1.sql("CREATE VIEW v_state AS SELECT patient_id, state FROM patients")
+    batch = _rows(s1.sql("SELECT * FROM v_state"))
+    assert _stream_rows(s1, "v_state", "sv_state_rows") == batch and len(batch) == 8
+
+
+def test_stream_view_backticked_table_drains_its_batch_rows(fgac_engine):
+    """A backticked table name streams, and the batch read after the
+    stream definition still reads its batch registration."""
+    s1 = fgac_engine.session_for("team1")
+    s1.sql("CREATE VIEW v_tick AS SELECT patient_id FROM `patients`")
+    batch = _rows(s1.sql("SELECT * FROM v_tick"))
+    assert _stream_rows(s1, "v_tick", "sv_tick_rows") == batch and len(batch) == 8
+    assert not s1.sql("SELECT patient_id FROM patients").isStreaming
+    assert _rows(s1.sql("SELECT * FROM v_tick")) == batch
+
+
+def test_engine_grammar_maintenance_names_only_its_target(fgac_engine):
+    """``WRITE ORDERED BY (claims)`` orders by a column: a principal
+    holding ALTER on the target needs no grant on the table that shares
+    the column's name."""
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import ALTER
+
+    fgac_engine.sql("CREATE TABLE notes (claims STRING, n BIGINT)")
+    fgac_engine.policy.grant("ops", "notes", {ALTER})
+    before = len(fgac_engine.policy.audit_log)
+    fgac_engine.session_for("ops").sql("ALTER TABLE notes WRITE ORDERED BY (claims)")
+    assert fgac_engine.policy.audit_log[before:] == [("ops", "notes", ALTER, "granted")]
+
+
 def test_stream_view_non_streamable_body_refuses(fgac_engine):
     s1 = fgac_engine.session_for("team1")
     s1.sql("CREATE VIEW sv_const AS SELECT 1 AS one")
